@@ -44,12 +44,6 @@ def bpe_ish_token_count(col: str = "text") -> F.Column:
     return F.regexp_count(F.col(col), F.lit(BPE_ISH_REGEX))
 
 
-def stopword_hits(lang: str, col: str = "text") -> F.Column:
-    """Count of tokens that are stopwords of `lang` (array intersection
-    semantics, but keeping duplicates: filter + size)."""
-    return _hits_in(words(col), lang)
-
-
 def _hits_in(w: F.Column, lang: str) -> F.Column:
     sw = F.array(*[F.lit(x) for x in STOPWORDS[lang]])
     return F.size(F.filter(w, lambda t: F.array_contains(sw, t)))

@@ -28,30 +28,6 @@ def token_array_hash(col: str = "tokens") -> F.Column:
     return F.xxhash64(F.to_json(F.col(col)))
 
 
-def ntok_consistent(tokens: str = "tokens", n_tok: str = "n_tok") -> F.Column:
-    return F.col(n_tok) == F.size(F.col(tokens))
-
-
-def repair_ntok_col(tokens: str = "tokens") -> F.Column:
-    return F.size(F.col(tokens))
-
-
-def truncate_tokens(col: str, max_len: int) -> F.Column:
-    """Sequence-length cap (slice is codegen'd, no UDF)."""
-    return F.slice(F.col(col), 1, max_len)
-
-
-def token_stats(col: str = "tokens") -> list[F.Column]:
-    """Per-row token statistics, all JVM-side."""
-    c = F.col(col)
-    return [
-        F.size(c).alias("n_tok_actual"),
-        F.array_min(c).alias("tok_min"),
-        F.array_max(c).alias("tok_max"),
-        F.size(F.array_distinct(c)).alias("n_tok_distinct"),
-    ]
-
-
 # ------------------------------------------------------------- Arrow-side
 # pandas UDFs for transforms the built-ins can't express. Arrow transfers
 # list<int> columns as numpy object arrays of ndarrays — each batch is

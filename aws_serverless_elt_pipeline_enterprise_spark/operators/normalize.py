@@ -66,10 +66,3 @@ def normalize_envelope(df: DataFrame, schema: T.StructType) -> DataFrame:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(*cols)
 
-
-def normalize_timestamp_iso_z(col: str) -> F.Column:
-    """ISO-8601 string -> canonical UTC '...Z' string (reference
-    _iso_to_iso_z, schemas.py:41-47; session TZ must be UTC)."""
-    return F.date_format(
-        F.to_timestamp(F.col(col)), "yyyy-MM-dd'T'HH:mm:ss'Z'"
-    )

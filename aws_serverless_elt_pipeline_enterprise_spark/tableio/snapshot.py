@@ -13,18 +13,23 @@ visible semantics Iceberg would give us:
                               then a LATEST pointer is swapped via atomic
                               rename. Readers never see a partial commit.
   * optimistic concurrency  — two writers racing for the same version:
-                              exactly one wins the claim; the loser gets
-                              ``CommitConflictError`` and the merge paths
-                              rebase-and-retry (MOR deltas always rebase;
-                              COW rebases only when the intervening
-                              commits did not touch its read set,
-                              otherwise the conflict propagates and the
-                              caller re-runs the merge against fresh
-                              state — Iceberg's validation semantics).
-                              Compactions rebase over concurrent MOR
-                              appends too (the live-stream + scheduled-
-                              rewrite deployment); bucket-map conflicts
-                              raise and the maintenance op is re-run.
+                              exactly one wins the claim. Every commit
+                              runs through ``_commit_loop``: each attempt
+                              takes ONE manifest snapshot, re-checks the
+                              epoch ledger, lets the commit's ``build``
+                              rebase onto the snapshot (or refuse with
+                              ``CommitConflictError``) and claims
+                              snapshot.version + 1. MOR deltas always
+                              rebase; COW merges rebase only when the
+                              intervening commits did not touch their
+                              read set; compactions rebase over MOR
+                              appends (the live-stream + scheduled-
+                              rewrite deployment) but not over a changed
+                              bucket map or folded input deltas; a
+                              rebucket never rebases. A refused commit
+                              stays uncommitted and re-running it
+                              against fresh state converges — Iceberg's
+                              validation semantics.
   * epoch-idempotent commit — each manifest carries the cumulative set of
                               committed epoch IDs; re-merging an already
                               committed epoch is a no-op. This translates
@@ -70,16 +75,22 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-class CommitConflictError(Exception):
-    """Another writer claimed this manifest version first.
+_COMMIT_ATTEMPTS = 16  # lost version claims before _commit_loop gives up
 
-    Raised by ``_commit_manifest`` when the exclusive version-file claim
-    fails. MOR appends catch it and rebase automatically (a global delta
-    is position-independent); COW merges rebase only when the conflicting
-    commits did not change their read set, otherwise the error propagates
-    with the epoch UNCOMMITTED — the data dir is an unreferenced orphan
-    (vacuumable by ``expire_orphans``) and re-running the merge against
-    fresh state is safe and converges.
+
+class CommitConflictError(Exception):
+    """A concurrent commit won the race this commit needed.
+
+    ``_commit_manifest`` raises it when the exclusive version-file claim
+    fails, and ``_commit_loop`` retries on a fresh snapshot. A commit's
+    ``build`` raises it when that snapshot invalidates the commit: a COW
+    merge whose read set (affected buckets, global deltas, bucket count)
+    changed, a MOR delta hashed before a concurrent rebucket, a
+    compaction whose bucket map changed or whose input deltas were
+    folded, a rebucket with any intervening commit. The loop raises it
+    after ``_COMMIT_ATTEMPTS`` lost claims. In every case the epoch stays
+    UNCOMMITTED — the data dir is an unreferenced orphan (vacuumable by
+    ``expire_orphans``) and re-running against fresh state converges.
     """
 
 
@@ -253,6 +264,24 @@ def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(*cols)
 
 
+def _schema_of(m: dict | None) -> T.StructType | None:
+    return T.StructType.fromJson(json.loads(m["schema"])) if m else None
+
+
+def _rebased(snap: dict | None, schema: T.StructType) -> T.StructType:
+    """``schema`` re-unified with the snapshot's: a commit rebasing over a
+    winner must not drop the winner's schema evolution."""
+    return unify_schemas(_schema_of(snap), schema) if snap else schema
+
+
+def _buckets(m: dict | None) -> dict:
+    return {k: list(v) for k, v in m["buckets"].items()} if m else {}
+
+
+def _deltas(m: dict | None) -> list[str]:
+    return list(m.get("global_deltas", [])) if m else []
+
+
 def _du_parquet(path: str) -> int:
     """Total parquet bytes under a dir (one os.walk of THAT dir only)."""
     total = 0
@@ -380,6 +409,25 @@ class SnapshotTable:
     def _latest_path(self) -> str:
         return os.path.join(self.root, "LATEST")
 
+    def _hint(self) -> int:
+        """The version the LATEST pointer names (-1 before the first)."""
+        try:
+            with open(self._latest_path()) as f:
+                return int(f.read().strip().lstrip("v"))
+        except FileNotFoundError:
+            return -1
+
+    def _advance_hint(self, version: int) -> None:
+        """Monotone best-effort LATEST advance via tmp + atomic rename.
+        The pointer is a hint that current_version() probes forward
+        past, so a lost pointer race self-heals; it never moves
+        backwards."""
+        if version > self._hint():
+            tmp = self._latest_path() + f".tmp{uuid.uuid4().hex[:6]}"
+            with open(tmp, "w") as f:
+                f.write(f"v{version:06d}")
+            os.replace(tmp, self._latest_path())
+
     def current_version(self) -> int | None:
         """Latest committed version. The LATEST pointer is a HINT: the
         manifest claim (``_commit_manifest``'s exclusive link) is the
@@ -389,11 +437,7 @@ class SnapshotTable:
         observed vN), so the manifest chain is contiguous: probing
         FORWARD from the hint self-heals any lag at one extra stat per
         call in the common case (the probe misses immediately)."""
-        try:
-            with open(self._latest_path()) as f:
-                v = int(f.read().strip().lstrip("v"))
-        except FileNotFoundError:
-            v = -1
+        v = self._hint()
         mdir = os.path.join(self.root, "manifests")
         while os.path.exists(os.path.join(mdir, f"v{v + 1:06d}.json")):
             v += 1
@@ -481,16 +525,13 @@ class SnapshotTable:
     def committed_epochs(self) -> EpochLedger:
         """The committed-epoch ledger (exact membership; len() = count)."""
         m = self.manifest()
-        return EpochLedger(m["committed_epochs"]) if m else EpochLedger()
+        return EpochLedger(m["committed_epochs"] if m else None)
 
     def has_epoch(self, epoch_id: str) -> bool:
         return str(epoch_id) in self.committed_epochs()
 
     def schema(self) -> T.StructType | None:
-        m = self.manifest()
-        if not m:
-            return None
-        return T.StructType.fromJson(json.loads(m["schema"]))
+        return _schema_of(self.manifest())
 
     def lineage(self) -> list[dict]:
         """Per-commit lineage rows across all versions (metrics surface).
@@ -575,7 +616,7 @@ class SnapshotTable:
         shuffle O(matched keys) instead of O(scanned rows) (Catalyst
         does not push a LeftSemi through the Aggregate on its own)."""
         m = self.manifest(version)
-        schema = T.StructType.fromJson(json.loads(m["schema"])) if m else None
+        schema = _schema_of(m)
         if m is None or (not m["buckets"] and not m.get("global_deltas")):
             return self._empty(schema)
         all_buckets = (
@@ -690,7 +731,7 @@ class SnapshotTable:
             # (inserts as deletes) — e.g. a consumer bookmark that
             # outlived a table reset, or swapped arguments
             raise ValueError(f"v_from {v_from} > v_to {v_to}")
-        schema = T.StructType.fromJson(json.loads(m_to["schema"]))
+        schema = _schema_of(m_to)
         payload = [
             f.name
             for f in self._data_schema(schema).fields
@@ -1210,50 +1251,23 @@ class SnapshotTable:
         if affected is not None and not affected:
             # empty COW batch: commit the epoch id only (no data); rebase
             # freely on a lost version race — there is no read set
-            for _ in range(16):
-                # ONE manifest snapshot per attempt (see _merge_mor_append):
-                # ledger and version derive from the SAME read, and the
-                # claim targets snapshot.version + 1 exactly so any
-                # intervening commit forces a conflict instead of being
-                # silently dropped by a fresher version number
-                old_m = self.manifest()
-                ledger = (
-                    EpochLedger(old_m["committed_epochs"]) if old_m else EpochLedger()
-                )
-                if epoch_id in ledger:
-                    return {"epoch_id": epoch_id, "skipped": True}
-                ledger.add(epoch_id)
-                lineage = {
-                    "epoch_id": epoch_id,
-                    "version": old_m["version"] + 1 if old_m else 0,
-                    "affected_buckets": [],
-                    "written_buckets": [],
-                    "keys_considered": 0,
-                    "keys_deleted": 0,
-                }
+            empty_lineage = {
+                "epoch_id": epoch_id,
+                "affected_buckets": [],
+                "written_buckets": [],
+                "keys_considered": 0,
+                "keys_deleted": 0,
+            }
+
+            def build_empty(snap):
+                if snap is None:
+                    return schema, {}, [], empty_lineage
+                self.n_buckets = int(snap["n_buckets"])  # empty: no rows hashed
                 # commit the CURRENT schema (winner's evolution preserved);
                 # an empty batch contributes no columns of its own
-                cur_schema = (
-                    T.StructType.fromJson(json.loads(old_m["schema"]))
-                    if old_m
-                    else schema
-                )
-                if old_m is not None and "n_buckets" in old_m:
-                    self.n_buckets = int(old_m["n_buckets"])  # empty: no rows hashed
-                try:
-                    self._commit_manifest(
-                        lineage["version"],
-                        cur_schema,
-                        dict(old_m["buckets"]) if old_m else {},
-                        ledger,
-                        lineage,
-                    )
-                    return lineage
-                except CommitConflictError:
-                    continue
-            raise CommitConflictError(
-                f"epoch {epoch_id!r}: lost the version race 16 times in a row"
-            )
+                return _schema_of(snap), _buckets(snap), _deltas(snap), empty_lineage
+
+            return self._commit_loop(epoch_id, build_empty)
 
         # Unified arms: (payload..., __seq, __bucket, __op, __side).
         # __side breaks exact-seq ties in favor of the incoming batch, which
@@ -1280,11 +1294,13 @@ class SnapshotTable:
             )
         # COW merges against the current target rows of the affected
         # buckets; the resulting commit REPLACES those buckets. The read
-        # is PINNED to the manifest observed here: this read set (the
-        # affected buckets' dir lists + the global delta chain) is what
-        # the commit loop below validates against the then-current
-        # manifest to decide whether a lost version race is rebaseable.
-        read_m = self.manifest()
+        # is PINNED to the manifest whose bucket count hashed the batch:
+        # this read set (the affected buckets' dir lists + the global
+        # delta chain + the bucket count) is what build_cow below
+        # validates against each attempt's snapshot to decide whether a
+        # lost version race is rebaseable — so a rebucket that lands
+        # after the hash fails the check instead of being committed over.
+        read_m = m_entry
         target = self.read(
             version=read_m["version"] if read_m else None, buckets=affected
         )
@@ -1376,85 +1392,46 @@ class SnapshotTable:
             if d.startswith(f"{self.BUCKET_COL}="):
                 written_buckets.add(int(d.split("=", 1)[1]))
 
-        # only COW reaches this point (MOR returned via _merge_mor_append)
-        partition_rows = json.dumps(_partition_rows(commit_abs))
-        # commit with validate-or-rebase: a COW rewrite baked the READ SET
-        # (the affected buckets as of read_m + the then-current delta
-        # chain) into its data files. Losing the version race is
-        # rebaseable ONLY if the winners did not change that read set —
-        # same buckets' dir lists, same global deltas, same bucket count.
-        # Otherwise the rewrite is stale: raise with the epoch
-        # UNCOMMITTED (the data dir is a vacuumable orphan) and let the
-        # caller re-run the merge against fresh state.
-        read_gd = list(read_m.get("global_deltas", [])) if read_m else []
-        read_bk = {
-            str(b): (read_m["buckets"].get(str(b)) if read_m else None)
-            for b in affected
+        lineage = {
+            "epoch_id": epoch_id,
+            "mode": self.mode,
+            "affected_buckets": affected,
+            "written_buckets": sorted(written_buckets),
+            "keys_considered": metrics_row["keys_considered"] if metrics_row else None,
+            "keys_deleted": metrics_row["keys_deleted"] if metrics_row else None,
+            # JSON string: lineage() rows stay flat enough for
+            # spark.createDataFrame (nested variant maps break inference)
+            "partition_rows": json.dumps(_partition_rows(commit_abs)),
         }
-        read_nb = int(read_m["n_buckets"]) if read_m else self.n_buckets
-        for _ in range(16):
-            # ONE manifest snapshot per attempt (see _merge_mor_append)
-            old_m = self.manifest()
-            committed = (
-                EpochLedger(old_m["committed_epochs"]) if old_m else EpochLedger()
-            )
-            if epoch_id in committed:
-                shutil.rmtree(commit_abs, ignore_errors=True)
-                return {"epoch_id": epoch_id, "skipped": True}
-            committed.add(epoch_id)
-            if (old_m["version"] if old_m else None) != (
-                read_m["version"] if read_m else None
-            ):
-                now_gd = list(old_m.get("global_deltas", [])) if old_m else []
-                now_bk = {
-                    str(b): (old_m["buckets"].get(str(b)) if old_m else None)
-                    for b in affected
-                }
-                now_nb = int(old_m["n_buckets"]) if old_m else self.n_buckets
-                if (now_gd, now_bk, now_nb) != (read_gd, read_bk, read_nb):
-                    raise CommitConflictError(
-                        f"epoch {epoch_id!r}: a concurrent commit changed "
-                        f"this COW merge's read set (buckets {affected}); "
-                        "the epoch is uncommitted — re-run the merge"
-                    )
-            # re-unify against the winner's schema: a rebase-eligible
-            # intervening commit (e.g. a schema-evolving EMPTY epoch)
-            # must not have its evolution dropped by our pre-race schema
-            if old_m is not None:
-                schema = unify_schemas(
-                    T.StructType.fromJson(json.loads(old_m["schema"])), schema
+
+        # validate-or-rebase: a COW rewrite baked the READ SET (the
+        # affected buckets as of read_m + the then-current delta chain)
+        # into its data files. Losing the version race is rebaseable ONLY
+        # if the winners did not change that read set — same buckets' dir
+        # lists, same global deltas, same bucket count. Otherwise the
+        # rewrite is stale and the caller re-runs the merge.
+        def read_set(m):
+            bk = m["buckets"] if m else {}
+            nb = int(m["n_buckets"]) if m else self.n_buckets
+            return _deltas(m), {b: bk.get(str(b)) for b in affected}, nb
+
+        read_set_0 = read_set(read_m)
+
+        def build_cow(snap):
+            if read_set(snap) != read_set_0:
+                raise CommitConflictError(
+                    f"epoch {epoch_id!r}: a concurrent commit changed "
+                    f"this COW merge's read set (buckets {affected}); "
+                    "the epoch is uncommitted — re-run the merge"
                 )
-            buckets_map = (
-                {k: list(v) for k, v in old_m["buckets"].items()} if old_m else {}
-            )
+            buckets_map = _buckets(snap)
             for b in affected:
                 buckets_map.pop(str(b), None)
             for b in written_buckets:
                 buckets_map[str(b)] = [commit_rel]
-            version = old_m["version"] + 1 if old_m else 0
-            lineage = {
-                "epoch_id": epoch_id,
-                "version": version,
-                "mode": self.mode,
-                "affected_buckets": affected if affected is not None else sorted(written_buckets),
-                "written_buckets": sorted(written_buckets),
-                "keys_considered": metrics_row["keys_considered"] if metrics_row else None,
-                "keys_deleted": metrics_row["keys_deleted"] if metrics_row else None,
-                # JSON string: lineage() rows stay flat enough for
-                # spark.createDataFrame (nested variant maps break inference)
-                "partition_rows": partition_rows,
-            }
-            try:
-                self._commit_manifest(
-                    version, schema, buckets_map, committed, lineage,
-                    new_dir=commit_rel, new_dir_kind="base",
-                )
-                return lineage
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"epoch {epoch_id!r}: lost the version race 16 times in a row"
-        )
+            return _rebased(snap, schema), buckets_map, _deltas(snap), lineage
+
+        return self._commit_loop(epoch_id, build_cow, commit_rel)
 
     def _merge_mor_append(
         self,
@@ -1483,7 +1460,7 @@ class SnapshotTable:
             F.count_if(F.col(self.DEL_COL)).alias("keys_deleted"),
         )
         # version here names the data dir only (cosmetic): the COMMIT
-        # version is re-derived per attempt inside the retry loop below
+        # version is re-derived per attempt inside _commit_loop
         m0 = self.manifest()
         version = m0["version"] + 1 if m0 else 0
         tag = "".join(ch for ch in epoch_id if ch.isalnum())[-24:] or "e"
@@ -1512,128 +1489,127 @@ class SnapshotTable:
             # already ran, so this costs no extra scan (COW has the same
             # short-circuit up front via its affected-bucket probe).
             shutil.rmtree(commit_abs, ignore_errors=True)
-        partition_rows = None if empty else json.dumps(_partition_rows(commit_abs))
-        # commit with rebase-on-conflict: a MOR delta is position-
-        # independent (the LWW resolve is order-free), so losing the
-        # version race to ANY other commit just means re-deriving the
-        # manifest contents from the winner's state and claiming the next
-        # version. Data files are never rewritten on rebase.
-        for _ in range(16):
-            # ONE manifest snapshot per attempt: ledger, bucket map, delta
-            # chain, and version must all come from the SAME manifest — two
-            # separate reads could straddle a concurrent commit and write a
-            # new manifest whose ledger misses the winner's epoch (silent
-            # exactly-once violation) or whose chain drops its delta
-            old_m = self.manifest()
-            committed = (
-                EpochLedger(old_m["committed_epochs"]) if old_m else EpochLedger()
-            )
-            if epoch_id in committed:
-                # a concurrent twin committed this very epoch first:
-                # exactly-once wins, our data dir becomes an orphan
-                shutil.rmtree(commit_abs, ignore_errors=True)
-                return {"epoch_id": epoch_id, "skipped": True}
-            committed.add(epoch_id)
-            if old_m is not None and int(old_m["n_buckets"]) != self.n_buckets:
+        lineage = {
+            "epoch_id": epoch_id,
+            "mode": "mor",
+            "rows_in_batch": metrics_row["keys_considered"] if metrics_row else None,
+            "delete_rows": metrics_row["keys_deleted"] if metrics_row else None,
+        }
+        if not empty:
+            lineage["delta_dir"] = commit_rel
+            lineage["partition_rows"] = json.dumps(_partition_rows(commit_abs))
+
+        # rebase-on-conflict: a MOR delta is position-independent (the
+        # LWW resolve is order-free), so losing the version race to ANY
+        # other commit just means appending to the winner's chain. Data
+        # files are never rewritten on rebase.
+        def build_mor(snap):
+            if snap is not None and int(snap["n_buckets"]) != self.n_buckets:
                 # a concurrent rebucket changed the hash function: adopt
                 # the evolved count. An EMPTY epoch commits no data and
                 # can proceed; a real delta's _bucket values were
                 # computed under the OLD count, so rebasing would poison
                 # bucket pruning — make the caller re-run the merge
                 # (rows re-hash on the retry).
-                self.n_buckets = int(old_m["n_buckets"])
+                self.n_buckets = int(snap["n_buckets"])
                 if not empty:
-                    shutil.rmtree(commit_abs, ignore_errors=True)
                     raise CommitConflictError(
                         f"epoch {epoch_id!r}: the table was rebucketted "
                         "concurrently — re-run the merge"
                     )
-            # re-unify against the WINNER's schema: rebasing with the
-            # pre-race schema would silently drop a concurrent commit's
-            # schema evolution (its columns vanish from the read schema)
-            if old_m is not None:
-                schema = unify_schemas(
-                    T.StructType.fromJson(json.loads(old_m["schema"])), schema
-                )
-            buckets_map = (
-                {k: list(v) for k, v in old_m["buckets"].items()} if old_m else {}
-            )
-            global_deltas = list(old_m.get("global_deltas", [])) if old_m else []
-            version = old_m["version"] + 1 if old_m else 0
-            if empty:
-                lineage = {
-                    "epoch_id": epoch_id,
-                    "version": version,
-                    "mode": "mor",
-                    "rows_in_batch": 0,
-                    "delete_rows": 0,
-                }
-                try:
-                    self._commit_manifest(
-                        version, schema, buckets_map, committed, lineage,
-                        global_deltas=global_deltas,
-                    )
-                    return lineage
-                except CommitConflictError:
-                    continue
-            global_deltas.append(commit_rel)
+            deltas = _deltas(snap) + ([] if empty else [commit_rel])
+            return _rebased(snap, schema), _buckets(snap), deltas, lineage
+
+        return self._commit_loop(
+            epoch_id, build_mor, None if empty else commit_rel, "delta"
+        )
+
+    def _commit_loop(
+        self, epoch_id: str | None, build, new_dir: str | None = None,
+        new_dir_kind: str = "base",
+    ) -> dict:
+        """The one optimistic-commit loop every commit runs through.
+
+        Each attempt takes ONE manifest snapshot: ledger, bucket map,
+        delta chain and claimed version all derive from it — two reads
+        could straddle a concurrent commit and write a manifest whose
+        ledger misses the winner's epoch (silent exactly-once violation)
+        or whose chain drops its delta. The ledger is re-checked first:
+        if a twin committed ``epoch_id`` meanwhile, exactly-once wins and
+        our data dir ``new_dir`` is removed. ``build(snapshot)`` then
+        returns the new manifest's ``(schema, buckets, global_deltas,
+        lineage)`` rebased onto the snapshot, or raises
+        ``CommitConflictError`` when the snapshot invalidates the commit
+        (its own validate-or-rebase rule). The claim targets exactly
+        snapshot.version + 1, so any intervening commit forces another
+        attempt instead of being silently dropped. ``epoch_id=None``
+        marks a maintenance commit, which carries the ledger over
+        unchanged. The committed lineage records ``commit_attempts``."""
+        new_bytes = _du_parquet(os.path.join(self.root, new_dir)) if new_dir else 0
+        for attempt in range(1, _COMMIT_ATTEMPTS + 1):
+            snap = self.manifest()
+            ledger = EpochLedger(snap["committed_epochs"] if snap else None)
+            if epoch_id is not None:
+                if epoch_id in ledger:
+                    if new_dir is not None:
+                        shutil.rmtree(
+                            os.path.join(self.root, new_dir), ignore_errors=True
+                        )
+                    return {"epoch_id": epoch_id, "skipped": True}
+                ledger.add(epoch_id)
+            schema, buckets_map, global_deltas, lineage = build(snap)
             lineage = {
-                "epoch_id": epoch_id,
-                "version": version,
-                "mode": "mor",
-                "delta_dir": commit_rel,
-                "rows_in_batch": metrics_row["keys_considered"] if metrics_row else None,
-                "delete_rows": metrics_row["keys_deleted"] if metrics_row else None,
-                "partition_rows": partition_rows,
+                **lineage,
+                "version": snap["version"] + 1 if snap else 0,
+                "commit_attempts": attempt,
             }
             try:
                 self._commit_manifest(
-                    version, schema, buckets_map, committed, lineage,
-                    new_dir=commit_rel, new_dir_kind="delta",
-                    global_deltas=global_deltas,
+                    snap, schema, buckets_map, global_deltas, ledger, lineage,
+                    new_dir, new_dir_kind, new_bytes,
                 )
                 return lineage
             except CommitConflictError:
                 continue
         raise CommitConflictError(
-            f"epoch {epoch_id!r}: lost the version race 16 times in a row"
+            f"{epoch_id or 'maintenance commit'!r}: lost the version race "
+            f"{_COMMIT_ATTEMPTS} times in a row"
         )
 
     def _commit_manifest(
         self,
-        version: int,
+        snap: dict | None,
         schema: T.StructType,
         buckets_map: dict,
-        committed: EpochLedger,
+        global_deltas: list[str],
+        ledger: EpochLedger,
         lineage: dict,
         new_dir: str | None = None,
         new_dir_kind: str = "base",
-        global_deltas: list[str] | None = None,
+        new_dir_bytes: int = 0,
     ) -> None:
-        old_m = self.manifest()
-        if global_deltas is None:
-            global_deltas = list(old_m.get("global_deltas", [])) if old_m else []
+        """Write the manifest built on the attempt's snapshot ``snap`` and
+        claim its version (``lineage["version"]``); raises
+        ``CommitConflictError`` when another writer claimed it first.
+        Reads nothing from the table: dir kinds, dir sizes and the
+        previous commit timestamp all carry forward from ``snap``."""
+        version = lineage["version"]
+        prev = snap or {}
         live = {d for dirs in buckets_map.values() for d in dirs} | set(global_deltas)
-        kinds = {
-            d: k
-            for d, k in (old_m.get("dir_kinds", {}) if old_m else {}).items()
-            if d in live
-        }
-        if new_dir is not None:
-            kinds[new_dir] = new_dir_kind
+        kinds = {d: k for d, k in prev.get("dir_kinds", {}).items() if d in live}
         # per-dir parquet byte sizes, carried forward for live dirs and
-        # measured ONCE for the new dir (O(epoch) at commit time): the
-        # CDF 'auto' narrowing gate needs table_bytes, and walking every
+        # measured ONCE per commit for the new dir (O(epoch)): the CDF
+        # 'auto' narrowing gate needs table_bytes, and walking every
         # commit dir per diff would be O(table files) on the driver for
         # every incremental refresh
-        old_db = old_m.get("dir_bytes", {}) if old_m else {}
-        dir_bytes = {d: old_db[d] for d in live if d in old_db}
-        if new_dir is not None and new_dir not in dir_bytes:
-            dir_bytes[new_dir] = _du_parquet(os.path.join(self.root, new_dir))
+        dir_bytes = {d: b for d, b in prev.get("dir_bytes", {}).items() if d in live}
+        if new_dir is not None:
+            kinds[new_dir] = new_dir_kind
+            dir_bytes[new_dir] = new_dir_bytes
         # monotone-corrected commit timestamp: a later version never
         # carries an earlier ts even under clock skew / sub-ms commits,
         # so version order == timestamp order and version_at() is exact
-        prev_ts = int(old_m.get("committed_at_ms", 0)) if old_m else 0
+        prev_ts = int(prev.get("committed_at_ms", 0))
         m = {
             "version": version,
             "committed_at_ms": max(int(self.clock() * 1000), prev_ts + 1),
@@ -1645,11 +1621,7 @@ class SnapshotTable:
             "global_deltas": global_deltas,
             "dir_kinds": kinds,
             "dir_bytes": dir_bytes,
-            "committed_epochs": (
-                committed.to_json()
-                if isinstance(committed, EpochLedger)
-                else committed
-            ),
+            "committed_epochs": ledger.to_json(),
             "lineage": lineage,
         }
         mpath = os.path.join(self.root, "manifests", f"v{version:06d}.json")
@@ -1670,21 +1642,27 @@ class SnapshotTable:
             )
         finally:
             os.unlink(tmp)
-        # LATEST advance (monotone best-effort: the pointer is a hint and
-        # current_version() probes forward past it, so a lost pointer
-        # race self-heals; never move the hint backwards)
-        try:
-            with open(self._latest_path()) as f:
-                hint = int(f.read().strip().lstrip("v"))
-        except FileNotFoundError:
-            hint = -1
-        if version > hint:
-            ltmp = self._latest_path() + f".tmp{uuid.uuid4().hex[:6]}"
-            with open(ltmp, "w") as f:
-                f.write(f"v{version:06d}")
-            os.replace(ltmp, self._latest_path())
+        self._advance_hint(version)
 
     # ---------------------------------------------------------- maintenance
+
+    def _write_bucketed(
+        self, df: DataFrame, name: str, sort_within_buckets: bool
+    ) -> tuple[str, dict]:
+        """Write a full snapshot rewrite into a fresh ``_bucket``-
+        partitioned commit dir under the handle's bucket count; returns
+        the dir and the bucket map naming it."""
+        commit_rel = os.path.join("commits", f"{name}_{uuid.uuid4().hex[:6]}")
+        commit_abs = os.path.join(self.root, commit_rel)
+        out = df.repartition(self.n_buckets, F.col(self.BUCKET_COL))
+        if sort_within_buckets:
+            out = out.sortWithinPartitions(self.BUCKET_COL, self.key_col)
+        out.write.mode("overwrite").partitionBy(self.BUCKET_COL).parquet(commit_abs)
+        return commit_rel, {
+            d.split("=", 1)[1]: [commit_rel]
+            for d in os.listdir(commit_abs)
+            if d.startswith(f"{self.BUCKET_COL}=")
+        }
 
     def _commit_rewrite(
         self,
@@ -1692,7 +1670,7 @@ class SnapshotTable:
         schema: T.StructType,
         buckets_map: dict,
         folded: set,
-        lineage_base: dict,
+        lineage: dict,
         commit_rel: str,
         own_delta: bool = False,
     ) -> dict:
@@ -1705,17 +1683,16 @@ class SnapshotTable:
         (another compaction, a COW merge, a rebucket) invalidated the
         rewrite's read set: raise, leaving the written dir a vacuumable
         orphan — re-running the maintenance op is always safe."""
-        for _ in range(16):
-            old_m = self.manifest()
-            if old_m["version"] != read_m["version"] and (
-                old_m["buckets"] != read_m["buckets"]
-                or int(old_m["n_buckets"]) != int(read_m["n_buckets"])
-            ):
+
+        def build_rewrite(snap):
+            if snap["buckets"] != read_m["buckets"] or int(
+                snap["n_buckets"]
+            ) != int(read_m["n_buckets"]):
                 raise CommitConflictError(
-                    f"{lineage_base.get('epoch_id')}: a concurrent commit "
+                    f"{lineage['epoch_id']}: a concurrent commit "
                     "rewrote buckets during this maintenance op — re-run it"
                 )
-            if not folded <= set(old_m.get("global_deltas", [])):
+            if not folded <= set(_deltas(snap)):
                 # someone else already folded (part of) our input chain —
                 # e.g. a concurrent minor compaction. Rebasing would stack
                 # a duplicate merged span, or worse: a purge compaction
@@ -1723,36 +1700,15 @@ class SnapshotTable:
                 # the tombstones it just reported purging (silent GDPR
                 # resurrection). The op must re-run against fresh state.
                 raise CommitConflictError(
-                    f"{lineage_base.get('epoch_id')}: a concurrent "
+                    f"{lineage['epoch_id']}: a concurrent "
                     "compaction folded this op's input deltas — re-run it"
                 )
-            # winner's schema evolution survives the rebase
-            out_schema = unify_schemas(
-                T.StructType.fromJson(json.loads(old_m["schema"])), schema
-            )
-            survivors = [
-                d for d in old_m.get("global_deltas", []) if d not in folded
-            ]
-            global_deltas = (
-                [commit_rel] + survivors if own_delta else survivors
-            )
-            lineage = dict(lineage_base, version=old_m["version"] + 1)
-            try:
-                self._commit_manifest(
-                    lineage["version"], out_schema, buckets_map,
-                    # ledger from the SAME snapshot as version/chain (a
-                    # separate read could straddle a concurrent commit
-                    # and drop its epoch from the new manifest)
-                    EpochLedger(old_m["committed_epochs"]), lineage,
-                    new_dir=commit_rel,
-                    new_dir_kind="delta" if own_delta else "base",
-                    global_deltas=global_deltas,
-                )
-                return lineage
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"{lineage_base.get('epoch_id')}: lost the version race 16 times"
+            survivors = [d for d in _deltas(snap) if d not in folded]
+            own = [commit_rel] if own_delta else []
+            return _rebased(snap, schema), buckets_map, own + survivors, lineage
+
+        return self._commit_loop(
+            None, build_rewrite, commit_rel, "delta" if own_delta else "base"
         )
 
     def compact(
@@ -1788,7 +1744,6 @@ class SnapshotTable:
         m = self.manifest()
         if m is None:
             return {"skipped": True}
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
         df = self.read(version=m["version"])
         if purge_tombstones_below_seq is not None:
             df = df.filter(
@@ -1797,27 +1752,11 @@ class SnapshotTable:
                     & (F.col(self.SEQ_COL) < purge_tombstones_below_seq)
                 )
             )
-        version = m["version"] + 1
-        commit_rel = os.path.join(
-            "commits", f"c_{version:06d}_compact_{uuid.uuid4().hex[:6]}"
+        commit_rel, buckets_map = self._write_bucketed(
+            df, f"c_{m['version'] + 1:06d}_compact", sort_within_buckets
         )
-        commit_abs = os.path.join(self.root, commit_rel)
-        out = df.repartition(self.n_buckets, F.col(self.BUCKET_COL))
-        if sort_within_buckets:
-            out = out.sortWithinPartitions(self.BUCKET_COL, self.key_col)
-        (
-            out.write.mode("overwrite")
-            .partitionBy(self.BUCKET_COL)
-            .parquet(commit_abs)
-        )
-        buckets_map = {
-            d.split("=", 1)[1]: [commit_rel]
-            for d in os.listdir(commit_abs)
-            if d.startswith(f"{self.BUCKET_COL}=")
-        }
-        folded = set(m.get("global_deltas", []))
         return self._commit_rewrite(
-            m, schema, buckets_map, folded,
+            m, _schema_of(m), buckets_map, set(_deltas(m)),
             {"epoch_id": "__compaction", "compaction": True},
             commit_rel,
         )
@@ -1849,7 +1788,6 @@ class SnapshotTable:
             return {"skipped": True, "n_buckets": self.n_buckets}
         if int(n_buckets) == self.n_buckets:
             return {"skipped": True, "n_buckets": self.n_buckets}
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
         df = self.read(version=m["version"])
         old_n = self.n_buckets
         self.n_buckets = int(n_buckets)
@@ -1857,40 +1795,27 @@ class SnapshotTable:
             df = df.drop(self.BUCKET_COL).withColumn(
                 self.BUCKET_COL, self.bucket_expr()
             )
-            # a rebucket changes the hash function itself, so ANY
-            # concurrent commit invalidates it: the claim targets exactly
-            # m.version + 1, so an intervening commit forces
-            # CommitConflictError and the op must be re-run (stop-the-
-            # world by design; appenders can keep running and simply win
-            # the race)
-            version = m["version"] + 1
-            commit_rel = os.path.join(
-                "commits", f"c_{version:06d}_rebucket_{uuid.uuid4().hex[:6]}"
+            commit_rel, buckets_map = self._write_bucketed(
+                df, f"c_{m['version'] + 1:06d}_rebucket", sort_within_buckets
             )
-            commit_abs = os.path.join(self.root, commit_rel)
-            out = df.repartition(self.n_buckets, F.col(self.BUCKET_COL))
-            if sort_within_buckets:
-                out = out.sortWithinPartitions(self.BUCKET_COL, self.key_col)
-            (
-                out.write.mode("overwrite")
-                .partitionBy(self.BUCKET_COL)
-                .parquet(commit_abs)
-            )
-            buckets_map = {
-                d.split("=", 1)[1]: [commit_rel]
-                for d in os.listdir(commit_abs)
-                if d.startswith(f"{self.BUCKET_COL}=")
-            }
             lineage = {
                 "epoch_id": "__rebucket",
-                "version": version,
                 "rebucket": {"from": old_n, "to": self.n_buckets},
             }
-            self._commit_manifest(
-                version, schema, buckets_map,
-                EpochLedger(m["committed_epochs"]), lineage,
-                new_dir=commit_rel, new_dir_kind="base", global_deltas=[],
-            )
+
+            def build_rebucket(snap):
+                # a rebucket changes the hash function itself, so ANY
+                # concurrent commit invalidates it and the op must be
+                # re-run (stop-the-world by design; appenders can keep
+                # running and simply win the race)
+                if snap["version"] != m["version"]:
+                    raise CommitConflictError(
+                        "__rebucket: a concurrent commit landed during "
+                        "this rebucket — re-run it"
+                    )
+                return _schema_of(snap), buckets_map, [], lineage
+
+            return self._commit_loop(None, build_rebucket, commit_rel)
         except BaseException:
             # ANY failure before the manifest claim lands (write error,
             # version conflict, interrupt) leaves the on-disk table at
@@ -1899,7 +1824,6 @@ class SnapshotTable:
             # count and COW would miss stored rows (duplicate live rows)
             self.n_buckets = old_n
             raise
-        return lineage
 
     def compact_minor(self) -> dict:
         """Minor compaction (Hudi-style): collapse the pending DELTA CHAIN
@@ -1913,10 +1837,10 @@ class SnapshotTable:
         at 100 TB the base rewrite is a rare scheduled job while minor
         compaction can run every few epochs."""
         m = self.manifest()
-        gdeltas = m.get("global_deltas", []) if m else []
-        if m is None or len(gdeltas) < 2:
+        gdeltas = _deltas(m)
+        if len(gdeltas) < 2:
             return {"skipped": True}
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _schema_of(m)
         ddf = self.spark.read.schema(self._data_schema(schema)).parquet(
             *[os.path.join(self.root, d) for d in gdeltas]
         )
@@ -1931,9 +1855,7 @@ class SnapshotTable:
         # rebase-safe like compact(): deltas appended by concurrent MOR
         # writers survive AFTER the merged delta (resolve is order-free)
         return self._commit_rewrite(
-            m, schema,
-            {k: list(v) for k, v in m["buckets"].items()},
-            set(gdeltas),
+            m, schema, _buckets(m), set(gdeltas),
             {"epoch_id": "__minor_compaction", "minor_compaction": True,
              "deltas_merged": len(gdeltas)},
             commit_rel,
@@ -1990,16 +1912,7 @@ class SnapshotTable:
         # heal the LATEST hint first: a lost pointer race can leave it
         # below cur, and trimming manifests in the gap ABOVE a stale hint
         # would break current_version()'s contiguous forward probe
-        try:
-            with open(self._latest_path()) as f:
-                hint = int(f.read().strip().lstrip("v"))
-        except FileNotFoundError:
-            hint = -1
-        if hint < cur:
-            ltmp = self._latest_path() + f".tmp{uuid.uuid4().hex[:6]}"
-            with open(ltmp, "w") as f:
-                f.write(f"v{cur:06d}")
-            os.replace(ltmp, self._latest_path())
+        self._advance_hint(cur)
         horizon = cur - max(1, keep_last) + 1
         mdir = os.path.join(self.root, "manifests")
         mcutoff = time.time() - older_than_s

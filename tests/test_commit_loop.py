@@ -1,0 +1,125 @@
+"""The single optimistic-commit loop behind every SnapshotTable commit.
+
+Every committed lineage record carries ``commit_attempts`` (1 when the
+first claim wins, one more per lost race), and a commit that loses the
+version race ``_COMMIT_ATTEMPTS`` times in a row gives up with
+``CommitConflictError``, leaving the epoch uncommitted and its data dir
+a vacuumable orphan.
+"""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import (
+    _COMMIT_ATTEMPTS,
+    CommitConflictError,
+    SnapshotTable,
+)
+
+
+def _batch(spark, rows):
+    return spark.createDataFrame(rows, "op string, doc_id string, seq long, v double")
+
+
+def _mk(spark, tmp_path, mode):
+    return SnapshotTable(
+        spark, str(tmp_path / "t"), key_col="doc_id", n_buckets=4, mode=mode
+    )
+
+
+def test_commit_attempts_recorded_in_lineage(spark, tmp_path):
+    t = _mk(spark, tmp_path, "mor")
+    first = t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0)]), "e0")
+    assert first["commit_attempts"] == 1  # uncontended
+    twin = SnapshotTable(spark, t.root, key_col="doc_id", n_buckets=4, mode="mor")
+    real = t._commit_manifest
+    calls = []
+
+    def twin_commits_first(*args, **kwargs):
+        # the twin claims the version t's first attempt targets, so t's
+        # claim genuinely collides and t rebases onto the twin's commit
+        if not calls:
+            calls.append(
+                twin.merge_reduced(_batch(spark, [("insert", "b", 2, 2.0)]), "twin-0")
+            )
+        return real(*args, **kwargs)
+
+    t._commit_manifest = twin_commits_first
+    lin = t.merge_reduced(_batch(spark, [("insert", "c", 3, 3.0)]), "e1")
+    assert calls[0]["commit_attempts"] == 1
+    assert lin["commit_attempts"] == 2
+    # the record is what the manifest stores, not just the return value
+    assert t.lineage()[-1] == lin
+    assert [r["commit_attempts"] for r in t.lineage()] == [1, 1, 2]
+
+
+def test_cow_merge_conflicts_with_rebucket_after_hashing(spark, tmp_path):
+    """A rebucket that lands after a COW merge hashed its batch (under the
+    old count) must fail the merge's read-set check: rebasing would put
+    old-count bucket ids into the new layout and write the old count
+    back into the manifest."""
+    t = _mk(spark, tmp_path, "cow")
+    t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0)]), "e0")
+    twin = SnapshotTable(spark, t.root, key_col="doc_id", n_buckets=4, mode="cow")
+    real = t.bucket_expr
+
+    def rebucket_then_hash():
+        t.bucket_expr = real
+        twin.rebucket(16)
+        return real()
+
+    t.bucket_expr = rebucket_then_hash
+    with pytest.raises(CommitConflictError, match="read set"):
+        t.merge_reduced(_batch(spark, [("update", "a", 2, 2.0)]), "e1")
+    assert not t.has_epoch("e1")
+    assert t.manifest()["n_buckets"] == 16
+    # the re-run adopts the new count and converges
+    t.merge_reduced(_batch(spark, [("update", "a", 2, 2.0)]), "e1")
+    assert t.manifest()["n_buckets"] == 16
+    assert [(r["doc_id"], r["v"]) for r in t.state().collect()] == [("a", 2.0)]
+    assert [r["v"] for r in t.lookup(["a"]).collect()] == [2.0]
+
+
+def _mor_append(spark, t):
+    t.merge_reduced(_batch(spark, [("insert", "b", 2, 2.0)]), "e1")
+
+
+def _cow_merge(spark, t):
+    t.merge_reduced(_batch(spark, [("update", "a", 2, 2.0)]), "e1")
+
+
+def _compact(spark, t):
+    t.compact()
+
+
+@pytest.mark.parametrize(
+    "mode,commit",
+    [("mor", _mor_append), ("cow", _cow_merge), ("mor", _compact)],
+    ids=["mor_append", "cow_merge", "compact"],
+)
+def test_retry_exhaustion_leaves_epoch_uncommitted(spark, tmp_path, mode, commit):
+    t = _mk(spark, tmp_path, mode)
+    t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0)]), "e0")
+    before = t.current_version()
+    live = set(os.listdir(os.path.join(t.root, "commits")))
+    attempts = []
+
+    def always_lose(*args, **kwargs):
+        attempts.append(1)
+        raise CommitConflictError("version taken")
+
+    t._commit_manifest = always_lose
+    with pytest.raises(CommitConflictError, match="lost the version race"):
+        commit(spark, t)
+    assert len(attempts) == _COMMIT_ATTEMPTS == 16
+    assert not t.has_epoch("e1")
+    assert t.current_version() == before
+    # the written dir is an unreferenced orphan, removed by the vacuum
+    written = set(os.listdir(os.path.join(t.root, "commits"))) - live
+    assert len(written) == 1
+    removed = {os.path.basename(d) for d in t.expire_orphans()}
+    assert written <= removed
+    assert {r["doc_id"]: r["v"] for r in t.state().collect()} == {"a": 1.0}

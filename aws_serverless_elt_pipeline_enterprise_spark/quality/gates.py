@@ -38,8 +38,8 @@ def run_dq_gate(
     """Single aggregate pass; returns pass/fail + the measured metrics.
 
     ``extra_aggs`` lets the caller piggy-back additional aggregates on the
-    same scan (e.g. the merge's affected-bucket set) — one job instead of
-    two per epoch."""
+    same scan (e.g. a per-source row count) — one job instead of two per
+    epoch."""
     aggs = [F.count(F.lit(1)).alias("row_count")]
     for c in not_null:
         aggs.append(F.count_if(F.col(c).isNull()).alias(f"nulls_{c}"))

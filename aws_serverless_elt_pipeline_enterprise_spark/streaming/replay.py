@@ -190,7 +190,7 @@ def apply_epoch(
     notify=None,
 ) -> dict | None:
     """One epoch through the full pipeline. Returns lineage or None if the
-    epoch was already committed / empty."""
+    epoch was already committed."""
     if table.has_epoch(epoch_id):
         return None
     good, bad = split_quarantine(events)
@@ -200,37 +200,16 @@ def apply_epoch(
     observed, gate_check = _gated_observe(
         table, good, epoch_id, dq_fail_on_corrupt, notify
     )
-    # COW needs the affected-bucket set up front (to prune the target
-    # read); a tiny column-pruned job. MOR skips it entirely — the merge
-    # discovers written buckets from the commit listing. The probe runs
-    # over the OBSERVED frame, and the ordering is load-bearing: the
-    # probe is then the observation's first action, so the DQ metrics
-    # are delivered before the merge write. The COW write itself cannot
-    # be relied on to deliver them — its plan unions the batch with the
-    # (first-epoch EMPTY) target read, and under a foreachBatch
-    # execution the empty-union simplification drops the deep
-    # CollectMetrics node, leaving Observation.get blocked forever
-    # (reproduced on Spark 4.1; batch executions deliver fine).
-    affected = None
-    if table.mode == "cow":
-        affected = [
-            r[0]
-            for r in observed.select(
-                table.bucket_expr().alias("b")
-            ).distinct().collect()
-        ]
-        if not affected:
-            return table.merge_reduced(good.limit(0), epoch_id, affected=[])
-
     repaired = repair_ntok(observed)
 
-    # No pre-reduction: the merge's own groupBy/max_by aggregate performs
-    # dedup + LWW + upsert in one partial-aggregable shuffle (map-side
-    # combine collapses duplicates and hot keys before the exchange).
-    # lww_reduce/dedup_events remain as standalone operators for window-
-    # shaped paths and the streaming state story.
+    # No pre-reduction: the merge appends the batch as a raw delta, and
+    # dedup + LWW run once in the read/compaction resolve (one
+    # partial-aggregable max_by; map-side combine collapses duplicates
+    # and hot keys before the exchange). lww_reduce/dedup_events remain
+    # as standalone operators for window-shaped paths and the streaming
+    # state story.
     lineage = table.merge_reduced(
-        repaired.drop("batch_id"), epoch_id, affected=affected, pre_commit=gate_check
+        repaired.drop("batch_id"), epoch_id, pre_commit=gate_check
     )
     # a past gate failure's verdict is obsolete once the epoch commits —
     # a lingering 'aborted' marker for a committed epoch would send ops

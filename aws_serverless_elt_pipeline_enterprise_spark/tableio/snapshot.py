@@ -1,8 +1,7 @@
 """Snapshot table: an Iceberg-semantics parquet sink for the CDC engine.
 
-The sandbox has no Iceberg runtime jar, so the MERGE target is implemented
-as a *bucketed copy-on-write snapshot table* with the same externally
-visible semantics Iceberg would give us:
+The MERGE target is a *bucketed merge-on-read snapshot table* with the
+externally visible semantics an Iceberg table would give:
 
   * atomic commits          — a version manifest (JSON) names the exact
                               files of the snapshot; the manifest file
@@ -19,11 +18,10 @@ visible semantics Iceberg would give us:
                               epoch ledger, lets the commit's ``build``
                               rebase onto the snapshot (or refuse with
                               ``CommitConflictError``) and claims
-                              snapshot.version + 1. MOR deltas always
-                              rebase; COW merges rebase only when the
-                              intervening commits did not touch their
-                              read set; compactions rebase over MOR
-                              appends (the live-stream + scheduled-
+                              snapshot.version + 1. Merge deltas rebase
+                              unless a rebucket changed the hash in
+                              between; compactions rebase over merge
+                              deltas (the live-stream + scheduled-
                               rewrite deployment) but not over a changed
                               bucket map or folded input deltas; a
                               rebucket never rebases. A refused commit
@@ -42,13 +40,16 @@ visible semantics Iceberg would give us:
   * schema evolution        — additive nullable columns and integer
                               widening; the manifest schema is the widest
                               seen so far and old files are up-cast on read.
-  * partition-scoped writes — rows are hash-bucketed on the merge key; a
-                              merge rewrites ONLY the buckets its batch
-                              touches and carries all other buckets forward
-                              by file reference. At 10^10 rows / 1000
-                              executors this is what keeps a small CDC batch
-                              from rewriting 100 TB: cost is O(affected
-                              buckets), not O(table).
+  * append-only merges      — a merge writes only its batch, as one delta
+                              that every bucket's read resolves against
+                              (per-key last-writer-wins); all stored files
+                              carry forward by reference. At 10^10 rows
+                              this is what keeps a small CDC batch from
+                              rewriting 100 TB: cost is O(batch), not
+                              O(table). ``compact()`` folds the delta
+                              chain into files bucketed on the key, so
+                              lookups and CDF diffs read only the buckets
+                              they need.
 
 Layout on disk::
 
@@ -83,11 +84,10 @@ class CommitConflictError(Exception):
 
     ``_commit_manifest`` raises it when the exclusive version-file claim
     fails, and ``_commit_loop`` retries on a fresh snapshot. A commit's
-    ``build`` raises it when that snapshot invalidates the commit: a COW
-    merge whose read set (affected buckets, global deltas, bucket count)
-    changed, a MOR delta hashed before a concurrent rebucket, a
-    compaction whose bucket map changed or whose input deltas were
-    folded, a rebucket with any intervening commit. The loop raises it
+    ``build`` raises it when that snapshot invalidates the commit: a
+    merge delta hashed before a concurrent rebucket, a compaction whose
+    bucket map changed or whose input deltas were folded, a rebucket
+    with any intervening commit. The loop raises it
     after ``_COMMIT_ATTEMPTS`` lost claims. In every case the epoch stays
     UNCOMMITTED — the data dir is an unreferenced orphan (vacuumable by
     ``expire_orphans``) and re-running against fresh state converges.
@@ -297,9 +297,8 @@ def _du_parquet(path: str) -> int:
 def _partition_rows(commit_abs: str, cap: int = 4096) -> dict:
     """Per-output-partition row counts read from parquet FOOTERS only (no
     data scan, no extra Spark job) — the north-rule's per-partition
-    lineage surface. For COW commits the keys carry the bucket dir
-    (``_bucket=k/part-...``); for MOR deltas they are the task output
-    files. Above ``cap`` partitions only the summary is kept (a manifest
+    lineage surface. The keys are the commit dir's parquet files, relative
+    to it. Above ``cap`` partitions only the summary is kept (a manifest
     must not grow with file count). Large file sets read footers on a
     thread pool — useful on high-latency object storage where each footer
     is a network round-trip. Small sets stay SERIAL: measured on tmpfs,
@@ -332,22 +331,18 @@ def _partition_rows(commit_abs: str, cap: int = 4096) -> dict:
 
 
 class SnapshotTable:
-    """Bucketed snapshot table with atomic manifest commits.
+    """Bucketed merge-on-read snapshot table with atomic manifest commits.
 
-    Two merge strategies, selectable per table (mixable per epoch):
+    Each merge appends a DELTA commit — only the batch's rows — and the
+    per-key LWW resolution runs at read/compaction time. Writes cost
+    O(batch), which is what a small CDC batch against a 100 TB table
+    needs (rewriting the touched buckets every epoch would cost
+    O(bucket size)). Iceberg v2 / Hudi MOR-style.
 
-      * ``mode="cow"`` (copy-on-write): each merge rewrites the affected
-        buckets with the post-merge rows. Reads are cheapest (one file set
-        per bucket); writes cost O(bucket size) per epoch. Iceberg v1-style.
-      * ``mode="mor"`` (merge-on-read): each merge appends a DELTA commit —
-        only the batch's reduced rows — and the per-key LWW resolution runs
-        at read/compaction time. Writes cost O(batch); this is the only
-        sane strategy when a small CDC batch hits a 100 TB table (COW would
-        rewrite the world every epoch). Iceberg v2 / Hudi MOR-style.
-
-    Manifests map bucket -> ordered list of commit dirs (base first, then
-    deltas). COW keeps the lists at length 1; ``compact()`` collapses MOR
-    delta chains back to length 1.
+    Manifests map bucket -> ordered list of base commit dirs, plus a
+    table-wide chain of ``global_deltas``. ``compact()`` folds the chain
+    into bucketed base files (one dir per bucket); ``compact_minor()``
+    folds it into one merged delta.
     """
 
     SEQ_COL = "_seq"
@@ -365,16 +360,18 @@ class SnapshotTable:
         root: str,
         key_col: str = "doc_id",
         n_buckets: int = 32,
-        mode: str = "cow",
+        mode: str = "mor",
         bucket_col: str | None = None,
         clock=None,
     ):
-        assert mode in ("cow", "mor"), mode
+        # merge-on-read is the only write strategy; ``mode`` is accepted
+        # for callers that name it explicitly
+        if mode != "mor":
+            raise ValueError(f"mode must be 'mor', got {mode!r}")
         self.spark = spark
         self.root = root
         self.key_col = key_col
         self.n_buckets = n_buckets
-        self.mode = mode
         # commit-timestamp source (epoch seconds). Injectable so tests and
         # deterministic fixtures control the timeline; only ever written
         # into MANIFESTS (never into data), so data fingerprints stay
@@ -386,14 +383,14 @@ class SnapshotTable:
         # indexed value so value probes prune): the caller must
         # guarantee a key's bucket_col value NEVER changes across its
         # lifetime (for an index, the value is embedded in the key), or
-        # COW merges would miss the stored row.
+        # a value probe would prune to a bucket that lacks the key's
+        # older rows.
         self.bucket_col = bucket_col or key_col
         os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
         os.makedirs(os.path.join(root, "commits"), exist_ok=True)
         # An existing table's manifest is the source of truth for the
         # bucketing function: reopening with a different n_buckets/key_col
-        # would assign keys to the wrong buckets (COW would miss the stored
-        # row for a key -> duplicate live rows; lookup() would scan the
+        # would assign keys to the wrong buckets (lookup() would scan the
         # wrong bucket and silently return nothing). Adopt the stored
         # values over the constructor arguments.
         m = self.manifest()
@@ -607,9 +604,9 @@ class SnapshotTable:
     ) -> DataFrame:
         """Snapshot as a DataFrame (internal cols included). ``buckets``
         limits the scan to those hash buckets — the partition-pruning path
-        the merge uses. When any requested bucket carries MOR deltas, the
-        LWW resolution is applied (skippable with resolve=False for raw
-        delta inspection). ``key_semi`` (a one-column frame named
+        lookups and CDF diffs use. When any requested bucket carries MOR
+        deltas, the LWW resolution is applied (skippable with
+        resolve=False for raw delta inspection). ``key_semi`` (a one-column frame named
         ``__dk``) semi-joins the raw rows down to those keys BEFORE the
         LWW resolve — whole-key filtering commutes with per-key max_by,
         and placing it below the aggregate is what keeps the resolve
@@ -669,7 +666,6 @@ class SnapshotTable:
         v_from: int | None,
         v_to: int | None = None,
         images: str = "post",
-        narrow: str = "auto",
     ) -> DataFrame:
         """Change data feed between two committed versions (the Delta CDF
         / Iceberg changelog-scan analogue): one row per key whose VISIBLE
@@ -689,7 +685,7 @@ class SnapshotTable:
         Scale shape — the diff never reads two full table states:
 
         * candidate buckets = buckets whose manifest commit lists DIFFER
-          between the versions (covers COW epochs and compaction), plus
+          between the versions (covers compaction and rebucket), plus
           the distinct ``_bucket`` values of global delta dirs ADDED
           between the versions (MOR epochs commit as global deltas; the
           scan is O(new data), and only added dirs are read — dirs
@@ -704,14 +700,11 @@ class SnapshotTable:
           preserved, files rewritten) correctly produce zero changes;
         * for a MOR-only span (no bucket rewrite between the versions)
           both sides are additionally semi-joined down to the added
-          deltas' key set — see the inline comment. ``narrow`` controls
-          it: 'auto' (default) applies a driver-side selectivity gate,
-          'on' forces it whenever the span is MOR-only, 'off' disables.
+          deltas' key set when a driver-side selectivity gate allows —
+          see the inline comment.
         """
         if images not in ("post", "both"):
             raise ValueError(f"images must be 'post' or 'both', got {images!r}")
-        if narrow not in ("auto", "on", "off"):
-            raise ValueError(f"narrow must be auto/on/off, got {narrow!r}")
         if v_to is None:
             v_to = self.current_version()
         try:
@@ -757,11 +750,10 @@ class SnapshotTable:
             # BOTH sides of the diff can be narrowed to the delta keys —
             # a small epoch against a 10^10-row table then compares
             # O(epoch) keys instead of scanning every touched bucket
-            # whole. Gated ('auto') on a driver-side selectivity
-            # estimate (added-delta bytes vs table bytes): when the span
-            # touched a large fraction of the table, narrowing only adds
-            # work.
-            narrow_ok = m_from is not None and fb == tb and narrow != "off"
+            # whole. Gated on a driver-side selectivity estimate
+            # (added-delta bytes vs table bytes): when the span touched a
+            # large fraction of the table, narrowing only adds work.
+            narrow_ok = m_from is not None and fb == tb
             added_bytes = 0
             if narrow_ok:
                 # per-dir sizes come from the manifest (recorded once at
@@ -777,12 +769,11 @@ class SnapshotTable:
                     return _du_parquet(os.path.join(self.root, rel))
 
                 added_bytes = sum(_dir_bytes(d) for d in added_g)
-                if narrow != "on":
-                    table_dirs = {
-                        d for dirs in tb.values() for d in dirs
-                    } | set(m_to.get("global_deltas", []))
-                    table_bytes = sum(_dir_bytes(d) for d in table_dirs)
-                    narrow_ok = added_bytes * 8 < table_bytes
+                table_dirs = {
+                    d for dirs in tb.values() for d in dirs
+                } | set(m_to.get("global_deltas", []))
+                table_bytes = sum(_dir_bytes(d) for d in table_dirs)
+                narrow_ok = added_bytes * 8 < table_bytes
             if narrow_ok:
                 # One bounded job: distinct (key, bucket) pairs of the
                 # span's deltas, capped at NARROW_INLIST_MAX+1. A small
@@ -1181,15 +1172,18 @@ class SnapshotTable:
         self,
         reduced: DataFrame,
         epoch_id: str,
-        affected: list[int] | None = None,
         pre_commit=None,
     ) -> dict:
-        """MERGE a change batch into the table.
+        """MERGE a change batch into the table as a merge-on-read delta.
 
         ``reduced`` needs columns ``op`` (insert/update/delete), ``seq``
-        (long), and the payload columns; multiple rows per key are fine —
-        the merge aggregate reduces them (dedup + LWW) in the same shuffle
-        it uses to apply against the target. Equivalent Iceberg SQL::
+        (long), and the payload columns; multiple rows per key are fine.
+        The batch lands as a raw delta — a pure MAP job (scan -> storage
+        form -> write), ZERO shuffles per epoch — and dedup + LWW run once,
+        at read or compaction (``_resolve``), which is where Hudi MOR /
+        Iceberg streaming CDC put it too. Per-epoch cost is O(batch); the
+        price is read amplification until ``compact()`` runs. The resolved
+        state equals Iceberg's::
 
             MERGE INTO t USING batch b ON t.doc_id = b.doc_id
             WHEN MATCHED AND b.op = 'delete' AND b.seq > t._seq THEN DELETE
@@ -1198,7 +1192,9 @@ class SnapshotTable:
 
         The ``seq > _seq`` guard is what makes replaying old batches a
         no-op (the reference's idempotency invariant, proven by its
-        Makefile:344-359 verify-idempotency target).
+        Makefile:344-359 verify-idempotency target). ``pre_commit`` runs
+        after the delta write and before the manifest claim: raising
+        there leaves the epoch uncommitted (the transactional DQ gate).
         """
         epoch_id = str(epoch_id)
         if self.has_epoch(epoch_id):
@@ -1207,7 +1203,8 @@ class SnapshotTable:
         payload_schema = T.StructType(
             [f for f in reduced.schema.fields if f.name not in ("op", "seq", "batch_id")]
         )
-        old_schema = self.schema()
+        m = self.manifest()
+        old_schema = _schema_of(m)
         schema = (
             unify_schemas(old_schema, payload_schema) if old_schema else payload_schema
         )
@@ -1215,8 +1212,9 @@ class SnapshotTable:
             # the bucket column's TYPE is part of the bucketing function:
             # xxhash64(42 as int) != xxhash64(42L), so widening it would
             # re-hash every future row of an existing key into a
-            # different bucket (COW would miss the stored row -> duplicate
-            # live rows). Evolution of other columns is unaffected.
+            # different bucket (bucket-pruned lookups and CDF diffs would
+            # then miss the key's older rows). Evolution of other columns
+            # is unaffected.
             old_bt = {f.name: f.dataType for f in old_schema.fields}.get(
                 self.bucket_col
             )
@@ -1229,229 +1227,17 @@ class SnapshotTable:
                     f"{old_bt.simpleString()} to {new_bt.simpleString()}: the "
                     "bucket hash is type-sensitive"
                 )
-
-        # adopt a concurrently-evolved bucket count BEFORE hashing: a
-        # rebucket committed by another handle since this one was opened
-        # would otherwise assign rows under the stale count
-        m_entry = self.manifest()
-        if m_entry is not None and "n_buckets" in m_entry:
-            self.n_buckets = int(m_entry["n_buckets"])
-        batch = reduced.withColumn(self.BUCKET_COL, self.bucket_expr())
-        if self.mode == "mor":
-            # MOR needs no up-front bucket discovery: the delta lands next
-            # to existing data, and written buckets are read off the commit
-            # dir listing afterwards. Zero extra jobs per epoch.
-            affected = None
-        elif affected is None:
-            affected = sorted(
-                r[0] for r in batch.select(self.BUCKET_COL).distinct().collect()
-            )
-        else:
-            affected = sorted(int(b) for b in affected)
-        if affected is not None and not affected:
-            # empty COW batch: commit the epoch id only (no data); rebase
-            # freely on a lost version race — there is no read set
-            empty_lineage = {
-                "epoch_id": epoch_id,
-                "affected_buckets": [],
-                "written_buckets": [],
-                "keys_considered": 0,
-                "keys_deleted": 0,
-            }
-
-            def build_empty(snap):
-                if snap is None:
-                    return schema, {}, [], empty_lineage
-                self.n_buckets = int(snap["n_buckets"])  # empty: no rows hashed
-                # commit the CURRENT schema (winner's evolution preserved);
-                # an empty batch contributes no columns of its own
-                return _schema_of(snap), _buckets(snap), _deltas(snap), empty_lineage
-
-            return self._commit_loop(epoch_id, build_empty)
-
-        # Unified arms: (payload..., __seq, __bucket, __op, __side).
-        # __side breaks exact-seq ties in favor of the incoming batch, which
-        # is safe because an equal seq can only be the same event replayed.
-        ext_schema = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField("__seq", T.LongType(), True),
-                T.StructField("__bucket", T.IntegerType(), True),
-                T.StructField("__op", T.StringType(), True),
-                T.StructField("__side", T.IntegerType(), True),
-            ]
-        )
-        b_arm = conform(
-            batch.withColumnRenamed("seq", "__seq")
-            .withColumnRenamed(self.BUCKET_COL, "__bucket")
-            .withColumnRenamed("op", "__op")
-            .withColumn("__side", F.lit(1)),
-            ext_schema,
-        )
-        if self.mode == "mor":
-            return self._merge_mor_append(
-                b_arm, schema, epoch_id, pre_commit=pre_commit
-            )
-        # COW merges against the current target rows of the affected
-        # buckets; the resulting commit REPLACES those buckets. The read
-        # is PINNED to the manifest whose bucket count hashed the batch:
-        # this read set (the affected buckets' dir lists + the global
-        # delta chain + the bucket count) is what build_cow below
-        # validates against each attempt's snapshot to decide whether a
-        # lost version race is rebaseable — so a rebucket that lands
-        # after the hash fails the check instead of being committed over.
-        read_m = m_entry
-        target = self.read(
-            version=read_m["version"] if read_m else None, buckets=affected
-        )
-        t_arm = conform(
-            target.withColumnRenamed(self.SEQ_COL, "__seq")
-            .withColumnRenamed(self.BUCKET_COL, "__bucket")
-            .withColumn(
-                # a stored tombstone re-enters the reduction as a delete
-                # so it keeps beating stale lower-seq updates
-                "__op",
-                F.when(
-                    F.coalesce(F.col(self.DEL_COL), F.lit(False)), F.lit("delete")
-                ).otherwise(F.lit("__current")),
-            )
-            .withColumn("__side", F.lit(0)),
-            ext_schema,
-        )
-        both = t_arm.unionByName(b_arm)
-        w_cols = [f.name for f in schema.fields] + ["__seq", "__bucket", "__op"]
-        # One hash aggregate implements dedup + LWW + MERGE in a single
-        # shuffle: max_by is partial-aggregable, so map-side combine reduces
-        # every key to one row per task BEFORE the exchange — which is also
-        # why hot doc_ids don't skew this stage (no salting needed here;
-        # salting remains for sort/window/join-shaped paths). Ties:
-        # (seq, side, op+payload-hash) is a total order -> deterministic,
-        # replay-stable winners even for pathological equal-seq events.
-        # __op MUST be in the hash (mirroring _resolve's DEL_COL): an
-        # equal-seq delete vs update with identical payload hash would
-        # otherwise pick a partition-order-dependent winner.
-        tie_hash = F.xxhash64(
-            *[F.col(f.name) for f in schema.fields if f.name != self.key_col],
-            F.col("__op"),
-        )
-        winner = (
-            both.groupBy(self.key_col)
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in w_cols if c != self.key_col]),
-                    F.struct(F.col("__seq"), F.col("__side"), tie_hash),
-                ).alias("w")
-            )
-            .select(
-                F.col(self.key_col),
-                *[F.col(f"w.{c}").alias(c) for c in w_cols if c != self.key_col],
-            )
-            .select(
-                *[F.col(f.name) for f in schema.fields],
-                F.col("__seq").alias(self.SEQ_COL),
-                F.col("__bucket").alias(self.BUCKET_COL),
-                F.col("__op"),
-            )
-        )
-        observation = Observation(f"merge_{uuid.uuid4().hex[:8]}")
-        observed = winner.observe(
-            observation,
-            F.count(F.lit(1)).alias("keys_considered"),
-            F.count_if(F.col("__op") == "delete").alias("keys_deleted"),
-        )
+            # adopt a concurrently-evolved bucket count BEFORE hashing: a
+            # rebucket committed by another handle since this one was
+            # opened would otherwise assign rows under the stale count
+            self.n_buckets = int(m.get("n_buckets", self.n_buckets))
         # deletes are NOT dropped: they persist as tombstone rows (_deleted)
         # with their _seq, the anti-resurrection guard for out-of-order logs
-        new_rows = observed.withColumn(
-            self.DEL_COL, F.col("__op") == "delete"
-        ).drop("__op")
-
-        version = (read_m["version"] + 1) if read_m else 0
-        tag = "".join(ch for ch in epoch_id if ch.isalnum())[-24:] or "e"
-        # attempt-unique dir (see _merge_mor_append): concurrent writers
-        # never share a data directory; losers leave vacuumable orphans
-        commit_rel = os.path.join(
-            "commits", f"c_{version:06d}_{tag}_{uuid.uuid4().hex[:6]}"
-        )
-        commit_abs = os.path.join(self.root, commit_rel)
-        n_out = len(affected) if affected else self.n_buckets
-        (
-            new_rows.repartition(max(n_out, 1), F.col(self.BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(self.BUCKET_COL)
-            .parquet(commit_abs)
-        )
-        metrics_row = observation.get
-        if pre_commit is not None:
-            # transactional DQ gate: raises -> the manifest below is never
-            # written, the data files are unreferenced orphans (vacuumable),
-            # and the epoch stays uncommitted. The gate's aggregates were
-            # observed during the write job itself — zero extra scans.
-            pre_commit()
-        written_buckets = set()
-        for d in os.listdir(commit_abs):
-            if d.startswith(f"{self.BUCKET_COL}="):
-                written_buckets.add(int(d.split("=", 1)[1]))
-
-        lineage = {
-            "epoch_id": epoch_id,
-            "mode": self.mode,
-            "affected_buckets": affected,
-            "written_buckets": sorted(written_buckets),
-            "keys_considered": metrics_row["keys_considered"] if metrics_row else None,
-            "keys_deleted": metrics_row["keys_deleted"] if metrics_row else None,
-            # JSON string: lineage() rows stay flat enough for
-            # spark.createDataFrame (nested variant maps break inference)
-            "partition_rows": json.dumps(_partition_rows(commit_abs)),
-        }
-
-        # validate-or-rebase: a COW rewrite baked the READ SET (the
-        # affected buckets as of read_m + the then-current delta chain)
-        # into its data files. Losing the version race is rebaseable ONLY
-        # if the winners did not change that read set — same buckets' dir
-        # lists, same global deltas, same bucket count. Otherwise the
-        # rewrite is stale and the caller re-runs the merge.
-        def read_set(m):
-            bk = m["buckets"] if m else {}
-            nb = int(m["n_buckets"]) if m else self.n_buckets
-            return _deltas(m), {b: bk.get(str(b)) for b in affected}, nb
-
-        read_set_0 = read_set(read_m)
-
-        def build_cow(snap):
-            if read_set(snap) != read_set_0:
-                raise CommitConflictError(
-                    f"epoch {epoch_id!r}: a concurrent commit changed "
-                    f"this COW merge's read set (buckets {affected}); "
-                    "the epoch is uncommitted — re-run the merge"
-                )
-            buckets_map = _buckets(snap)
-            for b in affected:
-                buckets_map.pop(str(b), None)
-            for b in written_buckets:
-                buckets_map[str(b)] = [commit_rel]
-            return _rebased(snap, schema), buckets_map, _deltas(snap), lineage
-
-        return self._commit_loop(epoch_id, build_cow, commit_rel)
-
-    def _merge_mor_append(
-        self,
-        b_arm: DataFrame,
-        schema: T.StructType,
-        epoch_id: str,
-        pre_commit=None,
-    ) -> dict:
-        """MOR fast path: the normalized batch lands as a raw delta — a
-        pure MAP job (scan -> storage form -> partitioned write), ZERO
-        shuffles per epoch. Dedup/LWW happens once, at read or compaction
-        (``_resolve``), which is where Hudi MOR / Iceberg streaming CDC
-        put it too. This is what makes per-epoch cost O(batch) with
-        near-perfect parallel scaling; the price is read amplification
-        until ``compact()`` runs."""
-        delta = (
-            b_arm.withColumn(self.DEL_COL, F.col("__op") == "delete")
-            .withColumnRenamed("__seq", self.SEQ_COL)
-            .withColumnRenamed("__bucket", self.BUCKET_COL)
-            .drop("__op", "__side")
+        delta = conform(
+            reduced.withColumn(self.BUCKET_COL, self.bucket_expr())
+            .withColumn(self.DEL_COL, F.col("op") == "delete")
+            .withColumnRenamed("seq", self.SEQ_COL),
+            self._data_schema(schema),
         )
         observation = Observation(f"merge_{uuid.uuid4().hex[:8]}")
         observed = delta.observe(
@@ -1461,8 +1247,7 @@ class SnapshotTable:
         )
         # version here names the data dir only (cosmetic): the COMMIT
         # version is re-derived per attempt inside _commit_loop
-        m0 = self.manifest()
-        version = m0["version"] + 1 if m0 else 0
+        version = m["version"] + 1 if m else 0
         tag = "".join(ch for ch in epoch_id if ch.isalnum())[-24:] or "e"
         # attempt-unique dir: two workers retrying the SAME epoch must not
         # interleave writes into one directory (the loser's manifest claim
@@ -1486,8 +1271,7 @@ class SnapshotTable:
             # growing the delta chain — a zero-row delta would still count
             # toward read amplification and maybe_compact's trigger. The
             # emptiness is known from the Observation the write job
-            # already ran, so this costs no extra scan (COW has the same
-            # short-circuit up front via its affected-bucket probe).
+            # already ran, so this costs no extra scan.
             shutil.rmtree(commit_abs, ignore_errors=True)
         lineage = {
             "epoch_id": epoch_id,
@@ -1497,6 +1281,8 @@ class SnapshotTable:
         }
         if not empty:
             lineage["delta_dir"] = commit_rel
+            # JSON string: lineage() rows stay flat enough for
+            # spark.createDataFrame (nested variant maps break inference)
             lineage["partition_rows"] = json.dumps(_partition_rows(commit_abs))
 
         # rebase-on-conflict: a MOR delta is position-independent (the
@@ -1680,7 +1466,7 @@ class SnapshotTable:
         interveners' deltas (everything not in ``folded``) on top of the
         rewritten files, take the fresh epoch ledger, claim the next
         version. A concurrent commit that changed the BUCKET MAP
-        (another compaction, a COW merge, a rebucket) invalidated the
+        (another compaction, a rebucket) invalidated the
         rewrite's read set: raise, leaving the written dir a vacuumable
         orphan — re-running the maintenance op is always safe."""
 
@@ -1739,8 +1525,8 @@ class SnapshotTable:
         compacted base replaces the buckets, folded deltas drop, and
         the interveners' deltas survive on top (LWW is order-free, so
         base ∪ late-delta resolves identically either way). A concurrent
-        commit that rewrote BUCKETS (another compaction, a COW merge,
-        a rebucket) raises ``CommitConflictError`` instead — re-run."""
+        commit that rewrote BUCKETS (another compaction, a rebucket)
+        raises ``CommitConflictError`` instead — re-run."""
         m = self.manifest()
         if m is None:
             return {"skipped": True}
@@ -1821,7 +1607,7 @@ class SnapshotTable:
             # version conflict, interrupt) leaves the on-disk table at
             # the OLD count: keep the handle consistent with it, or every
             # later merge on this handle would hash rows under the new
-            # count and COW would miss stored rows (duplicate live rows)
+            # count and lookups would probe buckets the table never adopted
             self.n_buckets = old_n
             raise
 
@@ -1862,12 +1648,12 @@ class SnapshotTable:
             own_delta=True,
         )
 
-    def maybe_compact(self, max_deltas: int = 16, minor: bool = True) -> dict | None:
+    def maybe_compact(self, max_deltas: int = 16) -> dict | None:
         """Maintenance policy: compact when the unresolved delta chain
         exceeds ``max_deltas`` — bounds MOR read amplification the way
         Hudi's compaction scheduling / Iceberg's rewrite policies do. Call
-        it from the replay loop; it is a no-op otherwise. Defaults to
-        MINOR compaction (collapse the delta chain, O(deltas)) — the full
+        it from the replay loop; it is a no-op otherwise. Runs MINOR
+        compaction (collapse the delta chain, O(deltas)) — the full
         O(table) base rewrite is a rare scheduled job (``compact()``),
         not an every-few-epochs policy.
 
@@ -1881,7 +1667,7 @@ class SnapshotTable:
         if m is None or len(m.get("global_deltas", [])) < max_deltas:
             return None
         try:
-            return self.compact_minor() if minor else self.compact()
+            return self.compact_minor()
         except CommitConflictError:
             return None
 

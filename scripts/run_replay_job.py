@@ -7,7 +7,7 @@ Cluster usage (the north-rule deployment shape)::
         scripts/run_replay_job.py \
         --log-dir  s3a://bucket/changelog \
         --table    s3a://bucket/tables/sequences \
-        --mode mor --n-buckets 4096 --compact-every 16 \
+        --n-buckets 4096 --compact-every 16 \
         --checkpoint s3a://bucket/ck/sequences \
         --quarantine s3a://bucket/quarantine/sequences
 
@@ -33,7 +33,6 @@ def main() -> None:
     ap = argparse.ArgumentParser(description="CDC replay -> snapshot table")
     ap.add_argument("--log-dir", required=True)
     ap.add_argument("--table", required=True)
-    ap.add_argument("--mode", choices=["cow", "mor"], default="mor")
     ap.add_argument("--n-buckets", type=int, default=32)
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--quarantine", default=None)
@@ -80,7 +79,7 @@ def main() -> None:
 
         spark = get_spark(app_name="cdc-replay")
 
-    table = SnapshotTable(spark, args.table, n_buckets=args.n_buckets, mode=args.mode)
+    table = SnapshotTable(spark, args.table, n_buckets=args.n_buckets)
     if args.redrive:
         lineage = redrive_quarantine(spark, args.quarantine, table)
         summary = {"driver": "redrive", "lineage": lineage}

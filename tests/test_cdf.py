@@ -18,7 +18,7 @@ def _mk(spark, tmp_path, mode="mor", n_buckets=8):
     )
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_changes_classifies_insert_update_delete(spark, tmp_path, mode):
     t = _mk(spark, tmp_path / mode, mode=mode)
     t.merge_reduced(

@@ -24,14 +24,12 @@ def _batch(spark, rows):
     return spark.createDataFrame(rows, "op string, doc_id string, seq long, v double")
 
 
-def _mk(spark, tmp_path, mode):
-    return SnapshotTable(
-        spark, str(tmp_path / "t"), key_col="doc_id", n_buckets=4, mode=mode
-    )
+def _mk(spark, tmp_path):
+    return SnapshotTable(spark, str(tmp_path / "t"), key_col="doc_id", n_buckets=4)
 
 
 def test_commit_attempts_recorded_in_lineage(spark, tmp_path):
-    t = _mk(spark, tmp_path, "mor")
+    t = _mk(spark, tmp_path)
     first = t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0)]), "e0")
     assert first["commit_attempts"] == 1  # uncontended
     twin = SnapshotTable(spark, t.root, key_col="doc_id", n_buckets=4, mode="mor")
@@ -56,39 +54,8 @@ def test_commit_attempts_recorded_in_lineage(spark, tmp_path):
     assert [r["commit_attempts"] for r in t.lineage()] == [1, 1, 2]
 
 
-def test_cow_merge_conflicts_with_rebucket_after_hashing(spark, tmp_path):
-    """A rebucket that lands after a COW merge hashed its batch (under the
-    old count) must fail the merge's read-set check: rebasing would put
-    old-count bucket ids into the new layout and write the old count
-    back into the manifest."""
-    t = _mk(spark, tmp_path, "cow")
-    t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0)]), "e0")
-    twin = SnapshotTable(spark, t.root, key_col="doc_id", n_buckets=4, mode="cow")
-    real = t.bucket_expr
-
-    def rebucket_then_hash():
-        t.bucket_expr = real
-        twin.rebucket(16)
-        return real()
-
-    t.bucket_expr = rebucket_then_hash
-    with pytest.raises(CommitConflictError, match="read set"):
-        t.merge_reduced(_batch(spark, [("update", "a", 2, 2.0)]), "e1")
-    assert not t.has_epoch("e1")
-    assert t.manifest()["n_buckets"] == 16
-    # the re-run adopts the new count and converges
-    t.merge_reduced(_batch(spark, [("update", "a", 2, 2.0)]), "e1")
-    assert t.manifest()["n_buckets"] == 16
-    assert [(r["doc_id"], r["v"]) for r in t.state().collect()] == [("a", 2.0)]
-    assert [r["v"] for r in t.lookup(["a"]).collect()] == [2.0]
-
-
 def _mor_append(spark, t):
     t.merge_reduced(_batch(spark, [("insert", "b", 2, 2.0)]), "e1")
-
-
-def _cow_merge(spark, t):
-    t.merge_reduced(_batch(spark, [("update", "a", 2, 2.0)]), "e1")
 
 
 def _compact(spark, t):
@@ -96,12 +63,10 @@ def _compact(spark, t):
 
 
 @pytest.mark.parametrize(
-    "mode,commit",
-    [("mor", _mor_append), ("cow", _cow_merge), ("mor", _compact)],
-    ids=["mor_append", "cow_merge", "compact"],
+    "commit", [_mor_append, _compact], ids=["mor_append", "compact"]
 )
-def test_retry_exhaustion_leaves_epoch_uncommitted(spark, tmp_path, mode, commit):
-    t = _mk(spark, tmp_path, mode)
+def test_retry_exhaustion_leaves_epoch_uncommitted(spark, tmp_path, commit):
+    t = _mk(spark, tmp_path)
     t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0)]), "e0")
     before = t.current_version()
     live = set(os.listdir(os.path.join(t.root, "commits")))

@@ -2,11 +2,10 @@
 
 The manifest version file is claimed exclusively (hard-link create — the
 local-FS analogue of a conditional PUT / catalog CAS): exactly one of two
-racing writers wins a version. MOR appends rebase automatically (a global
-delta is position-independent under the LWW resolve); COW merges rebase
-only when the conflicting commits did not change their read set, else
-``CommitConflictError`` propagates with the epoch uncommitted and the
-merge is safe to re-run. The LATEST pointer is a hint — ``current_version``
+racing writers wins a version. Merge deltas rebase automatically (a global
+delta is position-independent under the LWW resolve) unless a rebucket
+changed the hash in between; then ``CommitConflictError`` propagates with
+the epoch uncommitted and the merge is safe to re-run. The LATEST pointer is a hint — ``current_version``
 probes forward past it, so a writer crashing (or losing a pointer race)
 between the manifest claim and the pointer swap never hides a commit.
 
@@ -32,10 +31,8 @@ def _batch(spark, rows):
     return spark.createDataFrame(rows, "op string, doc_id string, seq long, v double")
 
 
-def _mk(spark, tmp_path, mode="mor", name="t"):
-    return SnapshotTable(
-        spark, str(tmp_path / name), key_col="doc_id", n_buckets=4, mode=mode
-    )
+def _mk(spark, tmp_path, name="t"):
+    return SnapshotTable(spark, str(tmp_path / name), key_col="doc_id", n_buckets=4)
 
 
 def _state(t):
@@ -114,52 +111,6 @@ def test_mor_same_epoch_twin_wins_exactly_once(spark, tmp_path):
     assert len(t.manifest()["global_deltas"]) == 2
     # the loser's attempt-unique data dir was removed; nothing dangles
     assert t.expire_orphans() == []
-
-
-def test_cow_concurrent_disjoint_buckets_rebase(spark, tmp_path):
-    t = _mk(spark, tmp_path, mode="cow")
-    t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0)]), "e0")
-    # pick two keys in DIFFERENT buckets (disjoint COW read sets)
-    keys = ["k%d" % i for i in range(16)]
-    bks = dict(zip(keys, (t.buckets_for([k])[0] for k in keys)))
-    k1 = keys[0]
-    k2 = next(k for k in keys[1:] if bks[k] != bks[k1])
-    twin = SnapshotTable(spark, t.root, key_col="doc_id", n_buckets=4, mode="cow")
-    _interpose(
-        t,
-        lambda: twin.merge_reduced(
-            _batch(spark, [("insert", k2, 2, 2.0)]), "twin-0"
-        ),
-    )
-    lin = t.merge_reduced(_batch(spark, [("insert", k1, 3, 3.0)]), "e1")
-    assert not lin.get("skipped")
-    assert _state(t) == {"a": 1.0, k1: 3.0, k2: 2.0}
-    assert t.has_epoch("twin-0") and t.has_epoch("e1")
-
-
-def test_cow_concurrent_overlapping_buckets_conflict_and_rerun(spark, tmp_path):
-    t = _mk(spark, tmp_path, mode="cow")
-    t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0)]), "e0")
-    twin = SnapshotTable(spark, t.root, key_col="doc_id", n_buckets=4, mode="cow")
-    _interpose(
-        t,
-        lambda: twin.merge_reduced(
-            _batch(spark, [("update", "a", 2, 2.0)]), "twin-0"
-        ),
-    )
-    with pytest.raises(CommitConflictError):
-        # same key -> same bucket: t's rewrite folded stale state, so the
-        # lost race must NOT be silently rebased
-        t.merge_reduced(_batch(spark, [("update", "a", 3, 3.0)]), "e1")
-    assert not t.has_epoch("e1")  # the epoch stayed uncommitted
-    assert _state(t) == {"a": 2.0}  # the twin's commit is intact
-    # the loser's data dir is an unreferenced orphan, vacuumable (the
-    # vacuum also removes prior versions' superseded dirs, by design)
-    assert any("_e1_" in d for d in t.expire_orphans())
-    # re-running the merge against fresh state converges (LWW holds)
-    lin = t.merge_reduced(_batch(spark, [("update", "a", 3, 3.0)]), "e1")
-    assert not lin.get("skipped")
-    assert _state(t) == {"a": 3.0}
 
 
 def test_mor_rebases_over_concurrent_compaction(spark, tmp_path):
@@ -294,7 +245,7 @@ def test_vacuum_retention_interval_protects_in_flight_commits(spark, tmp_path):
     import os
     import time
 
-    t = _mk(spark, tmp_path, mode="mor")
+    t = _mk(spark, tmp_path)
     t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0)]), "e0")
     t.merge_reduced(_batch(spark, [("update", "a", 2, 2.0)]), "e1")
     t.compact()  # e0/e1 delta dirs become unreferenced orphans

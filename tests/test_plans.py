@@ -76,8 +76,8 @@ def test_merge_aggregate_has_partial_phase(spark, tmp_path):
 
 
 def test_bucket_pruned_target_read(spark, tmp_path):
-    """COW merges read only the affected buckets: the target-side scan
-    lists only those partition dirs."""
+    """Reads restricted to some buckets (lookups, CDF diffs) scan only
+    those buckets' partition dirs of the compacted base."""
     from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import SnapshotTable
     import pyspark.sql.types as T
 
@@ -89,9 +89,10 @@ def test_bucket_pruned_target_read(spark, tmp_path):
             T.StructField("tokens", T.ArrayType(T.IntegerType())),
         ]
     )
-    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8, mode="cow")
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8)
     rows = [("insert", f"k{i}", i, [i]) for i in range(50)]
     tbl.merge_reduced(spark.createDataFrame(rows, schema), "e1")
+    tbl.compact()  # fold the delta into bucketed base files
     all_buckets = sorted(int(b) for b in tbl.manifest()["buckets"])
     some = all_buckets[:2]
     pruned = tbl.read(buckets=some)

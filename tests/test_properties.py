@@ -54,9 +54,8 @@ def oracle_state(events):
     ),
     n_epochs=st.integers(1, 4),
     seed=st.integers(0, 2**16),
-    mode=st.sampled_from(["cow", "mor"]),
 )
-def test_any_partition_any_order_converges(spark, tmp_path_factory, data, n_epochs, seed, mode):
+def test_any_partition_any_order_converges(spark, tmp_path_factory, data, n_epochs, seed):
     events = [_event(k, s) for k, s in data]  # duplicates possible: exact copies
     # deterministic pseudo-random partition into epochs + epoch order
     epochs = [[] for _ in range(n_epochs)]
@@ -65,7 +64,7 @@ def test_any_partition_any_order_converges(spark, tmp_path_factory, data, n_epoc
     order = sorted(range(n_epochs), key=lambda i: (i * 40503 + seed) % 65536)
 
     root = str(tmp_path_factory.mktemp("prop"))
-    table = SnapshotTable(spark, root, n_buckets=4, mode=mode)
+    table = SnapshotTable(spark, root, n_buckets=4)
     for idx in order:
         if epochs[idx]:
             df = spark.createDataFrame(epochs[idx], ENVELOPE)
@@ -126,10 +125,9 @@ def test_epoch_ledger_matches_reference_set(ids):
     ),
     n_epochs=st.integers(2, 4),
     seed=st.integers(0, 2**16),
-    mode=st.sampled_from(["cow", "mor"]),
 )
 def test_maintenance_interleaved_anywhere_converges(
-    spark, tmp_path_factory, data, n_epochs, seed, mode
+    spark, tmp_path_factory, data, n_epochs, seed
 ):
     """Maintenance ops (full/minor compaction, snapshot expiry, rebucket)
     injected pseudo-randomly BETWEEN epochs never change the final state:
@@ -141,7 +139,7 @@ def test_maintenance_interleaved_anywhere_converges(
         epochs[(i * 2654435761 + seed) % n_epochs].append(ev)
 
     root = str(tmp_path_factory.mktemp("propm"))
-    table = SnapshotTable(spark, root, n_buckets=3, mode=mode)
+    table = SnapshotTable(spark, root, n_buckets=3)
     for idx in range(n_epochs):
         if epochs[idx]:
             df = spark.createDataFrame(epochs[idx], ENVELOPE)

@@ -20,7 +20,7 @@ def _mk(spark, tmp_path, n_buckets=4, mode="mor"):
     )
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_rebucket_preserves_state_and_serves_lookups(spark, tmp_path, mode):
     t = _mk(spark, tmp_path / mode, n_buckets=4, mode=mode)
     t.merge_reduced(

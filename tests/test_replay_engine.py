@@ -59,7 +59,7 @@ def table_rows(table: SnapshotTable) -> list[tuple]:
     ]
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_replay_matches_oracle_and_is_idempotent(spark, log_dir, tmp_path, mode):
     table = SnapshotTable(spark, str(tmp_path / "tbl"), n_buckets=16, mode=mode)
     r1 = run_replay(spark, log_dir, table, quarantine_dir=str(tmp_path / "q"))
@@ -77,6 +77,35 @@ def test_replay_matches_oracle_and_is_idempotent(spark, log_dir, tmp_path, mode)
     assert len(r2.epochs_skipped) == SPEC.n_batches
     assert table.current_version() == v_before
     assert table_rows(table) == want
+
+
+def test_merge_on_read_is_the_only_write_strategy(spark, tmp_path):
+    with pytest.raises(ValueError, match="mode must be 'mor'"):
+        SnapshotTable(spark, str(tmp_path / "tbl"), mode="cow")
+    assert not (tmp_path / "tbl").exists(), "a refused table writes nothing"
+
+
+def test_equal_seq_conflicts_resolve_to_one_winner(spark, tmp_path):
+    """Conflicting same-key rows at an EQUAL seq pick one winner, whatever
+    their order, their split across epochs, and before or after
+    compaction (the tie breaks on a payload hash, not arrival order)."""
+    from pyspark.sql import Row
+
+    rows = [
+        Row(op="update", doc_id="a", seq=5, text="x", n=1),
+        Row(op="update", doc_id="a", seq=5, text="y", n=2),
+        Row(op="update", doc_id="a", seq=5, text="z", n=3),
+    ]
+    winners = set()
+    for i, order in enumerate([rows, rows[::-1], [rows[1], rows[2], rows[0]]]):
+        t = SnapshotTable(spark, str(tmp_path / f"t{i}"), n_buckets=2)
+        t.merge_reduced(spark.createDataFrame(order[:1]), "e0")
+        t.merge_reduced(spark.createDataFrame(order[1:]), "e1")
+        for _ in range(2):
+            (r,) = t.state().collect()
+            winners.add((r.text, r.n))
+            t.compact()
+    assert len(winners) == 1, winners
 
 
 def test_resume_from_partial_run(spark, log_dir, tmp_path):
@@ -103,7 +132,7 @@ def test_out_of_order_epoch_application_converges(spark, log_dir, tmp_path):
     assert table_rows(table) == oracle_rows(f"{log_dir}/batch_*/*.parquet")
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_deletes_remove_rows(spark, tmp_path, mode):
     import pyspark.sql.types as T
 
@@ -218,7 +247,7 @@ def test_schema_evolution_additive_and_widening(spark, tmp_path):
     assert got == want
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_time_travel_and_compaction(spark, log_dir, tmp_path, mode):
     table = SnapshotTable(spark, str(tmp_path / "tbl"), n_buckets=8, mode=mode)
     run_replay(spark, log_dir, table, max_epochs=2)
@@ -226,9 +255,8 @@ def test_time_travel_and_compaction(spark, log_dir, tmp_path, mode):
     rows_v2 = table.state().count()
     run_replay(spark, log_dir, table)
     assert table.state(version=v2).count() == rows_v2  # VERSION AS OF
-    if mode == "mor":
-        # unresolved global deltas exist before compaction
-        assert len(table.manifest()["global_deltas"]) == SPEC.n_batches
+    # unresolved global deltas exist before compaction
+    assert len(table.manifest()["global_deltas"]) == SPEC.n_batches
     before = table_rows(table)
     table.compact()
     assert table_rows(table) == before
@@ -240,23 +268,6 @@ def test_time_travel_and_compaction(spark, log_dir, tmp_path, mode):
     removed = table.expire_orphans()
     assert removed, "old commit dirs should be vacuumed"
     assert table_rows(table) == before
-
-
-def test_mor_cow_mixed_history_converges(spark, log_dir, tmp_path):
-    """Epochs applied MOR-first then COW on the same table: the COW merge
-    must resolve pending delta chains and still match the oracle."""
-    import os
-    from aws_serverless_elt_pipeline_enterprise_spark.sources.changelog import list_batches
-    from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import apply_epoch
-
-    table = SnapshotTable(spark, str(tmp_path / "tbl"), n_buckets=8, mode="mor")
-    batches = list_batches(log_dir)
-    for p in batches[:4]:
-        apply_epoch(table, spark.read.parquet(p), os.path.basename(p))
-    table.mode = "cow"
-    for p in batches[4:]:
-        apply_epoch(table, spark.read.parquet(p), os.path.basename(p))
-    assert table_rows(table) == oracle_rows(f"{log_dir}/batch_*/*.parquet")
 
 
 def test_streaming_replay_matches_batch(spark, log_dir, tmp_path):

@@ -26,6 +26,7 @@ from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import (
 from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import (
     EpochLedger,
     SnapshotTable,
+    _partition_rows,
 )
 
 EVENT_SCHEMA = T.StructType(
@@ -99,13 +100,13 @@ def test_manifest_stays_small_across_many_epochs(spark, tmp_path):
 
 def test_reopen_adopts_manifest_bucket_spec(spark, tmp_path):
     root = str(tmp_path / "t")
-    t1 = SnapshotTable(spark, root, n_buckets=16, mode="cow")
+    t1 = SnapshotTable(spark, root, n_buckets=16)
     df = spark.createDataFrame(
         [("insert", f"d{i}", i, [i], 1) for i in range(20)], EVENT_SCHEMA
     )
     t1.merge_reduced(df, "e-0")
     # reopen with the WRONG constructor args: manifest wins
-    t2 = SnapshotTable(spark, root, key_col="tokens", n_buckets=4, mode="cow")
+    t2 = SnapshotTable(spark, root, key_col="tokens", n_buckets=4)
     assert t2.n_buckets == 16 and t2.key_col == "doc_id"
     # a second merge against the reopened handle must not duplicate keys
     t2.merge_reduced(
@@ -117,6 +118,12 @@ def test_reopen_adopts_manifest_bucket_spec(spark, tmp_path):
     rows = t2.state().collect()
     assert len(rows) == 20
     assert all(r.tokens == [7] for r in rows), "updates must hit stored rows"
+    # bucket-pruned probes hash with the adopted spec, before and after
+    # the chain is folded into bucketed base files
+    keys = [f"d{i}" for i in range(20)]
+    assert t2.lookup(keys).count() == 20
+    t2.compact()
+    assert sorted(r.tokens for r in t2.lookup(keys).collect()) == [[7]] * 20
 
 
 # ------------------------------------------------------- dedupe guards
@@ -492,10 +499,12 @@ def test_lineage_records_per_partition_rows(spark, tmp_path):
     assert pr["total_rows"] == 40
     assert pr["n_files"] >= 1
     assert sum(pr["per_partition"].values()) == 40
-    # COW path: keys carry the bucket dir
-    t2 = SnapshotTable(spark, str(tmp_path / "t2"), n_buckets=4, mode="cow")
-    lin2 = t2.merge_reduced(df, "ep-0")
-    pr2 = json.loads(lin2["partition_rows"])
+    # a bucketed dir (compact()'s output): keys carry the bucket dir
+    t2 = SnapshotTable(spark, str(tmp_path / "t2"), n_buckets=4)
+    t2.merge_reduced(df, "ep-0")
+    t2.compact()
+    (base,) = {d for dirs in t2.manifest()["buckets"].values() for d in dirs}
+    pr2 = _partition_rows(os.path.join(t2.root, base))
     assert pr2["total_rows"] == 40
     assert all(k.startswith("_bucket=") for k in pr2["per_partition"])
     # persisted in the manifest, and flat enough for the metrics DF surface

@@ -412,32 +412,6 @@ def test_decode_real_corrupt_payloads_degrade_not_crash(spark):
     assert feats["w"].feat_dim == 0 and feats["p"].feat_dim == 0
 
 
-def test_iceberg_reduce_tie_break_matches_snapshot_merge(spark, tmp_path):
-    """The two MERGE backends must pick the same winner for equal-seq
-    same-key rows — IcebergTable._reduce is plain DataFrame code, so
-    parity is testable without the Iceberg runtime."""
-    from pyspark.sql import Row
-
-    from aws_serverless_elt_pipeline_enterprise_spark.tableio import iceberg as I
-    from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import (
-        SnapshotTable,
-    )
-
-    batch = spark.createDataFrame(
-        [
-            Row(op="update", doc_id="a", seq=5, text="x", n=1),
-            Row(op="update", doc_id="a", seq=5, text="y", n=2),
-            Row(op="update", doc_id="a", seq=5, text="z", n=3),
-        ]
-    )
-    it = I.IcebergTable(spark, "nocatalog.db.t", key_col="doc_id")
-    red = it._reduce(batch).first()
-    st = SnapshotTable(spark, str(tmp_path / "t"), key_col="doc_id", n_buckets=2)
-    st.merge_reduced(batch, "e0")
-    snap = st.state().first()
-    assert (red.text, red.n) == (snap.text, snap.n)
-
-
 def test_epoch_ledger_compacts_zero_padded_batch_ids():
     """The replay driver's real naming (batch_00042: '_' separator +
     zero-padded suffix) must compact to an O(1) watermark, not fall to

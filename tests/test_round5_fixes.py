@@ -301,22 +301,6 @@ def test_roundtrip_previous_result_survives_next_call(spark):
     assert rows1 == rows2 and len(rows1) > 0
 
 
-def test_iceberg_merge_sql_has_soft_delete_arms():
-    """Sandbox-executable slice of the soft-delete fix: the generated
-    MERGE must not contain a physical DELETE arm, and state() must
-    filter the tombstone flag (full semantics run under a real runtime
-    in test_iceberg_backend.py)."""
-    import inspect
-
-    from aws_serverless_elt_pipeline_enterprise_spark.tableio import iceberg as I
-
-    src = inspect.getsource(I.IcebergTable.merge_epoch)
-    assert "THEN DELETE" not in src
-    assert I.DEL_COL == "_deleted"
-    st_src = inspect.getsource(I.IcebergTable.state)
-    assert "DEL_COL" in st_src
-
-
 def test_synth_media_roundtrips_through_real_decoders(spark):
     """synth_payload's doc_id arithmetic contract IS the oracle: decode
     must return exactly the predicted dims/duration/fill-mean."""

@@ -31,7 +31,7 @@ def _mk(spark, tmp_path, mode="mor"):
     return t
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_delete_where_tombstones_matches(spark, tmp_path, mode):
     t = _mk(spark, tmp_path / mode, mode=mode)
     v0 = t.current_version()

@@ -227,43 +227,6 @@ def _pairs_from_shingle_rows(
 _MH_PRIME = (1 << 31) - 1  # Mersenne prime 2^31-1
 
 
-def _minhash_sig(
-    shingles: F.Column, k: int, seed: int = 42, hash_mode: str = "xxhash64"
-) -> F.Column:
-    """k-permutation MinHash signature (array<bigint>), all JVM-side:
-    shingle id x = hash64(shingle) mod p; h_i(x) = (a_i*x + b_i) mod p.
-    a_i < 2^20 and x < 2^31 keep a*x + b < 2^52 — no signed-long overflow
-    in the JVM expression (overflow would silently wrap and break
-    determinism claims). hash_mode='portable' uses the md5-derived 60-bit
-    hash so DuckDB can replay the identical chain (oracle checking)."""
-    # Spark cannot common-subexpression-eliminate across lambda scopes, so
-    # k separate `array_min(transform(...))` expressions would recompute the
-    # shingle array and its hashes k times. Instead: ONE fold over the
-    # shingle-hash array, keeping a running elementwise minimum of all k
-    # permutation hashes (zip_with + least). Everything evaluates once.
-    a_list, b_list = _perm_consts(k, seed)
-    a_consts = F.array(*[F.lit(a) for a in a_list])
-    b_consts = F.array(*[F.lit(b) for b in b_list])
-    xs = F.transform(
-        shingles, lambda s: F.pmod(_hash64(s, hash_mode), F.lit(_MH_PRIME))
-    )
-    return F.aggregate(
-        xs,
-        F.array_repeat(F.lit(_MH_PRIME).cast("long"), k),
-        lambda acc, x: F.zip_with(
-            acc,
-            F.sequence(F.lit(1), F.lit(k)),
-            lambda m, i: F.least(
-                m,
-                F.pmod(
-                    x * F.element_at(a_consts, i) + F.element_at(b_consts, i),
-                    F.lit(_MH_PRIME),
-                ),
-            ),
-        ),
-    )
-
-
 def _perm_consts(k: int, seed: int) -> tuple[list[int], list[int]]:
     a = [((seed * 1_000_003 + i * 2_654_435_761 + 1) % (1 << 20)) | 1 for i in range(k)]
     b = [(seed * 97 + i * 1_234_567_891) % _MH_PRIME for i in range(k)]
@@ -302,14 +265,18 @@ def _sigs_from_shingled(
     """Signatures from a frame that already carries the shingle array —
     the ``dedup_pipeline`` entry point (shared tokenization).
 
-    Computed as explode + k codegen ``min`` aggregates rather than the
-    single-fold array walk (``_minhash_sig``): higher-order functions
-    evaluate INTERPRETED per element, so the fold pays ~k boxed lambda
-    evaluations per shingle, while ``min(pmod(x*a_i+b_i, p))`` is
-    whole-stage-codegen over primitive longs. Same values exactly — both
-    compute min over the identical (a_i*x+b_i) mod p family, and docs
-    with zero shingles drop on both paths (explode emits nothing; the
-    fold path filtered size > 0). Measured 5.8x on the sf1 corpus
+    Shingle id x = hash64(shingle) mod p; h_i(x) = (a_i*x + b_i) mod p.
+    a_i < 2^20 and x < 2^31 keep a*x + b < 2^52 — no signed-long overflow
+    (overflow would silently wrap and break determinism).
+    hash_mode='portable' uses the md5-derived 60-bit hash so DuckDB can
+    replay the identical chain (oracle checking).
+
+    Computed as explode + k codegen ``min`` aggregates rather than a
+    single-fold array walk: higher-order functions evaluate INTERPRETED
+    per element, so a fold pays ~k boxed lambda evaluations per shingle,
+    while ``min(pmod(x*a_i+b_i, p))`` is whole-stage-codegen over
+    primitive longs. Docs with zero shingles drop (explode emits
+    nothing). Measured 5.8x over the fold on the sf1 corpus
     (OPTIMIZATION_r06.md)."""
     rows = shingled.select(F.col(key), F.explode(shcol).alias("_s"))
     a_list, b_list = _perm_consts(k, seed)
@@ -533,9 +500,8 @@ def _star_components(pairs: DataFrame, max_iter: int) -> tuple[DataFrame, int, b
     if not converged:
         # the budget may have ended ON the converging round (its edge
         # set changed from the previous one but is already the
-        # fixpoint). One verify-only probe — same pattern as the
-        # propagation branch — keeps the truncation warning free of
-        # false positives for diameter-shaped == max_iter inputs.
+        # fixpoint). One verify-only probe keeps the truncation warning
+        # free of false positives for diameter-shaped == max_iter inputs.
         converged = _edge_sig(_small_star(_large_star(edges))) == sig
     # at the fixpoint every edge is (node -> component min); nodes with
     # no edge (roots, singletons) label themselves
@@ -586,39 +552,26 @@ def _propagate(pairs: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
     return labels, False
 
 
-def dup_clusters(
-    pairs: DataFrame, max_iter: int = 20, algorithm: str = "auto"
-) -> DataFrame:
+def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over near-dup pairs -> (doc_id, cluster), with
     cluster = min doc id in the component (the canonical keeper).
 
-    ``algorithm="auto"`` (default): min-label propagation for up to 5
-    rounds — one join + partial-agg groupBy per round, which converges
-    fastest on the clique-shaped components real near-dup clusters form
-    (measured at sf0.1: propagation ~2 rounds, star 1.4x slower) — then,
-    if still unconverged (deep chain-shaped components), falls back to
-    alternating large-star/small-star for the full budget. Worst case
-    pays 5 cheap rounds + O(log^2 n) star rounds; shallow graphs pay
-    exactly the propagation cost.
+    Min-label propagation for up to 5 rounds — one join + partial-agg
+    groupBy per round, which converges fastest on the clique-shaped
+    components real near-dup clusters form (measured at sf0.1:
+    propagation ~2 rounds, star 1.4x slower) — then, if still
+    unconverged (deep chain-shaped components), alternating
+    large-star/small-star (Kiveris et al.) for the full ``max_iter``
+    budget: O(log^2 n) rounds on ANY component shape (measured: 8 rounds
+    at diameter 100, 11 at 1000, where propagation needs D rounds), the
+    10^10-edge scale path. Worst case pays 5 cheap rounds + O(log^2 n)
+    star rounds; shallow graphs pay exactly the propagation cost.
 
-    ``algorithm="star"``: alternating large-star/small-star (Kiveris et
-    al.) — O(log^2 n) rounds on ANY component shape (measured: 8 rounds
-    at diameter 100, 11 at 1000, where propagation needs D rounds); the
-    10^10-edge scale path.
-
-    ``algorithm="propagation"``: pure min-label propagation, O(diameter)
-    rounds. All modes localCheckpoint per round (iterative joins
-    otherwise grow the logical plan until the plan STRING alone OOMs
-    the driver) and warn (never silently truncate) when the budget is
-    exhausted before convergence."""
-    if algorithm == "auto":
-        labels, converged = _propagate(pairs, min(5, max_iter))
-        if converged:
-            return labels.select(
-                F.col("node").alias("doc_id"), F.col("label").alias("cluster")
-            )
-        algorithm = "star"
-    if algorithm == "star":
+    Every round localCheckpoints (iterative joins otherwise grow the
+    logical plan until the plan STRING alone OOMs the driver), and an
+    exhausted star budget warns (never silently truncates)."""
+    labels, converged = _propagate(pairs, min(5, max_iter))
+    if not converged:
         labels, _, converged = _star_components(pairs, max_iter)
         if not converged:
             import warnings
@@ -627,46 +580,6 @@ def dup_clusters(
                 f"dup_clusters: star rounds did not converge within "
                 f"{max_iter} rounds; labels are a refinement, not the "
                 f"transitive closure",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return labels.select(
-            F.col("node").alias("doc_id"), F.col("label").alias("cluster")
-        )
-    labels, converged = _propagate(pairs, max_iter)
-    if not converged:
-        edges = pairs.select("a", "b")
-        sym = edges.union(
-            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        # the loop exhausted with its LAST round still changing labels —
-        # but that round may itself have been the converging one. One
-        # verify-only probe (join + limit(1) count, no label update)
-        # distinguishes "converged exactly on round max_iter" from
-        # "truncated", so ops alerting on this warning gets no false
-        # positive for diameter == max_iter components.
-        prop = sym.join(
-            labels.withColumnRenamed("node", "b"), "b"
-        ).select(F.col("a").alias("node"), "label")
-        still_changing = (
-            labels.union(prop)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        if still_changing:
-            # diameter > max_iter: labels diverge from the transitive
-            # closure and must not be consumed silently
-            import warnings
-
-            warnings.warn(
-                f"dup_clusters: label propagation did not converge within "
-                f"{max_iter} rounds (component diameter exceeds max_iter); "
-                f"labels are a refinement, not the transitive closure",
                 RuntimeWarning,
                 stacklevel=2,
             )
@@ -835,7 +748,6 @@ def dedup_pipeline(
     seed: int = 42,
     hash_mode: str = "xxhash64",
     max_hamming: int = 3,
-    cluster_algorithm: str = "auto",
     hash_shingles: str | None = None,
 ) -> dict[str, DataFrame]:
     """The whole near-dup family over ONE tokenization pass. Standalone,
@@ -877,7 +789,7 @@ def dedup_pipeline(
             F.col(key), _hash64(F.col("shingle"), hash_shingles).alias("shingle")
         )
     ngram_pairs = _pairs_from_shingle_rows(sh_rows, key, threshold, df_cap).persist()
-    clusters = dup_clusters(ngram_pairs, algorithm=cluster_algorithm)
+    clusters = dup_clusters(ngram_pairs)
     sigs = _sigs_from_shingled(
         base.select(key, "_sh"), key, "_sh", k, seed, hash_mode
     ).persist()

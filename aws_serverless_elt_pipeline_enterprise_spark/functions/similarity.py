@@ -1,13 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exact baseline; an LSH-bucketed
-(random-hyperplane signature) variant as the scale path — at 10^10 vectors
-the brute force is a full scan per query, the LSH probe touches only the
-query's buckets.
+One path per operator:
+  * exact top-k: ``brute_force_topk`` (float cosine) and
+    ``quantized_cosine_topk`` (floor-quantized integer cosine,
+    bit-identical across engines);
+  * IVF top-k: ``build_ivf_index`` writes members partitioned by centroid
+    once, ``ivf_index_topk`` reads only the probed centroids;
+  * hyperplane-LSH top-k: ``build_lsh_index`` writes members partitioned
+    by signature once, ``lsh_index_topk`` reads only the Hamming ball;
+  * near-dup pairs: ``embedding_near_dup_pairs`` (signature bucketing +
+    exact cosine verify);
+  * many queries at once: ``batch_topk_pandas`` (numpy matmul over Arrow).
 
-Dot products run through ``F.zip_with`` + ``F.aggregate`` (JVM-side,
-codegen) in double precision; the batched variant uses a pandas UDF over
-Arrow (numpy matmul) when many queries are scored at once.
+At 10^10 vectors the brute force is a full scan per query; the index
+probes touch only the query's partitions. Dot products run through
+``F.zip_with`` + ``F.aggregate`` (JVM-side, no Python UDF) in double
+precision.
 """
 
 from __future__ import annotations
@@ -158,18 +166,16 @@ def _ivf_assign(
     id_col: str,
     vec_col: str,
     scale: int,
-    centroids: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, int]:
-    """The shared IVF 'index build' stage: quantized vectors (zero-norm
-    excluded), deterministic centroid sample, nearest-centroid
+    """The IVF index-build stage of ``build_ivf_index``: quantized vectors
+    (zero-norm excluded), deterministic centroid sample, nearest-centroid
     assignment. Returns (qd, cents, assign, centroid_mod).
 
     ``n_centroids`` is the scale-governing parameter: C stays FIXED as N
     grows, so the assign pass is O(N*C) — linear in N (a residue-class
     parameter like the old ``centroid_mod=47`` default made C grow as
     N/47, i.e. an O(N^2/47) assign at scale). The deterministic sampling
-    residue is derived from one count; swap in k-means training in prod —
-    the assign and probe stages are identical. Nearest-centroid choice is
+    residue is derived from one count. Nearest-centroid choice is
     a partial-aggregable ``max_by`` hash/sort aggregate (map-side combine
     collapses the N*C product to N rows before any exchange) — NOT a
     row_number window, which would shuffle and sort all N*C rows."""
@@ -183,31 +189,23 @@ def _ivf_assign(
         # NaN, which Spark sorts above every real score
         .filter(F.col("nv") > 0)
     )
-    if centroids is not None:
-        # pre-trained centroids (train_centroids_kmeans): columns
-        # (cid, cq, cn); the assign/probe stages below are identical
-        cents = centroids
-        centroid_mod = centroid_mod or 0
-    else:
-        if centroid_mod is None:
-            # one count at index-build time buys a C that does not grow
-            # with N. Counted over qd (post zero-norm filter), NOT df:
-            # the oracle replays the residue from the indexed set, so a
-            # zero-norm vector in the data must not skew the derived mod
-            # on one side only.
-            centroid_mod = max(1, qd.count() // n_centroids)
-        # residue 1 % mod, not a literal 1: when mod == 1 (table smaller
-        # than ~2*n_centroids) `id % 1 == 1` matches NOTHING — the engine
-        # would silently degrade to brute force while an oracle replaying
-        # the assign/probe chain returns zero rows. With 1 % mod, mod ==
-        # 1 makes every vector a centroid (exact search, oracle-aligned).
-        cents = qd.filter(
-            F.col(id_col) % centroid_mod == 1 % centroid_mod
-        ).select(
-            F.col(id_col).alias("cid"),
-            F.col("qv").alias("cq"),
-            F.col("nv").alias("cn"),
-        )
+    if centroid_mod is None:
+        # one count at index-build time buys a C that does not grow
+        # with N. Counted over qd (post zero-norm filter), NOT df:
+        # the oracle replays the residue from the indexed set, so a
+        # zero-norm vector in the data must not skew the derived mod
+        # on one side only.
+        centroid_mod = max(1, qd.count() // n_centroids)
+    # residue 1 % mod, not a literal 1: when mod == 1 (table smaller
+    # than ~2*n_centroids) `id % 1 == 1` matches NOTHING — the engine
+    # would silently degrade to brute force while an oracle replaying
+    # the assign/probe chain returns zero rows. With 1 % mod, mod ==
+    # 1 makes every vector a centroid (exact search, oracle-aligned).
+    cents = qd.filter(F.col(id_col) % centroid_mod == 1 % centroid_mod).select(
+        F.col(id_col).alias("cid"),
+        F.col("qv").alias("cq"),
+        F.col("nv").alias("cn"),
+    )
     best = (
         qd.crossJoin(F.broadcast(cents))
         .withColumn(
@@ -258,120 +256,6 @@ def _score_topk(cand: DataFrame, q, qn, k: int, id_col: str) -> DataFrame:
     )
 
 
-def train_centroids_kmeans(
-    df: DataFrame,
-    n_centroids: int = 32,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 16384,
-) -> DataFrame:
-    """Deterministic Lloyd k-means over the quantized vectors, for
-    ``build_ivf_index(centroids=...)``: init = the same residue sample
-    the default index uses, then ``iters`` rounds of (cosine assign via
-    the partial-aggregable max_by, centroid = element-wise mean of
-    members re-floored onto the integer grid). Each round costs one
-    broadcast assign pass + one posexplode partial-agg (the N*d explode
-    collapses map-side to C*d rows per task before the exchange).
-
-    Determinism: member sums are exact decimal (a double sum's value
-    depends on aggregation order), so floor(sum/count) is reproducible
-    run to run — trained centroids are stable index metadata, not a
-    sample of the scheduler. Empty clusters keep their previous
-    centroid (standard Lloyd degeneracy handling)."""
-    qd = (
-        df.select(F.col(id_col), _quantize(F.col(vec_col), scale).alias("qv"))
-        .withColumn("nv", _qnorm(F.col("qv")))
-        .filter(F.col("nv") > 0)
-    )
-    mod = max(1, qd.count() // n_centroids)
-    cents = qd.filter(F.col(id_col) % mod == 1 % mod).select(
-        F.col(id_col).alias("cid"),
-        F.col("qv").alias("cq"),
-        F.col("nv").alias("cn"),
-    )
-    for _ in range(iters):
-        cents = cents.localCheckpoint(eager=True)  # bound the iterated plan
-        best = (
-            qd.crossJoin(F.broadcast(cents))
-            .withColumn(
-                "ccos",
-                _qdot(F.col("qv"), F.col("cq")).cast("double")
-                / (F.col("nv") * F.col("cn")),
-            )
-            .groupBy(id_col)
-            .agg(
-                F.max_by(
-                    F.struct("qv", "cid"),
-                    F.struct(F.col("ccos"), (-F.col("cid")).alias("neg_cid")),
-                ).alias("w")
-            )
-            .select(F.col("w.cid").alias("cid"), F.col("w.qv").alias("qv"))
-        )
-        means = (
-            best.select("cid", F.posexplode("qv").alias("pos", "v"))
-            .groupBy("cid", "pos")
-            .agg(
-                F.sum(F.col("v").cast("decimal(38,0)")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "s", "n"))),
-                    lambda t: F.floor(
-                        t["s"].cast("double") / t["n"].cast("double")
-                    ).cast("long"),
-                ).alias("cq")
-            )
-            .withColumn("cn", _qnorm(F.col("cq")))
-            .filter(F.col("cn") > 0)
-        )
-        # empty clusters (no members this round) keep their old centroid
-        kept = cents.join(means, "cid", "left_anti")
-        cents = means.select("cid", "cq", "cn").unionByName(
-            kept.select("cid", "cq", "cn")
-        )
-    return cents.localCheckpoint(eager=True)
-
-
-def ivf_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    n_centroids: int = 32,
-    centroid_mod: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 16384,
-) -> DataFrame:
-    """IVF-style approximate top-k, ONE-SHOT form: vectors are assigned
-    to their nearest centroid (one broadcast-join pass) and the query
-    scores only the ``nprobe`` nearest centroids' member lists — all
-    within this call's plan, so the assign pass runs per query. At scale
-    the index is built ONCE with ``build_ivf_index`` (members written
-    partitioned by centroid) and queries go through ``ivf_index_topk``,
-    whose probe is a partition-pruned read of ~nprobe/n_centroids of the
-    files (plan-asserted in tests). All scoring is floor-quantized
-    integer cosine, so results are engine-exact, oracle-checkable, and
-    identical between the one-shot and materialized paths."""
-    qd, cents, assign, _ = _ivf_assign(
-        df, n_centroids, centroid_mod, id_col, vec_col, scale
-    )
-    q, qn2 = _quantize_query(query_vec, scale)
-    if qn2 == 0:
-        raise ValueError("zero-norm query vector: cosine undefined")
-    qn = F.sqrt(F.lit(float(qn2)))
-    probe = _probe_centroids(cents, q, qn, nprobe)
-    # no id hits the centroid residue class (sparse/filtered id space):
-    # degrade to brute force over all vectors (qd, not assign — assign is
-    # itself empty when there are no centroids) rather than silently
-    # returning an empty result
-    cand = assign.filter(F.col("cid").isin(probe)) if probe else qd
-    return _score_topk(cand, q, qn, k, id_col)
-
-
 def build_ivf_index(
     df: DataFrame,
     path: str,
@@ -380,7 +264,6 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 16384,
-    centroids: DataFrame | None = None,
     salt_buckets: int | None = None,
 ) -> dict:
     """Materialize the IVF index at ``path``: member vectors (quantized +
@@ -390,11 +273,6 @@ def build_ivf_index(
     assign pass (the O(N*C) scan) is paid here, and ``ivf_index_topk``
     reads only the probed centroids' partitions.
 
-    ``centroids``: pre-trained (cid, cq, cn) frame, e.g. from
-    ``train_centroids_kmeans`` — better-balanced cells than the default
-    deterministic residue sample; the assign/probe machinery is
-    identical either way.
-
     Members are repartitioned BY cid before the write so each centroid's
     partition is one contiguous file set. ``salt_buckets`` splits each
     centroid's WRITE across up to that many tasks (shuffle key becomes
@@ -402,13 +280,13 @@ def build_ivf_index(
     centroid must not serialize into one write task; the probe is
     unchanged, it reads ``cid=X/*`` regardless of file count. Degenerate
     case — no vector id in the sampled residue class — is recorded in
-    meta and the index stores all vectors unpartitioned (probe = exact
-    brute force), mirroring ivf_topk's fallback."""
+    meta and the index stores all vectors unpartitioned, so the probe is
+    an exact brute force rather than an empty result."""
     import json as _json
     import os as _os
 
     qd, cents, assign, mod = _ivf_assign(
-        df, n_centroids, centroid_mod, id_col, vec_col, scale, centroids=centroids
+        df, n_centroids, centroid_mod, id_col, vec_col, scale
     )
     degenerate = cents.limit(1).count() == 0
     if degenerate:
@@ -438,7 +316,6 @@ def build_ivf_index(
         "n_centroids": n_centroids,
         "centroid_mod": mod,
         "degenerate": degenerate,
-        "training": "provided" if centroids is not None else "residue_sample",
     }
     with open(_os.path.join(path, "meta.json"), "w") as f:
         _json.dump(meta, f)
@@ -457,8 +334,9 @@ def ivf_index_topk(
     nearest centroids' members — ``cid`` is the parquet partition
     column, so Catalyst prunes the scan to ~nprobe/n_centroids of the
     files (asserted via inputFiles + PartitionFilters in tests).
-    Scoring is identical to ivf_topk, so the two paths return identical
-    rows for the same build parameters."""
+    Scoring is floor-quantized integer cosine, the same expression as
+    ``quantized_cosine_topk``, so results are engine-exact and
+    oracle-checkable."""
     import json as _json
     import os as _os
 
@@ -676,39 +554,6 @@ def quantized_hyperplane_signature(
     )
 
 
-def lsh_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_bits: int = 16,
-    seed: int = 42,
-    probe_hamming: int = 2,
-) -> DataFrame:
-    """Approximate top-k, ONE-SHOT form: score only vectors whose
-    hyperplane signature is within ``probe_hamming`` bits of the query's
-    (multi-probe) — the signature pass runs inside this call's plan, a
-    full scan per query. At scale build the index ONCE with
-    ``build_lsh_index`` (signatures materialized, members written
-    PARTITIONED BY signature) and query through ``lsh_index_topk``,
-    whose probe enumerates the Hamming ball driver-side and reads only
-    those buckets' partitions (plan-asserted in tests). Scoring is
-    identical, so the two paths return identical rows."""
-    dim = len(query_vec)
-    sigs = df.withColumn("sig", hyperplane_signature(vec_col, dim, n_bits, seed))
-    qsig = _query_signature(df.sparkSession, query_vec, n_bits, seed)
-    cand = sigs.filter(
-        F.bit_count(F.col("sig").bitwiseXOR(F.lit(qsig))) <= probe_hamming
-    )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        cand.select(F.col(id_col), cosine(F.col(vec_col), q).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
-    )
-
-
 def _sig_expr(
     vec_col: str, dim: int, n_bits: int, seed: int, sig_mode: str, scale: int
 ) -> F.Column:
@@ -769,8 +614,8 @@ def build_lsh_index(
     """Materialize the hyperplane-LSH index at ``path``: (id, vector,
     signature) written PARTITIONED BY signature under ``members/``, build
     parameters in ``meta.json``. The signature pass (the full scan) is
-    paid ONCE here; ``lsh_index_topk`` and ``lsh_index_near_dup_pairs``
-    then read only the buckets they probe — at 10^10 vectors a 16-bit
+    paid ONCE here; ``lsh_index_topk`` then reads only the buckets it
+    probes — at 10^10 vectors a 16-bit
     signature splits the table into <=65536 partitions and a
     radius-2 probe touches 137 of them.
 
@@ -781,8 +626,9 @@ def build_lsh_index(
     default xxhash64 mode is the faster production signature.
 
     NULL vectors are excluded (no signature, and cosine against them is
-    NULL anyway); zero-norm vectors keep lsh_topk's semantics (signature
-    0, NULL cosine sorts below every real score). An empty/all-NULL
+    NULL anyway); zero-norm vectors get signature 0 and a NULL cosine,
+    which sorts below every real score (a portable index drops them at
+    query time). An empty/all-NULL
     input is recorded in meta and probed as an empty result."""
     import json as _json
     import os as _os
@@ -820,18 +666,6 @@ def build_lsh_index(
     return meta
 
 
-def _read_lsh_meta(path: str) -> dict:
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "meta.json")) as f:
-        return _json.load(f)
-
-
-def _id_type(meta: dict):
-    return T._parse_datatype_json_string(meta["id_type"])
-
-
 def _read_probe_buckets(spark, members_root: str, probe: list[int]):
     """Read ONLY the probed ``sig=`` partition directories, bypassing the
     full-index directory listing. ``spark.read.parquet(members_root)``
@@ -866,23 +700,25 @@ def lsh_index_topk(
     query signature, enumerate its Hamming ball driver-side, and read
     ONLY those buckets' partitions (``sig`` is the parquet partition
     column — Catalyst prunes the scan; asserted via PartitionFilters +
-    files actually read in tests). Scoring matches lsh_topk exactly, so
-    the one-shot and materialized paths return identical rows."""
+    files actually read in tests). The default xxhash64 index scores with
+    the float ``cosine`` (column ``cos_sim``); a portable index scores with
+    the floor-quantized integer cosine (column ``score``)."""
+    import json as _json
     import os as _os
 
-    meta = _read_lsh_meta(path)
+    with open(_os.path.join(path, "meta.json")) as f:
+        meta = _json.load(f)
     portable = meta.get("sig_mode", "xxhash64") == "portable"
-    score_col = "score" if portable else "cos_sim"
-    if meta["empty"]:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(meta["id_col"], _id_type(meta)),
-                    T.StructField(score_col, T.DoubleType()),
-                ]
+    no_rows = T.StructType(
+        [
+            T.StructField(
+                meta["id_col"], T._parse_datatype_json_string(meta["id_type"])
             ),
-        )
+            T.StructField("score" if portable else "cos_sim", T.DoubleType()),
+        ]
+    )
+    if meta["empty"]:
+        return spark.createDataFrame([], no_rows)
     if len(query_vec) != meta["dim"]:
         raise ValueError(
             f"query dim {len(query_vec)} != index dim {meta['dim']}"
@@ -898,15 +734,7 @@ def lsh_index_topk(
     probe = _hamming_ball(qsig, meta["n_bits"], probe_hamming)
     cand = _read_probe_buckets(spark, _os.path.join(path, "members"), probe)
     if cand is None:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(meta["id_col"], _id_type(meta)),
-                    T.StructField(score_col, T.DoubleType()),
-                ]
-            ),
-        )
+        return spark.createDataFrame([], no_rows)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     if portable:
         # engine-exact scoring to pair with the engine-exact signature:
@@ -932,38 +760,6 @@ def lsh_index_topk(
     )
 
 
-def lsh_index_near_dup_pairs(
-    spark, path: str, threshold: float = 0.95
-) -> DataFrame:
-    """Near-duplicate pairs over a materialized LSH index: the signature
-    pass is already paid, so this is ONE bucket-equijoin + exact-cosine
-    verify over the stored (id, vec, sig) rows — identical pair set to
-    ``embedding_near_dup_pairs`` at the same (n_bits, seed)."""
-    import os as _os
-
-    meta = _read_lsh_meta(path)
-    if meta["empty"]:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("a", _id_type(meta)),
-                    T.StructField("b", _id_type(meta)),
-                    T.StructField("cos_sim", T.DoubleType()),
-                ]
-            ),
-        )
-    members = spark.read.parquet(_os.path.join(path, "members"))
-    return _sig_verify_pairs(
-        members,
-        threshold,
-        meta["id_col"],
-        meta["vec_col"],
-        quantized=(meta.get("sig_mode", "xxhash64") == "portable"),
-        scale=meta.get("scale", 16384),
-    )
-
-
 def _sig_verify_pairs(
     sigs: DataFrame,
     threshold: float,
@@ -972,7 +768,8 @@ def _sig_verify_pairs(
     quantized: bool = False,
     scale: int = 16384,
 ) -> DataFrame:
-    """Shared verify step: same-bucket equijoin + exact cosine filter.
+    """The verify step of ``embedding_near_dup_pairs``: same-bucket
+    equijoin + exact cosine filter.
     ``quantized=True`` scores with the floor-quantized integer cosine so
     the verify — like the portable signature it pairs with — is
     bit-replayable by an external SQL engine; zero-norm quantized
@@ -1131,9 +928,7 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-duplicate pairs via signature bucketing:
     vectors sharing an LSH bucket are verified with the exact cosine.
     (cos >= 0.95 pairs collide in a 16-bit signature with high prob.)
-    One-shot form — computes signatures in-plan; with a
-    ``build_lsh_index`` on disk, ``lsh_index_near_dup_pairs`` reads the
-    stored signatures instead of recomputing them per call.
+    Signatures are computed in-plan, one pass over the input.
 
     An empty (or all-NULL-vector) input yields zero pairs, like every
     other pair generator in the family — the dim probe must not die on

@@ -127,7 +127,7 @@ class CdfExporter:
 
     # -------------------------------------------------------------- public
 
-    # shared-diff protocol (streaming.replay._refresh_views): exporters
+    # shared-diff protocol (streaming.replay.refresh_views): exporters
     # share a diff only with views consuming the SAME images mode — a
     # 'post'-mode delete carries the deleting seq while 'both' carries
     # the pre-delete row, so the modes are not derivable from each other

@@ -179,7 +179,7 @@ class MaterializedAggregate:
 
     # -------------------------------------------------------------- public
 
-    # shared-diff protocol (streaming.replay._refresh_views): views with
+    # shared-diff protocol (streaming.replay.refresh_views): views with
     # the same (source, bookmark, images) consume ONE persisted CDF diff
     cdf_images = "both"
 

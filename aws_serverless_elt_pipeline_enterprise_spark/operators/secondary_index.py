@@ -153,7 +153,7 @@ class SecondaryIndex:
 
     # -------------------------------------------------------------- public
 
-    # shared-diff protocol (streaming.replay._refresh_views)
+    # shared-diff protocol (streaming.replay.refresh_views)
     cdf_images = "both"
 
     def cdf_bookmark(self) -> int | None:

@@ -15,15 +15,22 @@ crash window — reproduces the same final state on resume. This mirrors the
 reference's verify-idempotency golden property (Makefile:344-359: invoke
 ingest twice with the identical event; the second must skip).
 
-Two drivers are provided:
+Five drivers are provided, all through the one ``apply_epoch`` pipeline:
   * ``run_replay``            — batch loop over epoch dirs (foreachBatch
                                 semantics, deterministic epoch order, full
                                 schema-evolution support).
+  * ``replay_range``          — the batch loop restricted to a batch-offset
+                                and/or event-time window.
+  * ``redrive_quarantine``    — quarantined rows, optionally repaired,
+                                merged back under a content-addressed epoch.
   * ``run_replay_streaming``  — genuine Structured Streaming: file source +
                                 availableNow trigger + watermarked
                                 dropDuplicatesWithinWatermark + foreachBatch
-                                merge (fixed-schema logs; the file source
-                                cannot change schema mid-stream).
+                                merge; restarts with the wider schema when
+                                the log grows one mid-pass.
+  * ``run_replay_tailing``    — the same stream under a processingTime
+                                trigger: a continuous tail that picks up
+                                additive schema changes mid-stream.
 """
 
 from __future__ import annotations
@@ -113,7 +120,8 @@ def _notify_gate_failure(
     row appended to a notifications log under the table root — an ops
     surface a poller/alerter can tail — plus an optional user callback
     (the SNS/Slack/pager integration point). A callback error must never
-    mask the gate failure itself."""
+    mask the gate failure itself, so it surfaces as a RuntimeWarning and
+    the gate's ValueError still raises."""
     import time as _time
 
     npath = os.path.join(table.root, "notifications.jsonl")
@@ -136,8 +144,15 @@ def _notify_gate_failure(
     if notify is not None:
         try:
             notify(epoch_id, failures, dict(metrics))
-        except Exception:
-            pass
+        except Exception as e:
+            import warnings
+
+            warnings.warn(
+                f"gate-failure notify callback failed for epoch {epoch_id}: "
+                f"{e!r}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
 
 
 def _gated_observe(
@@ -224,7 +239,6 @@ def run_replay(
     spark: SparkSession,
     log_dir: str,
     table: SnapshotTable,
-    checkpoint_dir: str | None = None,
     quarantine_dir: str | None = None,
     max_epochs: int | None = None,
     compact_every: int | None = None,
@@ -234,11 +248,8 @@ def run_replay(
     maintain_every: int = 1,
 ) -> ReplayResult:
     """Batch replay over epoch dirs (ordered). Resumable from any point:
-    the committed-epoch set in the table manifest is the checkpoint; the
-    optional checkpoint file only short-circuits directory listing. The
-    checkpoint stores an EpochLedger encoding — a cumulative sorted list
-    rewritten per epoch would be the same O(n^2) total-bytes pattern the
-    manifest ledger eliminated.
+    the committed-epoch set in the table manifest is the checkpoint, so
+    an epoch is skipped exactly when THIS table already holds it.
 
     ``maintain``: optional list of incrementally maintained views
     (``MaterializedAggregate``-shaped: anything with ``refresh()``)
@@ -252,23 +263,13 @@ def run_replay(
     skips. View refreshes are themselves
     exactly-once (ledger-deduped epochs keyed on the consumed version
     span), so a crash-and-rerun never double-applies a delta."""
-    from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import (
-        EpochLedger,
-    )
-
     result = ReplayResult()
-    done = EpochLedger()
-    ckpt_file = os.path.join(checkpoint_dir, "epochs.json") if checkpoint_dir else None
-    if ckpt_file and os.path.exists(ckpt_file):
-        with open(ckpt_file) as f:
-            done = EpochLedger(json.load(f))  # accepts ledger dict or legacy list
-
     batches = list_batches(log_dir)
     if max_epochs is not None:
         batches = batches[:max_epochs]
     for path in batches:
         epoch_id = os.path.basename(path)
-        if epoch_id in done or table.has_epoch(epoch_id):
+        if table.has_epoch(epoch_id):
             result.epochs_skipped.append(epoch_id)
             continue
         events = spark.read.parquet(path)
@@ -282,21 +283,12 @@ def run_replay(
         if compact_every is not None:
             table.maybe_compact(max_deltas=compact_every)
         if maintain and len(result.epochs_applied) % max(1, maintain_every) == 0:
-            _refresh_views(maintain)
-        # commit-then-checkpoint: table state is authoritative; the file is
-        # written only after the table owns the epoch
-        if ckpt_file:
-            done.add(epoch_id)
-            os.makedirs(checkpoint_dir, exist_ok=True)
-            tmp = ckpt_file + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(done.to_json(), f)
-            os.replace(tmp, ckpt_file)
+            refresh_views(maintain)
     # catch-up pass: a view attached after the table already had history
     # (or a run where every epoch skipped) still converges; no-op when
     # the view's bookmark is current
     if maintain and table.current_version() is not None:
-        _refresh_views(maintain)
+        refresh_views(maintain)
     return result
 
 
@@ -339,10 +331,6 @@ def refresh_views(views) -> None:
             changes.unpersist()
     for v in solo:
         v.refresh()
-
-
-# internal alias: the replay loops predate the public name
-_refresh_views = refresh_views
 
 
 def replay_range(
@@ -693,7 +681,7 @@ def run_replay_streaming(
             # or a resume where no micro-batch fired (no new files) —
             # refreshes are exactly-once on the view's own ledger
             if maintain and table.current_version() is not None:
-                _refresh_views(maintain)
+                refresh_views(maintain)
             return  # processed everything available under a stable schema
 
 
@@ -703,7 +691,7 @@ def _make_merge(
     quarantine_dir: str | None,
     dq_fail_on_corrupt: bool,
     notify,
-    pre_merge_check=None,
+    pre_merge_check,
     maintain=None,
     maintain_every: int = 1,
 ):
@@ -713,7 +701,7 @@ def _make_merge(
     gate, repair, idempotent merge, stale-verdict cleanup). Round 2
     shipped a fork of that pipeline here and the DQ gate existed only on
     the batch path; delegation makes that divergence structurally
-    impossible. ``pre_merge_check`` (tail only) runs FIRST and may raise
+    impossible. ``pre_merge_check`` runs FIRST and may raise
     to fail the micro-batch before anything commits — the
     schema-evolution guard. ``maintain_every`` thins view refreshes to
     every K-th micro-batch (span-based bookmarks make the skipped
@@ -723,8 +711,7 @@ def _make_merge(
     applied = {"n": 0}
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
-        if pre_merge_check is not None:
-            pre_merge_check()
+        pre_merge_check()
         apply_epoch(
             table,
             batch_df,
@@ -738,7 +725,7 @@ def _make_merge(
         # foreachBatch crash-replay cannot double-apply a delta
         applied["n"] += 1
         if maintain and applied["n"] % max(1, maintain_every) == 0:
-            _refresh_views(maintain)
+            refresh_views(maintain)
 
     return _merge
 

@@ -1720,12 +1720,23 @@ class SnapshotTable:
             else:
                 os.remove(os.path.join(mdir, name))
                 out["removed_manifests"].append(name)
+        out["removed_commits"] = self._sweep_commits(live, older_than_s)
+        return out
+
+    def _sweep_commits(self, live: set[str], older_than_s: float) -> list[str]:
+        """Remove every ``commits/`` dir not in ``live`` whose mtime is at
+        least ``older_than_s`` old; returns the removed ``commits/<d>``
+        paths. The mtime guard keeps an in-flight writer's data dir, which
+        exists before its manifest claim."""
         cdir = os.path.join(self.root, "commits")
         # a table whose only committed epochs were empty has manifests but
         # no commits dir (the empty-batch path commits a manifest without
-        # ever writing commit data) — nothing to expire there
+        # ever writing commit data) — nothing to sweep there
+        if not os.path.isdir(cdir):
+            return []
+        removed = []
         cutoff = time.time() - older_than_s
-        for d in os.listdir(cdir) if os.path.isdir(cdir) else []:
+        for d in os.listdir(cdir):
             rel = os.path.join("commits", d)
             path = os.path.join(cdir, d)
             if rel in live:
@@ -1734,10 +1745,10 @@ class SnapshotTable:
                 if older_than_s > 0 and os.path.getmtime(path) > cutoff:
                     continue  # possibly an in-flight commit: keep
             except FileNotFoundError:
-                continue
+                continue  # a concurrent vacuum got it first
             shutil.rmtree(path)
-            out["removed_commits"].append(rel)
-        return out
+            removed.append(rel)
+        return removed
 
     def expire_orphans(self, older_than_s: float = 0.0) -> list[str]:
         """Remove commit dirs unreferenced by the latest manifest (vacuum).
@@ -1758,22 +1769,4 @@ class SnapshotTable:
         live = {d for dirs in m["buckets"].values() for d in dirs} | set(
             m.get("global_deltas", [])
         )
-        removed = []
-        cdir = os.path.join(self.root, "commits")
-        # same empty-epochs-only guard as expire_snapshots
-        if not os.path.isdir(cdir):
-            return removed
-        cutoff = time.time() - older_than_s
-        for d in os.listdir(cdir):
-            rel = os.path.join("commits", d)
-            path = os.path.join(cdir, d)
-            if rel in live:
-                continue
-            try:
-                if older_than_s > 0 and os.path.getmtime(path) > cutoff:
-                    continue  # possibly an in-flight commit: keep
-            except FileNotFoundError:
-                continue  # a concurrent vacuum got it first
-            shutil.rmtree(path)
-            removed.append(rel)
-        return removed
+        return self._sweep_commits(live, older_than_s)

@@ -7,9 +7,13 @@ Cluster usage (the north-rule deployment shape)::
         scripts/run_replay_job.py \
         --log-dir  s3a://bucket/changelog \
         --table    s3a://bucket/tables/sequences \
-        --n-buckets 4096 --compact-every 16 \
-        --checkpoint s3a://bucket/ck/sequences \
-        --quarantine s3a://bucket/quarantine/sequences
+        --n-buckets 4096 \
+        --quarantine s3a://bucket/quarantine/sequences \
+        --streaming --checkpoint s3a://bucket/ck/sequences
+
+``--checkpoint`` is the Structured Streaming checkpoint (source offsets);
+the batch epoch loop needs none, since the table's manifest ledger is its
+checkpoint.
 
 Local smoke::
 
@@ -34,7 +38,10 @@ def main() -> None:
     ap.add_argument("--log-dir", required=True)
     ap.add_argument("--table", required=True)
     ap.add_argument("--n-buckets", type=int, default=32)
-    ap.add_argument("--checkpoint", default=None)
+    ap.add_argument("--checkpoint", default=None,
+                    help="Structured Streaming checkpoint dir for --streaming "
+                         "(default: <table>_ck); the batch loop resumes from "
+                         "the table's manifest ledger")
     ap.add_argument("--quarantine", default=None)
     ap.add_argument("--compact-every", type=int, default=None)
     ap.add_argument("--streaming", action="store_true",
@@ -114,7 +121,6 @@ def main() -> None:
             spark,
             args.log_dir,
             table,
-            checkpoint_dir=args.checkpoint,
             quarantine_dir=args.quarantine,
             compact_every=args.compact_every,
         )

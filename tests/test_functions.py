@@ -72,7 +72,7 @@ def test_simhash_deterministic_and_self_similar(spark, docs):
     assert shs[0] == shs[1]
 
 
-def test_lsh_topk_finds_planted_near_dups(spark, emb):
+def test_lsh_topk_finds_planted_near_dups(spark, emb, tmp_path):
     """Random synthetic embeddings are near-orthogonal, so recall is only
     meaningful on PLANTED near-duplicates: inject perturbed copies of the
     query and require the LSH probe to surface them."""
@@ -84,7 +84,9 @@ def test_lsh_topk_finds_planted_near_dups(spark, emb):
     rest = emb.filter(F.col("vec_id") != 0).union(
         spark.createDataFrame(planted, emb.schema)
     )
-    approx = sim.lsh_topk(rest, qv, k=5, n_bits=12, probe_hamming=3).collect()
+    idx = str(tmp_path / "lsh")
+    sim.build_lsh_index(rest, idx, n_bits=12)
+    approx = sim.lsh_index_topk(spark, idx, qv, k=5, probe_hamming=3).collect()
     approx_ids = {r.vec_id for r in approx}
     assert {100001, 100002, 100003} <= approx_ids, (
         f"planted near-dups not found: {approx_ids}"

@@ -166,9 +166,10 @@ def test_ivf_assign_is_partial_aggregate_not_window(spark, sf_dir):
     )
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = list(e.filter(F.col("vec_id") == 0).first()["embedding"])
-    df = sim.ivf_topk(e.filter(F.col("vec_id") != 0), qv, k=5, n_centroids=8)
-    text = C.explain_str(df)
+    _, _, assign, _ = sim._ivf_assign(
+        e.filter(F.col("vec_id") != 0), 8, None, "vec_id", "embedding", 16384
+    )
+    text = C.explain_str(assign)
     assert "Window" not in text, "assign must not be a window"
     assert "row_number" not in text
     assert "partial_max_by" in text, "map-side combine before the exchange"

@@ -345,7 +345,7 @@ def test_mask_terms_counts_and_replaces(spark):
     assert r.n == 3
 
 
-def test_ivf_topk_recall_vs_exact(spark):
+def test_ivf_topk_recall_vs_exact(spark, tmp_path):
     """IVF probing nprobe=4 of 12 centroids (a third of the lists) must
     recover most of the exact top-k (probing a fraction of the table is
     the point; recall is the price, bounded here)."""
@@ -360,9 +360,10 @@ def test_ivf_topk_recall_vs_exact(spark):
         r.vec_id
         for r in sim.quantized_cosine_topk(rest, qv, k=10).collect()
     }
+    idx = str(tmp_path / "ivf")
+    sim.build_ivf_index(rest, idx, n_centroids=12)
     approx = {
-        r.vec_id
-        for r in sim.ivf_topk(rest, qv, k=10, nprobe=4, n_centroids=12).collect()
+        r.vec_id for r in sim.ivf_index_topk(spark, idx, qv, k=10, nprobe=4).collect()
     }
     assert len(exact & approx) >= 5, (exact, approx)
 
@@ -541,16 +542,19 @@ def test_mask_terms_escapes_metacharacters(spark):
     # word-boundary semantics, inherent to the \b formulation)
 
 
-def test_ivf_topk_falls_back_when_no_centroids(spark):
+def test_ivf_topk_falls_back_when_no_centroids(spark, tmp_path):
     from aws_serverless_elt_pipeline_enterprise_spark.functions import (
         similarity as sim,
     )
 
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     qv = list(e.filter(F.col("vec_id") == 0).first()["embedding"])
-    rest = e.filter(F.col("vec_id") != 0)
-    # centroid_mod larger than any vec_id residue match -> no centroids
-    out = sim.ivf_topk(rest, qv, k=5, nprobe=4, centroid_mod=10**9)
+    # centroid_mod larger than every vec_id: the residue class is
+    # id == 1 alone, so dropping id 1 leaves no centroids
+    rest = e.filter(~F.col("vec_id").isin(0, 1))
+    idx = str(tmp_path / "ivf")
+    assert sim.build_ivf_index(rest, idx, centroid_mod=10**9)["degenerate"]
+    out = sim.ivf_index_topk(spark, idx, qv, k=5, nprobe=4)
     assert out.count() == 5, "must degrade to brute force, not empty"
 
 

@@ -154,7 +154,8 @@ def test_stateful_lww_equal_seq_tiebreak_is_order_independent():
 def test_gate_failure_notification_row_and_callback(spark, tmp_path):
     """T5 parity: a gate failure appends a notifications.jsonl row (the
     reference publishes SNS on quarantine) and fires the user callback;
-    a crashing callback must not mask the gate failure."""
+    a crashing callback must not mask the gate failure and surfaces as
+    a RuntimeWarning naming the epoch."""
     import json
     import os
 
@@ -176,7 +177,9 @@ def test_gate_failure_notification_row_and_callback(spark, tmp_path):
     assert rows[0]["epoch_id"] == "ep-0"
     assert rows[0]["event"] == "dq_gate_failed"
     assert rows[0]["metrics"]["ntok_mismatch"] == 1
-    with pytest.raises(ValueError, match="DQ gate failed"):
+    with pytest.raises(ValueError, match="DQ gate failed"), pytest.warns(
+        RuntimeWarning, match="ep-1.*ZeroDivisionError"
+    ):
         apply_epoch(
             table, bad, "ep-1", dq_fail_on_corrupt=True,
             notify=lambda e, f, m: 1 / 0,
@@ -437,7 +440,7 @@ def test_stateful_lww_equal_seq_tiebreak_across_chunks_and_state():
     assert len(out) == 1  # winner advanced -> emitted
 
 
-def test_ivf_topk_small_table_centroid_residue(spark):
+def test_ivf_topk_small_table_centroid_residue(spark, tmp_path):
     """Tables smaller than ~2*n_centroids derive centroid_mod == 1; the
     residue must then select EVERY vector (exact search) instead of the
     empty class id % 1 == 1 — which silently diverged from the oracle."""
@@ -448,8 +451,9 @@ def test_ivf_topk_small_table_centroid_residue(spark):
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     qv = list(e.filter(F.col("vec_id") == 0).first()["embedding"])
     small = e.filter((F.col("vec_id") > 0) & (F.col("vec_id") <= 40))
-    got = sim.ivf_topk(small, qv, k=5, nprobe=4, n_centroids=32)
-    rows = got.collect()
+    idx = str(tmp_path / "ivf")
+    sim.build_ivf_index(small, idx, n_centroids=32)
+    rows = sim.ivf_index_topk(spark, idx, qv, k=5, nprobe=4).collect()
     # every vector is its own single-member centroid list, so nprobe
     # bounds the candidate count: 4 rows, NOT zero (the old residue
     # selected an empty centroid set and silently brute-forced)
@@ -590,7 +594,7 @@ def test_run_replay_dq_gate_passthrough(spark, tmp_path):
     assert table.state().count() == 0
 
 
-def test_zero_norm_vectors_never_rank_in_topk(spark):
+def test_zero_norm_vectors_never_rank_in_topk(spark, tmp_path):
     """0/0 cosine is IEEE NaN and Spark sorts NaN ABOVE every double, so
     an all-zeros padding vector would occupy rank 1 in every similarity
     entry point. Zero-norm rows must be excluded / sink to the bottom."""
@@ -610,7 +614,9 @@ def test_zero_norm_vectors_never_rank_in_topk(spark):
         got = [r.vec_id for r in fn(df, q, k=3).collect()]
         assert 2 not in got, f"{fn.__name__} ranked the zero vector: {got}"
         assert got[0] == 0
-    got = [r.vec_id for r in sim.ivf_topk(df, q, k=3, n_centroids=4).collect()]
+    idx = str(tmp_path / "ivf")
+    sim.build_ivf_index(df, idx, n_centroids=4)
+    got = [r.vec_id for r in sim.ivf_index_topk(spark, idx, q, k=3).collect()]
     assert 2 not in got
     # batched path: zero-norm AND null rows sink to -inf, never crash
     rows_n = rows + [(4, None)]

@@ -92,20 +92,6 @@ def _emb(spark, sf_dir):
     return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
 
 
-def test_ivf_materialized_matches_oneshot(spark, sf_dir, tmp_path):
-    from aws_serverless_elt_pipeline_enterprise_spark.functions import similarity as S
-
-    e = _emb(spark, sf_dir)
-    qv = list(e.filter("vec_id = 0").select("embedding").first()[0])
-    idx = str(tmp_path / "ivf")
-    S.build_ivf_index(e.filter("vec_id <> 0"), idx, n_centroids=8)
-    got = S.ivf_index_topk(spark, idx, qv, k=15, nprobe=3).collect()
-    want = S.ivf_topk(
-        e.filter("vec_id <> 0"), qv, k=15, nprobe=3, n_centroids=8
-    ).collect()
-    assert [(r.vec_id, r.score) for r in got] == [(r.vec_id, r.score) for r in want]
-
-
 def test_ivf_index_probe_is_partition_pruned(spark, sf_dir, tmp_path):
     """The probe must read only the probed centroids' partitions: a cid
     partition filter in the plan AND inputFiles() a strict subset."""
@@ -152,7 +138,7 @@ def test_ivf_index_degenerate_residue_falls_back_to_brute(spark, tmp_path):
     meta = S.build_ivf_index(df, idx, centroid_mod=1000)
     assert meta["degenerate"]
     got = S.ivf_index_topk(spark, idx, [1.0, 2.0], k=5).collect()
-    want = S.ivf_topk(df, [1.0, 2.0], k=5, centroid_mod=1000).collect()
+    want = S.quantized_cosine_topk(df, [1.0, 2.0], k=5).collect()
     assert [(r.vec_id, r.score) for r in got] == [(r.vec_id, r.score) for r in want]
 
 
@@ -175,8 +161,6 @@ def test_star_components_chain_converges_logarithmically(spark):
 def test_dup_clusters_star_equals_propagation(spark):
     """Both algorithms must produce identical clusters on a mixed
     fixture: two cliques, one chain, singleton-free by construction."""
-    import warnings
-
     from aws_serverless_elt_pipeline_enterprise_spark.functions import dedupe as D
 
     pairs = (
@@ -186,16 +170,11 @@ def test_dup_clusters_star_equals_propagation(spark):
         + [(7, 7)]  # self-loop noise
     )
     df = spark.createDataFrame(pairs, ["a", "b"])
-    star = {
-        (r.doc_id, r.cluster)
-        for r in D.dup_clusters(df, algorithm="star").collect()
-    }
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # propagation must converge silently
-        prop = {
-            (r.doc_id, r.cluster)
-            for r in D.dup_clusters(df, max_iter=40, algorithm="propagation").collect()
-        }
+    star_labels, _, star_converged = D._star_components(df, max_iter=20)
+    prop_labels, prop_converged = D._propagate(df, max_iter=40)
+    assert star_converged and prop_converged
+    star = {(r.node, r.label) for r in star_labels.collect()}
+    prop = {(r.node, r.label) for r in prop_labels.collect()}
     assert star == prop
 
 
@@ -207,7 +186,7 @@ def test_dup_clusters_star_warns_on_truncation(spark):
     chain = spark.createDataFrame([(i, i + 1) for i in range(200)], ["a", "b"])
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        D.dup_clusters(chain, max_iter=1, algorithm="star").collect()
+        D.dup_clusters(chain, max_iter=1).collect()
     assert any("did not converge" in str(x.message) for x in w)
 
 
@@ -354,33 +333,6 @@ def test_expire_quarantine_bounds_dirs_and_sweeps_stale_tmp(tmp_path):
         "removed_epochs": [],
         "removed_tmp": [],
     }
-
-
-def test_kmeans_centroid_training_deterministic_and_useful(spark, sf_dir, tmp_path):
-    from aws_serverless_elt_pipeline_enterprise_spark.functions import similarity as S
-
-    e = _emb(spark, sf_dir).filter("vec_id <> 0")
-    qv = list(_emb(spark, sf_dir).filter("vec_id = 0").first()["embedding"])
-    c1 = S.train_centroids_kmeans(e, n_centroids=8, iters=2)
-    c2 = S.train_centroids_kmeans(e, n_centroids=8, iters=2)
-    # exact decimal member sums -> floor(mean) is reproducible
-    assert sorted((r.cid, list(r.cq)) for r in c1.collect()) == sorted(
-        (r.cid, list(r.cq)) for r in c2.collect()
-    )
-    idx = str(tmp_path / "ivf_km")
-    meta = S.build_ivf_index(e, idx, n_centroids=8, centroids=c1)
-    assert meta["training"] == "provided" and not meta["degenerate"]
-    exact = {r.vec_id for r in S.brute_force_topk(e, qv, k=10).collect()}
-    # probing EVERY cell must be lossless (the cells partition the set);
-    # a 3-of-8 probe keeps a reasonable floor on uniform random vectors
-    # (k-means shines on CLUSTERED data; this synthetic table is not)
-    all_cells = {
-        r.vec_id for r in S.ivf_index_topk(spark, idx, qv, k=10, nprobe=8).collect()
-    }
-    assert all_cells == exact
-    got = S.ivf_index_topk(spark, idx, qv, k=10, nprobe=3).collect()
-    assert len(got) == 10
-    assert len({r.vec_id for r in got} & exact) / 10 >= 0.3
 
 
 def test_decode_real_corrupt_payloads_degrade_not_crash(spark):

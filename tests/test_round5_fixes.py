@@ -23,21 +23,6 @@ def _emb(spark, sf_dir):
 # -------------------------------------------------------------------------
 
 
-def test_lsh_index_topk_matches_oneshot(spark, sf_dir, tmp_path):
-    e = _emb(spark, sf_dir)
-    qv = list(e.filter("vec_id = 0").first()["embedding"])
-    rest = e.filter("vec_id <> 0")
-    idx = str(tmp_path / "lsh")
-    S.build_lsh_index(rest, idx, n_bits=12, seed=7)
-    got = S.lsh_index_topk(spark, idx, qv, k=8, probe_hamming=3).collect()
-    want = S.lsh_topk(
-        rest, qv, k=8, n_bits=12, seed=7, probe_hamming=3
-    ).collect()
-    assert [(r.vec_id, r.cos_sim) for r in got] == [
-        (r.vec_id, r.cos_sim) for r in want
-    ]
-
-
 def test_lsh_index_probe_is_partition_pruned(spark, sf_dir, tmp_path):
     """The probe must read ONLY the Hamming-ball buckets: the scan's file
     set is confined to probed sig= directories and strictly smaller than
@@ -74,21 +59,6 @@ def test_lsh_index_probe_is_partition_pruned(spark, sf_dir, tmp_path):
     assert files_read <= len(ball) * ((total + n_buckets - 1) // n_buckets)
 
 
-def test_lsh_index_near_dup_matches_oneshot(spark, sf_dir, tmp_path):
-    e = _emb(spark, sf_dir).limit(300)
-    idx = str(tmp_path / "lsh")
-    S.build_lsh_index(e, idx, n_bits=8, seed=42)
-    got = {
-        (r.a, r.b, r.cos_sim)
-        for r in S.lsh_index_near_dup_pairs(spark, idx, threshold=0.9).collect()
-    }
-    want = {
-        (r.a, r.b, r.cos_sim)
-        for r in S.embedding_near_dup_pairs(e, threshold=0.9, n_bits=8).collect()
-    }
-    assert got == want
-
-
 def test_lsh_index_empty_and_dim_mismatch(spark, tmp_path):
     schema = T.StructType(
         [
@@ -102,7 +72,6 @@ def test_lsh_index_empty_and_dim_mismatch(spark, tmp_path):
     assert meta["empty"]
     out = S.lsh_index_topk(spark, idx, [1.0, 0.0], k=5)
     assert out.count() == 0 and out.columns == ["vec_id", "cos_sim"]
-    assert S.lsh_index_near_dup_pairs(spark, idx).count() == 0
     full = spark.createDataFrame([(1, [1.0, 0.0])], schema)
     idx2 = str(tmp_path / "lsh_2d")
     S.build_lsh_index(full, idx2)

@@ -107,28 +107,6 @@ def test_near_dup_portable_drops_zero_norm_quantized(spark):
     assert got == []  # the tiny twins never reach the verify as NaN/garbage
 
 
-def test_near_dup_index_path_matches_one_shot(spark, tmp_path):
-    rng = random.Random(13)
-    rows = []
-    for i in range(30):
-        v = [rng.uniform(-1, 1) for _ in range(8)]
-        rows.append((i, v))
-        if i < 5:
-            rows.append((100 + i, [x * 1.001 + 0.0001 for x in v]))  # near-dups
-    d = _vecs(spark, rows)
-    one_shot = sorted(
-        map(tuple, sim.embedding_near_dup_pairs(
-            d, threshold=0.9, n_bits=6, seed=7, sig_mode="portable"
-        ).collect())
-    )
-    idx = str(tmp_path / "lsh_idx")
-    sim.build_lsh_index(d, idx, n_bits=6, seed=7, sig_mode="portable")
-    via_index = sorted(
-        map(tuple, sim.lsh_index_near_dup_pairs(spark, idx, threshold=0.9).collect())
-    )
-    assert one_shot == via_index and len(one_shot) >= 5
-
-
 def test_scd2_single_shuffle_plan(spark):
     d = _ev(spark, [(1, 10, _ts(0), "u", 1.0), (1, 11, _ts(5), "u", 2.0)])
     plan = scd2_history(d, ts="ts")._jdf.queryExecution().executedPlan().toString()

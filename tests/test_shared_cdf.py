@@ -1,4 +1,4 @@
-"""Shared CDF diffs across maintained views (_refresh_views): views over
+"""Shared CDF diffs across maintained views (refresh_views): views over
 the same source, at the same bookmark, consuming the same images mode get
 ONE read_changes_since per span — the diff's two bucket-pruned LWW
 resolves are the dominant refresh cost, so lockstep maintenance of N
@@ -17,7 +17,7 @@ from aws_serverless_elt_pipeline_enterprise_spark.operators.incremental_agg impo
 from aws_serverless_elt_pipeline_enterprise_spark.operators.secondary_index import (
     SecondaryIndex,
 )
-from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import _refresh_views
+from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import refresh_views
 from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import SnapshotTable
 
 
@@ -60,7 +60,7 @@ def test_same_mode_views_share_one_diff(spark, tmp_path):
         spark, t, str(tmp_path / "agg"), ["grp"], sums={"sum_val": "val"}
     )
     ix = SecondaryIndex(spark, t, str(tmp_path / "ix"), "grp", n_buckets=8)
-    _refresh_views([agg, ix])  # bootstrap: solo fallback per view
+    refresh_views([agg, ix])  # bootstrap: solo fallback per view
 
     t.merge_reduced(
         _batch(
@@ -70,7 +70,7 @@ def test_same_mode_views_share_one_diff(spark, tmp_path):
         "e1",
     )
     calls = _count_diffs(t)
-    _refresh_views([agg, ix])
+    refresh_views([agg, ix])
     # ONE shared diff for the (source, bookmark, images='both') group —
     # the counter sees the group read; each view consumed the persisted
     # frame instead of re-deriving the span
@@ -104,9 +104,9 @@ def test_shared_equals_solo(spark, tmp_path):
         )
         ix = SecondaryIndex(spark, t, str(tmp_path / f"ix_{tag}"), "grp", n_buckets=8)
         views = [agg, ix]
-        _refresh_views(views) if shared else [v.refresh() for v in views]
+        refresh_views(views) if shared else [v.refresh() for v in views]
         t.merge_reduced(_batch(spark, rows1), "e1")
-        _refresh_views(views) if shared else [v.refresh() for v in views]
+        refresh_views(views) if shared else [v.refresh() for v in views]
         outs[tag] = (
             _agg_rows(agg),
             {(r["_idx_val"], r["doc_id"]) for r in ix.idx.state().collect()},
@@ -121,10 +121,10 @@ def test_mixed_images_views_do_not_share(spark, tmp_path):
     )
     agg = MaterializedAggregate(spark, t, str(tmp_path / "agg"), ["grp"])
     exp = CdfExporter(spark, t, str(tmp_path / "out"), images="post")
-    _refresh_views([agg, exp])  # bootstrap both
+    refresh_views([agg, exp])  # bootstrap both
     t.merge_reduced(_batch(spark, [("update", "k0", 10, "a", 42)]), "e1")
     calls = _count_diffs(t)
-    _refresh_views([agg, exp])
+    refresh_views([agg, exp])
     # different images modes -> two diffs (a 'post' delete carries the
     # deleting seq, a 'both' delete the pre-delete row: not derivable)
     assert calls["n"] == 2

@@ -127,7 +127,7 @@ def pack_sequences(
         ]
     )
 
-    def pack(key_tuple, pdf: pd.DataFrame):
+    def pack(key_tuple, pdf):
         bucket = int(key_tuple[0])
         pdf = pdf.sort_values(key)
         packs, cur, ndocs = [], [], 0

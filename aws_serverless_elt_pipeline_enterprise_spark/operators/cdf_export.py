@@ -21,12 +21,15 @@ manifest format:
   between leaves a stale bookmark; the next ``export()`` fast-forwards
   it from the destination listing itself (the published spans ARE the
   ledger: spans chain, so the one span starting at the stale bookmark
-  names the true bookmark in its dirname) — the exact protocol
-  ``CdfBookmark.fastforward`` applies to derived SnapshotTables, with
-  the dir listing standing in for the epoch ledger. Re-running after a
-  crash therefore never double-publishes a span (exactly-once for the
+  names the true bookmark in its dirname). Re-running after a crash
+  therefore never double-publishes a span (exactly-once for the
   consumer), assuming a single writer per destination (same contract
-  as every other writer in this engine).
+  as every other writer in this engine). Unlike a derived SnapshotTable,
+  whose bookmark is read straight from its epoch ledger
+  (``cdf_consumer.derived_bookmark``), the exporter keeps its bookmark
+  FILE: the consumer may prune published spans, and a bookmark derived
+  from the listing alone would restart from ``init`` after a full
+  prune.
 * if the bookmark has fallen behind the source's retention horizon the
   span is no longer computable; the export falls back to a BOOTSTRAP —
   the full current state as inserts under ``span=boot_v{to:06d}`` —
@@ -71,14 +74,14 @@ class CdfExporter:
     def _bookmark_path(self) -> str:
         return os.path.join(self.dest, "_bookmark.json")
 
-    def _read_bookmark(self) -> int | None:
+    def _load_bookmark(self) -> int | None:
         try:
             with open(self._bookmark_path()) as f:
                 return json.load(f)["last_version"]
         except FileNotFoundError:
             return None
 
-    def _write_bookmark(self, v: int) -> None:
+    def _store_bookmark(self, v: int) -> None:
         tmp = self._bookmark_path() + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"last_version": v}, f)
@@ -136,7 +139,7 @@ class CdfExporter:
         return self.images
 
     def cdf_bookmark(self) -> int | None:
-        return self._fastforward(self._read_bookmark())
+        return self._fastforward(self._load_bookmark())
 
     def export(self, changes=None, to_version=None) -> dict:
         """Publish all changes since the last export. Returns
@@ -147,7 +150,7 @@ class CdfExporter:
         ``changes``/``to_version``: optional pre-computed shared CDF
         diff spanning exactly ``(cdf_bookmark(), to_version]`` in this
         exporter's ``images`` mode (see MaterializedAggregate.refresh)."""
-        bookmark = self._fastforward(self._read_bookmark())
+        bookmark = self._fastforward(self._load_bookmark())
         if changes is not None:
             to_v, bootstrapped = to_version, False
         else:
@@ -164,7 +167,7 @@ class CdfExporter:
             # regular incremental span
             bootstrapped = True
         if to_v == bookmark:
-            self._write_bookmark(to_v)  # persist a listing fast-forward
+            self._store_bookmark(to_v)  # persist a listing fast-forward
             return {
                 "from_version": bookmark,
                 "to_version": to_v,
@@ -196,7 +199,7 @@ class CdfExporter:
                 # byte-equivalent (pure function of the span) — discard
                 shutil.rmtree(stage, ignore_errors=True)
                 skipped = True
-        self._write_bookmark(to_v)
+        self._store_bookmark(to_v)
         return {
             "from_version": bookmark,
             "to_version": to_v,

@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tableio.snapshot import SnapshotTable
-from .cdf_consumer import CdfBookmark
+from .cdf_consumer import derived_bookmark, rebuild_derived, span_epoch_id
 
 _SEP = "\x1f"
 _NULL = "\x00null"
@@ -77,13 +77,11 @@ class MaterializedAggregate:
     ):
         if not group_cols:
             raise ValueError("group_cols must be non-empty")
-        self.spark = spark
         self.source = source
         self.path = path
         self.group_cols = list(group_cols)
         self.sums = dict(sums or {})
         self.count_col = count_col
-        self.n_buckets = n_buckets
         reserved = {"_group_key", "__cnt"} | {
             f"__s_{n}" for n in self.sums
         } | {f"__n_{n}" for n in self.sums}
@@ -97,7 +95,6 @@ class MaterializedAggregate:
             n_buckets=n_buckets,
             mode="mor",
         )
-        self._bm = CdfBookmark(os.path.join(path, "bookmark.json"), self.agg)
 
     # ------------------------------------------------------------ internals
 
@@ -110,20 +107,6 @@ class MaterializedAggregate:
             for c in self.group_cols
         ]
         return F.concat_ws(_SEP, *parts)
-
-    # bookmark + crash-recovery fast-forward live in CdfBookmark (shared
-    # with SecondaryIndex); kept as thin aliases for the tests
-    def _bookmark_path(self) -> str:
-        return self._bm.path
-
-    def _read_bookmark(self) -> int | None:
-        return self._bm.read()
-
-    def _write_bookmark(self, v: int) -> None:
-        self._bm.write(v)
-
-    def _ledger_fastforward(self, bookmark: int | None) -> int | None:
-        return self._bm.fastforward(bookmark)
 
     def _accumulators(self, sign: F.Column | None) -> list[F.Column]:
         """Per-group accumulator aggregates (pure column expressions);
@@ -148,8 +131,6 @@ class MaterializedAggregate:
         """Bootstrap: recompute from the full source state and REPLACE
         the aggregate table (wipe + fresh SnapshotTable), per the CDF
         bootstrap contract."""
-        import shutil
-
         state = self.source.state(to_version)
         rows = (
             state.groupBy(
@@ -159,17 +140,7 @@ class MaterializedAggregate:
             .withColumn("op", F.lit("update"))
             .withColumn("seq", F.lit(to_version).cast("long"))
         )
-        shutil.rmtree(self.agg.root, ignore_errors=True)
-        self.agg = SnapshotTable(
-            self.spark,
-            self.agg.root,
-            key_col="_group_key",
-            n_buckets=self.n_buckets,
-            mode="mor",
-        )
-        self._bm.derived = self.agg
-        lineage = self.agg.merge_reduced(rows, f"cdfboot-{to_version}")
-        self._write_bookmark(to_version)
+        self.agg, lineage = rebuild_derived(self.agg, rows, to_version)
         return {
             "from_version": None,
             "to_version": to_version,
@@ -184,7 +155,7 @@ class MaterializedAggregate:
     cdf_images = "both"
 
     def cdf_bookmark(self) -> int | None:
-        return self._ledger_fastforward(self._read_bookmark())
+        return derived_bookmark(self.agg)
 
     def refresh(self, changes=None, to_version=None) -> dict:
         """Advance the aggregate to the source's current version. Cost is
@@ -197,7 +168,7 @@ class MaterializedAggregate:
         LWW resolves run once per span instead of once per view. The
         caller guarantees the frame spans exactly
         ``(cdf_bookmark(), to_version]`` and is not a bootstrap."""
-        bookmark = self._ledger_fastforward(self._read_bookmark())
+        bookmark = derived_bookmark(self.agg)
         if changes is not None:
             to_v, bootstrapped = to_version, False
         else:
@@ -205,7 +176,6 @@ class MaterializedAggregate:
                 bookmark, images="both"
             )
         if to_v == bookmark:
-            self._write_bookmark(to_v)  # persist a ledger fast-forward
             return {
                 "from_version": bookmark,
                 "to_version": to_v,
@@ -310,12 +280,9 @@ class MaterializedAggregate:
             .withColumn("seq", F.lit(to_v).cast("long"))
         )
         try:
-            lineage = self.agg.merge_reduced(
-                rows, CdfBookmark.span_epoch_id(bookmark, to_v)
-            )
+            lineage = self.agg.merge_reduced(rows, span_epoch_id(bookmark, to_v))
         finally:
             delta.unpersist()
-        self._write_bookmark(to_v)
         return {
             "from_version": bookmark,
             "to_version": to_v,

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tableio.snapshot import SnapshotTable
-from .cdf_consumer import CdfBookmark
+from .cdf_consumer import derived_bookmark, rebuild_derived, span_epoch_id
 
 _SEP = "\x1f"
 _NULL = "\x00null"
@@ -63,7 +63,6 @@ class SecondaryIndex:
         self.source = source
         self.path = path
         self.column = column
-        self.n_buckets = n_buckets
         self.idx = SnapshotTable(
             spark,
             os.path.join(path, "idx"),
@@ -72,7 +71,6 @@ class SecondaryIndex:
             n_buckets=n_buckets,
             mode="mor",
         )
-        self._bm = CdfBookmark(os.path.join(path, "bookmark.json"), self.idx)
 
     # ------------------------------------------------------------ internals
 
@@ -128,22 +126,9 @@ class SecondaryIndex:
         )
 
     def _rebuild(self, to_version: int) -> dict:
-        import shutil
-
         rows = self._entries(self.source.state(to_version), ops=False)
         rows = rows.withColumn("seq", F.lit(to_version).cast("long"))
-        shutil.rmtree(self.idx.root, ignore_errors=True)
-        self.idx = SnapshotTable(
-            self.spark,
-            self.idx.root,
-            key_col="_idx_key",
-            bucket_col="_idx_val",
-            n_buckets=self.n_buckets,
-            mode="mor",
-        )
-        self._bm.derived = self.idx
-        lineage = self.idx.merge_reduced(rows, f"cdfboot-{to_version}")
-        self._bm.write(to_version)
+        self.idx, lineage = rebuild_derived(self.idx, rows, to_version)
         return {
             "from_version": None,
             "to_version": to_version,
@@ -157,13 +142,13 @@ class SecondaryIndex:
     cdf_images = "both"
 
     def cdf_bookmark(self) -> int | None:
-        return self._bm.fastforward(self._bm.read())
+        return derived_bookmark(self.idx)
 
     def refresh(self, changes=None, to_version=None) -> dict:
         """``changes``/``to_version``: optional pre-computed shared CDF
         diff spanning exactly ``(cdf_bookmark(), to_version]`` with
         ``images='both'`` (see MaterializedAggregate.refresh)."""
-        bookmark = self._bm.fastforward(self._bm.read())
+        bookmark = derived_bookmark(self.idx)
         if changes is not None:
             to_v, bootstrapped = to_version, False
         else:
@@ -171,7 +156,6 @@ class SecondaryIndex:
                 bookmark, images="both"
             )
         if to_v == bookmark:
-            self._bm.write(to_v)
             return {
                 "from_version": bookmark,
                 "to_version": to_v,
@@ -183,10 +167,7 @@ class SecondaryIndex:
         rows = self._entries(changes, ops=True).withColumn(
             "seq", F.lit(to_v).cast("long")
         )
-        lineage = self.idx.merge_reduced(
-            rows, CdfBookmark.span_epoch_id(bookmark, to_v)
-        )
-        self._bm.write(to_v)
+        lineage = self.idx.merge_reduced(rows, span_epoch_id(bookmark, to_v))
         return {
             "from_version": bookmark,
             "to_version": to_v,

@@ -8,9 +8,11 @@ externally visible semantics an Iceberg table would give:
                               itself is CLAIMED exclusively (hard-link
                               create, fails if the version exists — the
                               local-FS analogue of an object store's
-                              conditional PUT / Iceberg's catalog CAS),
-                              then a LATEST pointer is swapped via atomic
-                              rename. Readers never see a partial commit.
+                              conditional PUT / Iceberg's catalog CAS).
+                              That link is the commit point: the current
+                              version is the largest manifest name, with
+                              no pointer file beside it. Readers never
+                              see a partial commit.
   * optimistic concurrency  — two writers racing for the same version:
                               exactly one wins the claim. Every commit
                               runs through ``_commit_loop``: each attempt
@@ -55,8 +57,7 @@ Layout on disk::
 
     root/
       commits/c_<ver>_<tag>/_bucket=<k>/part-*.parquet
-      manifests/v<ver>.json
-      LATEST                      <- file containing "v<ver>" (commit point)
+      manifests/v<ver>.json       <- claimed by exclusive link (commit point)
 
 The table stores one internal column ``_seq`` — the sequence number of the
 last applied change per key — which makes merge-apply order-independent
@@ -403,42 +404,30 @@ class SnapshotTable:
 
     # ---------------------------------------------------------------- meta
 
-    def _latest_path(self) -> str:
-        return os.path.join(self.root, "LATEST")
-
-    def _hint(self) -> int:
-        """The version the LATEST pointer names (-1 before the first)."""
+    def _versions(self) -> list[int]:
+        """Committed versions, ascending: the canonical ``v<ver>.json``
+        names in ``manifests/``. Each name appears only through
+        ``_commit_manifest``'s exclusive link of a fully written file (the
+        commit point), so the listing IS the version chain. A crash
+        between the tmp write and the link leaves a ``v*.json.tmp*``
+        orphan, which names no version."""
         try:
-            with open(self._latest_path()) as f:
-                return int(f.read().strip().lstrip("v"))
+            names = os.listdir(os.path.join(self.root, "manifests"))
         except FileNotFoundError:
-            return -1
-
-    def _advance_hint(self, version: int) -> None:
-        """Monotone best-effort LATEST advance via tmp + atomic rename.
-        The pointer is a hint that current_version() probes forward
-        past, so a lost pointer race self-heals; it never moves
-        backwards."""
-        if version > self._hint():
-            tmp = self._latest_path() + f".tmp{uuid.uuid4().hex[:6]}"
-            with open(tmp, "w") as f:
-                f.write(f"v{version:06d}")
-            os.replace(tmp, self._latest_path())
+            return []
+        return sorted(
+            int(n[1:-5]) for n in names if n.startswith("v") and n.endswith(".json")
+        )
 
     def current_version(self) -> int | None:
-        """Latest committed version. The LATEST pointer is a HINT: the
-        manifest claim (``_commit_manifest``'s exclusive link) is the
-        real commit point, and a writer can crash — or lose a benign
-        pointer race — between claiming v(N+1) and advancing LATEST.
-        Claims are serialized by version (claiming v(N+1) requires having
-        observed vN), so the manifest chain is contiguous: probing
-        FORWARD from the hint self-heals any lag at one extra stat per
-        call in the common case (the probe misses immediately)."""
-        v = self._hint()
-        mdir = os.path.join(self.root, "manifests")
-        while os.path.exists(os.path.join(mdir, f"v{v + 1:06d}.json")):
-            v += 1
-        return v if v >= 0 else None
+        """Latest committed version: the largest manifest name. Derived
+        from the listing on every call and never cached — neither on the
+        directory's mtime (coarse: two commits in one tick would hide the
+        second) nor in memory (another handle's ``expire_snapshots`` can
+        delete a remembered version). A legacy ``LATEST`` file left by
+        older writers is ignored."""
+        versions = self._versions()
+        return versions[-1] if versions else None
 
     def version_at(self, ts_ms: int) -> int | None:
         """Timestamp time travel (Delta ``timestampAsOf`` / Iceberg
@@ -453,18 +442,8 @@ class SnapshotTable:
         resolves to has been expired by ``expire_snapshots`` (the state
         is no longer reconstructible — same contract as
         ``read(version=)`` on an expired version)."""
-        mdir = os.path.join(self.root, "manifests")
-        try:
-            names = os.listdir(mdir)
-        except FileNotFoundError:
-            return None
-        versions = sorted(
-            int(n[1:-5]) for n in names if n.startswith("v") and n.endswith(".json")
-        )
-        if not versions:
-            return None
         oldest = None
-        for v in reversed(versions):
+        for v in reversed(self._versions()):
             ts = int((self.manifest(v) or {}).get("committed_at_ms", 0))
             if ts <= ts_ms:
                 return v
@@ -497,7 +476,7 @@ class SnapshotTable:
         return self.changes(v_from, v_to, images=images)
 
     def manifest(self, version: int | None = None) -> dict | None:
-        """Parsed manifest; the LATEST one is cached keyed on version.
+        """Parsed manifest; the newest one is cached keyed on version.
         One epoch otherwise re-parses the same JSON ~7 times (has_epoch,
         schema, read, committed_epochs, commit) — at 4096 buckets with
         lineage that is megabytes of driver-side json.load per epoch.
@@ -531,19 +510,10 @@ class SnapshotTable:
         return _schema_of(self.manifest())
 
     def lineage(self) -> list[dict]:
-        """Per-commit lineage rows across all versions (metrics surface).
-        Only canonical ``v*.json`` names are read: a crash between
-        _commit_manifest's tmp write and its exclusive link leaves a
-        ``v*.json.tmp*`` orphan that must not brick the metrics surface
-        (or double-count a version if it was fully written)."""
-        out = []
-        mdir = os.path.join(self.root, "manifests")
-        for name in sorted(os.listdir(mdir)):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            with open(os.path.join(mdir, name)) as f:
-                out.append(json.load(f)["lineage"])
-        return out
+        """Per-commit lineage rows across all retained versions (metrics
+        surface). Reads only committed versions (``_versions``), so a
+        crashed commit's tmp orphan neither bricks nor double-counts it."""
+        return [self.manifest(v)["lineage"] for v in self._versions()]
 
     # ---------------------------------------------------------------- read
 
@@ -1428,7 +1398,6 @@ class SnapshotTable:
             )
         finally:
             os.unlink(tmp)
-        self._advance_hint(version)
 
     # ---------------------------------------------------------- maintenance
 
@@ -1676,10 +1645,10 @@ class SnapshotTable:
         only the newest ``keep_last`` version manifests, then remove every
         commit dir no kept manifest references. Without this, one manifest
         file per version accumulates forever — at an epoch a minute that
-        is ~0.5M driver-side files a year — and expired versions' commit
-        dirs (which ``expire_orphans`` never touches, since it only reads
-        LATEST) pin their data on disk. Time travel stays available within
-        the kept horizon and raises FileNotFoundError beyond it.
+        is ~0.5M driver-side files a year. ``expire_orphans`` frees data
+        but keeps every manifest (older ones then point at deleted dirs);
+        this trims both together. Time travel stays available within the
+        kept horizon and raises FileNotFoundError beyond it.
 
         Like ``expire_orphans``, the commit-dir sweep can race an
         in-flight writer (its data dir exists before the manifest claim):
@@ -1691,22 +1660,16 @@ class SnapshotTable:
         writer is about to claim would let the stale claim SUCCEED and
         silently strand its epoch — a writer stalled longer than the
         retention interval is outside the contract, as in Iceberg)."""
-        cur = self.current_version()
+        versions = self._versions()
         out = {"removed_manifests": [], "removed_commits": []}
-        if cur is None:
+        if not versions:
             return out
-        # heal the LATEST hint first: a lost pointer race can leave it
-        # below cur, and trimming manifests in the gap ABOVE a stale hint
-        # would break current_version()'s contiguous forward probe
-        self._advance_hint(cur)
-        horizon = cur - max(1, keep_last) + 1
+        horizon = versions[-1] - max(1, keep_last) + 1
         mdir = os.path.join(self.root, "manifests")
         mcutoff = time.time() - older_than_s
         live: set[str] = set()
-        for name in sorted(os.listdir(mdir)):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            v = int(name[1:-5])
+        for v in versions:
+            name = f"v{v:06d}.json"
             keep = v >= horizon
             if not keep and older_than_s > 0:
                 try:

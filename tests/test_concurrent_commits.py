@@ -5,9 +5,10 @@ local-FS analogue of a conditional PUT / catalog CAS): exactly one of two
 racing writers wins a version. Merge deltas rebase automatically (a global
 delta is position-independent under the LWW resolve) unless a rebucket
 changed the hash in between; then ``CommitConflictError`` propagates with
-the epoch uncommitted and the merge is safe to re-run. The LATEST pointer is a hint — ``current_version``
-probes forward past it, so a writer crashing (or losing a pointer race)
-between the manifest claim and the pointer swap never hides a commit.
+the epoch uncommitted and the merge is safe to re-run. The claim is the
+whole commit: ``current_version`` is the largest claimed manifest name, so
+there is no pointer file to lag behind a commit, and a legacy ``LATEST``
+file left by older writers is ignored.
 
 Interleavings are made deterministic by wrapping one writer's
 ``_commit_manifest`` so that its FIRST commit attempt lets a twin handle
@@ -57,20 +58,47 @@ def _interpose(t, before_first_commit):
     return fired
 
 
-def test_latest_pointer_is_a_self_healing_hint(spark, tmp_path):
+def test_stale_latest_file_is_ignored(spark, tmp_path):
     t = _mk(spark, tmp_path)
     t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0)]), "e0")
     t.merge_reduced(_batch(spark, [("insert", "b", 2, 2.0)]), "e1")
     cur = t.current_version()
-    # regress the pointer (a lost pointer race / torn crash recovery)
-    with open(t._latest_path(), "w") as f:
+    latest = os.path.join(t.root, "LATEST")
+    # a legacy pointer file naming an older version
+    with open(latest, "w") as f:
         f.write("v000000")
-    assert t.current_version() == cur  # probed forward past the stale hint
-    assert _state(t) == {"a": 1.0, "b": 2.0}
-    # crash BEFORE the first pointer write: manifests exist, LATEST absent
-    os.remove(t._latest_path())
     assert t.current_version() == cur
     assert _state(t) == {"a": 1.0, "b": 2.0}
+    # a legacy pointer file naming a version that does not exist
+    with open(latest, "w") as f:
+        f.write("v000099")
+    assert t.current_version() == cur
+    assert _state(t) == {"a": 1.0, "b": 2.0}
+    # commits advance the version and leave the legacy file untouched
+    t.merge_reduced(_batch(spark, [("insert", "c", 3, 3.0)]), "e2")
+    assert t.current_version() == cur + 1
+    assert _state(t) == {"a": 1.0, "b": 2.0, "c": 3.0}
+    with open(latest) as f:
+        assert f.read() == "v000099"
+
+
+def test_twin_handle_sees_commits_past_expired_versions(spark, tmp_path):
+    a = _mk(spark, tmp_path)
+    for i in range(3):
+        a.merge_reduced(_batch(spark, [("insert", f"k{i}", i + 1, float(i))]), f"e{i}")
+    assert a.current_version() == 2
+    assert len(_state(a)) == 3  # A has read (and cached) v2
+    b = SnapshotTable(spark, a.root, key_col="doc_id", n_buckets=4)
+    for i in range(3, 21):
+        b.merge_reduced(_batch(spark, [("insert", f"k{i}", i + 1, float(i))]), f"e{i}")
+    b.expire_snapshots(keep_last=2)
+    # v2, which A last read, is gone; A derives v20 from the listing
+    assert not os.path.exists(os.path.join(a.root, "manifests", "v000002.json"))
+    assert a.current_version() == 20
+    want = {f"k{i}": float(i) for i in range(21)}
+    assert _state(a) == want
+    got = {r["doc_id"]: r["v"] for r in a.lookup(["k0", "k20"]).collect()}
+    assert got == {"k0": 0.0, "k20": 20.0}
 
 
 def test_mor_concurrent_writers_both_commit(spark, tmp_path):
@@ -399,7 +427,7 @@ def test_concurrent_minor_compactions_do_not_stack(spark, tmp_path):
     assert _state(t) == {"a": 1.0, "b": 2.0, "c": 3.0}
 
 
-def test_expire_snapshots_heals_latest_and_guards_claim_markers(spark, tmp_path):
+def test_expire_snapshots_guards_claim_markers(spark, tmp_path):
     import os
     import time
 
@@ -409,10 +437,6 @@ def test_expire_snapshots_heals_latest_and_guards_claim_markers(spark, tmp_path)
             _batch(spark, [("insert", f"k{i}", i + 1, float(i))]), f"e{i}"
         )
     cur = t.current_version()
-    # regress the LATEST hint (lost pointer race), then expire: the heal
-    # must run BEFORE trimming, or the probe chain above the hint breaks
-    with open(t._latest_path(), "w") as f:
-        f.write("v000001")
     t.expire_snapshots(keep_last=4)
     assert t.current_version() == cur
     assert t.manifest() is not None  # head manifest readable

@@ -4,6 +4,7 @@ MaterializedAggregate (operators/incremental_agg.py)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -182,8 +183,9 @@ def test_refresh_noop_when_caught_up(spark, tmp_path):
 
 
 def test_stale_bookmark_source_unchanged_no_double_apply(spark, tmp_path):
-    """Crash between agg commit and bookmark write, source NOT advanced:
-    the re-run recomputes the same span and the ledger skips the merge."""
+    """A rewound legacy ``bookmark.json`` (what an older writer left on a
+    crash between agg commit and bookmark write), source NOT advanced: the
+    bookmark comes from the agg ledger, so the re-run is a no-op."""
     t = _mk(spark, tmp_path)
     ma = MaterializedAggregate(
         spark, t, str(tmp_path / "mv"), ["grp"], sums={"sum_val": "val"}
@@ -192,21 +194,22 @@ def test_stale_bookmark_source_unchanged_no_double_apply(spark, tmp_path):
         _batch(spark, [("insert", f"k{i}", i, "g", 1) for i in range(4)]), "e0"
     )
     ma.refresh()
-    bm1 = ma._read_bookmark()
+    bm1 = ma.cdf_bookmark()
     t.merge_reduced(_batch(spark, [("insert", "k9", 100, "g", 1)]), "e1")
     ma.refresh()
-    # simulate the crash: rewind the bookmark file to the pre-refresh value
-    with open(ma._bookmark_path(), "w") as f:
+    # the legacy bookmark file, rewound to the pre-refresh value
+    with open(os.path.join(ma.path, "bookmark.json"), "w") as f:
         json.dump({"last_version": bm1}, f)
+    assert ma.cdf_bookmark() == t.current_version()
     ma.refresh()
     assert _materialized(ma) == _recompute(t) == {("g",): (5, 5)}
 
 
 def test_stale_bookmark_source_advanced_ledger_fastforward(spark, tmp_path):
-    """Crash between agg commit and bookmark write, then MORE source
-    commits before the re-run: naively diffing from the stale bookmark
-    would double-apply the committed span under a new epoch id. The
-    ledger fast-forward must resume from the true (committed) version."""
+    """A rewound legacy ``bookmark.json``, then MORE source commits
+    before the re-run: diffing from the stale file would double-apply the
+    committed span under a new epoch id. The bookmark derived from the
+    agg ledger resumes from the true (committed) version."""
     t = _mk(spark, tmp_path)
     ma = MaterializedAggregate(
         spark, t, str(tmp_path / "mv"), ["grp"], sums={"sum_val": "val"}
@@ -215,10 +218,10 @@ def test_stale_bookmark_source_advanced_ledger_fastforward(spark, tmp_path):
         _batch(spark, [("insert", f"k{i}", i, "g", 1) for i in range(4)]), "e0"
     )
     ma.refresh()
-    bm1 = ma._read_bookmark()
+    bm1 = ma.cdf_bookmark()
     t.merge_reduced(_batch(spark, [("insert", "k9", 100, "g", 1)]), "e1")
     ma.refresh()  # commits epoch cdf-<bm1>-<v2>
-    with open(ma._bookmark_path(), "w") as f:
+    with open(os.path.join(ma.path, "bookmark.json"), "w") as f:
         json.dump({"last_version": bm1}, f)
     # source advances AFTER the crash
     t.merge_reduced(_batch(spark, [("insert", "k10", 200, "g", 1)]), "e2")

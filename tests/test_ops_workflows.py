@@ -1,12 +1,21 @@
 """Ops-workflow operators: DQ gate abort (T5), windowed replay (T1/T2),
-quarantine redrive (T3), lineage/metrics surface (A3/P6)."""
+quarantine redrive (T3), lineage/metrics surface (A3/P6), and the served
+tail epoch's filesystem footprint."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_serverless_elt_pipeline_enterprise_spark.operators.incremental_agg import (
+    MaterializedAggregate,
+)
+from aws_serverless_elt_pipeline_enterprise_spark.operators.secondary_index import (
+    SecondaryIndex,
+)
 from aws_serverless_elt_pipeline_enterprise_spark.sources.changelog import (
     ChangelogSpec,
     generate_changelog,
@@ -14,6 +23,7 @@ from aws_serverless_elt_pipeline_enterprise_spark.sources.changelog import (
 from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import (
     apply_epoch,
     redrive_quarantine,
+    refresh_views,
     replay_range,
     run_replay,
 )
@@ -47,6 +57,61 @@ def test_dq_gate_aborts_commit_transactionally(spark, tmp_path):
     apply_epoch(table, bad, "e1", dq_fail_on_corrupt=False)
     row = table.state().collect()[0]
     assert row.n_tok == 3
+
+
+def test_served_tail_epoch_renames_nothing_onto_an_existing_file(
+    spark, tmp_path, monkeypatch
+):
+    """A served tail epoch (apply_epoch -> refresh_views -> maybe_compact
+    -> expire_snapshots) commits by exclusive manifest links only: no
+    ``os.replace``/``os.rename`` lands on an existing file (on ext4 such
+    a rename flushes the new file's data and costs tens of ms)."""
+    table = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4, mode="mor")
+    qdir = str(tmp_path / "q")
+
+    def batch(rows):
+        return spark.createDataFrame(rows, ENVELOPE)
+
+    apply_epoch(table, batch([("insert", "a", 1, [1], 1, "web")]), "e0", qdir)
+    agg = MaterializedAggregate(
+        spark, table, str(tmp_path / "agg"), ["source"], sums={"n": "n_tok"}
+    )
+    idx = SecondaryIndex(spark, table, str(tmp_path / "idx"), "source", n_buckets=4)
+    refresh_views([agg, idx])  # bootstrap both views
+    apply_epoch(table, batch([("insert", "b", 2, [1, 2], 2, "api")]), "e1", qdir)
+    refresh_views([agg, idx])
+
+    calls, onto_existing = [], []
+    for name in ("replace", "rename"):
+        real = getattr(os, name)
+
+        def spy(src, dst, *a, _real=real, _name=name, **kw):
+            calls.append((_name, str(dst)))
+            if os.path.exists(dst):
+                onto_existing.append((_name, str(dst)))
+            return _real(src, dst, *a, **kw)
+
+        monkeypatch.setattr(os, name, spy)
+    tail = batch(
+        [
+            ("update", "a", 3, [3, 3, 3], 3, "api"),
+            ("frobnicate", "c", 4, [4], 1, "web"),  # quarantined
+        ]
+    )
+    assert apply_epoch(table, tail, "e2", qdir) is not None
+    refresh_views([agg, idx])
+    assert table.maybe_compact(max_deltas=2) is not None  # compaction ran
+    table.expire_snapshots(keep_last=2)
+    monkeypatch.undo()
+
+    assert calls, "the spy saw no rename at all (quarantine publish expected)"
+    assert onto_existing == []
+    v = table.current_version()
+    assert agg.cdf_bookmark() == idx.cdf_bookmark() == v - 1  # compaction is v
+    assert {(r["source"], r["cnt"], r["n"]) for r in agg.result().collect()} == {
+        ("api", 2, 5)
+    }
+    assert {r["doc_id"] for r in idx.lookup(["api"]).collect()} == {"a", "b"}
 
 
 def test_replay_range_fills_gaps(spark, tmp_path):

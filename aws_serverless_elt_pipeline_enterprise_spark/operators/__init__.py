@@ -7,5 +7,4 @@ from aws_serverless_elt_pipeline_enterprise_spark.operators.lww import (  # noqa
 )
 from aws_serverless_elt_pipeline_enterprise_spark.operators.normalize import (  # noqa: F401
     split_quarantine,
-    normalize_envelope,
 )

@@ -54,7 +54,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tableio.snapshot import SnapshotTable
+from ..tableio.snapshot import SnapshotTable, _q, _sql_str
 from .cdf_consumer import derived_bookmark, rebuild_derived, span_epoch_id
 
 _SEP = "\x1f"
@@ -102,28 +102,29 @@ class MaterializedAggregate:
         # concat_ws SKIPS nulls (would alias (NULL,'x') with ('x',)), so
         # nulls are encoded explicitly; _SEP/_NULL are control chars no
         # real group value contains.
-        parts = [
-            F.coalesce(F.col(c).cast("string"), F.lit(_NULL))
+        parts = ", ".join(
+            f"coalesce(CAST({_q(c)} AS STRING), {_sql_str(_NULL)})"
             for c in self.group_cols
-        ]
-        return F.concat_ws(_SEP, *parts)
+        )
+        return F.expr(f"concat_ws({_sql_str(_SEP)}, {parts}) AS _group_key")
 
-    def _accumulators(self, sign: F.Column | None) -> list[F.Column]:
-        """Per-group accumulator aggregates (pure column expressions);
-        ``sign=None`` for the full rebuild (every row contributes +1)."""
-        s = sign if sign is not None else F.lit(1)
-        out = [F.sum(s).cast("long").alias("__cnt")]
+    def _accumulators(self, sign: str) -> list[F.Column]:
+        """Per-group accumulator aggregates; ``sign`` is the SQL text of
+        each row's contribution (``'1'`` for the full rebuild)."""
+        out = [F.expr(f"CAST(sum({sign}) AS BIGINT) AS __cnt")]
         for name, col in self.sums.items():
-            v = F.col(col)
+            v = _q(col)
             out.append(
-                F.sum(
-                    F.when(v.isNotNull(), s * v).otherwise(F.lit(0))
-                ).alias(f"__s_{name}")
+                F.expr(
+                    f"sum(CASE WHEN {v} IS NOT NULL THEN ({sign}) * {v} ELSE 0 END)"
+                    f" AS {_q(f'__s_{name}')}"
+                )
             )
             out.append(
-                F.sum(F.when(v.isNotNull(), s).otherwise(F.lit(0)))
-                .cast("long")
-                .alias(f"__n_{name}")
+                F.expr(
+                    f"CAST(sum(CASE WHEN {v} IS NOT NULL THEN {sign} ELSE 0 END)"
+                    f" AS BIGINT) AS {_q(f'__n_{name}')}"
+                )
             )
         return out
 
@@ -133,10 +134,8 @@ class MaterializedAggregate:
         bootstrap contract."""
         state = self.source.state(to_version)
         rows = (
-            state.groupBy(
-                self._group_key().alias("_group_key"), *self.group_cols
-            )
-            .agg(*self._accumulators(None))
+            state.groupBy(self._group_key(), *self.group_cols)
+            .agg(*self._accumulators("1"))
             .withColumn("op", F.lit("update"))
             .withColumn("seq", F.lit(to_version).cast("long"))
         )
@@ -186,98 +185,64 @@ class MaterializedAggregate:
             return self._rebuild(to_v)
 
         sign = (
-            F.when(
-                F.col("_change_type").isin("insert", "update_postimage"),
-                F.lit(1),
-            )
-            .otherwise(F.lit(-1))
+            "CASE WHEN _change_type IN ('insert', 'update_postimage')"
+            " THEN 1 ELSE -1 END"
         )
-        delta = changes.groupBy(
-            self._group_key().alias("_group_key"), *self.group_cols
-        ).agg(*self._accumulators(sign))
+        delta = changes.groupBy(self._group_key(), *self.group_cols).agg(
+            *self._accumulators(sign)
+        )
         # A key updated WITHIN the span but landing in the same group
         # with the same contribution nets to zero — dropping those rows
         # keeps the merge (and the touched-bucket set) minimal.
-        zero = F.col("__cnt") == 0
-        for name in self.sums:
-            zero = zero & (F.col(f"__s_{name}") == 0) & (
-                F.col(f"__n_{name}") == 0
-            )
+        olds = {"__cnt": "__old_cnt"}
+        for n in self.sums:
+            olds.update({f"__s_{n}": f"__old_s_{n}", f"__n_{n}": f"__old_n_{n}"})
+        zero = " AND ".join(f"{_q(c)} = 0" for c in olds)
         # the delta feeds TWO actions (touched-bucket probe, then the
         # merge); without a persist the whole CDF diff — the expensive
         # two-sided read — would execute twice
-        delta = delta.filter(~zero).persist()
+        delta = delta.filter(f"NOT ({zero})").persist()
 
         # Read ONLY the agg buckets containing touched groups. The
         # collect is bounded by n_buckets values, not by group count.
-        # bucket_expr is the table's own hash — the single source of
+        # bucket_sql is the table's own hash — the single source of
         # truth for its bucketing contract.
         touched = [
             r[0]
-            for r in delta.select(
-                self.agg.bucket_expr().alias("b")
-            ).distinct().collect()
+            for r in delta.selectExpr(f"{self.agg.bucket_sql()} AS b")
+            .distinct()
+            .collect()
         ]
         if self.agg.current_version() is not None and touched:
             old = (
                 self.agg.read(buckets=sorted(touched))
-                .filter(
-                    ~F.coalesce(F.col(SnapshotTable.DEL_COL), F.lit(False))
-                )
-                .select(
-                    "_group_key",
-                    F.col("__cnt").alias("__old_cnt"),
-                    *[
-                        c
-                        for n in self.sums
-                        for c in (
-                            F.col(f"__s_{n}").alias(f"__old_s_{n}"),
-                            F.col(f"__n_{n}").alias(f"__old_n_{n}"),
-                        )
-                    ],
+                .filter(f"NOT coalesce({_q(SnapshotTable.DEL_COL)}, false)")
+                .selectExpr(
+                    "_group_key", *[f"{_q(c)} AS {_q(o)}" for c, o in olds.items()]
                 )
             )
-        else:
-            old = None
-
-        if old is not None:
             merged = delta.join(old, "_group_key", "left")
         else:
-            merged = delta
-            for n in self.sums:
-                merged = merged.withColumn(
-                    f"__old_s_{n}", F.lit(None)
-                ).withColumn(f"__old_n_{n}", F.lit(None))
-            merged = merged.withColumn("__old_cnt", F.lit(None))
+            merged = delta.selectExpr("*", *[f"NULL AS {_q(o)}" for o in olds.values()])
 
-        new_cnt = F.coalesce(F.col("__old_cnt"), F.lit(0)) + F.col("__cnt")
+        def plus_old(c: str) -> str:
+            return f"coalesce({_q(olds[c])}, 0) + {_q(c)}"
+
         proj = [
-            F.col("_group_key"),
-            *[F.col(c) for c in self.group_cols],
-            new_cnt.alias("__cnt"),
+            "_group_key",
+            *[_q(c) for c in self.group_cols],
+            f"{plus_old('__cnt')} AS __cnt",
         ]
         for n in self.sums:
+            proj.append(f"{plus_old(f'__s_{n}')} AS {_q(f'__s_{n}')}")
             proj.append(
-                (
-                    F.coalesce(F.col(f"__old_s_{n}"), F.lit(0))
-                    + F.col(f"__s_{n}")
-                ).alias(f"__s_{n}")
+                f"CAST({plus_old(f'__n_{n}')} AS BIGINT) AS {_q(f'__n_{n}')}"
             )
-            proj.append(
-                (
-                    F.coalesce(F.col(f"__old_n_{n}"), F.lit(0))
-                    + F.col(f"__n_{n}")
-                ).cast("long").alias(f"__n_{n}")
-            )
-        rows = (
-            merged.select(*proj)
-            .withColumn(
-                "op",
-                F.when(F.col("__cnt") <= 0, F.lit("delete")).otherwise(
-                    F.lit("update")
-                ),
-            )
-            .withColumn("seq", F.lit(to_v).cast("long"))
+        rows = merged.selectExpr(
+            *proj,
+            f"CASE WHEN {plus_old('__cnt')} <= 0 THEN 'delete' ELSE 'update' END"
+            " AS op",
+            f"CAST({to_v} AS BIGINT) AS seq",
         )
         try:
             lineage = self.agg.merge_reduced(rows, span_epoch_id(bookmark, to_v))

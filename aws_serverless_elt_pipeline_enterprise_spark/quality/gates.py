@@ -75,8 +75,8 @@ def run_dq_gate(
 def repair_ntok(df: DataFrame) -> DataFrame:
     """Normalization option: recompute n_tok from tokens (vectorized,
     JVM-side) instead of failing the gate on corrupt counters."""
-    ntok_type = df.schema["n_tok"].dataType
+    ntok_type = df.schema["n_tok"].dataType.simpleString()
     return df.withColumn(
         "n_tok",
-        F.when(F.col("tokens").isNotNull(), F.size("tokens").cast(ntok_type)),
+        F.expr(f"CASE WHEN tokens IS NOT NULL THEN CAST(size(tokens) AS {ntok_type}) END"),
     )

@@ -172,16 +172,16 @@ def _gated_observe(
     every null-key row to quarantine, so a post-split check could never
     fire (dead-check trap) — the invariant is owned by the split."""
     obs = Observation(f"dq_{epoch_id}_{uuid.uuid4().hex[:6]}")
-    dq_aggs = [
-        F.count(F.lit(1)).alias("row_count"),
+    observed = good.observe(
+        obs,
+        F.expr("count(1) AS row_count"),
         # NULL n_tok with tokens present counts as a mismatch (a bare !=
         # is NULL there and count_if would skip the corrupt row)
-        F.count_if(
-            F.col("op").isin("insert", "update")
-            & (F.col("n_tok").isNull() | (F.col("n_tok") != F.size("tokens")))
-        ).alias("ntok_mismatch"),
-    ]
-    observed = good.observe(obs, *dq_aggs)
+        F.expr(
+            "count_if(op IN ('insert', 'update')"
+            " AND (n_tok IS NULL OR n_tok != size(tokens))) AS ntok_mismatch"
+        ),
+    )
 
     def gate_check() -> None:
         m = obs.get

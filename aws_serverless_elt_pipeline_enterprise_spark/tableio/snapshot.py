@@ -69,6 +69,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -211,6 +212,76 @@ class EpochLedger:
 _INT_WIDTH = {"tinyint": 0, "smallint": 1, "int": 2, "bigint": 3}
 _FLOAT_WIDTH = {"float": 0, "double": 1}
 
+# XXH64 (https://github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md)
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+_SEED = 42  # Spark's xxhash64 seed
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes) -> int:
+    """XXH64 of ``data`` as a signed 64-bit int (Spark's ``xxhash64``)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(_SEED + _P1 + _P2) & _M64, _SEED + _P2, _SEED, (_SEED - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _xxh_round(v[j], int.from_bytes(data[i : i + 8], "little"))
+                i += 8
+        acc = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            acc = ((acc ^ _xxh_round(0, x)) * _P1 + _P4) & _M64
+    else:
+        acc = _SEED + _P5
+    acc = (acc + n) & _M64
+    while i + 8 <= n:
+        acc ^= _xxh_round(0, int.from_bytes(data[i : i + 8], "little"))
+        acc = (_rotl(acc, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        acc ^= int.from_bytes(data[i : i + 4], "little") * _P1 & _M64
+        acc = (_rotl(acc, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        acc ^= b * _P5 & _M64
+        acc = _rotl(acc, 11) * _P1 & _M64
+    acc = (acc ^ (acc >> 33)) * _P2 & _M64
+    acc = (acc ^ (acc >> 29)) * _P3 & _M64
+    acc ^= acc >> 32
+    return acc - (1 << 64) if acc >> 63 else acc
+
+
+def spark_xxhash64(value, type_name: str) -> int:
+    """Spark's ``xxhash64(CAST(value AS <type_name>))`` computed on the
+    driver, for ``type_name`` 'string' or an integral type. Strings hash
+    their UTF-8 bytes (``value`` is ``str()``-ed); tinyint, smallint and int
+    hash as 4 little-endian bytes and bigint as 8; NULL hashes to the seed,
+    42. An integral ``value`` must be an int or an integer string within
+    the type's range (what Spark's ANSI cast accepts), or ``ValueError`` is
+    raised."""
+    if value is None:
+        return _SEED
+    if type_name == "string":
+        return _xxh64(str(value).encode("utf-8"))
+    if isinstance(value, str) and re.fullmatch(r"[+-]?[0-9]+", value.strip()):
+        n = int(value.strip())
+    elif isinstance(value, int) and not isinstance(value, bool):
+        n = value
+    else:
+        raise ValueError(f"bucket probe {value!r} is not a {type_name}")
+    bits = 8 << _INT_WIDTH[type_name]
+    if not -(1 << (bits - 1)) <= n < 1 << (bits - 1):
+        raise ValueError(f"bucket probe {value!r} is out of {type_name} range")
+    return _xxh64(n.to_bytes(8 if bits == 64 else 4, "little", signed=True))
+
 
 def _widen(a: T.DataType, b: T.DataType) -> T.DataType:
     """Resolve the common (widest) type for schema evolution. Widening
@@ -250,19 +321,69 @@ def unify_schemas(base: T.StructType, incoming: T.StructType) -> T.StructType:
     return T.StructType([fields[n] for n in order])
 
 
-def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Project/cast a DataFrame to the unified schema (missing -> NULL)."""
-    have = {f.name: f for f in df.schema.fields}
-    cols = []
+# Served-path plans are built from SQL expression text: each pyspark Column
+# call is ~13-19 Py4J round trips (session lookup, call-site origin, function
+# lookup), while a whole ``selectExpr`` list or ``filter(str)`` is a handful.
+# The parsed expressions are the same Catalyst trees, so results are
+# unchanged.
+
+
+def _q(name: str) -> str:
+    """Backtick-quote an identifier for SQL expression text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(s: str) -> str:
+    """A SQL string literal holding ``s``."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_type(t: T.DataType) -> str:
+    """A CAST target type, nested field names quoted."""
+    if isinstance(t, T.StructType):
+        return "struct<" + ",".join(
+            f"{_q(f.name)}:{_sql_type(f.dataType)}" for f in t.fields
+        ) + ">"
+    if isinstance(t, T.ArrayType):
+        return f"array<{_sql_type(t.elementType)}>"
+    if isinstance(t, T.MapType):
+        return f"map<{_sql_type(t.keyType)},{_sql_type(t.valueType)}>"
+    return t.simpleString()
+
+
+def _in_list(col: str, values) -> str | Column:
+    """``col IN (values)`` as SQL text when every value is a str or int
+    (the literal types ``F.lit`` would give them); else as a Column."""
+    values = list(values)
+    if not values:
+        return "false"
+    if all(isinstance(v, (str, int)) and not isinstance(v, bool) for v in values):
+        lits = ", ".join(_sql_str(v) if isinstance(v, str) else str(v) for v in values)
+        return f"{_q(col)} IN ({lits})"
+    return F.col(col).isin(*values)
+
+
+def _projection(cols: dict[str, tuple[str, T.DataType]], schema: T.StructType) -> list[str]:
+    """``selectExpr`` text projecting ``cols`` (name -> (SQL text, type))
+    onto ``schema``: cast where the type differs, NULL where missing."""
+    out = []
     for f in schema.fields:
-        if f.name in have:
-            c = F.col(f.name)
-            if have[f.name].dataType != f.dataType:
-                c = c.cast(f.dataType)
-            cols.append(c.alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
+        sql, t = cols.get(f.name, ("NULL", None))
+        if t != f.dataType:
+            sql = f"CAST({sql} AS {_sql_type(f.dataType)})"
+        out.append(f"{sql} AS {_q(f.name)}")
+    return out
+
+
+def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Project/cast a DataFrame to the unified schema (missing -> NULL,
+    extras dropped). A frame already in that (name, type) order is returned
+    as is — every explicit-schema table read; any other becomes one
+    ``selectExpr``."""
+    have = [(f.name, f.dataType) for f in df.schema.fields]
+    if have == [(f.name, f.dataType) for f in schema.fields]:
+        return df
+    return df.selectExpr(*_projection({n: (_q(n), t) for n, t in have}, schema))
 
 
 def _schema_of(m: dict | None) -> T.StructType | None:
@@ -551,19 +672,27 @@ class SnapshotTable:
         (_seq, payload-hash). Partial-aggregable (map-side combine), so
         delta chains resolve in a single shuffle regardless of depth."""
         payload = [f.name for f in schema.fields if f.name != self.key_col]
-        others = payload + [self.SEQ_COL, self.DEL_COL, self.BUCKET_COL]
-        tie = F.xxhash64(*[F.col(c) for c in payload], F.col(self.DEL_COL))
+        val, ordk = self._winner_structs(payload)
+        internal = [self.SEQ_COL, self.DEL_COL, self.BUCKET_COL]
         return (
             df.groupBy(self.key_col)
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in others]),
-                    F.struct(F.col(self.SEQ_COL), tie),
-                ).alias("w")
+            .agg(F.expr(f"max_by({val}, {ordk}) AS w"))
+            .selectExpr(
+                *[
+                    _q(c) if c == self.key_col else f"w.{_q(c)} AS {_q(c)}"
+                    for c in [f.name for f in schema.fields] + internal
+                ]
             )
-            .select(self.key_col, *[F.col(f"w.{c}").alias(c) for c in others])
-            .select(*[f.name for f in schema.fields], self.SEQ_COL, self.DEL_COL, self.BUCKET_COL)
         )
+
+    def _winner_structs(self, payload: list[str]) -> tuple[str, str]:
+        """SQL text of the LWW resolve's ``max_by`` value struct (payload +
+        internals) and its ordering struct: ``_seq``, then a payload hash
+        as the deterministic tie-break."""
+        cols = payload + [self.SEQ_COL, self.DEL_COL, self.BUCKET_COL]
+        tie = ", ".join(_q(c) for c in payload + [self.DEL_COL])
+        val = f"struct({', '.join(_q(c) for c in cols)})"
+        return val, f"struct({_q(self.SEQ_COL)}, xxhash64({tie}))"
 
     def read(
         self,
@@ -616,7 +745,7 @@ class SnapshotTable:
             )
             gdf = conform(gdf, self._data_schema(schema))
             if buckets is not None:
-                gdf = gdf.filter(F.col(self.BUCKET_COL).isin(*sorted(want)))
+                gdf = gdf.filter(_in_list(self.BUCKET_COL, sorted(want)))
             parts.append(gdf)
         if not parts:
             return self._empty(schema)
@@ -624,9 +753,7 @@ class SnapshotTable:
         for p in parts[1:]:
             df = df.unionByName(p)
         if key_semi is not None:
-            df = df.join(
-                key_semi, F.col(self.key_col) == F.col("__dk"), "leftsemi"
-            )
+            df = df.join(key_semi, F.expr(f"{_q(self.key_col)} = __dk"), "leftsemi")
         if needs_resolve and resolve:
             df = self._resolve(df, schema)
         return df
@@ -761,9 +888,7 @@ class SnapshotTable:
                 )
                 if len(pairs) <= self.NARROW_INLIST_MAX:
                     cand |= {int(r[1]) for r in pairs}
-                    key_pred = F.col(self.key_col).isin(
-                        list({r[0] for r in pairs})
-                    )
+                    key_pred = _in_list(self.key_col, {r[0] for r in pairs})
                 else:
                     cand |= {
                         r[0]
@@ -771,8 +896,8 @@ class SnapshotTable:
                         .distinct()
                         .collect()
                     }
-                    delta_keys = gdf.select(
-                        F.col(self.key_col).alias("__dk")
+                    delta_keys = gdf.selectExpr(
+                        f"{_q(self.key_col)} AS __dk"
                     ).distinct()
                     if added_bytes < (64 << 20):
                         delta_keys = F.broadcast(delta_keys)
@@ -783,16 +908,13 @@ class SnapshotTable:
                 }
 
         def side(df: DataFrame, tag: str) -> DataFrame:
-            return df.select(
-                F.col(self.key_col).alias("__k"),
-                F.col(self.SEQ_COL).alias(f"__seq_{tag}"),
-                F.coalesce(F.col(self.DEL_COL), F.lit(False)).alias(
-                    f"__del_{tag}"
-                ),
-                *[F.col(c).alias(f"__{tag}_{c}") for c in payload],
+            return df.selectExpr(
+                f"{_q(self.key_col)} AS __k",
+                f"{_q(self.SEQ_COL)} AS __seq_{tag}",
+                f"coalesce({_q(self.DEL_COL)}, false) AS __del_{tag}",
+                *[f"{_q(c)} AS {_q(f'__{tag}_{c}')}" for c in payload],
             )
 
-        empty = self._empty(schema)
         # Single-pass two-version resolve: for a MOR-only span with no
         # in-span schema change (the steady-state incremental-consumer
         # shape), the after-side row set is exactly the before-side rows
@@ -816,56 +938,45 @@ class SnapshotTable:
             and fg <= set(m_to.get("global_deltas", []))
         )
         if not cand:
+            empty = self._empty(schema)
             j = side(empty, "a").join(side(empty, "b"), "__k", "full")
         elif single_pass:
             bs = sorted(cand)
             common = self.read(v_from, buckets=bs, resolve=False)
-            added = gdf.filter(F.col(self.BUCKET_COL).isin(*bs))
-            rows = common.withColumn(
-                "__in_from", F.lit(True)
-            ).unionByName(added.withColumn("__in_from", F.lit(False)))
+            added = gdf.filter(_in_list(self.BUCKET_COL, bs))
+            rows = common.selectExpr("*", "true AS __in_from").unionByName(
+                added.selectExpr("*", "false AS __in_from")
+            )
             if delta_keys is not None:
                 rows = rows.join(
-                    delta_keys, F.col(self.key_col) == F.col("__dk"), "leftsemi"
+                    delta_keys, F.expr(f"{_q(self.key_col)} = __dk"), "leftsemi"
                 )
             if key_pred is not None:
                 rows = rows.filter(key_pred)
-            others = payload + [self.SEQ_COL, self.DEL_COL, self.BUCKET_COL]
-            tie = F.xxhash64(
-                *[F.col(c) for c in payload], F.col(self.DEL_COL)
-            )
-            ordk = F.struct(F.col(self.SEQ_COL), tie)
-            val = F.struct(*[F.col(c) for c in others])
-            fr = F.col("__in_from")
+            val, ordk = self._winner_structs(payload)
+            seq, dl = _q(self.SEQ_COL), _q(self.DEL_COL)
             j = (
-                rows.groupBy(F.col(self.key_col).alias("__k"))
+                rows.groupBy(F.expr(f"{_q(self.key_col)} AS __k"))
                 .agg(
-                    F.max_by(
-                        F.when(fr, val), F.when(fr, ordk)
-                    ).alias("__wa"),
-                    F.max_by(val, ordk).alias("__wb"),
+                    F.expr(
+                        f"max_by(CASE WHEN __in_from THEN {val} END, "
+                        f"CASE WHEN __in_from THEN {ordk} END) AS __wa"
+                    ),
+                    F.expr(f"max_by({val}, {ordk}) AS __wb"),
                 )
-                .select(
+                .selectExpr(
                     "__k",
                     *[
-                        F.col(f"__w{t}.{c}").alias(f"__{t}_{c}")
+                        f"__w{t}.{_q(c)} AS {_q(f'__{t}_{c}')}"
                         for t in ("a", "b")
                         for c in payload
                     ],
-                    F.col(f"__wa.{self.SEQ_COL}").alias("__seq_a"),
-                    F.when(
-                        F.col("__wa").isNotNull(),
-                        F.coalesce(
-                            F.col(f"__wa.{self.DEL_COL}"), F.lit(False)
-                        ),
-                    ).alias("__del_a"),
-                    F.col(f"__wb.{self.SEQ_COL}").alias("__seq_b"),
-                    F.when(
-                        F.col("__wb").isNotNull(),
-                        F.coalesce(
-                            F.col(f"__wb.{self.DEL_COL}"), F.lit(False)
-                        ),
-                    ).alias("__del_b"),
+                    f"__wa.{seq} AS __seq_a",
+                    f"CASE WHEN __wa IS NOT NULL THEN coalesce(__wa.{dl}, false) END"
+                    " AS __del_a",
+                    f"__wb.{seq} AS __seq_b",
+                    f"CASE WHEN __wb IS NOT NULL THEN coalesce(__wb.{dl}, false) END"
+                    " AS __del_b",
                 )
             )
         else:
@@ -879,7 +990,7 @@ class SnapshotTable:
                     self._data_schema(schema),
                 )
                 if m_from
-                else empty
+                else self._empty(schema)
             )
             after = self.read(v_to, buckets=bs, key_semi=delta_keys)
             if key_pred is not None:
@@ -889,61 +1000,48 @@ class SnapshotTable:
                 after = after.filter(key_pred)
             j = side(before, "a").join(side(after, "b"), "__k", "full")
 
-        def vis(tag: str) -> F.Column:
-            return F.when(
-                F.col(f"__seq_{tag}").isNull(), F.lit(False)
-            ).otherwise(~F.col(f"__del_{tag}"))
+        def vis(tag: str) -> str:
+            return f"(CASE WHEN __seq_{tag} IS NULL THEN false ELSE NOT __del_{tag} END)"
 
         va, vb = vis("a"), vis("b")
-        change = (
-            F.when(~va & vb, F.lit("insert"))
-            .when(va & ~vb, F.lit("delete"))
-            .when(va & vb & (F.col("__seq_a") != F.col("__seq_b")), F.lit("update"))
-        )
-        classified = j.withColumn("_change_type", change).filter(
-            F.col("_change_type").isNotNull()
-        )
+        classified = j.selectExpr(
+            "*",
+            f"CASE WHEN (NOT {va}) AND {vb} THEN 'insert'"
+            f" WHEN {va} AND (NOT {vb}) THEN 'delete'"
+            f" WHEN {va} AND {vb} AND __seq_a != __seq_b THEN 'update'"
+            " END AS _change_type",
+        ).filter("_change_type IS NOT NULL")
+        key = _q(self.key_col)
         if images == "both":
             # Delta-CDF two-row update encoding via one array+explode —
             # no second join, no union re-scan of the diff frame.
-            def img(tag: str, ct) -> F.Column:
-                return F.struct(
-                    ct.alias("_ct"),
-                    *[F.col(f"__{tag}_{c}").alias(c) for c in payload],
-                    F.col(f"__seq_{tag}").alias("_sq"),
+            def img(tag: str, ct: str) -> str:
+                fields = "".join(
+                    f", {_sql_str(c)}, {_q(f'__{tag}_{c}')}" for c in payload
                 )
+                return f"named_struct('_ct', '{ct}'{fields}, '_sq', __seq_{tag})"
 
-            ctc = F.col("_change_type")
             rows = (
-                F.when(ctc == "insert", F.array(img("b", F.lit("insert"))))
-                .when(ctc == "delete", F.array(img("a", F.lit("delete"))))
-                .otherwise(
-                    F.array(
-                        img("a", F.lit("update_preimage")),
-                        img("b", F.lit("update_postimage")),
-                    )
-                )
+                f"CASE WHEN _change_type = 'insert' THEN array({img('b', 'insert')})"
+                f" WHEN _change_type = 'delete' THEN array({img('a', 'delete')})"
+                f" ELSE array({img('a', 'update_preimage')},"
+                f" {img('b', 'update_postimage')}) END"
             )
-            e = classified.select(
-                F.col("__k"), F.explode(rows).alias("__e")
+            return classified.selectExpr("__k", f"explode({rows}) AS __e").selectExpr(
+                f"__k AS {key}",
+                *[f"__e.{_q(c)} AS {_q(c)}" for c in payload],
+                f"__e._sq AS {_q(self.SEQ_COL)}",
+                "__e._ct AS _change_type",
             )
-            return e.select(
-                F.col("__k").alias(self.key_col),
-                *[F.col(f"__e.{c}").alias(c) for c in payload],
-                F.col("__e._sq").alias(self.SEQ_COL),
-                F.col("__e._ct").alias("_change_type"),
-            )
-        is_del = F.col("_change_type") == "delete"
-        return classified.select(
-            F.col("__k").alias(self.key_col),
+        return classified.selectExpr(
+            f"__k AS {key}",
             *[
-                F.when(is_del, F.col(f"__a_{c}"))
-                .otherwise(F.col(f"__b_{c}"))
-                .alias(c)
+                f"CASE WHEN _change_type = 'delete' THEN {_q(f'__a_{c}')}"
+                f" ELSE {_q(f'__b_{c}')} END AS {_q(c)}"
                 for c in payload
             ],
-            F.coalesce(F.col("__seq_b"), F.col("__seq_a")).alias(self.SEQ_COL),
-            F.col("_change_type"),
+            f"coalesce(__seq_b, __seq_a) AS {_q(self.SEQ_COL)}",
+            "_change_type",
         )
 
     def read_changes_since(
@@ -979,9 +1077,13 @@ class SnapshotTable:
         """User-facing final state (tombstones hidden, internals dropped)."""
         return (
             self.read(version)
-            .filter(~F.coalesce(F.col(self.DEL_COL), F.lit(False)))
+            .filter(self._live())
             .drop(self.SEQ_COL, self.DEL_COL, self.BUCKET_COL)
         )
+
+    def _live(self) -> str:
+        """Filter text keeping rows that are not tombstones."""
+        return f"NOT coalesce({_q(self.DEL_COL)}, false)"
 
     def _next_seq(self) -> int:
         """One seq above every stored row's (raw scan — max over
@@ -1039,8 +1141,8 @@ class SnapshotTable:
         seq = self._next_seq()
         rows = (
             self.read(buckets=buckets)
-            .filter(F.col(self.key_col).isin(*keys))
-            .filter(~F.coalesce(F.col(self.DEL_COL), F.lit(False)))
+            .filter(_in_list(self.key_col, keys))
+            .filter(self._live())
             .drop(self.SEQ_COL, self.DEL_COL, self.BUCKET_COL)
             .withColumn("op", F.lit("delete"))
             .withColumn("seq", F.lit(seq).cast("long"))
@@ -1088,8 +1190,8 @@ class SnapshotTable:
         )
         df = self.read(version=version, buckets=buckets)
         return (
-            df.filter(F.col(self.key_col).isin(*keys))
-            .filter(~F.coalesce(F.col(self.DEL_COL), F.lit(False)))
+            df.filter(_in_list(self.key_col, keys))
+            .filter(self._live())
             .drop(self.SEQ_COL, self.DEL_COL, self.BUCKET_COL)
         )
 
@@ -1099,10 +1201,11 @@ class SnapshotTable:
 
     # --------------------------------------------------------------- merge
 
-    def bucket_expr(self) -> F.Column:
-        return F.pmod(
-            F.xxhash64(F.col(self.bucket_col)), F.lit(self.n_buckets)
-        ).cast("int")
+    def bucket_sql(self) -> str:
+        """SQL text of a row's bucket: ``pmod(xxhash64(bucket_col),
+        n_buckets)`` as int. ``buckets_for`` computes the same on the
+        driver."""
+        return f"CAST(pmod(xxhash64({_q(self.bucket_col)}), {self.n_buckets}) AS INT)"
 
     def _n_buckets_at(self, version: int | None) -> int:
         """The bucket COUNT in force at a given version — after a
@@ -1120,7 +1223,11 @@ class SnapshotTable:
         hashed AS THE STORED COLUMN TYPE (xxhash64('42') != xxhash64(42L),
         so an untyped probe would prune to the wrong buckets and silently
         return nothing) and with the bucket count IN FORCE at the probed
-        version. One tiny local-list job; never touches the table."""
+        version. Never touches the table. String and integral bucket
+        columns hash on the driver (``spark_xxhash64``, no Spark call; an
+        integral probe that is not an int or an integer string in the
+        column's range raises ``ValueError``); any other type runs one
+        tiny local-list job."""
         sch = self.schema()
         vtype: T.DataType = T.StringType()
         if sch is not None:
@@ -1128,6 +1235,9 @@ class SnapshotTable:
                 if f.name == self.bucket_col:
                     vtype = f.dataType
         nb = self._n_buckets_at(version)
+        tname = vtype.simpleString()
+        if tname == "string" or tname in _INT_WIDTH:
+            return sorted({spark_xxhash64(v, tname) % nb for v in values})
         rows = self.spark.createDataFrame(
             [(None if v is None else str(v),) for v in values],
             T.StructType([T.StructField("v", T.StringType())]),
@@ -1136,7 +1246,7 @@ class SnapshotTable:
             .cast("int")
             .alias("b")
         )
-        return sorted({r.b for r in rows.distinct().collect() if r.b is not None})
+        return sorted({r.b for r in rows.collect() if r.b is not None})
 
     def merge_reduced(
         self,
@@ -1203,17 +1313,17 @@ class SnapshotTable:
             self.n_buckets = int(m.get("n_buckets", self.n_buckets))
         # deletes are NOT dropped: they persist as tombstone rows (_deleted)
         # with their _seq, the anti-resurrection guard for out-of-order logs
-        delta = conform(
-            reduced.withColumn(self.BUCKET_COL, self.bucket_expr())
-            .withColumn(self.DEL_COL, F.col("op") == "delete")
-            .withColumnRenamed("seq", self.SEQ_COL),
-            self._data_schema(schema),
-        )
+        have = {f.name: (_q(f.name), f.dataType) for f in reduced.schema.fields}
+        have[self.BUCKET_COL] = (self.bucket_sql(), T.IntegerType())
+        have[self.DEL_COL] = ("op = 'delete'", T.BooleanType())
+        if "seq" in have:
+            have[self.SEQ_COL] = have.pop("seq")
+        delta = reduced.selectExpr(*_projection(have, self._data_schema(schema)))
         observation = Observation(f"merge_{uuid.uuid4().hex[:8]}")
         observed = delta.observe(
             observation,
-            F.count(F.lit(1)).alias("keys_considered"),
-            F.count_if(F.col(self.DEL_COL)).alias("keys_deleted"),
+            F.expr("count(1) AS keys_considered"),
+            F.expr(f"count_if({_q(self.DEL_COL)}) AS keys_deleted"),
         )
         # version here names the data dir only (cosmetic): the COMMIT
         # version is re-derived per attempt inside _commit_loop
@@ -1548,7 +1658,7 @@ class SnapshotTable:
         self.n_buckets = int(n_buckets)
         try:
             df = df.drop(self.BUCKET_COL).withColumn(
-                self.BUCKET_COL, self.bucket_expr()
+                self.BUCKET_COL, F.expr(self.bucket_sql())
             )
             commit_rel, buckets_map = self._write_bucketed(
                 df, f"c_{m['version'] + 1:06d}_rebucket", sort_within_buckets

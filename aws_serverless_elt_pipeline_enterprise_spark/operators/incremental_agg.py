@@ -216,7 +216,7 @@ class MaterializedAggregate:
         if self.agg.current_version() is not None and touched:
             old = (
                 self.agg.read(buckets=sorted(touched))
-                .filter(f"NOT coalesce({_q(SnapshotTable.DEL_COL)}, false)")
+                .filter(self.agg._live())
                 .selectExpr(
                     "_group_key", *[f"{_q(c)} AS {_q(o)}" for c, o in olds.items()]
                 )

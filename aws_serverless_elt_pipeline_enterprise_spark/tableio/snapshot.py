@@ -69,7 +69,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import time
 import uuid
@@ -259,28 +258,13 @@ def _xxh64(data: bytes) -> int:
     return acc - (1 << 64) if acc >> 63 else acc
 
 
-def spark_xxhash64(value, type_name: str) -> int:
-    """Spark's ``xxhash64(CAST(value AS <type_name>))`` computed on the
-    driver, for ``type_name`` 'string' or an integral type. Strings hash
-    their UTF-8 bytes (``value`` is ``str()``-ed); tinyint, smallint and int
-    hash as 4 little-endian bytes and bigint as 8; NULL hashes to the seed,
-    42. An integral ``value`` must be an int or an integer string within
-    the type's range (what Spark's ANSI cast accepts), or ``ValueError`` is
-    raised."""
+def spark_xxhash64(value) -> int:
+    """Spark's ``xxhash64(CAST(value AS STRING))`` computed on the driver:
+    XXH64 (seed 42) of ``str(value)``'s UTF-8 bytes; NULL hashes to the
+    seed."""
     if value is None:
         return _SEED
-    if type_name == "string":
-        return _xxh64(str(value).encode("utf-8"))
-    if isinstance(value, str) and re.fullmatch(r"[+-]?[0-9]+", value.strip()):
-        n = int(value.strip())
-    elif isinstance(value, int) and not isinstance(value, bool):
-        n = value
-    else:
-        raise ValueError(f"bucket probe {value!r} is not a {type_name}")
-    bits = 8 << _INT_WIDTH[type_name]
-    if not -(1 << (bits - 1)) <= n < 1 << (bits - 1):
-        raise ValueError(f"bucket probe {value!r} is out of {type_name} range")
-    return _xxh64(n.to_bytes(8 if bits == 64 else 4, "little", signed=True))
+    return _xxh64(str(value).encode("utf-8"))
 
 
 def _widen(a: T.DataType, b: T.DataType) -> T.DataType:
@@ -1203,8 +1187,8 @@ class SnapshotTable:
 
     def bucket_sql(self) -> str:
         """SQL text of a row's bucket: ``pmod(xxhash64(bucket_col),
-        n_buckets)`` as int. ``buckets_for`` computes the same on the
-        driver."""
+        n_buckets)`` as int. ``buckets_for`` computes the same for probe
+        values."""
         return f"CAST(pmod(xxhash64({_q(self.bucket_col)}), {self.n_buckets}) AS INT)"
 
     def _n_buckets_at(self, version: int | None) -> int:
@@ -1223,11 +1207,9 @@ class SnapshotTable:
         hashed AS THE STORED COLUMN TYPE (xxhash64('42') != xxhash64(42L),
         so an untyped probe would prune to the wrong buckets and silently
         return nothing) and with the bucket count IN FORCE at the probed
-        version. Never touches the table. String and integral bucket
-        columns hash on the driver (``spark_xxhash64``, no Spark call; an
-        integral probe that is not an int or an integer string in the
-        column's range raises ``ValueError``); any other type runs one
-        tiny local-list job."""
+        version. Never touches the table. A string bucket column hashes
+        on the driver (``spark_xxhash64``, no Spark call); any other type
+        runs one tiny local-list job."""
         sch = self.schema()
         vtype: T.DataType = T.StringType()
         if sch is not None:
@@ -1236,8 +1218,8 @@ class SnapshotTable:
                     vtype = f.dataType
         nb = self._n_buckets_at(version)
         tname = vtype.simpleString()
-        if tname == "string" or tname in _INT_WIDTH:
-            return sorted({spark_xxhash64(v, tname) % nb for v in values})
+        if tname == "string":
+            return sorted({spark_xxhash64(v) % nb for v in values})
         rows = self.spark.createDataFrame(
             [(None if v is None else str(v),) for v in values],
             T.StructType([T.StructField("v", T.StringType())]),

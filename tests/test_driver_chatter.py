@@ -30,13 +30,6 @@ from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import (
     spark_xxhash64,
 )
 
-INT_TYPES = {
-    "tinyint": T.ByteType(),
-    "smallint": T.ShortType(),
-    "int": T.IntegerType(),
-    "bigint": T.LongType(),
-}
-
 
 @contextlib.contextmanager
 def py4j_calls():
@@ -76,19 +69,9 @@ def test_driver_hash_matches_spark_for_strings(spark):
     # every length 0..80 covers the 32-byte stripes and each tail step
     values += ["".join(rng.choice(alphabet) for _ in range(n)) for n in range(81)]
     values += [f"doc_{rng.randrange(10**8):08d}" for _ in range(200)]
-    got = [spark_xxhash64(v, "string") for v in values]
+    got = [spark_xxhash64(v) for v in values]
     assert got == _spark_hashes(spark, values, T.StringType())
-    assert spark_xxhash64(None, "string") == 42
-
-
-@pytest.mark.parametrize("name", sorted(INT_TYPES))
-def test_driver_hash_matches_spark_for_integral_types(spark, name):
-    bits = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}[name]
-    lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
-    rng = random.Random(bits)
-    values = [lo, hi, 0, -1, 1, None] + [rng.randint(lo, hi) for _ in range(300)]
-    got = [spark_xxhash64(v, name) for v in values]
-    assert got == _spark_hashes(spark, values, INT_TYPES[name])
+    assert spark_xxhash64(None) == 42
 
 
 def _spark_buckets(spark, values, vtype, nb):
@@ -107,7 +90,9 @@ def _spark_buckets(spark, values, vtype, nb):
         ("int", [1, -5, 2**31 - 1, "  42 ", "+7", "-2147483648", None]),
     ],
 )
-def test_buckets_for_matches_spark_and_makes_no_py4j_call(spark, tmp_path, key_type, probes):
+def test_buckets_for_matches_spark(spark, tmp_path, key_type, probes):
+    """A string bucket column hashes on the driver with no Py4J call; an
+    int one runs the Spark hash. Both equal the Spark computation."""
     t = SnapshotTable(spark, str(tmp_path / "t"), key_col="k", n_buckets=13)
     k = "1" if key_type == "string" else 1
     t.merge_reduced(
@@ -118,18 +103,8 @@ def test_buckets_for_matches_spark_and_makes_no_py4j_call(spark, tmp_path, key_t
     )
     with py4j_calls() as calls:
         got = t.buckets_for(probes)
-    assert calls[0] == 0
+    assert (calls[0] == 0) == (key_type == "string")
     assert got == _spark_buckets(spark, probes, t.schema()["k"].dataType, 13)
-
-
-@pytest.mark.parametrize("probe", ["12a", "1.5", "", True, 2.0, 2**31, "2147483648"])
-def test_malformed_integral_probe_raises(spark, tmp_path, probe):
-    t = SnapshotTable(spark, str(tmp_path / "t"), key_col="k", n_buckets=4)
-    t.merge_reduced(
-        spark.createDataFrame([("insert", 1, 1)], "op string, seq long, k int"), "e0"
-    )
-    with pytest.raises(ValueError):
-        t.buckets_for([1, probe])
 
 
 # ------------------------------------------------------------ round-trip budget

@@ -1217,8 +1217,7 @@ class SnapshotTable:
                 if f.name == self.bucket_col:
                     vtype = f.dataType
         nb = self._n_buckets_at(version)
-        tname = vtype.simpleString()
-        if tname == "string":
+        if isinstance(vtype, T.StringType):
             return sorted({spark_xxhash64(v) % nb for v in values})
         rows = self.spark.createDataFrame(
             [(None if v is None else str(v),) for v in values],

@@ -19,13 +19,18 @@ incrementally from the source table's change data feed:
   post-image adds to the new one.
 * The aggregate state is itself a ``SnapshotTable`` keyed by the
   canonical group key, so the delta application rides the existing
-  machinery: only the hash buckets containing touched groups are read
-  (bucket-pruned), the new absolute values are LWW-merged under
-  ``seq = source_version`` (monotone), groups whose count reaches zero
-  become tombstones, and the whole refresh commits as ONE epoch whose
-  id encodes the consumed version span — so a crashed-and-replayed
-  refresh is skipped by the epoch ledger (exactly-once), and the agg
-  table itself supports time travel / compaction / its own CDF.
+  machinery. The signed change rows and the aggregate table's raw
+  (unresolved) rows go through ONE ``groupBy`` on the group key: it sums
+  the net delta over the change rows and picks each group's old value
+  with the table's own LWW winner (``max_by``), so the refresh is one
+  Spark query with no driver round trip between stages. The new
+  absolute values are LWW-merged under ``seq = source_version``
+  (monotone), groups whose count reaches zero become tombstones, and
+  the whole refresh commits as ONE epoch whose id encodes the consumed
+  version span — so a crashed-and-replayed refresh is skipped by the
+  epoch ledger (exactly-once), and the agg table itself supports time
+  travel / compaction / its own CDF. Each refresh that commits runs the
+  table's ``maybe_compact`` policy, which bounds its delta chain.
 * If the bookmark has fallen behind the source's retention horizon
   (``read_changes_since`` bootstraps), the aggregate is REBUILT from
   the full current state — the same replace-don't-patch contract as
@@ -82,7 +87,7 @@ class MaterializedAggregate:
         self.group_cols = list(group_cols)
         self.sums = dict(sums or {})
         self.count_col = count_col
-        reserved = {"_group_key", "__cnt"} | {
+        reserved = {"_group_key", "__cnt", "__ov", "__oo", "__old"} | {
             f"__s_{n}" for n in self.sums
         } | {f"__n_{n}" for n in self.sums}
         bad = reserved & set(self.group_cols)
@@ -98,7 +103,7 @@ class MaterializedAggregate:
 
     # ------------------------------------------------------------ internals
 
-    def _group_key(self) -> F.Column:
+    def _group_key(self) -> str:
         # concat_ws SKIPS nulls (would alias (NULL,'x') with ('x',)), so
         # nulls are encoded explicitly; _SEP/_NULL are control chars no
         # real group value contains.
@@ -106,26 +111,25 @@ class MaterializedAggregate:
             f"coalesce(CAST({_q(c)} AS STRING), {_sql_str(_NULL)})"
             for c in self.group_cols
         )
-        return F.expr(f"concat_ws({_sql_str(_SEP)}, {parts}) AS _group_key")
+        return f"concat_ws({_sql_str(_SEP)}, {parts}) AS _group_key"
 
-    def _accumulators(self, sign: str) -> list[F.Column]:
-        """Per-group accumulator aggregates; ``sign`` is the SQL text of
-        each row's contribution (``'1'`` for the full rebuild)."""
-        out = [F.expr(f"CAST(sum({sign}) AS BIGINT) AS __cnt")]
+    def _contributions(self, sign: str) -> dict[str, str]:
+        """SQL text of each accumulator's per-row contribution; ``sign``
+        is the SQL text of the row's sign (``'1'`` for the full rebuild)."""
+        out = {"__cnt": sign}
         for name, col in self.sums.items():
             v = _q(col)
-            out.append(
-                F.expr(
-                    f"sum(CASE WHEN {v} IS NOT NULL THEN ({sign}) * {v} ELSE 0 END)"
-                    f" AS {_q(f'__s_{name}')}"
-                )
-            )
-            out.append(
-                F.expr(
-                    f"CAST(sum(CASE WHEN {v} IS NOT NULL THEN {sign} ELSE 0 END)"
-                    f" AS BIGINT) AS {_q(f'__n_{name}')}"
-                )
-            )
+            out[f"__s_{name}"] = f"CASE WHEN {v} IS NOT NULL THEN ({sign}) * {v} ELSE 0 END"
+            out[f"__n_{name}"] = f"CASE WHEN {v} IS NOT NULL THEN {sign} ELSE 0 END"
+        return out
+
+    @staticmethod
+    def _sums(contributions: dict[str, str]) -> list[F.Column]:
+        """One sum aggregate per accumulator column; counts are BIGINT."""
+        out = []
+        for c, sql in contributions.items():
+            total = f"sum({sql})" if c.startswith("__s_") else f"CAST(sum({sql}) AS BIGINT)"
+            out.append(F.expr(f"{total} AS {_q(c)}"))
         return out
 
     def _rebuild(self, to_version: int) -> dict:
@@ -134,8 +138,8 @@ class MaterializedAggregate:
         bootstrap contract."""
         state = self.source.state(to_version)
         rows = (
-            state.groupBy(self._group_key(), *self.group_cols)
-            .agg(*self._accumulators("1"))
+            state.groupBy(F.expr(self._group_key()), *self.group_cols)
+            .agg(*self._sums(self._contributions("1")))
             .withColumn("op", F.lit("update"))
             .withColumn("seq", F.lit(to_version).cast("long"))
         )
@@ -158,8 +162,10 @@ class MaterializedAggregate:
 
     def refresh(self, changes=None, to_version=None) -> dict:
         """Advance the aggregate to the source's current version. Cost is
-        O(changes since bookmark) + O(touched agg buckets), never
-        O(source table) or O(all groups) — except on bootstrap.
+        O(changes since bookmark) + O(agg table rows): the aggregate
+        table's deltas are scanned whole, at most one row per group each,
+        and ``maybe_compact`` keeps their chain short. Never O(source
+        table), except on bootstrap.
 
         ``changes``/``to_version``: a pre-computed (usually persisted)
         ``read_changes_since(cdf_bookmark(), images='both')`` frame
@@ -188,45 +194,43 @@ class MaterializedAggregate:
             "CASE WHEN _change_type IN ('insert', 'update_postimage')"
             " THEN 1 ELSE -1 END"
         )
-        delta = changes.groupBy(self._group_key(), *self.group_cols).agg(
-            *self._accumulators(sign)
+        contrib = self._contributions(sign)
+        # The old value is the aggregate table's LWW winner per group,
+        # built as the same max_by structs its read-time resolve uses and
+        # BEFORE the union, so the union's type widening cannot reach the
+        # tie hash. Change rows carry NULL structs (max_by skips NULL
+        # orderings); old rows carry NULL group columns and contributions
+        # (first(..., true) and sum skip NULLs).
+        payload = [f.name for f in self.agg.schema().fields if f.name != "_group_key"]
+        val, ordk = self.agg._winner_structs(payload)
+        change_rows = changes.selectExpr(
+            self._group_key(),
+            *[_q(c) for c in self.group_cols],
+            *[f"{sql} AS {_q(c)}" for c, sql in contrib.items()],
+            "NULL AS __ov",
+            "NULL AS __oo",
         )
+        old_rows = self.agg.read(resolve=False).selectExpr(
+            "_group_key",
+            *[f"NULL AS {_q(c)}" for c in [*self.group_cols, *contrib]],
+            f"{val} AS __ov",
+            f"{ordk} AS __oo",
+        )
+        net = change_rows.unionByName(old_rows).groupBy("_group_key").agg(
+            *[F.expr(f"first({_q(c)}, true) AS {_q(c)}") for c in self.group_cols],
+            *self._sums({c: _q(c) for c in contrib}),
+            F.expr("max_by(__ov, __oo) AS __old"),
+        )
+        # Keep the groups with a change row (their count sum is not NULL).
         # A key updated WITHIN the span but landing in the same group
         # with the same contribution nets to zero — dropping those rows
-        # keeps the merge (and the touched-bucket set) minimal.
-        olds = {"__cnt": "__old_cnt"}
-        for n in self.sums:
-            olds.update({f"__s_{n}": f"__old_s_{n}", f"__n_{n}": f"__old_n_{n}"})
-        zero = " AND ".join(f"{_q(c)} = 0" for c in olds)
-        # the delta feeds TWO actions (touched-bucket probe, then the
-        # merge); without a persist the whole CDF diff — the expensive
-        # two-sided read — would execute twice
-        delta = delta.filter(f"NOT ({zero})").persist()
-
-        # Read ONLY the agg buckets containing touched groups. The
-        # collect is bounded by n_buckets values, not by group count.
-        # bucket_sql is the table's own hash — the single source of
-        # truth for its bucketing contract.
-        touched = [
-            r[0]
-            for r in delta.selectExpr(f"{self.agg.bucket_sql()} AS b")
-            .distinct()
-            .collect()
-        ]
-        if self.agg.current_version() is not None and touched:
-            old = (
-                self.agg.read(buckets=sorted(touched))
-                .filter(self.agg._live())
-                .selectExpr(
-                    "_group_key", *[f"{_q(c)} AS {_q(o)}" for c, o in olds.items()]
-                )
-            )
-            merged = delta.join(old, "_group_key", "left")
-        else:
-            merged = delta.selectExpr("*", *[f"NULL AS {_q(o)}" for o in olds.values()])
+        # keeps the merge (and its bucket set) minimal.
+        zero = " AND ".join(f"{_q(c)} = 0" for c in contrib)
+        live = f"NOT coalesce(__old.{_q(SnapshotTable.DEL_COL)}, false)"
 
         def plus_old(c: str) -> str:
-            return f"coalesce({_q(olds[c])}, 0) + {_q(c)}"
+            # a tombstoned old winner counts as no old value
+            return f"coalesce(CASE WHEN {live} THEN __old.{_q(c)} END, 0) + {_q(c)}"
 
         proj = [
             "_group_key",
@@ -238,21 +242,25 @@ class MaterializedAggregate:
             proj.append(
                 f"CAST({plus_old(f'__n_{n}')} AS BIGINT) AS {_q(f'__n_{n}')}"
             )
-        rows = merged.selectExpr(
+        rows = net.filter(f"__cnt IS NOT NULL AND NOT ({zero})").selectExpr(
             *proj,
             f"CASE WHEN {plus_old('__cnt')} <= 0 THEN 'delete' ELSE 'update' END"
             " AS op",
             f"CAST({to_v} AS BIGINT) AS seq",
         )
-        try:
-            lineage = self.agg.merge_reduced(rows, span_epoch_id(bookmark, to_v))
-        finally:
-            delta.unpersist()
+        lineage = self.agg.merge_reduced(rows, span_epoch_id(bookmark, to_v))
+        # the buckets of the groups the merge wrote, as its commit recorded
+        touched: list[int] = []
+        if "delta_dir" in lineage:
+            m = self.agg.manifest(lineage["version"])
+            touched = sorted(self.agg._delta_buckets(m, [lineage["delta_dir"]]))
+        if not lineage.get("skipped"):
+            self.agg.maybe_compact()
         return {
             "from_version": bookmark,
             "to_version": to_v,
             "bootstrapped": False,
-            "touched_buckets": sorted(touched),
+            "touched_buckets": touched,
             "merge": lineage,
         }
 

@@ -24,8 +24,10 @@ each refresh turns ``changes(images='both')`` into index entry ops —
 same-entry collisions within the span (a value-unchanged update yields
 remove+add of the SAME entry; add wins, so the entry survives), and
 commits as one ledger-deduped epoch under ``seq = source_version``.
-Refresh cost is O(changes), lookup cost is O(bucket), and the index is
-exactly-once resumable like every other derived table.
+Each refresh that commits runs the index table's ``maybe_compact``
+policy, so its delta chain stays bounded. Refresh cost is O(changes),
+lookup cost is O(bucket), and the index is exactly-once resumable like
+every other derived table.
 """
 
 from __future__ import annotations
@@ -168,6 +170,9 @@ class SecondaryIndex:
             "seq", F.lit(to_v).cast("long")
         )
         lineage = self.idx.merge_reduced(rows, span_epoch_id(bookmark, to_v))
+        if not lineage.get("skipped"):
+            # one delta per span: keep lookup()'s read of the chain bounded
+            self.idx.maybe_compact()
         return {
             "from_version": bookmark,
             "to_version": to_v,

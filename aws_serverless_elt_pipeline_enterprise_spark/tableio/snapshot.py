@@ -388,6 +388,20 @@ def _deltas(m: dict | None) -> list[str]:
     return list(m.get("global_deltas", [])) if m else []
 
 
+def _bucket_mask(buckets) -> str:
+    """A bucket set as a hex bitmask (bit ``b`` set = bucket ``b``)."""
+    mask = 0
+    for b in buckets:
+        mask |= 1 << int(b)
+    return format(mask, "x")
+
+
+def _mask_buckets(mask: str) -> set[int]:
+    """The bucket set of a ``_bucket_mask`` string."""
+    bits = int(mask, 16)
+    return {b for b in range(bits.bit_length()) if bits >> b & 1}
+
+
 def _du_parquet(path: str) -> int:
     """Total parquet bytes under a dir (one os.walk of THAT dir only)."""
     total = 0
@@ -669,6 +683,19 @@ class SnapshotTable:
             )
         )
 
+    def _delta_buckets(self, m: dict, dirs) -> set[int]:
+        """The buckets the global delta ``dirs`` hold rows of, from the
+        manifest's per-dir record (``dir_buckets``). A dir without a
+        record (written before the record existed) counts as every
+        bucket: a superset, so readers stay correct."""
+        recorded = m.get("dir_buckets", {})
+        out: set[int] = set()
+        for d in dirs:
+            if d not in recorded:
+                return set(range(int(m.get("n_buckets", self.n_buckets))))
+            out |= _mask_buckets(recorded[d])
+        return out
+
     def _winner_structs(self, payload: list[str]) -> tuple[str, str]:
         """SQL text of the LWW resolve's ``max_by`` value struct (payload +
         internals) and its ordering struct: ``_seq``, then a payload hash
@@ -767,12 +794,13 @@ class SnapshotTable:
 
         * candidate buckets = buckets whose manifest commit lists DIFFER
           between the versions (covers compaction and rebucket), plus
-          the distinct ``_bucket`` values of global delta dirs ADDED
-          between the versions (MOR epochs commit as global deltas; the
-          scan is O(new data), and only added dirs are read — dirs
-          removed by compaction may be expired from disk, but compaction
-          rewrites every touched bucket's commit list, so the bucket
-          diff already covers them);
+          the buckets of the global delta dirs ADDED between the
+          versions, read from the manifest's per-dir ``dir_buckets``
+          record written at commit (MOR epochs commit as global deltas;
+          planning the candidates runs no Spark job, and a dir without a
+          record counts as every bucket). Dirs removed by compaction may
+          be expired from disk, but compaction rewrites every touched
+          bucket's commit list, so the bucket diff already covers them;
         * both versions are then read with ``buckets=`` pruning, so a
           small CDC epoch against a 10^10-row table diffs only the
           buckets it touched;
@@ -822,6 +850,7 @@ class SnapshotTable:
         delta_keys = None
         key_pred = None
         if added_g:
+            cand |= self._delta_buckets(m_to, added_g)
             gdf = self.spark.read.schema(self._data_schema(schema)).parquet(
                 *[os.path.join(self.root, d) for d in added_g]
             )
@@ -856,40 +885,27 @@ class SnapshotTable:
                 table_bytes = sum(_dir_bytes(d) for d in table_dirs)
                 narrow_ok = added_bytes * 8 < table_bytes
             if narrow_ok:
-                # One bounded job: distinct (key, bucket) pairs of the
-                # span's deltas, capped at NARROW_INLIST_MAX+1. A small
-                # span collapses to a literal IN predicate — pushed into
-                # the parquet scan, so sorted-compacted buckets row-group
-                # -skip straight to the touched keys — and its pairs
-                # already carry the exact touched-bucket set. A larger
-                # span keeps a pre-resolve semi-join (read(key_semi=)),
-                # broadcast while the delta side is small.
-                pairs = (
-                    gdf.select(self.key_col, self.BUCKET_COL)
+                # One bounded job: the distinct keys of the span's
+                # deltas, capped at NARROW_INLIST_MAX+1. A small span
+                # collapses to a literal IN predicate — pushed into the
+                # parquet scan, so sorted-compacted buckets row-group
+                # -skip straight to the touched keys. A larger span keeps
+                # a pre-resolve semi-join (read(key_semi=)), broadcast
+                # while the delta side is small.
+                keys = (
+                    gdf.select(self.key_col)
                     .distinct()
                     .limit(self.NARROW_INLIST_MAX + 1)
                     .collect()
                 )
-                if len(pairs) <= self.NARROW_INLIST_MAX:
-                    cand |= {int(r[1]) for r in pairs}
-                    key_pred = _in_list(self.key_col, {r[0] for r in pairs})
+                if len(keys) <= self.NARROW_INLIST_MAX:
+                    key_pred = _in_list(self.key_col, [r[0] for r in keys])
                 else:
-                    cand |= {
-                        r[0]
-                        for r in gdf.select(self.BUCKET_COL)
-                        .distinct()
-                        .collect()
-                    }
                     delta_keys = gdf.selectExpr(
                         f"{_q(self.key_col)} AS __dk"
                     ).distinct()
                     if added_bytes < (64 << 20):
                         delta_keys = F.broadcast(delta_keys)
-            else:
-                cand |= {
-                    r[0]
-                    for r in gdf.select(self.BUCKET_COL).distinct().collect()
-                }
 
         def side(df: DataFrame, tag: str) -> DataFrame:
             return df.selectExpr(
@@ -1305,6 +1321,7 @@ class SnapshotTable:
             observation,
             F.expr("count(1) AS keys_considered"),
             F.expr(f"count_if({_q(self.DEL_COL)}) AS keys_deleted"),
+            F.expr(f"collect_set({_q(self.BUCKET_COL)}) AS buckets"),
         )
         # version here names the data dir only (cosmetic): the COMMIT
         # version is re-derived per attempt inside _commit_loop
@@ -1367,13 +1384,16 @@ class SnapshotTable:
             deltas = _deltas(snap) + ([] if empty else [commit_rel])
             return _rebased(snap, schema), _buckets(snap), deltas, lineage
 
+        # the delta's bucket set, recorded in the manifest so change-feed
+        # readers plan their candidate buckets without a Spark job
+        mask = _bucket_mask(metrics_row["buckets"]) if metrics_row else None
         return self._commit_loop(
-            epoch_id, build_mor, None if empty else commit_rel, "delta"
+            epoch_id, build_mor, None if empty else commit_rel, "delta", mask
         )
 
     def _commit_loop(
         self, epoch_id: str | None, build, new_dir: str | None = None,
-        new_dir_kind: str = "base",
+        new_dir_kind: str = "base", new_dir_buckets: str | None = None,
     ) -> dict:
         """The one optimistic-commit loop every commit runs through.
 
@@ -1413,7 +1433,7 @@ class SnapshotTable:
             try:
                 self._commit_manifest(
                     snap, schema, buckets_map, global_deltas, ledger, lineage,
-                    new_dir, new_dir_kind, new_bytes,
+                    new_dir, new_dir_kind, new_bytes, new_dir_buckets,
                 )
                 return lineage
             except CommitConflictError:
@@ -1434,12 +1454,17 @@ class SnapshotTable:
         new_dir: str | None = None,
         new_dir_kind: str = "base",
         new_dir_bytes: int = 0,
+        new_dir_buckets: str | None = None,
     ) -> None:
         """Write the manifest built on the attempt's snapshot ``snap`` and
         claim its version (``lineage["version"]``); raises
         ``CommitConflictError`` when another writer claimed it first.
-        Reads nothing from the table: dir kinds, dir sizes and the
-        previous commit timestamp all carry forward from ``snap``."""
+        Reads nothing from the table: dir kinds, dir sizes, the global
+        deltas' bucket sets and the previous commit timestamp all carry
+        forward from ``snap``. ``dir_buckets`` maps each live global
+        delta dir to the hex bitmask (``_bucket_mask``) of the buckets it
+        holds rows of, ``new_dir_buckets`` for the new dir; a dir
+        without an entry counts as every bucket (``_delta_buckets``)."""
         version = lineage["version"]
         prev = snap or {}
         live = {d for dirs in buckets_map.values() for d in dirs} | set(global_deltas)
@@ -1450,9 +1475,14 @@ class SnapshotTable:
         # commit dir per diff would be O(table files) on the driver for
         # every incremental refresh
         dir_bytes = {d: b for d, b in prev.get("dir_bytes", {}).items() if d in live}
+        dir_buckets = {
+            d: b for d, b in prev.get("dir_buckets", {}).items() if d in live
+        }
         if new_dir is not None:
             kinds[new_dir] = new_dir_kind
             dir_bytes[new_dir] = new_dir_bytes
+            if new_dir_buckets is not None:
+                dir_buckets[new_dir] = new_dir_buckets
         # monotone-corrected commit timestamp: a later version never
         # carries an earlier ts even under clock skew / sub-ms commits,
         # so version order == timestamp order and version_at() is exact
@@ -1468,6 +1498,7 @@ class SnapshotTable:
             "global_deltas": global_deltas,
             "dir_kinds": kinds,
             "dir_bytes": dir_bytes,
+            "dir_buckets": dir_buckets,
             "committed_epochs": ledger.to_json(),
             "lineage": lineage,
         }
@@ -1518,15 +1549,17 @@ class SnapshotTable:
         folded: set,
         lineage: dict,
         commit_rel: str,
-        own_delta: bool = False,
+        own_delta_buckets: str | None = None,
     ) -> dict:
         """Commit a maintenance rewrite (full or minor compaction) with
         rebase over intervening MOR appends: appenders only EXTEND the
         global delta chain, so the rewrite stays valid — keep the
         interveners' deltas (everything not in ``folded``) on top of the
         rewritten files, take the fresh epoch ledger, claim the next
-        version. A concurrent commit that changed the BUCKET MAP
-        (another compaction, a rebucket) invalidated the
+        version. With ``own_delta_buckets`` (the ``_bucket_mask`` of the
+        buckets it holds rows of), ``commit_rel`` commits as a global
+        delta instead of base files. A concurrent commit that changed the
+        BUCKET MAP (another compaction, a rebucket) invalidated the
         rewrite's read set: raise, leaving the written dir a vacuumable
         orphan — re-running the maintenance op is always safe."""
 
@@ -1550,11 +1583,12 @@ class SnapshotTable:
                     "compaction folded this op's input deltas — re-run it"
                 )
             survivors = [d for d in _deltas(snap) if d not in folded]
-            own = [commit_rel] if own_delta else []
+            own = [commit_rel] if own_delta_buckets is not None else []
             return _rebased(snap, schema), buckets_map, own + survivors, lineage
 
         return self._commit_loop(
-            None, build_rewrite, commit_rel, "delta" if own_delta else "base"
+            None, build_rewrite, commit_rel,
+            "base" if own_delta_buckets is None else "delta", own_delta_buckets,
         )
 
     def compact(
@@ -1705,7 +1739,10 @@ class SnapshotTable:
             {"epoch_id": "__minor_compaction", "minor_compaction": True,
              "deltas_merged": len(gdeltas)},
             commit_rel,
-            own_delta=True,
+            # one row per key of the folded deltas, and a key's bucket
+            # never changes: the union of their bucket sets (every
+            # bucket when one of them has no record)
+            own_delta_buckets=_bucket_mask(self._delta_buckets(m, gdeltas)),
         )
 
     def maybe_compact(self, max_deltas: int = 16) -> dict | None:

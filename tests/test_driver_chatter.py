@@ -1,12 +1,13 @@
 """The served CDC path's driver cost: lookup buckets hashed on the driver
 (bit-equal to Spark's ``xxhash64``), a Py4J round-trip budget for one tail
-``refresh_views`` and one ``lookup``, and the SQL-text plans on column
-names that need quoting."""
+``refresh_views`` and one ``lookup``, a Spark-job budget for one tail
+refresh, and the SQL-text plans on column names that need quoting."""
 
 from __future__ import annotations
 
 import contextlib
 import random
+import uuid
 
 import pytest
 from py4j.java_gateway import GatewayClient
@@ -49,6 +50,23 @@ def py4j_calls():
         yield count
     finally:
         GatewayClient.send_command = orig
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Collect the ids of the Spark jobs the block runs, through a job
+    group of its own."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex[:8]}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status tracker learns of jobs from the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _spark_hashes(spark, values, dtype):
@@ -137,6 +155,54 @@ def test_served_tail_round_trip_budget(spark, tmp_path):
     assert lookup[0] <= 300, lookup[0]
     want = t.state().filter(F.col("doc_id").isin(keys)).select("doc_id", "tokens")
     assert sorted(map(tuple, rows)) == sorted(map(tuple, want.collect()))
+
+
+def _rows(spark, rows):
+    return spark.createDataFrame(
+        rows, "op string, doc_id string, seq long, grp string, val long"
+    )
+
+
+def test_tail_refresh_spark_job_budget(spark, tmp_path):
+    """A tail view refresh over a one-epoch merge-on-read span is one
+    query: the change feed plans its candidate buckets from the bucket
+    sets the commits recorded (no job), and the view folds its group-by,
+    old-value resolve and join into one aggregate (no collect or persist
+    between stages)."""
+    t = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8)
+    t.merge_reduced(
+        _rows(spark, [("insert", f"k{i}", i, f"g{i % 5}", i) for i in range(40)]), "e0"
+    )
+    view = MaterializedAggregate(
+        spark, t, str(tmp_path / "v"), ["grp"], sums={"tot": "val"}
+    )
+    refresh_views([view])
+    v1 = t.current_version()
+    t.merge_reduced(
+        _rows(
+            spark,
+            [("update", f"k{i}", 100 + i, f"g{i % 3}", 7 * i) for i in range(0, 40, 3)]
+            + [("delete", "k1", 200, None, None), ("insert", "k99", 201, "g9", 5)],
+        ),
+        "e1",
+    )
+    v2 = t.current_version()
+    with spark_jobs(spark) as planned:
+        t.changes(v1, v2, images="both")
+    assert planned == []
+    with spark_jobs(spark) as refresh:
+        refresh_views([view])
+    assert len(refresh) <= 3, refresh
+    assert view.cdf_bookmark() == v2
+    got = {r["grp"]: (r["cnt"], r["tot"]) for r in view.result().collect()}
+    want = {
+        r["grp"]: (r["cnt"], r["tot"])
+        for r in t.state()
+        .groupBy("grp")
+        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("val").alias("tot"))
+        .collect()
+    }
+    assert got == want
 
 
 # ------------------------------------------------------------ awkward names

@@ -378,3 +378,218 @@ def test_run_replay_maintain_every_cadence(spark, tmp_path):
     # K=3 over 6 epochs: 2 in-loop refreshes + final no-op catch-up;
     # K=1: 6 in-loop refreshes. The agg table's version count shows it.
     assert m3.agg.current_version() < m1.agg.current_version()
+
+
+# ------------------------------------------- one-aggregate refresh: old winner
+
+
+def _index_rows(ix, values):
+    return {(r["grp"], r["doc_id"]) for r in ix.lookup(values).collect()}
+
+
+def _state_rows(t, values):
+    return {
+        (r["grp"], r["doc_id"]) for r in t.state().collect() if r["grp"] in values
+    }
+
+
+def test_refresh_old_winner_edge_cases(spark, tmp_path):
+    """Each span is checked against a recompute over state(): a group
+    tombstoned in one span and refilled in a later one (the old winner
+    is a tombstone), a group netting to zero beside a real change, NULL
+    group values, and the shared-diff path with an index beside the
+    aggregate."""
+    from aws_serverless_elt_pipeline_enterprise_spark.operators.secondary_index import (
+        SecondaryIndex,
+    )
+    from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import (
+        refresh_views,
+    )
+
+    t = _mk(spark, tmp_path)
+    ma = MaterializedAggregate(
+        spark, t, str(tmp_path / "mv"), ["grp"], sums={"sum_val": "val"}
+    )
+    ix = SecondaryIndex(spark, t, str(tmp_path / "ix"), "grp", n_buckets=8)
+    t.merge_reduced(
+        _batch(
+            spark,
+            [("insert", f"k{i}", i, "abc"[i % 3], i) for i in range(9)]
+            + [("insert", "solo", 20, "d", 4), ("insert", "n1", 21, None, 3)],
+        ),
+        "e0",
+    )
+    refresh_views([ma, ix])  # bootstrap
+    spans = [
+        # empty group d: its agg row becomes a tombstone
+        [("delete", "solo", 100, None, None), ("insert", "n2", 101, None, None)],
+        # refill d (old winner = the tombstone); k0 moves a -> NULL group
+        [("insert", "solo2", 200, "d", 6), ("update", "k0", 201, None, 8)],
+        # k1 nets to zero (same group, same value) beside a real change
+        [("update", "k1", 300, "b", 1), ("update", "k2", 301, "c", 50)],
+        # NULL group emptied of its sum contributions, then a move out of it
+        [("update", "n1", 400, None, None), ("update", "k0", 401, "a", 9)],
+    ]
+    for i, rows in enumerate(spans, start=1):
+        t.merge_reduced(_batch(spark, rows), f"e{i}")
+        refresh_views([ma, ix])
+        assert ma.cdf_bookmark() == ix.cdf_bookmark() == t.current_version()
+        assert _materialized(ma) == _recompute(t), i
+        values = ["a", "b", "c", "d", None]
+        assert _index_rows(ix, values) == _state_rows(t, values), i
+    assert _materialized(ma)[("d",)] == (1, 6)
+    # the zero-net span wrote only the group that changed
+    t.merge_reduced(
+        _batch(spark, [("update", "k4", 500, "b", 4), ("update", "k5", 501, "c", 99)]),
+        "e5",
+    )
+    info = ma.refresh()
+    assert info["touched_buckets"] == ma.agg.buckets_for(["c"])
+    assert _materialized(ma) == _recompute(t)
+
+
+# ------------------------------------------------ manifests without a record
+
+
+def _strip_bucket_records(t: SnapshotTable, dirs=None) -> SnapshotTable:
+    """Rewrite every manifest of ``t`` without the per-delta bucket record
+    (only ``dirs``' entries when given), as an older writer left them, and
+    reopen the table."""
+    mdir = os.path.join(t.root, "manifests")
+    for name in os.listdir(mdir):
+        path = os.path.join(mdir, name)
+        with open(path) as f:
+            m = json.load(f)
+        rec = m.pop("dir_buckets", {})
+        if dirs is not None:
+            m["dir_buckets"] = {d: b for d, b in rec.items() if d not in dirs}
+        with open(path, "w") as f:
+            json.dump(m, f)
+    return SnapshotTable(t.spark, t.root, key_col=t.key_col)
+
+
+def _rows_of(df):
+    return sorted(repr(sorted(r.asDict().items())) for r in df.collect())
+
+
+def _deltas_of(t):
+    return list(t.manifest()["global_deltas"])
+
+
+def test_legacy_manifests_without_bucket_record(spark, tmp_path):
+    from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import (
+        spark_xxhash64,
+    )
+
+    t = _mk(spark, tmp_path)
+    ma = MaterializedAggregate(
+        spark, t, str(tmp_path / "mv"), ["grp"], sums={"sum_val": "val"}
+    )
+    n = 3000
+    t.merge_reduced(
+        _batch(spark, [("insert", f"k{i}", i, "abc"[i % 3], i) for i in range(n)]),
+        "e0",
+    )
+    ma.refresh()
+    t.compact()
+    v0 = t.current_version()
+    t.merge_reduced(
+        _batch(spark, [("update", "k1", 10**4, "c", 5), ("delete", "k2", 10**4 + 1, None, None)]),
+        "e1",
+    )
+    t.merge_reduced(
+        _batch(spark, [("insert", "k_new", 10**4 + 2, "a", 1), ("update", "k4", 10**4 + 3, "b", 2)]),
+        "e2",
+    )
+    v2 = t.current_version()
+    # a large delta confined to buckets 0 and 1: its record is two buckets
+    low = [f"k{i}" for i in range(n) if spark_xxhash64(f"k{i}") % 8 < 2][:800]
+    t.merge_reduced(
+        _batch(spark, [("update", k, 2 * 10**4 + j, "b", j) for j, k in enumerate(low)]),
+        "e3",
+    )
+    v3 = t.current_version()
+    assert t._delta_buckets(t.manifest(), _deltas_of(t)[-1:]) == {0, 1}
+    # the candidate-bucket paths: the small deltas narrow the diff through
+    # a key IN list, or through a key semi-join with the IN-list cap forced
+    # down; the large delta (over 1/8 of the table) does not narrow
+    spans = [(v0, v2), (v0 + 1, v2), (v2, v3), (None, v3)]
+    recorded = {}
+    for cap in (SnapshotTable.NARROW_INLIST_MAX, 1):
+        t.NARROW_INLIST_MAX = cap
+        for span in spans:
+            for images in ("post", "both"):
+                recorded[cap, span, images] = _rows_of(t.changes(*span, images=images))
+    legacy = _strip_bucket_records(t)
+    assert "dir_buckets" not in legacy.manifest()
+    assert legacy._delta_buckets(legacy.manifest(), _deltas_of(legacy)) == set(range(8))
+    for (cap, span, images), want in recorded.items():
+        legacy.NARROW_INLIST_MAX = cap
+        assert _rows_of(legacy.changes(*span, images=images)) == want, (cap, span, images)
+
+    # a view over (and owning) unrecorded tables still equals a recompute
+    ma.agg = _strip_bucket_records(ma.agg)
+    ma.source = legacy
+    ma.refresh()
+    assert _materialized(ma) == _recompute(legacy)
+
+
+def test_minor_compaction_bucket_record(spark, tmp_path):
+    t = _mk(spark, tmp_path, n_buckets=16)
+    for e in range(3):
+        t.merge_reduced(
+            _batch(spark, [("insert", f"k{e}_{i}", 10 * e + i, "g", i) for i in range(3)]),
+            f"e{e}",
+        )
+    raw = t.read(resolve=False)
+    held = {r[0] for r in raw.select("_bucket").distinct().collect()}
+    assert t._delta_buckets(t.manifest(), _deltas_of(t)) == held
+    assert len(held) < 16
+    # every delta recorded: the merged delta records their union
+    t.compact_minor()
+    [merged] = _deltas_of(t)
+    assert t._delta_buckets(t.manifest(), [merged]) == held
+    # one unrecorded input: the merged delta counts as every bucket
+    t.merge_reduced(_batch(spark, [("insert", "x", 100, "g", 1)]), "e3")
+    t = _strip_bucket_records(t, dirs={merged})
+    t.compact_minor()
+    [merged2] = _deltas_of(t)
+    assert t._delta_buckets(t.manifest(), [merged2]) == set(range(16))
+
+
+# ------------------------------------------------------ bounded delta chains
+
+
+def test_derived_delta_chains_stay_bounded(spark, tmp_path):
+    """Every committed span appends one delta to each derived table; the
+    refresh's maybe_compact keeps the chain short, and the compaction
+    (a maintenance commit) keeps the bookmark."""
+    from aws_serverless_elt_pipeline_enterprise_spark.operators.secondary_index import (
+        SecondaryIndex,
+    )
+    from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import (
+        refresh_views,
+    )
+
+    t = _mk(spark, tmp_path)
+    ma = MaterializedAggregate(
+        spark, t, str(tmp_path / "mv"), ["grp"], sums={"sum_val": "val"}
+    )
+    ix = SecondaryIndex(spark, t, str(tmp_path / "ix"), "grp", n_buckets=4)
+    t.merge_reduced(
+        _batch(spark, [("insert", f"k{i}", i, "abc"[i % 3], i) for i in range(6)]), "e0"
+    )
+    refresh_views([ma, ix])
+    for e in range(1, 22):
+        t.merge_reduced(
+            _batch(spark, [("update", f"k{e % 6}", 10 * e, "abcd"[e % 4], e)]),
+            f"e{e}",
+        )
+        refresh_views([ma, ix])
+        assert ma.cdf_bookmark() == ix.cdf_bookmark() == t.current_version()
+    for d in (ma.agg, ix.idx):
+        assert len(_deltas_of(d)) < 16
+        assert any(rec.get("minor_compaction") for rec in d.lineage())
+    assert _materialized(ma) == _recompute(t)
+    values = ["a", "b", "c", "d"]
+    assert _index_rows(ix, values) == _state_rows(t, values)

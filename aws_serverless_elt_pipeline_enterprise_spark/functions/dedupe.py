@@ -19,7 +19,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from aws_serverless_elt_pipeline_enterprise_spark.functions.parallel import (
@@ -422,77 +422,76 @@ def minhash_lsh_pairs(
     return _estimate_from_sigs(cand, sigs, key, k)
 
 
-def _edge_sig(edges: DataFrame) -> tuple:
-    """Cheap deterministic edge-set signature for convergence checks:
-    (count, decimal sum of pair hashes) — decimal, because an ANSI-mode
-    bigint sum of ~2^63-scale hashes overflows."""
-    r = edges.agg(
+def _checkpoint_sig(edges: DataFrame) -> tuple[DataFrame, tuple]:
+    """Checkpoint ``edges`` and return it with its convergence signature
+    (count, decimal sum of pair hashes), observed on the checkpoint job
+    itself rather than by a second job over the result. Decimal, because
+    an ANSI-mode bigint sum of ~2^63-scale hashes overflows; an empty
+    edge set signs as (0, None)."""
+    obs = Observation()
+    edges = edges.observe(
+        obs,
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-    ).first()
-    return (r["n"], r["h"])
+    ).localCheckpoint(eager=True)
+    r = obs.get
+    return edges, (r["n"], r["h"])
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Large-star (Kiveris et al., 'Connected Components in MapReduce
     and Beyond'): every node connects its LARGER neighbors to the
-    minimum of its neighborhood (incl. itself). One groupBy + one join,
-    all partial-aggregable."""
+    minimum of its neighborhood (incl. itself). The minimum is a window
+    over the node's neighbors, so each edge row gets it from the one
+    shuffle that groups the node, and a hub's neighbor list streams
+    through Spark's spillable window buffer instead of having to fit in
+    memory. Every output edge points from a larger node to a smaller
+    one. The output may repeat an edge; ``_small_star`` removes repeats,
+    so no shuffle is spent on them here."""
     sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    mn = (
-        sym.groupBy("a")
-        .agg(F.min("b").alias("_mnb"))
-        .select("a", F.least("_mnb", F.col("a")).alias("m"))
-    )
+    m = F.least(F.min("b").over(Window.partitionBy("a")), F.col("a"))
     return (
-        sym.join(mn, "a")
+        sym.select("a", "b", m.alias("m"))
         .filter(F.col("b") > F.col("a"))
         .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .distinct()
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star: orient each edge large->small; every node connects
-    its smaller neighbors (and itself) to their minimum."""
-    d = edges.select(
-        F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-    ).filter(F.col("u") != F.col("v"))
-    mn = d.groupBy("u").agg(F.min("v").alias("m"))
-    joined = d.join(mn, "u")
-    out = joined.select(F.col("v").alias("a"), F.col("m").alias("b")).union(
-        mn.select(F.col("u").alias("a"), F.col("m").alias("b"))
+    """Small-star over ``_large_star``'s output: every node connects its
+    smaller neighbors (and itself) to their minimum. Each input edge
+    already points from the larger node ``a`` to the smaller ``b``, so a
+    node's smaller neighbors are the ``b`` of its own edges (a window,
+    as in ``_large_star``). The output points the same way."""
+    m = F.min("b").over(Window.partitionBy("a"))
+    return (
+        edges.select(F.explode(F.array("b", "a")).alias("a"), m.alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
     )
-    return out.filter(F.col("a") != F.col("b")).distinct()
 
 
 def _star_components(pairs: DataFrame, max_iter: int) -> tuple[DataFrame, int, bool]:
     """Alternating large-star/small-star connected components. Converges
     in O(log^2 n) rounds on ANY graph shape — a diameter-D chain needs
-    ~log D rounds where min-label propagation needs D. Returns
+    ~log D rounds (measured: 8 at D=100, 11 at D=1000). Returns
     (labels, rounds_used, converged); labels cover every node of
-    ``pairs`` with the component-min as the label."""
-    # pairs evaluated ONCE: checkpoint the raw pair set first, then
-    # derive nodes and edges from the checkpointed blocks — nodes and
-    # edges each checkpointing straight off ``pairs`` re-ran the whole
-    # upstream pair-generation plan twice (measured: the full n-gram
-    # chain, seconds per extra pass at sf1)
+    ``pairs`` with the component-min as the label.
+
+    Each round's edge set is localCheckpointed (iterative joins otherwise
+    grow the logical plan until the plan STRING alone OOMs the driver),
+    and the checkpoint's own query observes the round's signature, so
+    the convergence test runs no query of its own. A round whose
+    signature equals the previous round's is the fixpoint; round 1 has
+    no previous signature, which costs one extra round only when
+    ``pairs`` is already a converged star."""
+    # pairs evaluated ONCE: the upstream pair-generation plan (the full
+    # n-gram chain, seconds per pass at sf1) must not re-run per branch
     raw = pairs.select("a", "b").localCheckpoint(eager=True)
-    nodes = (
-        raw.select(F.col("a").alias("node"))
-        .union(raw.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges = (
-        raw.filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sig, rounds, converged = _edge_sig(edges), 0, False
+    edges = raw.filter(F.col("a") != F.col("b"))
+    sig, rounds, converged = None, 0, False
     for rounds in range(1, max_iter + 1):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        new_sig = _edge_sig(edges)
+        edges, new_sig = _checkpoint_sig(_small_star(_large_star(edges)))
         if new_sig == sig:
             converged = True
             break
@@ -502,87 +501,42 @@ def _star_components(pairs: DataFrame, max_iter: int) -> tuple[DataFrame, int, b
         # set changed from the previous one but is already the
         # fixpoint). One verify-only probe keeps the truncation warning
         # free of false positives for diameter-shaped == max_iter inputs.
-        converged = _edge_sig(_small_star(_large_star(edges))) == sig
-    # at the fixpoint every edge is (node -> component min); nodes with
-    # no edge (roots, singletons) label themselves
-    roots = edges.groupBy("a").agg(F.min("b").alias("label"))
+        converged = _checkpoint_sig(_small_star(_large_star(edges)))[1] == sig
+    # at the fixpoint every edge is (node -> component min), and every
+    # edge points to a smaller node: a node's label is the minimum of
+    # itself and its edges' targets (roots and singletons label
+    # themselves)
     labels = (
-        nodes.join(roots, nodes["node"] == roots["a"], "left")
-        .select("node", F.coalesce("label", "node").alias("label"))
+        raw.select(F.col("a").alias("node"), F.col("a").alias("label"))
+        .union(raw.select(F.col("b").alias("node"), F.col("b").alias("label")))
+        .union(edges.select(F.col("a").alias("node"), F.col("b").alias("label")))
+        .groupBy("node")
+        .agg(F.min("label").alias("label"))
     )
     return labels, rounds, converged
-
-
-def _propagate(pairs: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
-    """Min-label propagation rounds; returns (labels, converged) where
-    converged means some round reported zero label changes."""
-    # checkpoint the raw pairs BEFORE mirroring: union's two branches
-    # would otherwise each re-run the whole upstream pair-generation
-    # plan (one full n-gram chain per branch at sf1)
-    edges = pairs.select("a", "b").localCheckpoint(eager=True)
-    sym = edges.union(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        prop = sym.join(
-            labels.withColumnRenamed("node", "b"), "b"
-        ).select(F.col("a").alias("node"), "label")
-        new = (
-            labels.union(prop)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            return labels, True
-    return labels, False
 
 
 def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over near-dup pairs -> (doc_id, cluster), with
     cluster = min doc id in the component (the canonical keeper).
 
-    Min-label propagation for up to 5 rounds — one join + partial-agg
-    groupBy per round, which converges fastest on the clique-shaped
-    components real near-dup clusters form (measured at sf0.1:
-    propagation ~2 rounds, star 1.4x slower) — then, if still
-    unconverged (deep chain-shaped components), alternating
-    large-star/small-star (Kiveris et al.) for the full ``max_iter``
-    budget: O(log^2 n) rounds on ANY component shape (measured: 8 rounds
-    at diameter 100, 11 at 1000, where propagation needs D rounds), the
-    10^10-edge scale path. Worst case pays 5 cheap rounds + O(log^2 n)
-    star rounds; shallow graphs pay exactly the propagation cost.
-
-    Every round localCheckpoints (iterative joins otherwise grow the
-    logical plan until the plan STRING alone OOMs the driver), and an
-    exhausted star budget warns (never silently truncates)."""
-    labels, converged = _propagate(pairs, min(5, max_iter))
+    Alternating large-star/small-star (``_star_components``) for up to
+    ``max_iter`` rounds: O(log^2 n) rounds on any component shape, the
+    clique-shaped clusters near-dup pairs usually form as well as deep
+    chains. The rounds run when this is called; the returned frame is
+    one aggregate over the checkpointed pairs and the last round's
+    edges. An exhausted budget warns (never silently truncates)."""
+    labels, _, converged = _star_components(pairs, max_iter)
     if not converged:
-        labels, _, converged = _star_components(pairs, max_iter)
-        if not converged:
-            import warnings
+        import warnings
 
-            warnings.warn(
-                f"dup_clusters: star rounds did not converge within "
-                f"{max_iter} rounds; labels are a refinement, not the "
-                f"transitive closure",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+        warnings.warn(
+            f"dup_clusters: star rounds did not converge within "
+            f"{max_iter} rounds; labels are a refinement, not the "
+            f"transitive closure",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster"))
 
 
@@ -759,11 +713,13 @@ def dedup_pipeline(
     jaccard output returns. At 100 TB the savings is a full corpus scan
     + tokenize per member — 4 scans collapse to 1.
 
-    Returns lazily-evaluated frames keyed: ``exact`` (keeper, n_copies),
-    ``ngram_pairs`` (a, b, jaccard), ``clusters`` (doc_id, cluster),
-    ``minhash_pairs`` (a, b, jaccard_est), ``simhash_pairs`` (a, b,
-    hamming). Each is bit-identical to its standalone function at the
-    same parameters (tested). The persisted intermediates live until the
+    Returns frames keyed: ``exact`` (keeper, n_copies), ``ngram_pairs``
+    (a, b, jaccard), ``clusters`` (doc_id, cluster), ``minhash_pairs``
+    (a, b, jaccard_est), ``simhash_pairs`` (a, b, hamming). All are lazy
+    except ``clusters``: ``dup_clusters`` runs its rounds at call time,
+    so this call already computes the tokenization and the n-gram pairs.
+    Each is bit-identical to its standalone function at the same
+    parameters (tested). The persisted intermediates live until the
     session drops them — call ``spark.catalog.clearCache()`` when done."""
     base = (
         spread_small_input(df, key, min_bytes=1 << 20)

@@ -745,8 +745,12 @@ class SnapshotTable:
             self._read_commit_buckets(cd, bs, schema) for cd, bs in sorted(by_commit.items())
         ]
         # global deltas apply to every bucket (Iceberg equality-delete
-        # style): scan them whole, filter to the wanted buckets
+        # style): scan them whole, filter to the wanted buckets. With
+        # ``buckets`` given, a dir whose recorded bucket set misses every
+        # wanted bucket holds no wanted row and is not scanned.
         gdeltas = m.get("global_deltas", [])
+        if buckets is not None:
+            gdeltas = [d for d in gdeltas if self._delta_buckets(m, [d]) & want]
         if gdeltas and want:
             needs_resolve = True
             # explicit schema for the same reason as _read_commit_buckets:

@@ -557,6 +557,36 @@ def test_minor_compaction_bucket_record(spark, tmp_path):
     assert t._delta_buckets(t.manifest(), [merged2]) == set(range(16))
 
 
+def test_bucket_read_skips_deltas_recorded_elsewhere(spark, tmp_path):
+    """``read(buckets=)`` does not scan a delta whose recorded bucket set
+    misses every wanted bucket; a delta without a record is still read."""
+    from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import (
+        spark_xxhash64,
+    )
+
+    t = _mk(spark, tmp_path)
+    keys = [f"k{i}" for i in range(200)]
+    low = [k for k in keys if spark_xxhash64(k) % 8 < 4][:30]
+    high = [k for k in keys if spark_xxhash64(k) % 8 >= 4][:30]
+    for e, ks in enumerate((low, high)):
+        t.merge_reduced(
+            _batch(spark, [("insert", k, 100 * e + j, "g", j) for j, k in enumerate(ks)]),
+            f"e{e}",
+        )
+    d_low, d_high = _deltas_of(t)
+    assert t._delta_buckets(t.manifest(), [d_low]) <= {0, 1, 2, 3}
+    b = spark_xxhash64(low[0]) % 8
+
+    def files_of(table, d):
+        return [f for f in table.read(buckets=[b]).inputFiles() if f"/{d}/" in f]
+
+    assert files_of(t, d_low) and not files_of(t, d_high)
+    assert _rows_of(t.read(buckets=[b])) == _rows_of(t.read().filter(F.col("_bucket") == b))
+    legacy = _strip_bucket_records(t)
+    assert files_of(legacy, d_low) and files_of(legacy, d_high)
+    assert _rows_of(legacy.read(buckets=[b])) == _rows_of(t.read(buckets=[b]))
+
+
 # ------------------------------------------------------ bounded delta chains
 
 

@@ -312,24 +312,7 @@ def test_gate_failure_writes_verdict_artifact(spark, tmp_path):
     assert not table.has_epoch("ep-0"), "aborted epoch stays uncommitted"
 
 
-# ------------------------------------------- dup clusters + masking
-
-
-def test_dup_clusters_min_label_components(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 9), (4, 8)], "a bigint, b bigint"
-    )
-    out = {r.doc_id: r.cluster for r in dd.dup_clusters(pairs).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7, 4: 4, 8: 4}
-
-
-def test_dup_clusters_chain_needs_iterations(spark):
-    # a path graph forces label propagation across multiple rounds
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(8)], "a bigint, b bigint"
-    )
-    out = {r.doc_id: r.cluster for r in dd.dup_clusters(pairs).collect()}
-    assert set(out.values()) == {0} and len(out) == 9
+# ------------------------------------------------------------ masking
 
 
 def test_mask_terms_counts_and_replaces(spark):

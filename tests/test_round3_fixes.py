@@ -1,10 +1,7 @@
-"""Round-3 fixes: redrive digest covers payload content, dup_clusters
-non-convergence warning, df_cap pre-aggregation bound, stateful LWW
-deterministic tie-break."""
+"""Round-3 fixes: redrive digest covers payload content, df_cap
+pre-aggregation bound, stateful LWW deterministic tie-break."""
 
 from __future__ import annotations
-
-import warnings
 
 import pandas as pd
 import pytest
@@ -66,27 +63,6 @@ def test_redrive_corrected_payload_fix_gets_new_epoch(spark, tmp_path):
     # the corrected row won (same seq, batch side wins on replay tie)
     row = table.state().filter(F.col("doc_id") == "k1").first()
     assert row["tokens"] == [7] and row["n_tok"] == 1
-
-
-def test_dup_clusters_warns_on_max_iter_exhaustion(spark):
-    # a path graph of diameter 3 cannot converge in one round
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d")], ["a", "b"]
-    )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        dd.dup_clusters(pairs, max_iter=1)
-    assert any(
-        "did not converge" in str(w.message) for w in caught
-    ), "non-convergence must be signalled, not silently returned"
-    # and with enough rounds the same graph converges silently
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        out = dd.dup_clusters(pairs, max_iter=10).collect()
-    assert not [w for w in caught if "did not converge" in str(w.message)]
-    assert {(r.doc_id, r.cluster) for r in out} == {
-        ("a", "a"), ("b", "a"), ("c", "a"), ("d", "a")
-    }
 
 
 def test_df_cap_bounds_aggregation_input(spark):
@@ -401,17 +377,6 @@ def test_expire_snapshots_bounds_metadata_across_1000_epochs(spark, tmp_path):
     assert table.state().count() == want
     # epoch ledger still exact: replaying any old epoch skips
     assert table.has_epoch("e-3") and table.has_epoch("seed")
-
-
-def test_dup_clusters_no_false_warning_when_converging_on_last_round(spark):
-    """diameter == max_iter converges ON the final round; the verify-only
-    probe must suppress the warning (ops alerting keyed on it)."""
-    pairs = spark.createDataFrame([("a", "b")], ["a", "b"])  # diameter 1
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        out = dd.dup_clusters(pairs, max_iter=1).collect()
-    assert not [w for w in caught if "did not converge" in str(w.message)]
-    assert {(r.doc_id, r.cluster) for r in out} == {("a", "a"), ("b", "a")}
 
 
 def test_stateful_lww_equal_seq_tiebreak_across_chunks_and_state():

@@ -142,69 +142,6 @@ def test_ivf_index_degenerate_residue_falls_back_to_brute(spark, tmp_path):
     assert [(r.vec_id, r.score) for r in got] == [(r.vec_id, r.score) for r in want]
 
 
-def test_star_components_chain_converges_logarithmically(spark):
-    """A diameter-100 chain: label propagation needs ~100 rounds; the
-    alternating star algorithm must converge in O(log D) — measured 8
-    rounds at D=100, 11 at D=1000 (each round = large-star +
-    small-star)."""
-    from aws_serverless_elt_pipeline_enterprise_spark.functions import dedupe as D
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(100)], ["a", "b"]
-    )
-    labels, rounds, converged = D._star_components(chain, max_iter=12)
-    assert converged and rounds <= 9, (rounds, converged)
-    got = {r.node: r.label for r in labels.collect()}
-    assert got == {i: 0 for i in range(101)}
-
-
-def test_dup_clusters_star_equals_propagation(spark):
-    """Both algorithms must produce identical clusters on a mixed
-    fixture: two cliques, one chain, singleton-free by construction."""
-    from aws_serverless_elt_pipeline_enterprise_spark.functions import dedupe as D
-
-    pairs = (
-        [(i, j) for i in range(5) for j in range(i + 1, 5)]  # clique 0-4
-        + [(10 + i, 10 + i + 1) for i in range(30)]  # chain 10..40
-        + [(100, 101), (101, 102), (100, 102)]  # triangle
-        + [(7, 7)]  # self-loop noise
-    )
-    df = spark.createDataFrame(pairs, ["a", "b"])
-    star_labels, _, star_converged = D._star_components(df, max_iter=20)
-    prop_labels, prop_converged = D._propagate(df, max_iter=40)
-    assert star_converged and prop_converged
-    star = {(r.node, r.label) for r in star_labels.collect()}
-    prop = {(r.node, r.label) for r in prop_labels.collect()}
-    assert star == prop
-
-
-def test_dup_clusters_star_warns_on_truncation(spark):
-    import warnings
-
-    from aws_serverless_elt_pipeline_enterprise_spark.functions import dedupe as D
-
-    chain = spark.createDataFrame([(i, i + 1) for i in range(200)], ["a", "b"])
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        D.dup_clusters(chain, max_iter=1).collect()
-    assert any("did not converge" in str(x.message) for x in w)
-
-
-def test_dup_clusters_auto_falls_back_to_star_on_deep_chain(spark):
-    """auto = propagation (5-round budget) with star fallback: a
-    diameter-200 chain must still produce exact components (via star),
-    with no truncation warning."""
-    import warnings
-
-    from aws_serverless_elt_pipeline_enterprise_spark.functions import dedupe as D
-
-    chain = spark.createDataFrame([(i, i + 1) for i in range(200)], ["a", "b"])
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        got = {r.doc_id: r.cluster for r in D.dup_clusters(chain).collect()}
-    assert got == {i: 0 for i in range(201)}
-
-
 def _tiny_bmp(w=2, h=2, color=(255, 128, 0)):
     """Uncompressed 24-bit BMP, bottom-up, row-padded to 4 bytes."""
     import struct

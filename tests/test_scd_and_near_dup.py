@@ -1,13 +1,18 @@
-"""SCD Type-2 history (operators/scd.py) and the portable quantized
-embedding near-dup chain (functions/similarity.py)."""
+"""SCD Type-2 history (operators/scd.py), the portable quantized
+embedding near-dup chain (functions/similarity.py) and near-dup
+clusters: the connected components of ``dup_clusters``
+(functions/dedupe.py)."""
 
 from __future__ import annotations
 
 import datetime as dt
 import random
+import warnings
 
 from pyspark.sql import functions as F
+from test_driver_chatter import spark_jobs
 
+from aws_serverless_elt_pipeline_enterprise_spark.functions import dedupe as dd
 from aws_serverless_elt_pipeline_enterprise_spark.functions import similarity as sim
 from aws_serverless_elt_pipeline_enterprise_spark.operators.scd import scd2_history
 
@@ -136,3 +141,168 @@ def test_scd2_intervals_partition_timeline(spark):
         assert all(
             v["valid_to"] is None or v["valid_from"] <= v["valid_to"] for v in vs
         )
+
+
+# ------------------------------------------------------ near-dup clusters
+
+
+def _union_find(pairs):
+    """Reference components: node -> smallest node of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_dup_clusters_min_label_components(spark):
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 9), (4, 8)], "a bigint, b bigint"
+    )
+    out = {r.doc_id: r.cluster for r in dd.dup_clusters(pairs).collect()}
+    assert out == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7, 4: 4, 8: 4}
+
+
+def test_dup_clusters_chain_needs_iterations(spark):
+    # a path graph forces label propagation across multiple rounds
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)], "a bigint, b bigint"
+    )
+    out = {r.doc_id: r.cluster for r in dd.dup_clusters(pairs).collect()}
+    assert set(out.values()) == {0} and len(out) == 9
+
+
+def test_dup_clusters_warns_on_max_iter_exhaustion(spark):
+    # a path graph of diameter 3 cannot converge in one round
+    pairs = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], ["a", "b"]
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        dd.dup_clusters(pairs, max_iter=1)
+    assert any(
+        "did not converge" in str(w.message) for w in caught
+    ), "non-convergence must be signalled, not silently returned"
+    # and with enough rounds the same graph converges silently
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = dd.dup_clusters(pairs, max_iter=10).collect()
+    assert not [w for w in caught if "did not converge" in str(w.message)]
+    assert {(r.doc_id, r.cluster) for r in out} == {
+        ("a", "a"), ("b", "a"), ("c", "a"), ("d", "a")
+    }
+
+
+def test_dup_clusters_no_false_warning_when_converging_on_last_round(spark):
+    """diameter == max_iter converges ON the final round; the verify-only
+    probe must suppress the warning (ops alerting keyed on it)."""
+    pairs = spark.createDataFrame([("a", "b")], ["a", "b"])  # diameter 1
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = dd.dup_clusters(pairs, max_iter=1).collect()
+    assert not [w for w in caught if "did not converge" in str(w.message)]
+    assert {(r.doc_id, r.cluster) for r in out} == {("a", "a"), ("b", "a")}
+
+
+def test_star_components_chain_converges_logarithmically(spark):
+    """A diameter-100 chain: label propagation needs ~100 rounds; the
+    alternating star algorithm must converge in O(log D) — measured 8
+    rounds at D=100, 11 at D=1000 (each round = large-star +
+    small-star)."""
+    from aws_serverless_elt_pipeline_enterprise_spark.functions import dedupe as D
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(100)], ["a", "b"]
+    )
+    labels, rounds, converged = D._star_components(chain, max_iter=12)
+    assert converged and rounds <= 9, (rounds, converged)
+    got = {r.node: r.label for r in labels.collect()}
+    assert got == {i: 0 for i in range(101)}
+
+
+def test_dup_clusters_star_warns_on_truncation(spark):
+    import warnings
+
+    from aws_serverless_elt_pipeline_enterprise_spark.functions import dedupe as D
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(200)], ["a", "b"])
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        D.dup_clusters(chain, max_iter=1).collect()
+    assert any("did not converge" in str(x.message) for x in w)
+
+
+def test_dup_clusters_deep_chain_exact_without_warning(spark):
+    """A diameter-200 chain within the default round budget produces
+    exact components, with no truncation warning."""
+    import warnings
+
+    from aws_serverless_elt_pipeline_enterprise_spark.functions import dedupe as D
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(200)], ["a", "b"])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = {r.doc_id: r.cluster for r in D.dup_clusters(chain).collect()}
+    assert got == {i: 0 for i in range(201)}
+
+
+def test_dup_clusters_matches_union_find(spark):
+    """Clusters equal a plain union-find on a mixed fixture (clique,
+    chain, triangle, self-loop) and on a seeded random graph with string
+    ids, whose string order differs from their numeric order."""
+    mixed = (
+        [(i, j) for i in range(5) for j in range(i + 1, 5)]  # clique 0-4
+        + [(10 + i, 10 + i + 1) for i in range(30)]  # chain 10..40
+        + [(100, 101), (101, 102), (100, 102)]  # triangle
+        + [(7, 7)]  # self-loop noise
+    )
+    rng = random.Random(11)
+    ids = [f"doc-{i}" for i in range(300)]
+    rand = [tuple(sorted(rng.sample(ids, 2))) for _ in range(220)]
+    rand += [(i, i) for i in rng.sample(ids, 5)]  # singletons via self-loops
+    for pairs, ddl in ((mixed, "a bigint, b bigint"), (rand, "a string, b string")):
+        df = spark.createDataFrame(pairs, ddl)
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            got = {r.doc_id: r.cluster for r in dd.dup_clusters(df).collect()}
+        assert not [w for w in caught if "did not converge" in str(w.message)]
+        assert got == _union_find(pairs)
+
+
+def test_dup_clusters_spark_job_budget(spark):
+    """A round's convergence signature is observed on the checkpoint
+    that ends it, not computed by a query of its own. The
+    propagation-then-star hybrid this replaced ran 25 Spark jobs on the
+    cliques+pairs graph and 155 on the diameter-200 chain; this holds
+    them to at most 60% and 50% of that."""
+    cliques = [
+        (c * 10 + i, c * 10 + j) for c in range(5) for i in range(5) for j in range(i + 1, 5)
+    ] + [(1000 + 2 * i, 1001 + 2 * i) for i in range(20)]
+    chain = [(i, i + 1) for i in range(200)]
+    for pairs, budget in ((cliques, 15), (chain, 77)):
+        df = spark.createDataFrame(pairs, "a bigint, b bigint")
+        with spark_jobs(spark) as jobs:
+            got = {r.doc_id: r.cluster for r in dd.dup_clusters(df).collect()}
+        assert got == _union_find(pairs)
+        assert len(jobs) <= budget, (len(jobs), budget)
+
+
+def test_dup_clusters_empty_pairs(spark):
+    """No pairs: an empty frame and no warning, also with a one-round
+    budget (every observed signature is (0, NULL))."""
+    df = spark.createDataFrame([], "a string, b string")
+    for max_iter in (20, 1):
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            out = dd.dup_clusters(df, max_iter=max_iter)
+        assert not [w for w in caught if "did not converge" in str(w.message)]
+        assert out.columns == ["doc_id", "cluster"] and out.collect() == []

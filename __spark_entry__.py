@@ -564,10 +564,11 @@ def q_chunk_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate CLUSTERS: connected components (min-label
-    propagation) over the n-gram-Jaccard pair graph — the step that turns
-    pairs into keep/drop decisions in a dedup pipeline. Oracle: recursive
-    transitive closure in DuckDB over the identical pair set."""
+    """Near-duplicate CLUSTERS: connected components (alternating
+    large-star/small-star) over the n-gram-Jaccard pair graph — the step
+    that turns pairs into keep/drop decisions in a dedup pipeline.
+    Oracle: recursive transitive closure in DuckDB over the identical
+    pair set."""
     d = _t(spark, sf_dir, "documents")
     pairs = dd.ngram_jaccard_pairs(
         d, threshold=0.5, df_cap=100, hash_shingles="portable"

@@ -37,6 +37,7 @@ from aws_serverless_elt_pipeline_enterprise_spark.functions.parallel import (
     spread_small_input,
 )
 from aws_serverless_elt_pipeline_enterprise_spark.functions.text import words
+from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import _q, _sql_str
 
 SAMPLE_BUCKETS = 1_000_000
 
@@ -72,14 +73,12 @@ def contaminated_docs(
         benchmark.select(
             F.explode(word_shingles(text, n)).alias("shingle")
         )
-        .select(_hash64(F.col("shingle"), hash_mode).alias("h"))
+        .selectExpr(f"{_hash64('shingle', hash_mode)} AS h")
         .distinct()
     )
     corpus_sh = shingle_explode(
         spread_small_input(df, key, min_bytes=1 << 20), key=key, text=text, n=n
-    ).select(
-        F.col(key), _hash64(F.col("shingle"), hash_mode).alias("h")
-    )
+    ).selectExpr(_q(key), f"{_hash64('shingle', hash_mode)} AS h")
     return (
         corpus_sh.join(F.broadcast(bench_sh), "h", "semi")
         .groupBy(key)
@@ -255,8 +254,11 @@ def stratified_sample(
     # non-negative, so its samples are unchanged.
     u = (
         F.pmod(
-            _hash64(
-                F.concat(F.col(key).cast("string"), F.lit(":" + salt)), hash_mode
+            F.expr(
+                _hash64(
+                    f"concat(CAST({_q(key)} AS STRING), {_sql_str(':' + salt)})",
+                    hash_mode,
+                )
             ),
             F.lit(SAMPLE_BUCKETS),
         )

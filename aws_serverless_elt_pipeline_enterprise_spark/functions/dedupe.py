@@ -15,11 +15,19 @@ Scale notes (100 TB):
     (band_id, band_hash) buckets; k and bands tune recall/precision.
   * all pair outputs are canonicalized a < b so downstream union-find /
     keep-min-id is deterministic.
+
+Plans are built from SQL text: one ``selectExpr`` list per projection,
+one ``F.expr`` per aggregate, ``filter(str)`` for predicates, SQL
+lambdas inside higher-order functions. A pyspark Column call costs about a
+dozen Py4J round trips, and these plans have hundreds of operators. In
+that text a float literal is written ``0.0D`` (a bare ``1.0`` is
+DECIMAL), every cast the arithmetic relies on is spelled out (an integer
+literal below 2^31 is INT), and caller column names are quoted with ``_q``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from aws_serverless_elt_pipeline_enterprise_spark.functions.parallel import (
@@ -27,9 +35,11 @@ from aws_serverless_elt_pipeline_enterprise_spark.functions.parallel import (
     spread_small_input,
 )
 from aws_serverless_elt_pipeline_enterprise_spark.functions.text import (
+    _words_sql,
     content_fingerprint,
     words,
 )
+from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import _q
 
 MERSENNE_P = (1 << 61) - 1
 
@@ -45,10 +55,12 @@ def portable_hash60(col: F.Column | str) -> F.Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def _hash64(col: F.Column, hash_mode: str) -> F.Column:
+def _hash64(c: str, hash_mode: str) -> str:
+    """SQL text of the shingle/word hash of the SQL expression ``c``:
+    ``portable_hash60``'s formula, or xxhash64."""
     if hash_mode == "portable":
-        return portable_hash60(col)
-    return F.xxhash64(col)
+        return f"CAST(conv(substring(md5({c}), 1, 15), 16, 10) AS BIGINT)"
+    return f"xxhash64({c})"
 
 
 def exact_dup_groups(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFrame:
@@ -78,20 +90,24 @@ def word_shingles(text_col: str = "text", n: int = 3) -> F.Column:
     singleton idiom): an outer expression captured inside a HOF lambda is
     re-evaluated per element, so referencing split() directly in the
     slice would re-split the document once per shingle."""
-    def shingles_of(w: F.Column) -> F.Column:
-        idx = F.when(
-            F.size(w) >= n, F.sequence(F.lit(1), F.size(w) - (n - 1))
-        ).otherwise(F.array().cast("array<int>"))
-        return F.array_distinct(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i, n)))
-        )
+    return F.expr(_shingles_sql(_q(text_col), n))
 
-    return F.transform(F.array(words(text_col)), shingles_of)[0]
+
+def _shingles_sql(c: str, n: int) -> str:
+    """SQL text of ``word_shingles`` over the text expression ``c``."""
+    idx = (
+        f"CASE WHEN size(w) >= {n} THEN sequence(1, size(w) - {n - 1}) "
+        f"ELSE CAST(array() AS ARRAY<INT>) END"
+    )
+    return (
+        f"transform(array({_words_sql(c)}), w -> array_distinct("
+        f"transform({idx}, i -> concat_ws(' ', slice(w, i, {n})))))[0]"
+    )
 
 
 def shingle_explode(df: DataFrame, key: str = "doc_id", text: str = "text", n: int = 3) -> DataFrame:
-    return df.select(
-        F.col(key), F.explode(word_shingles(text, n)).alias("shingle")
+    return df.selectExpr(
+        _q(key), f"explode({_shingles_sql(_q(text), n)}) AS shingle"
     )
 
 
@@ -130,9 +146,7 @@ def ngram_jaccard_pairs(
         spread_small_input(df, key, min_bytes=1 << 20), key, text, n
     )
     if hash_shingles:
-        sh = sh.select(
-            F.col(key), _hash64(F.col("shingle"), hash_shingles).alias("shingle")
-        )
+        sh = sh.selectExpr(_q(key), f"{_hash64('shingle', hash_shingles)} AS shingle")
     return _pairs_from_shingle_rows(sh, key, threshold, df_cap)
 
 
@@ -253,8 +267,8 @@ def minhash_signatures(
     [INTERNAL_ERROR] Cannot evaluate expression (session-order-dependent
     planner behavior on Spark 4.1) — a flaky correctness gate is worth
     more than 15% on one stage."""
-    shingled = spread_small_input(df, key, min_bytes=1 << 20).select(
-        F.col(key), word_shingles(text, n).alias("_sh")
+    shingled = spread_small_input(df, key, min_bytes=1 << 20).selectExpr(
+        _q(key), f"{_shingles_sql(_q(text), n)} AS _sh"
     )
     return _sigs_from_shingled(shingled, key, "_sh", k, seed, hash_mode)
 
@@ -278,26 +292,17 @@ def _sigs_from_shingled(
     primitive longs. Docs with zero shingles drop (explode emits
     nothing). Measured 5.8x over the fold on the sf1 corpus
     (OPTIMIZATION_r06.md)."""
-    rows = shingled.select(F.col(key), F.explode(shcol).alias("_s"))
-    a_list, b_list = _perm_consts(k, seed)
-    x = F.pmod(_hash64(F.col("_s"), hash_mode), F.lit(_MH_PRIME))
-    rows = rows.select(F.col(key), x.alias("_x"))
-    aggs = [
-        F.min(
-            F.pmod(
-                F.col("_x") * F.lit(a_list[i]) + F.lit(b_list[i]),
-                F.lit(_MH_PRIME),
-            )
-        ).alias(f"_m{i}")
-        for i in range(k)
-    ]
-    return (
-        rows.groupBy(key)
-        .agg(*aggs)
-        .select(
-            F.col(key), F.array(*[F.col(f"_m{i}") for i in range(k)]).alias("sig")
-        )
+    kq = _q(key)
+    rows = shingled.selectExpr(kq, f"explode({_q(shcol)}) AS _s").selectExpr(
+        kq, f"pmod({_hash64('_s', hash_mode)}, {_MH_PRIME}) AS _x"
     )
+    a_list, b_list = _perm_consts(k, seed)
+    aggs = [
+        F.expr(f"min(pmod(_x * {a} + {b}, {_MH_PRIME})) AS _m{i}")
+        for i, (a, b) in enumerate(zip(a_list, b_list))
+    ]
+    ms = ", ".join(f"_m{i}" for i in range(k))
+    return rows.groupBy(key).agg(*aggs).selectExpr(kq, f"array({ms}) AS sig")
 
 
 def _banded(sigs: DataFrame, key: str, k: int, bands: int, hash_mode: str) -> DataFrame:
@@ -314,25 +319,18 @@ def _banded(sigs: DataFrame, key: str, k: int, bands: int, hash_mode: str) -> Da
         )
     rows_per_band = k // bands
 
-    def band_key(b: int) -> F.Column:
-        sl = F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
+    def band_key(b: int) -> str:
+        sl = f"slice(sig, {b * rows_per_band + 1}, {rows_per_band})"
         if hash_mode == "portable":
-            return F.array_join(F.transform(sl, lambda x: x.cast("string")), ",")
-        return F.xxhash64(sl)
+            return f"array_join(transform({sl}, x -> CAST(x AS STRING)), ',')"
+        return f"xxhash64({sl})"
 
-    return sigs.select(
-        key,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"), band_key(b).alias("band_hash")
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select(key, "band.band_id", "band.band_hash")
+    structs = ", ".join(
+        f"struct({b} AS band_id, {band_key(b)} AS band_hash)" for b in range(bands)
+    )
+    return sigs.selectExpr(_q(key), f"explode(array({structs})) AS band").selectExpr(
+        _q(key), "band.band_id", "band.band_hash"
+    )
 
 
 def minhash_lsh_candidates(
@@ -357,35 +355,24 @@ def _banded_candidates(banded: DataFrame, key: str) -> DataFrame:
     """Bucket self-join over (band_id, band_hash): the candidate pairs.
     Shared by minhash_lsh_candidates and minhash_lsh_pairs so a fix to
     candidate generation lands once."""
-    a = banded.select(F.col(key).alias("a"), "band_id", "band_hash")
-    b = banded.select(F.col(key).alias("b"), "band_id", "band_hash")
+    a = banded.selectExpr(f"{_q(key)} AS a", "band_id", "band_hash")
+    b = banded.selectExpr(f"{_q(key)} AS b", "band_id", "band_hash")
     return (
         a.join(b, ["band_id", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
+        .filter("a < b")
+        .selectExpr("a", "b")
         .distinct()
     )
 
 
 def _estimate_from_sigs(pairs: DataFrame, sigs: DataFrame, key: str, k: int) -> DataFrame:
-    sa = sigs.select(F.col(key).alias("a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(key).alias("b"), F.col("sig").alias("sig_b"))
+    sa = sigs.selectExpr(f"{_q(key)} AS a", "sig AS sig_a")
+    sb = sigs.selectExpr(f"{_q(key)} AS b", "sig AS sig_b")
+    same = "size(filter(zip_with(sig_a, sig_b, (x, y) -> CAST(x = y AS INT)), v -> v = 1))"
     return (
         pairs.join(sa, "a")
         .join(sb, "b")
-        .withColumn(
-            "jaccard_est",
-            F.size(
-                F.filter(
-                    F.zip_with(
-                        "sig_a", "sig_b", lambda x, y: (x == y).cast("int")
-                    ),
-                    lambda v: v == 1,
-                )
-            ).cast("double")
-            / k,
-        )
-        .select("a", "b", "jaccard_est")
+        .selectExpr("a", "b", f"CAST({same} AS DOUBLE) / {k} AS jaccard_est")
     )
 
 
@@ -431,8 +418,8 @@ def _checkpoint_sig(edges: DataFrame) -> tuple[DataFrame, tuple]:
     obs = Observation()
     edges = edges.observe(
         obs,
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
+        F.expr("count(1) AS n"),
+        F.expr("sum(CAST(xxhash64(a, b) AS DECIMAL(38,0))) AS h"),
     ).localCheckpoint(eager=True)
     r = obs.get
     return edges, (r["n"], r["h"])
@@ -448,12 +435,11 @@ def _large_star(edges: DataFrame) -> DataFrame:
     memory. Every output edge points from a larger node to a smaller
     one. The output may repeat an edge; ``_small_star`` removes repeats,
     so no shuffle is spent on them here."""
-    sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    m = F.least(F.min("b").over(Window.partitionBy("a")), F.col("a"))
+    sym = edges.union(edges.selectExpr("b AS a", "a AS b"))
     return (
-        sym.select("a", "b", m.alias("m"))
-        .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
+        sym.selectExpr("a", "b", "least(min(b) OVER (PARTITION BY a), a) AS m")
+        .filter("b > a")
+        .selectExpr("b AS a", "m AS b")
     )
 
 
@@ -463,10 +449,11 @@ def _small_star(edges: DataFrame) -> DataFrame:
     already points from the larger node ``a`` to the smaller ``b``, so a
     node's smaller neighbors are the ``b`` of its own edges (a window,
     as in ``_large_star``). The output points the same way."""
-    m = F.min("b").over(Window.partitionBy("a"))
     return (
-        edges.select(F.explode(F.array("b", "a")).alias("a"), m.alias("b"))
-        .filter(F.col("a") != F.col("b"))
+        edges.selectExpr(
+            "explode(array(b, a)) AS a", "min(b) OVER (PARTITION BY a) AS b"
+        )
+        .filter("a != b")
         .distinct()
     )
 
@@ -487,8 +474,8 @@ def _star_components(pairs: DataFrame, max_iter: int) -> tuple[DataFrame, int, b
     ``pairs`` is already a converged star."""
     # pairs evaluated ONCE: the upstream pair-generation plan (the full
     # n-gram chain, seconds per pass at sf1) must not re-run per branch
-    raw = pairs.select("a", "b").localCheckpoint(eager=True)
-    edges = raw.filter(F.col("a") != F.col("b"))
+    raw = pairs.selectExpr("a", "b").localCheckpoint(eager=True)
+    edges = raw.filter("a != b")
     sig, rounds, converged = None, 0, False
     for rounds in range(1, max_iter + 1):
         edges, new_sig = _checkpoint_sig(_small_star(_large_star(edges)))
@@ -507,11 +494,11 @@ def _star_components(pairs: DataFrame, max_iter: int) -> tuple[DataFrame, int, b
     # itself and its edges' targets (roots and singletons label
     # themselves)
     labels = (
-        raw.select(F.col("a").alias("node"), F.col("a").alias("label"))
-        .union(raw.select(F.col("b").alias("node"), F.col("b").alias("label")))
-        .union(edges.select(F.col("a").alias("node"), F.col("b").alias("label")))
+        raw.selectExpr("a AS node", "a AS label")
+        .union(raw.selectExpr("b AS node", "b AS label"))
+        .union(edges.selectExpr("a AS node", "b AS label"))
         .groupBy("node")
-        .agg(F.min("label").alias("label"))
+        .agg(F.expr("min(label) AS label"))
     )
     return labels, rounds, converged
 
@@ -537,7 +524,7 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             RuntimeWarning,
             stacklevel=2,
         )
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster"))
+    return labels.selectExpr("node AS doc_id", "label AS cluster")
 
 
 def simhash64(text_col: str = "text", hash_mode: str = "xxhash64") -> F.Column:
@@ -556,7 +543,9 @@ def simhash_from_words(wcol: F.Column, hash_mode: str = "xxhash64") -> F.Column:
     """simhash64 over an ALREADY-distinct words array (the
     ``dedup_pipeline`` entry point — tokenization shared upstream)."""
     masks = F.array(*[F.lit(1 << i).cast("long") for i in range(63)])
-    wh = F.transform(wcol, lambda t: _hash64(t, hash_mode))
+    wh = F.transform(
+        wcol, lambda t: portable_hash60(t) if hash_mode == "portable" else F.xxhash64(t)
+    )
     counters = F.aggregate(
         wh,
         F.array_repeat(F.lit(0), 63),
@@ -586,20 +575,19 @@ def _simhash_sigs_from_word_rows(rows: DataFrame, key: str, hcol: str) -> DataFr
     zip_with walk (``simhash_from_words``) evaluates interpreted per
     element — measured ~8x on the sf1 corpus (OPTIMIZATION_r06.md). The
     bit composition sums 63 DISJOINT powers of two, i.e. a bitwise OR."""
-    h = F.col(hcol)
+    h = _q(hcol)
     aggs = [
-        F.sum(
-            F.when(h.bitwiseAND(F.lit(1 << i).cast("long")) != 0, 1).otherwise(0)
-        ).alias(f"_s{i}")
+        F.expr(
+            f"sum(CASE WHEN ({h} & CAST({1 << i} AS BIGINT)) != 0 THEN 1 ELSE 0 END) AS _s{i}"
+        )
         for i in range(63)
     ]
-    counted = rows.groupBy(key).agg(F.count(F.lit(1)).alias("_n"), *aggs)
-    sim = F.lit(0).cast("long")
-    for i in range(63):
-        sim = sim + F.when(
-            F.col(f"_s{i}") * 2 > F.col("_n"), F.lit(1 << i).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return counted.select(F.col(key), sim.alias("sh"))
+    counted = rows.groupBy(key).agg(F.expr("count(1) AS _n"), *aggs)
+    sim = "CAST(0 AS BIGINT)" + "".join(
+        f" + CASE WHEN _s{i} * 2 > _n THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for i in range(63)
+    )
+    return counted.selectExpr(_q(key), f"{sim} AS sh")
 
 
 def simhash_near_dup_pairs(
@@ -624,9 +612,12 @@ def simhash_near_dup_pairs(
     would emit a C(N,2) clique of meaningless "near-dups" — the exact
     explosion the blocking exists to prevent (and a divergence from the
     word-level oracle, which produces no rows for them)."""
-    wrows = spread_small_input(df, key, min_bytes=1 << 20).select(
-        F.col(key), F.explode(F.array_distinct(words(text))).alias("_w")
-    ).select(F.col(key), _hash64(F.col("_w"), hash_mode).alias("_h"))
+    kq = _q(key)
+    wrows = (
+        spread_small_input(df, key, min_bytes=1 << 20)
+        .selectExpr(kq, f"explode(array_distinct({_words_sql(_q(text))})) AS _w")
+        .selectExpr(kq, f"{_hash64('_w', hash_mode)} AS _h")
+    )
     sh = _simhash_sigs_from_word_rows(wrows, key, "_h").persist()
     return _simhash_pairs_from_sigs(sh, key, max_hamming)
 
@@ -647,46 +638,31 @@ def _simhash_pairs_from_sigs(
     already carries. Exactly one copy of each candidate survives, so the
     output set is identical and the candidate expansion goes straight
     from the join into the Hamming filter with zero extra exchanges."""
-    blocks = sh.select(
-        key,
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        F.shiftright("sh", i * 16).bitwiseAND(F.lit(0xFFFF)).alias("bh"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select(key, "sh", "b.blk", "b.bh")
-    a = blocks.select(F.col(key).alias("a"), F.col("sh").alias("sha"), "blk", "bh")
-    b = blocks.select(F.col(key).alias("b"), F.col("sh").alias("shb"), "blk", "bh")
+    def _blk(col: str, i: int) -> str:
+        return f"(shiftright({col}, {i * 16}) & 65535)"
 
-    def _blk(col: str, i: int) -> F.Column:
-        return F.shiftright(col, i * 16).bitwiseAND(F.lit(0xFFFF))
+    kq = _q(key)
+    structs = ", ".join(f"struct({i} AS blk, {_blk('sh', i)} AS bh)" for i in range(4))
+    blocks = sh.selectExpr(kq, "sh", f"explode(array({structs})) AS b").selectExpr(
+        kq, "sh", "b.blk", "b.bh"
+    )
+    a = blocks.selectExpr(f"{kq} AS a", "sh AS sha", "blk", "bh")
+    b = blocks.selectExpr(f"{kq} AS b", "sh AS shb", "blk", "bh")
 
-    first_match = F.lit(True)
+    first_match = "true"
     for i in range(1, 4):
-        earlier_all_differ = F.lit(True)
-        for j in range(i):
-            earlier_all_differ = earlier_all_differ & (
-                _blk("sha", j) != _blk("shb", j)
-            )
-        first_match = F.when(F.col("blk") == i, earlier_all_differ).otherwise(
-            first_match
+        earlier_all_differ = " AND ".join(
+            ["true"] + [f"{_blk('sha', j)} != {_blk('shb', j)}" for j in range(i)]
+        )
+        first_match = (
+            f"CASE WHEN blk = {i} THEN ({earlier_all_differ}) ELSE {first_match} END"
         )
     return (
         a.join(b, ["blk", "bh"])
-        .filter(F.col("a") < F.col("b"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("sha").bitwiseXOR(F.col("shb"))).cast("int"),
-        )
-        .filter((F.col("hamming") <= max_hamming) & first_match)
-        .select("a", "b", "hamming")
+        .filter("a < b")
+        .selectExpr("*", "CAST(bit_count(sha ^ shb) AS INT) AS hamming")
+        .filter(f"hamming <= {int(max_hamming)} AND {first_match}")
+        .selectExpr("a", "b", "hamming")
     )
 
 
@@ -721,40 +697,39 @@ def dedup_pipeline(
     Each is bit-identical to its standalone function at the same
     parameters (tested). The persisted intermediates live until the
     session drops them — call ``spark.catalog.clearCache()`` when done."""
+    kq, tq = _q(key), _q(text)
     base = (
         spread_small_input(df, key, min_bytes=1 << 20)
-        .filter(F.col(text).isNotNull())
-        .select(
-            F.col(key),
-            F.array_distinct(words(text)).alias("_w"),
-            word_shingles(text, n).alias("_sh"),
-            content_fingerprint(text).alias("_fp"),
+        .filter(f"{tq} IS NOT NULL")
+        .selectExpr(
+            kq,
+            f"array_distinct({_words_sql(tq)}) AS _w",
+            f"{_shingles_sql(tq, n)} AS _sh",
+            f"md5({tq}) AS _fp",
         )
         .persist()
     )
     exact = (
         base.groupBy("_fp")
-        .agg(F.min(key).alias("keeper"), F.count(F.lit(1)).alias("n_copies"))
-        .filter(F.col("n_copies") > 1)
-        .select("keeper", "n_copies")
+        .agg(F.expr(f"min({kq}) AS keeper"), F.expr("count(1) AS n_copies"))
+        .filter("n_copies > 1")
+        .selectExpr("keeper", "n_copies")
     )
-    sh_rows = base.select(F.col(key), F.explode("_sh").alias("shingle"))
+    sh_rows = base.selectExpr(kq, "explode(_sh) AS shingle")
     if hash_shingles:
         # see ngram_jaccard_pairs: 8-byte shuffle keys instead of strings
-        sh_rows = sh_rows.select(
-            F.col(key), _hash64(F.col("shingle"), hash_shingles).alias("shingle")
-        )
+        sh_rows = sh_rows.selectExpr(kq, f"{_hash64('shingle', hash_shingles)} AS shingle")
     ngram_pairs = _pairs_from_shingle_rows(sh_rows, key, threshold, df_cap).persist()
     clusters = dup_clusters(ngram_pairs)
     sigs = _sigs_from_shingled(
-        base.select(key, "_sh"), key, "_sh", k, seed, hash_mode
+        base.selectExpr(kq, "_sh"), key, "_sh", k, seed, hash_mode
     ).persist()
     minhash_pairs = _estimate_from_sigs(
         _banded_candidates(_banded(sigs, key, k, bands, hash_mode), key), sigs, key, k
     )
     sim_sigs = _simhash_sigs_from_word_rows(
-        base.select(F.col(key), F.explode("_w").alias("_we")).select(
-            F.col(key), _hash64(F.col("_we"), hash_mode).alias("_h")
+        base.selectExpr(kq, "explode(_w) AS _we").selectExpr(
+            kq, f"{_hash64('_we', hash_mode)} AS _h"
         ),
         key,
         "_h",

@@ -42,8 +42,8 @@ def spread_small_input(
     session's shuffle parallelism AND carries enough input bytes for the
     exchange to pay for itself. Use directly after a scan that feeds
     per-row-expensive map work. The partition/size probes are plan-time
-    only (file listing, no job); the repartition count is
-    user-specified, so AQE will not re-coalesce it.
+    only (plan statistics, no job and no filesystem call); the
+    repartition count is user-specified, so AQE will not re-coalesce it.
 
     Pass the row ``key`` whenever one exists: hash repartitioning is
     retry-deterministic by content, while a keyless round-robin
@@ -56,27 +56,36 @@ def spread_small_input(
     ~100ms of fixed stage/scheduling cost; below a few MB of input
     there is no serialized work worth parallelizing (measured: the
     sf0.1 events table, 1.6 MB, LOST ~1s to an unconditional spread
-    while the sf1 table, 16 MB, gained 3-5s). Unknown input size (no
-    file-backed scan) falls back to spreading on partition count
-    alone."""
+    while the sf1 table, 16 MB, gained 3-5s). Unknown input size (a
+    source that is not a file scan) falls back to spreading on
+    partition count alone."""
     if target is None:
         target = shuffle_parallelism(df)
     if df.rdd.getNumPartitions() >= target:
         return df
-    try:
-        import os
-        from urllib.parse import urlparse
-
-        files = df.inputFiles()
-        total = sum(
-            os.path.getsize(urlparse(f).path or f) for f in files
-        )
-        if files and total < min_bytes:
-            return df
-    except Exception:
-        pass  # undeterminable input size: spread on partition count
+    size = _file_scan_bytes(df)
+    if size is not None and size < min_bytes:
+        return df
     if key is not None:
         from pyspark.sql import functions as F
 
         return df.repartition(target, F.col(key))
     return df.repartition(target)
+
+
+def _file_scan_bytes(df: DataFrame) -> int | None:
+    """Bytes of the files ``df`` scans: the sum of its file-scan leaves'
+    ``sizeInBytes`` statistic, which the file index recorded when it
+    listed the files. None when some leaf of the plan is not a file scan
+    (in-memory rows, a range), whose size says nothing about source
+    bytes."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation" or (
+            leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"
+        ):
+            return None
+        total += leaf.stats().sizeInBytes()
+    return total

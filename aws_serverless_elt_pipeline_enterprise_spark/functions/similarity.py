@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import _q
+
 
 def dot(a: F.Column, b: F.Column) -> F.Column:
     return F.aggregate(
@@ -42,6 +44,22 @@ def l2_norm(a: F.Column) -> F.Column:
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
+    )
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """``dot`` as SQL text over two array expressions."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        f"0.0D, (acc, v) -> acc + v)"
+    )
+
+
+def _l2_norm_sql(a: str) -> str:
+    """``l2_norm`` as SQL text over an array expression."""
+    return (
+        f"sqrt(aggregate(transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
+        f"0.0D, (acc, v) -> acc + v))"
     )
 
 
@@ -91,7 +109,7 @@ def quantized_cosine_topk(
     if nb == 0:
         raise ValueError("zero-norm query vector: cosine undefined")
     scored = (
-        df.select(F.col(id_col), _quantize(F.col(vec_col), scale).alias("qv"))
+        df.selectExpr(_q(id_col), f"{_quantize(_q(vec_col), scale)} AS qv")
         .select(
             id_col,
             _qdot(F.col("qv"), qlit).alias("dot_q"),
@@ -118,10 +136,10 @@ def quantized_cosine_topk(
     return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
 
 
-def _quantize(col: F.Column, scale: int) -> F.Column:
-    return F.transform(
-        col, lambda x: F.floor(x.cast("double") * F.lit(float(scale))).cast("long")
-    )
+def _quantize(c: str, scale: int) -> str:
+    """SQL text flooring each component of the array expression ``c``
+    times ``scale`` to a bigint."""
+    return f"transform({c}, x -> CAST(floor(CAST(x AS DOUBLE) * {float(scale)!r}D) AS BIGINT))"
 
 
 def _qdot(qa: F.Column, qb: F.Column) -> F.Column:
@@ -182,7 +200,7 @@ def _ivf_assign(
     # norms computed ONCE per vector/centroid; each pair then costs one
     # dot fold + a scalar divide (the norm fold per pair was the hot spot)
     qd = (
-        df.select(F.col(id_col), _quantize(F.col(vec_col), scale).alias("qv"))
+        df.selectExpr(_q(id_col), f"{_quantize(_q(vec_col), scale)} AS qv")
         .withColumn("nv", _qnorm(F.col("qv")))
         # zero-norm vectors carry no direction: excluded from the index
         # (as members AND as centroid candidates) — their 0/0 cosine is
@@ -461,32 +479,31 @@ def hyperplane_signature(
     ONE fold over the (value, index) pairs carries an n_bits-wide
     projection accumulator — same signature bits (identical hash
     inputs), ~n_bits-fold less work per row."""
-    bit_idx = F.array(*[F.lit(i) for i in range(n_bits)])
-    masks = F.array(*[F.lit(1 << i) for i in range(n_bits)])
-    pairs = F.zip_with(
-        F.col(vec_col),
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda x, j: F.struct(x.cast("double").alias("x"), j.alias("j")),
+    return F.expr(_hyperplane_sql(_q(vec_col), dim, n_bits, seed))
+
+
+def _hyperplane_sql(v: str, dim: int, n_bits: int, seed: int) -> str:
+    """SQL text of ``hyperplane_signature`` over the array expression ``v``."""
+    pairs = f"zip_with({v}, sequence(0, {dim - 1}), (x, j) -> struct(CAST(x AS DOUBLE) AS x, j AS j))"
+    sign = f"CASE WHEN pmod(xxhash64(e.j, i, {seed}), 2) = 0 THEN 1.0D ELSE -1.0D END"
+    projs = (
+        f"aggregate({pairs}, array_repeat(0.0D, {n_bits}), (acc, e) -> "
+        f"zip_with(acc, {_bit_idx(n_bits)}, (a, i) -> a + e.x * {sign}))"
     )
-    projs = F.aggregate(
-        pairs,
-        F.array_repeat(F.lit(0.0), n_bits),
-        lambda acc, e: F.zip_with(
-            acc,
-            bit_idx,
-            lambda a, i: a
-            + e["x"]
-            * F.when(
-                F.pmod(F.xxhash64(e["j"], i, F.lit(seed)), F.lit(2)) == 0, 1.0
-            ).otherwise(-1.0),
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            projs, masks, lambda p, m: F.when(p > 0, m).otherwise(F.lit(0))
-        ),
-        F.lit(0),
-        lambda acc, v: acc.bitwiseOR(v),
+    return _sig_bits(projs, n_bits)
+
+
+def _bit_idx(n_bits: int) -> str:
+    return f"array({', '.join(str(i) for i in range(n_bits))})"
+
+
+def _sig_bits(projs: str, n_bits: int) -> str:
+    """SQL text folding the projection array ``projs`` into the signature:
+    bit i is set iff projection i is positive."""
+    masks = ", ".join(str(1 << i) for i in range(n_bits))
+    return (
+        f"aggregate(zip_with({projs}, array({masks}), (p, m) -> CASE WHEN p > 0 THEN m ELSE 0 END), "
+        f"0, (acc, v) -> acc | v)"
     )
 
 
@@ -524,42 +541,31 @@ def quantized_hyperplane_signature(
     Same single-fold shape as ``hyperplane_signature``; weights differ
     (md5 family vs xxhash64), so signatures are NOT comparable across
     the two modes."""
-    wlit = F.lit(
-        [[w for w in row] for row in portable_lsh_weights(dim, n_bits, seed)]
+    return F.expr(_quantized_hyperplane_sql(_q(vec_col), dim, n_bits, seed, scale))
+
+
+def _quantized_hyperplane_sql(v: str, dim: int, n_bits: int, seed: int, scale: int) -> str:
+    """SQL text of ``quantized_hyperplane_signature`` over the array
+    expression ``v``."""
+    w = ", ".join(
+        f"array({', '.join(map(str, row))})" for row in portable_lsh_weights(dim, n_bits, seed)
     )
-    bit_idx = F.array(*[F.lit(i) for i in range(n_bits)])
-    masks = F.array(*[F.lit(1 << i) for i in range(n_bits)])
-    qv = _quantize(F.col(vec_col), scale)
-    pairs = F.zip_with(
-        qv,
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda x, j: F.struct(x.alias("x"), j.alias("j")),
+    pairs = f"zip_with({_quantize(v, scale)}, sequence(0, {dim - 1}), (x, j) -> struct(x AS x, j AS j))"
+    projs = (
+        f"aggregate({pairs}, array_repeat(CAST(0 AS BIGINT), {n_bits}), (acc, e) -> "
+        f"zip_with(acc, {_bit_idx(n_bits)}, "
+        f"(a, i) -> a + e.x * element_at(element_at(array({w}), i + 1), e.j + 1)))"
     )
-    projs = F.aggregate(
-        pairs,
-        F.array_repeat(F.lit(0).cast("long"), n_bits),
-        lambda acc, e: F.zip_with(
-            acc,
-            bit_idx,
-            lambda a, i: a
-            + e["x"] * F.element_at(F.element_at(wlit, i + 1), e["j"] + 1),
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            projs, masks, lambda p, m: F.when(p > 0, m).otherwise(F.lit(0))
-        ),
-        F.lit(0),
-        lambda acc, v: acc.bitwiseOR(v),
-    )
+    return _sig_bits(projs, n_bits)
 
 
 def _sig_expr(
-    vec_col: str, dim: int, n_bits: int, seed: int, sig_mode: str, scale: int
-) -> F.Column:
+    v: str, dim: int, n_bits: int, seed: int, sig_mode: str, scale: int
+) -> str:
+    """SQL text of the ``sig_mode`` signature of the array expression ``v``."""
     if sig_mode == "portable":
-        return quantized_hyperplane_signature(vec_col, dim, n_bits, seed, scale)
-    return hyperplane_signature(vec_col, dim, n_bits, seed)
+        return _quantized_hyperplane_sql(v, dim, n_bits, seed, scale)
+    return _hyperplane_sql(v, dim, n_bits, seed)
 
 
 def _query_signature(
@@ -578,7 +584,7 @@ def _query_signature(
         [(query_vec,)],
         T.StructType([T.StructField("qv", T.ArrayType(T.FloatType()))]),
     ).withColumn(
-        "qsig", _sig_expr("qv", len(query_vec), n_bits, seed, sig_mode, scale)
+        "qsig", F.expr(_sig_expr("qv", len(query_vec), n_bits, seed, sig_mode, scale))
     )
     return qdf.collect()[0]["qsig"]
 
@@ -633,8 +639,9 @@ def build_lsh_index(
     import json as _json
     import os as _os
 
-    rows = df.filter(F.col(vec_col).isNotNull())
-    first = rows.select(vec_col).first()
+    vq = _q(vec_col)
+    rows = df.filter(f"{vq} IS NOT NULL")
+    first = rows.selectExpr(vq).first()
     meta = {
         "id_col": id_col,
         "vec_col": vec_col,
@@ -647,12 +654,10 @@ def build_lsh_index(
         "id_type": df.schema[id_col].dataType.json(),
     }
     if not meta["empty"]:
-        sigs = rows.select(
-            F.col(id_col),
-            F.col(vec_col),
-            _sig_expr(vec_col, meta["dim"], n_bits, seed, sig_mode, scale).alias(
-                "sig"
-            ),
+        sigs = rows.selectExpr(
+            _q(id_col),
+            vq,
+            f"{_sig_expr(vq, meta['dim'], n_bits, seed, sig_mode, scale)} AS sig",
         )
         (
             sigs.repartition("sig")
@@ -744,9 +749,8 @@ def lsh_index_topk(
         if nb == 0:
             raise ValueError("zero-norm query vector: cosine undefined")
         qn = F.sqrt(F.lit(float(nb)))
-        qd = cand.select(
-            F.col(id_col),
-            _quantize(F.col(vec_col), meta.get("scale", 16384)).alias("qv"),
+        qd = cand.selectExpr(
+            _q(id_col), f"{_quantize(_q(vec_col), meta.get('scale', 16384))} AS qv"
         ).withColumn("nv", _qnorm(F.col("qv")))
         return _score_topk(qd.filter(F.col("nv") > 0), qlit, qn, k, id_col)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
@@ -792,35 +796,23 @@ def _sig_verify_pairs(
     float path stays JVM-side: a numpy float accumulation re-orders the
     sum and flips last-ulp bits, which the quantized design exists to
     avoid."""
-    vcol = F.col(vec_col)
     if quantized:
         return _sig_verify_pairs_quantized_np(
             sigs, threshold, id_col, vec_col, scale
         )
-    sigs = sigs.withColumn("__n", l2_norm(vcol))
+    iq, vq = _q(id_col), _q(vec_col)
     # zero-norm rows drop on BOTH paths: cosine() would NULL them out
     # post-join anyway (never NaN-first), so pre-filtering is equivalent
     # and skips their pair fan-out entirely
-    sigs = sigs.filter(F.col("__n") > 0)
-    a = sigs.select(
-        F.col(id_col).alias("a"),
-        F.col(vec_col).alias("va"),
-        F.col("__n").alias("na"),
-        F.col("sig"),
-    )
-    b = sigs.select(
-        F.col(id_col).alias("b"),
-        F.col(vec_col).alias("vb"),
-        F.col("__n").alias("nb"),
-        F.col("sig"),
-    )
-    prod = dot(F.col("va"), F.col("vb"))
+    sigs = sigs.selectExpr("*", f"{_l2_norm_sql(vq)} AS __n").filter("__n > 0")
+    a = sigs.selectExpr(f"{iq} AS a", f"{vq} AS va", "__n AS na", "sig")
+    b = sigs.selectExpr(f"{iq} AS b", f"{vq} AS vb", "__n AS nb", "sig")
     return (
         a.join(b, "sig")
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("cos_sim", prod / (F.col("na") * F.col("nb")))
-        .filter(F.col("cos_sim") >= threshold)
-        .select("a", "b", "cos_sim")
+        .filter("a < b")
+        .selectExpr("*", f"{_dot_sql('va', 'vb')} / (na * nb) AS cos_sim")
+        .filter(f"cos_sim >= {float(threshold)!r}D")
+        .selectExpr("a", "b", "cos_sim")
     )
 
 
@@ -908,8 +900,8 @@ def _sig_verify_pairs_quantized_np(
     # NULL vectors drop here (the old path's __n > 0 filter caught them
     # post-quantize; np.stack would die on them)
     return (
-        sigs.select(F.col(id_col), F.col(vec_col), F.col("sig"))
-        .filter(F.col(vec_col).isNotNull())
+        sigs.selectExpr(_q(id_col), _q(vec_col), "sig")
+        .filter(f"{_q(vec_col)} IS NOT NULL")
         .groupBy("sig")
         .applyInPandas(verify, out_schema)
     )
@@ -933,7 +925,8 @@ def embedding_near_dup_pairs(
     An empty (or all-NULL-vector) input yields zero pairs, like every
     other pair generator in the family — the dim probe must not die on
     first() returning None mid-pipeline."""
-    first = df.filter(F.col(vec_col).isNotNull()).select(vec_col).first()
+    vq = _q(vec_col)
+    first = df.filter(f"{vq} IS NOT NULL").selectExpr(vq).first()
     if first is None:
         return df.sparkSession.createDataFrame(
             [],
@@ -946,10 +939,8 @@ def embedding_near_dup_pairs(
             ),
         )
     dim = len(first[0])
-    sigs = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        _sig_expr(vec_col, dim, n_bits, seed, sig_mode, scale).alias("sig"),
+    sigs = df.selectExpr(
+        _q(id_col), vq, f"{_sig_expr(vq, dim, n_bits, seed, sig_mode, scale)} AS sig"
     )
     return _sig_verify_pairs(
         sigs,

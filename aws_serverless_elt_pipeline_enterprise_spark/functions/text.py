@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import _q
+
 # tiny public stopword lists (language-ID heuristic)
 STOPWORDS = {
     "en": ("the", "a", "of", "and", "to", "in", "is", "it"),
@@ -22,6 +24,12 @@ STOPWORDS = {
 BPE_ISH_REGEX = "[A-Za-z]+|[0-9]"
 
 
+def _words_sql(c: str) -> str:
+    """SQL text of ``words`` over the SQL expression ``c``, for building
+    plans from text (one parse instead of a pyspark call per operator)."""
+    return f"filter(split(trim({c}), '[ \\t\\n\\r]+'), w -> w != '')"
+
+
 def words(col: str = "text") -> F.Column:
     """Canonical whitespace tokenization: split on runs of space / tab /
     newline / CR, empty tokens dropped. The explicit class (not regex
@@ -30,9 +38,7 @@ def words(col: str = "text") -> F.Column:
     filter matters twice: split('') yields [''] (a phantom token that
     made empty docs count n_words=1), and a leading newline survives
     trim (which strips spaces only), yielding a leading ''."""
-    return F.filter(
-        F.split(F.trim(F.col(col)), "[ \t\n\r]+"), lambda w: w != ""
-    )
+    return F.expr(_words_sql(_q(col)))
 
 
 def ws_token_count(col: str = "text") -> F.Column:

@@ -1,19 +1,20 @@
-"""The served CDC path's driver cost: lookup buckets hashed on the driver
+"""Driver cost. The served CDC path: lookup buckets hashed on the driver
 (bit-equal to Spark's ``xxhash64``), a Py4J round-trip budget for one tail
 ``refresh_views`` and one ``lookup``, a Spark-job budget for one tail
-refresh, and the SQL-text plans on column names that need quoting."""
+refresh, and the SQL-text plans on column names that need quoting. The
+near-dup curation steps: a Py4J round-trip budget for building each
+step's plan."""
 
 from __future__ import annotations
 
-import contextlib
 import random
-import uuid
 
 import pytest
-from py4j.java_gateway import GatewayClient
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_serverless_elt_pipeline_enterprise_spark.functions import dedupe as dd
+from aws_serverless_elt_pipeline_enterprise_spark.functions import similarity as sim
 from aws_serverless_elt_pipeline_enterprise_spark.operators.incremental_agg import (
     MaterializedAggregate,
 )
@@ -30,43 +31,6 @@ from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import (
     SnapshotTable,
     spark_xxhash64,
 )
-
-
-@contextlib.contextmanager
-def py4j_calls():
-    """Count Py4J commands sent while the block runs. Memory-release
-    commands ("m") are skipped: they follow Python garbage collection,
-    not the code under test."""
-    count = [0]
-    orig = GatewayClient.send_command
-
-    def counting(self, command, *args, **kwargs):
-        if not command.startswith("m\n"):
-            count[0] += 1
-        return orig(self, command, *args, **kwargs)
-
-    GatewayClient.send_command = counting
-    try:
-        yield count
-    finally:
-        GatewayClient.send_command = orig
-
-
-@contextlib.contextmanager
-def spark_jobs(spark):
-    """Collect the ids of the Spark jobs the block runs, through a job
-    group of its own."""
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex[:8]}"
-    ids: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        # the status tracker learns of jobs from the listener bus
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _spark_hashes(spark, values, dtype):
@@ -108,7 +72,7 @@ def _spark_buckets(spark, values, vtype, nb):
         ("int", [1, -5, 2**31 - 1, "  42 ", "+7", "-2147483648", None]),
     ],
 )
-def test_buckets_for_matches_spark(spark, tmp_path, key_type, probes):
+def test_buckets_for_matches_spark(spark, tmp_path, key_type, probes, py4j_calls):
     """A string bucket column hashes on the driver with no Py4J call; an
     int one runs the Spark hash. Both equal the Spark computation."""
     t = SnapshotTable(spark, str(tmp_path / "t"), key_col="k", n_buckets=13)
@@ -128,7 +92,7 @@ def test_buckets_for_matches_spark(spark, tmp_path, key_type, probes):
 # ------------------------------------------------------------ round-trip budget
 
 
-def test_served_tail_round_trip_budget(spark, tmp_path):
+def test_served_tail_round_trip_budget(spark, tmp_path, py4j_calls):
     """One tail epoch on a table with the change-log event schema: the
     view refresh and a 10-key lookup stay within a fixed Py4J budget
     (each pyspark Column call costs ~13-19 round trips, so building a
@@ -157,13 +121,36 @@ def test_served_tail_round_trip_budget(spark, tmp_path):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, want.collect()))
 
 
+def test_near_dup_build_round_trip_budget(spark, sf_dir, py4j_calls):
+    """Building (not running) each near-dup step over a parquet corpus
+    stays within a fixed Py4J budget. Plans built one pyspark Column call
+    per operator cost about 12k round trips for simhash (63 conditional
+    sums and a 63-term sum), 4k for minhash and 1.1k for the embedding
+    step; built from SQL text they cost a few hundred."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    steps = [
+        ("simhash_near_dup_pairs", lambda: dd.simhash_near_dup_pairs(docs), 1000),
+        ("minhash_lsh_pairs", lambda: dd.minhash_lsh_pairs(docs), 1000),
+        ("embedding_near_dup_pairs", lambda: sim.embedding_near_dup_pairs(vecs), 600),
+    ]
+    try:
+        for name, build, budget in steps:
+            build()  # the first call loads the JVM classes the plan needs
+            with py4j_calls() as calls:
+                build()
+            assert calls[0] <= budget, (name, calls[0], budget)
+    finally:
+        spark.catalog.clearCache()
+
+
 def _rows(spark, rows):
     return spark.createDataFrame(
         rows, "op string, doc_id string, seq long, grp string, val long"
     )
 
 
-def test_tail_refresh_spark_job_budget(spark, tmp_path):
+def test_tail_refresh_spark_job_budget(spark, tmp_path, spark_jobs):
     """A tail view refresh over a one-epoch merge-on-read span is one
     query: the change feed plans its candidate buckets from the bucket
     sets the commits recorded (no job), and the view folds its group-by,

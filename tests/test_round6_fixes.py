@@ -111,7 +111,7 @@ def test_quantized_near_dup_matches_jvm_join_bit_exact(spark, emb):
         ),
     )
     qd = sigs.select(
-        "vec_id", S._quantize(F.col("embedding"), scale).alias("qv"), "sig"
+        "vec_id", F.expr(S._quantize("embedding", scale)).alias("qv"), "sig"
     ).withColumn("n", S._qnorm(F.col("qv"))).filter(F.col("n") > 0)
     a = qd.select(
         F.col("vec_id").alias("a"), F.col("qv").alias("va"), F.col("n").alias("na"), "sig"
@@ -260,3 +260,22 @@ def test_spread_small_input_respects_min_bytes(spark, sf_dir):
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # the sf0.001 corpus is far below the floor: must be returned as-is
     assert spread_small_input(d, "doc_id", min_bytes=1 << 30) is d
+
+
+def test_spread_small_input_non_file_frame_spreads_on_partition_count(spark, monkeypatch):
+    """A source that is not a file scan has no input size: a one-partition
+    in-memory frame far below the byte floor still spreads, and the probe
+    reads the plan only (no filesystem call)."""
+    import os
+
+    def no_fs(path):
+        raise AssertionError(f"filesystem size probe: {path}")
+
+    monkeypatch.setattr(os.path, "getsize", no_fs)
+    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for df in (
+        spark.range(0, 100, 1, 1),
+        spark.createDataFrame([(i,) for i in range(100)], "id long").coalesce(1),
+    ):
+        out = spread_small_input(df, "id", min_bytes=1 << 30)
+        assert out.rdd.getNumPartitions() == target

@@ -1,7 +1,8 @@
 """SCD Type-2 history (operators/scd.py), the portable quantized
-embedding near-dup chain (functions/similarity.py) and near-dup
+embedding near-dup chain (functions/similarity.py), near-dup
 clusters: the connected components of ``dup_clusters``
-(functions/dedupe.py)."""
+(functions/dedupe.py), and recorded golden outputs of the near-dup
+functions in both hash modes."""
 
 from __future__ import annotations
 
@@ -10,10 +11,10 @@ import random
 import warnings
 
 from pyspark.sql import functions as F
-from test_driver_chatter import spark_jobs
 
 from aws_serverless_elt_pipeline_enterprise_spark.functions import dedupe as dd
 from aws_serverless_elt_pipeline_enterprise_spark.functions import similarity as sim
+from aws_serverless_elt_pipeline_enterprise_spark.functions import text as tx
 from aws_serverless_elt_pipeline_enterprise_spark.operators.scd import scd2_history
 
 
@@ -278,7 +279,7 @@ def test_dup_clusters_matches_union_find(spark):
         assert got == _union_find(pairs)
 
 
-def test_dup_clusters_spark_job_budget(spark):
+def test_dup_clusters_spark_job_budget(spark, spark_jobs):
     """A round's convergence signature is observed on the checkpoint
     that ends it, not computed by a query of its own. The
     propagation-then-star hybrid this replaced ran 25 Spark jobs on the
@@ -306,3 +307,204 @@ def test_dup_clusters_empty_pairs(spark):
             out = dd.dup_clusters(df, max_iter=max_iter)
         assert not [w for w in caught if "did not converge" in str(w.message)]
         assert out.columns == ["doc_id", "cluster"] and out.collect() == []
+
+
+# ------------------------------------------------------- golden outputs
+# Recorded outputs of the near-dup functions on a small fixture, in both
+# hash modes: the xxhash64 chains have no SQL oracle (DuckDB has no
+# xxhash64), so these literals are what pins them bit for bit.
+
+
+def _gtext(mul, off, mod, swaps=()):
+    w = [f"w{(i * mul + off) % mod}" for i in range(24)]
+    for i, s in swaps:
+        w[i] = s
+    return " ".join(w)
+
+
+GOLDEN_TEXTS = [
+    (1, _gtext(7, 3, 41)),
+    (2, _gtext(7, 3, 41, [(10, "zz")])),
+    (3, _gtext(7, 3, 41, [(20, "yy")])),
+    (4, _gtext(7, 3, 41)),
+    (5, _gtext(11, 5, 53)),
+    (6, _gtext(11, 5, 53, [(3, "qq"), (17, "rr")])),
+    (7, "one two"),
+    (8, "one  two"),
+    (9, ""),
+    (10, " \t\n "),
+    (11, None),
+    (12, "\nleading newline doc with words here ok"),
+    (13, _gtext(13, 1, 31)),
+    (14, "x y x y x y"),
+    (15, "a b\tc\n\nd  e"),
+]
+
+
+def _gvec(seed):
+    return [((seed * 5 + j * 3) % 17 - 8) / 16 for j in range(8)]
+
+
+GOLDEN_VECS = [
+    (1, _gvec(1)),
+    (2, [x + (1 / 16 if j == 2 else 0) for j, x in enumerate(_gvec(1))]),
+    (3, [2 * x for x in _gvec(1)]),  # same direction as 1
+    (4, _gvec(2)),
+    (5, _gvec(2)),
+    (6, _gvec(3)),
+    (7, [x + (1 / 8 if j == 5 else 0) for j, x in enumerate(_gvec(3))]),
+    (8, [0.0] * 8),  # zero norm
+    (9, None),
+    (10, _gvec(4)),
+]
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_golden_words_and_shingles(spark):
+    """``words`` and ``word_shingles``: recorded literals for the short
+    and degenerate texts, and a plain Python tokenizer for every text."""
+    d = spark.createDataFrame(GOLDEN_TEXTS, "doc_id bigint, text string")
+    got_w = dict(_sorted_rows(d.select("doc_id", tx.words("text"))))
+    got_sh = dict(_sorted_rows(d.select("doc_id", dd.word_shingles("text"))))
+    assert {i: got_w[i] for i in range(7, 16) if i != 13} == {
+        7: ["one", "two"], 8: ["one", "two"], 9: [], 10: [], 11: None,
+        12: ["leading", "newline", "doc", "with", "words", "here", "ok"],
+        14: ["x", "y", "x", "y", "x", "y"], 15: ["a", "b", "c", "d", "e"],
+    }
+    assert {i: got_sh[i] for i in range(7, 16) if i != 13} == {
+        7: [], 8: [], 9: [], 10: [], 11: [],
+        12: ["leading newline doc", "newline doc with", "doc with words",
+             "with words here", "words here ok"],
+        14: ["x y x", "y x y"], 15: ["a b c", "b c d", "c d e"],
+    }
+    for i, t in GOLDEN_TEXTS:
+        w = None if t is None else t.split()
+        assert got_w[i] == w
+        grams = [" ".join(w[j:j + 3]) for j in range(len(w) - 2)] if w else []
+        assert got_sh[i] == list(dict.fromkeys(grams))
+
+
+GOLDEN_SIMHASH64 = {
+    "xxhash64": [
+        (1, 3579964884834875393), (2, 3578698213077841920), (3, 3580246359811569812),
+        (4, 3579964884834875393), (5, 8199883237792964668), (6, 8199249988888617084),
+        (7, 4904811439740556417), (8, 4904811439740556417), (9, 0), (10, 0), (11, None),
+        (12, 6878019826385635575), (13, 1737917007194777760), (14, 1263286982824955969),
+        (15, 2116760566179865438),
+    ],
+    "portable": [
+        (1, 13306432135610916), (2, 13306466361119268), (3, 13235925818262052),
+        (4, 13306432135610916), (5, 189228532666910640), (6, 193820196773479600),
+        (7, 829371860452975793), (8, 829371860452975793), (9, 0), (10, 0), (11, None),
+        (12, 56392498253938235), (13, 227191714874122786), (14, 5919796378484736),
+        (15, 589467266665640827),
+    ],
+}
+GOLDEN_SIMHASH_PAIRS = {
+    ("xxhash64", 3): [(1, 4, 0), (7, 8, 0)],
+    ("xxhash64", 12): [(1, 3, 6), (1, 4, 0), (3, 4, 6), (7, 8, 0)],
+    ("portable", 3): [(1, 3, 3), (1, 4, 0), (3, 4, 3), (7, 8, 0)],
+    ("portable", 12): [
+        (1, 2, 4), (1, 3, 3), (1, 4, 0), (2, 3, 5), (2, 4, 4), (3, 4, 3), (7, 8, 0)
+    ],
+}
+GOLDEN_MINHASH_PAIRS = {
+    ("xxhash64", 32): [
+        (1, 2, 0.71875), (1, 3, 0.78125), (1, 4, 1.0), (2, 4, 0.71875),
+        (3, 4, 0.78125), (5, 6, 0.625),
+    ],
+    ("xxhash64", 12): [
+        (1, 2, 11 / 12), (1, 3, 8 / 12), (1, 4, 1.0), (2, 3, 8 / 12),
+        (2, 4, 11 / 12), (3, 4, 8 / 12), (5, 6, 8 / 12),
+    ],
+    ("portable", 32): [
+        (1, 2, 0.75), (1, 3, 0.78125), (1, 4, 1.0), (2, 4, 0.75),
+        (3, 4, 0.78125), (5, 6, 0.75),
+    ],
+    ("portable", 12): [
+        (1, 2, 11 / 12), (1, 3, 6 / 12), (1, 4, 1.0), (2, 3, 5 / 12),
+        (2, 4, 11 / 12), (3, 4, 6 / 12),
+    ],
+}
+GOLDEN_CLUSTERS = [(1, 1), (2, 1), (3, 1), (4, 1), (5, 5), (6, 5), (7, 7), (8, 7)]
+
+
+def test_golden_text_near_dup_chains(spark):
+    """``simhash64``, ``simhash_near_dup_pairs``, ``minhash_lsh_pairs``
+    (k=32/8 bands and k=12/4 bands, seed 7) and ``dup_clusters`` over
+    their union, in both hash modes. Empty, whitespace-only and NULL
+    texts sign to 0/NULL and pair with nothing."""
+    d = spark.createDataFrame(GOLDEN_TEXTS, "doc_id bigint, text string")
+    for hm in ("xxhash64", "portable"):
+        sigs = d.select("doc_id", dd.simhash64("text", hm))
+        assert _sorted_rows(sigs) == GOLDEN_SIMHASH64[hm], hm
+        for mh in (3, 12):
+            got = _sorted_rows(dd.simhash_near_dup_pairs(d, max_hamming=mh, hash_mode=hm))
+            assert got == GOLDEN_SIMHASH_PAIRS[(hm, mh)], (hm, mh)
+        mh32 = dd.minhash_lsh_pairs(d, k=32, bands=8, hash_mode=hm)
+        assert _sorted_rows(mh32) == GOLDEN_MINHASH_PAIRS[(hm, 32)], hm
+        mh12 = dd.minhash_lsh_pairs(d, k=12, bands=4, seed=7, hash_mode=hm)
+        assert _sorted_rows(mh12) == GOLDEN_MINHASH_PAIRS[(hm, 12)], hm
+        sp = dd.simhash_near_dup_pairs(d, max_hamming=12, hash_mode=hm)
+        pairs = mh32.select("a", "b").union(sp.select("a", "b"))
+        assert _sorted_rows(dd.dup_clusters(pairs)) == GOLDEN_CLUSTERS, hm
+
+
+GOLDEN_HYPERPLANE = {
+    ("xxhash64", 16): [
+        (1, 54468), (2, 54468), (3, 54468), (4, 15458), (5, 15458), (6, 49319),
+        (7, 16551), (8, 0), (9, None), (10, 60312),
+    ],
+    ("xxhash64", 6): [
+        (1, 61), (2, 61), (3, 61), (4, 28), (5, 28), (6, 50), (7, 0), (8, 0),
+        (9, None), (10, 39),
+    ],
+    ("portable", 16): [
+        (1, 44651), (2, 44651), (3, 44651), (4, 16292), (5, 16292), (6, 4500),
+        (7, 4500), (8, 0), (9, None), (10, 49899),
+    ],
+    ("portable", 6): [
+        (1, 56), (2, 58), (3, 56), (4, 37), (5, 37), (6, 21), (7, 23), (8, 0),
+        (9, None), (10, 10),
+    ],
+}
+_COS_12 = 0.9969657541302294
+GOLDEN_EMB_PAIRS = {
+    ("xxhash64", 16): [(1, 2, _COS_12), (1, 3, 1.0000000000000002), (2, 3, _COS_12), (4, 5, 1.0)],
+    ("xxhash64", 4): [
+        (1, 2, _COS_12), (1, 3, 1.0000000000000002), (2, 3, _COS_12), (4, 5, 1.0),
+        (6, 7, 0.9932793493858211),
+    ],
+    ("portable", 16): [
+        (1, 2, _COS_12), (1, 3, 1.0000000000000002), (2, 3, _COS_12), (4, 5, 1.0),
+        (6, 7, 0.9932793493858211),
+    ],
+    ("portable", 4): [(1, 2, _COS_12), (1, 3, 1.0000000000000002), (2, 3, _COS_12), (4, 5, 1.0)],
+}
+
+
+def test_golden_embedding_signatures_and_pairs(spark):
+    """``hyperplane_signature``, ``quantized_hyperplane_signature`` and
+    ``embedding_near_dup_pairs`` (``cos_sim`` to the last bit) under both
+    ``sig_mode``s, with a zero-norm and a NULL vector in the input."""
+    v = spark.createDataFrame(GOLDEN_VECS, "vec_id bigint, embedding array<float>")
+    sig_cols = {
+        ("xxhash64", 16): sim.hyperplane_signature("embedding", 8),
+        ("xxhash64", 6): sim.hyperplane_signature("embedding", 8, n_bits=6, seed=9),
+        ("portable", 16): sim.quantized_hyperplane_signature("embedding", 8),
+        ("portable", 6): sim.quantized_hyperplane_signature(
+            "embedding", 8, n_bits=6, seed=9, scale=1000
+        ),
+    }
+    for k, col in sig_cols.items():
+        assert _sorted_rows(v.select("vec_id", col)) == GOLDEN_HYPERPLANE[k], k
+    for mode in ("xxhash64", "portable"):
+        got = sim.embedding_near_dup_pairs(v, threshold=0.9, sig_mode=mode)
+        assert _sorted_rows(got) == GOLDEN_EMB_PAIRS[(mode, 16)], mode
+        got = sim.embedding_near_dup_pairs(
+            v, threshold=0.5, n_bits=4, seed=3, sig_mode=mode
+        )
+        assert _sorted_rows(got) == GOLDEN_EMB_PAIRS[(mode, 4)], mode

@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tableio.snapshot import SnapshotTable, _q, _sql_str
-from .cdf_consumer import derived_bookmark, rebuild_derived, span_epoch_id
+from .cdf_consumer import derived_bookmark, refresh_derived
 
 _SEP = "\x1f"
 _NULL = "\x00null"
@@ -132,64 +132,21 @@ class MaterializedAggregate:
             out.append(F.expr(f"{total} AS {_q(c)}"))
         return out
 
-    def _rebuild(self, to_version: int) -> dict:
-        """Bootstrap: recompute from the full source state and REPLACE
-        the aggregate table (wipe + fresh SnapshotTable), per the CDF
-        bootstrap contract."""
-        state = self.source.state(to_version)
-        rows = (
-            state.groupBy(F.expr(self._group_key()), *self.group_cols)
+    def _full_rows(self, to_version: int) -> DataFrame:
+        """Bootstrap rows: the aggregate recomputed from the full source
+        state at ``to_version``."""
+        return (
+            self.source.state(to_version)
+            .groupBy(F.expr(self._group_key()), *self.group_cols)
             .agg(*self._sums(self._contributions("1")))
             .withColumn("op", F.lit("update"))
             .withColumn("seq", F.lit(to_version).cast("long"))
         )
-        self.agg, lineage = rebuild_derived(self.agg, rows, to_version)
-        return {
-            "from_version": None,
-            "to_version": to_version,
-            "bootstrapped": True,
-            "merge": lineage,
-        }
 
-    # -------------------------------------------------------------- public
-
-    # shared-diff protocol (streaming.replay.refresh_views): views with
-    # the same (source, bookmark, images) consume ONE persisted CDF diff
-    cdf_images = "both"
-
-    def cdf_bookmark(self) -> int | None:
-        return derived_bookmark(self.agg)
-
-    def refresh(self, changes=None, to_version=None) -> dict:
-        """Advance the aggregate to the source's current version. Cost is
-        O(changes since bookmark) + O(agg table rows): the aggregate
-        table's deltas are scanned whole, at most one row per group each,
-        and ``maybe_compact`` keeps their chain short. Never O(source
-        table), except on bootstrap.
-
-        ``changes``/``to_version``: a pre-computed (usually persisted)
-        ``read_changes_since(cdf_bookmark(), images='both')`` frame
-        shared across sibling views, so the diff's two bucket-pruned
-        LWW resolves run once per span instead of once per view. The
-        caller guarantees the frame spans exactly
-        ``(cdf_bookmark(), to_version]`` and is not a bootstrap."""
-        bookmark = derived_bookmark(self.agg)
-        if changes is not None:
-            to_v, bootstrapped = to_version, False
-        else:
-            changes, to_v, bootstrapped = self.source.read_changes_since(
-                bookmark, images="both"
-            )
-        if to_v == bookmark:
-            return {
-                "from_version": bookmark,
-                "to_version": to_v,
-                "bootstrapped": False,
-                "noop": True,
-            }
-        if bootstrapped or bookmark is None:
-            return self._rebuild(to_v)
-
+    def _span_rows(self, changes: DataFrame, to_v: int) -> DataFrame:
+        """The new absolute values of the groups ``changes`` touch: the
+        signed change rows and the aggregate table's raw rows in ONE
+        ``groupBy`` (net delta + old LWW winner per group)."""
         sign = (
             "CASE WHEN _change_type IN ('insert', 'update_postimage')"
             " THEN 1 ELSE -1 END"
@@ -242,27 +199,53 @@ class MaterializedAggregate:
             proj.append(
                 f"CAST({plus_old(f'__n_{n}')} AS BIGINT) AS {_q(f'__n_{n}')}"
             )
-        rows = net.filter(f"__cnt IS NOT NULL AND NOT ({zero})").selectExpr(
+        return net.filter(f"__cnt IS NOT NULL AND NOT ({zero})").selectExpr(
             *proj,
             f"CASE WHEN {plus_old('__cnt')} <= 0 THEN 'delete' ELSE 'update' END"
             " AS op",
             f"CAST({to_v} AS BIGINT) AS seq",
         )
-        lineage = self.agg.merge_reduced(rows, span_epoch_id(bookmark, to_v))
-        # the buckets of the groups the merge wrote, as its commit recorded
-        touched: list[int] = []
+
+    # -------------------------------------------------------------- public
+
+    # shared-diff protocol (streaming.replay.refresh_views): views with
+    # the same (source, bookmark, images) consume ONE persisted CDF diff
+    cdf_images = "both"
+
+    def cdf_bookmark(self) -> int | None:
+        return derived_bookmark(self.agg)
+
+    def refresh(self, changes=None, to_version=None) -> dict:
+        """Advance the aggregate to the source's current version
+        (``cdf_consumer.refresh_derived``). Cost is O(changes since
+        bookmark) + O(agg table rows): the aggregate table's deltas are
+        scanned whole, at most one row per group each, and
+        ``maybe_compact`` keeps their chain short. Never O(source
+        table), except on bootstrap.
+
+        ``changes``/``to_version``: a pre-computed (usually persisted)
+        ``read_changes_since(cdf_bookmark(), images='both')`` frame
+        shared across sibling views, so the diff's two bucket-pruned
+        LWW resolves run once per span instead of once per view. The
+        caller guarantees the frame spans exactly
+        ``(cdf_bookmark(), to_version]`` and is not a bootstrap.
+
+        An incremental span's result also lists ``touched_buckets``: the
+        buckets of the groups the merge wrote, as its commit recorded."""
+        self.agg, out = refresh_derived(
+            self.agg, self.source, self._full_rows, self._span_rows,
+            changes, to_version,
+        )
+        if out.get("noop") or out["bootstrapped"]:
+            return out
+        lineage = out["merge"]
+        out["touched_buckets"] = []
         if "delta_dir" in lineage:
             m = self.agg.manifest(lineage["version"])
-            touched = sorted(self.agg._delta_buckets(m, [lineage["delta_dir"]]))
-        if not lineage.get("skipped"):
-            self.agg.maybe_compact()
-        return {
-            "from_version": bookmark,
-            "to_version": to_v,
-            "bootstrapped": False,
-            "touched_buckets": touched,
-            "merge": lineage,
-        }
+            out["touched_buckets"] = sorted(
+                self.agg._delta_buckets(m, [lineage["delta_dir"]])
+            )
+        return out
 
     def result(self) -> DataFrame:
         """The maintained aggregate: group columns, count, and each SUM

@@ -38,9 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tableio.snapshot import SnapshotTable
-from .cdf_consumer import derived_bookmark, rebuild_derived, span_epoch_id
+from .cdf_consumer import derived_bookmark, refresh_derived
 
-_SEP = "\x1f"
 _NULL = "\x00null"
 
 
@@ -127,16 +126,14 @@ class SecondaryIndex:
             )
         )
 
-    def _rebuild(self, to_version: int) -> dict:
+    def _full_rows(self, to_version: int) -> DataFrame:
         rows = self._entries(self.source.state(to_version), ops=False)
-        rows = rows.withColumn("seq", F.lit(to_version).cast("long"))
-        self.idx, lineage = rebuild_derived(self.idx, rows, to_version)
-        return {
-            "from_version": None,
-            "to_version": to_version,
-            "bootstrapped": True,
-            "merge": lineage,
-        }
+        return rows.withColumn("seq", F.lit(to_version).cast("long"))
+
+    def _span_rows(self, changes: DataFrame, to_v: int) -> DataFrame:
+        return self._entries(changes, ops=True).withColumn(
+            "seq", F.lit(to_v).cast("long")
+        )
 
     # -------------------------------------------------------------- public
 
@@ -147,38 +144,16 @@ class SecondaryIndex:
         return derived_bookmark(self.idx)
 
     def refresh(self, changes=None, to_version=None) -> dict:
-        """``changes``/``to_version``: optional pre-computed shared CDF
-        diff spanning exactly ``(cdf_bookmark(), to_version]`` with
-        ``images='both'`` (see MaterializedAggregate.refresh)."""
-        bookmark = derived_bookmark(self.idx)
-        if changes is not None:
-            to_v, bootstrapped = to_version, False
-        else:
-            changes, to_v, bootstrapped = self.source.read_changes_since(
-                bookmark, images="both"
-            )
-        if to_v == bookmark:
-            return {
-                "from_version": bookmark,
-                "to_version": to_v,
-                "bootstrapped": False,
-                "noop": True,
-            }
-        if bootstrapped or bookmark is None:
-            return self._rebuild(to_v)
-        rows = self._entries(changes, ops=True).withColumn(
-            "seq", F.lit(to_v).cast("long")
+        """Advance the index to the source's current version
+        (``cdf_consumer.refresh_derived``). ``changes``/``to_version``:
+        optional pre-computed shared CDF diff spanning exactly
+        ``(cdf_bookmark(), to_version]`` with ``images='both'`` (see
+        MaterializedAggregate.refresh)."""
+        self.idx, out = refresh_derived(
+            self.idx, self.source, self._full_rows, self._span_rows,
+            changes, to_version,
         )
-        lineage = self.idx.merge_reduced(rows, span_epoch_id(bookmark, to_v))
-        if not lineage.get("skipped"):
-            # one delta per span: keep lookup()'s read of the chain bounded
-            self.idx.maybe_compact()
-        return {
-            "from_version": bookmark,
-            "to_version": to_v,
-            "bootstrapped": False,
-            "merge": lineage,
-        }
+        return out
 
     def lookup(self, values: list) -> DataFrame:
         """doc_ids whose indexed column equals any of ``values`` —
@@ -192,7 +167,7 @@ class SecondaryIndex:
         buckets = self.idx.buckets_for(enc)
         return (
             self.idx.read(buckets=buckets)
-            .filter(~F.coalesce(F.col(SnapshotTable.DEL_COL), F.lit(False)))
+            .filter(self.idx._live())
             .filter(F.col("_idx_val").isin(enc))
             .select(
                 F.when(F.col("_idx_val") == _NULL, F.lit(None))

@@ -15,22 +15,21 @@ crash window — reproduces the same final state on resume. This mirrors the
 reference's verify-idempotency golden property (Makefile:344-359: invoke
 ingest twice with the identical event; the second must skip).
 
-Five drivers are provided, all through the one ``apply_epoch`` pipeline:
+Three drivers are provided, all through the one ``apply_epoch`` pipeline:
   * ``run_replay``            — batch loop over epoch dirs (foreachBatch
                                 semantics, deterministic epoch order, full
-                                schema-evolution support).
-  * ``replay_range``          — the batch loop restricted to a batch-offset
-                                and/or event-time window.
+                                schema-evolution support), optionally
+                                restricted to a batch-offset and/or
+                                event-time window.
   * ``redrive_quarantine``    — quarantined rows, optionally repaired,
                                 merged back under a content-addressed epoch.
   * ``run_replay_streaming``  — genuine Structured Streaming: file source +
-                                availableNow trigger + watermarked
-                                dropDuplicatesWithinWatermark + foreachBatch
-                                merge; restarts with the wider schema when
-                                the log grows one mid-pass.
-  * ``run_replay_tailing``    — the same stream under a processingTime
-                                trigger: a continuous tail that picks up
-                                additive schema changes mid-stream.
+                                watermarked dropDuplicatesWithinWatermark +
+                                foreachBatch merge; availableNow (drain,
+                                then return) or, given ``stop_when``, a
+                                processingTime tail. Restarts with the
+                                wider schema when the log grows one
+                                mid-stream.
 """
 
 from __future__ import annotations
@@ -55,6 +54,7 @@ from aws_serverless_elt_pipeline_enterprise_spark.quality.gates import repair_nt
 from aws_serverless_elt_pipeline_enterprise_spark.sources.changelog import list_batches
 from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import (
     SnapshotTable,
+    _sql_str,
     unify_schemas,
 )
 
@@ -239,8 +239,11 @@ def run_replay(
     spark: SparkSession,
     log_dir: str,
     table: SnapshotTable,
+    start_batch: int = 0,
+    end_batch: int | None = None,
+    start_time: str | None = None,
+    end_time: str | None = None,
     quarantine_dir: str | None = None,
-    max_epochs: int | None = None,
     compact_every: int | None = None,
     dq_fail_on_corrupt: bool = False,
     notify=None,
@@ -251,8 +254,21 @@ def run_replay(
     the committed-epoch set in the table manifest is the checkpoint, so
     an epoch is skipped exactly when THIS table already holds it.
 
+    Window (operator T1/T2): only the epochs in
+    [``start_batch``, ``end_batch``] (offsets into the ordered batch
+    list, both inclusive) and, when ``start_time``/``end_time`` are
+    given, only those whose EVENT-TIME range intersects
+    [``start_time``, ``end_time``]; the rest are reported as skipped.
+    The reference copies S3 objects whose LastModified falls in a
+    trailing window to re-fire ingest (workflows/replay/app.py:36-96,
+    default trailing 24h); the analog here selects whole batch dirs by
+    a limit-1 probe of the window predicate (column-pruned, and parquet
+    min/max stats make it a metadata read). Whole-batch granularity
+    mirrors the reference's object granularity AND keeps epoch IDs
+    stable so the exactly-once skip set still applies.
+
     ``maintain``: optional list of incrementally maintained views
-    (``MaterializedAggregate``-shaped: anything with ``refresh()``)
+    (``MaterializedAggregate``, ``SecondaryIndex``, ``CdfExporter``)
     kept in lockstep with the table — each is refreshed after every
     ``maintain_every``-th applied epoch (refreshes are span-based on
     the view's own bookmark, so a K>1 cadence folds K epochs into ONE
@@ -263,16 +279,24 @@ def run_replay(
     skips. View refreshes are themselves
     exactly-once (ledger-deduped epochs keyed on the consumed version
     span), so a crash-and-rerun never double-applies a delta."""
+    # the probe runs inside Spark so both sides parse in the session
+    # timezone
+    window = " AND ".join(
+        f"event_time {op} to_timestamp({_sql_str(t)})"
+        for op, t in ((">=", start_time), ("<=", end_time))
+        if t is not None
+    )
     result = ReplayResult()
     batches = list_batches(log_dir)
-    if max_epochs is not None:
-        batches = batches[:max_epochs]
-    for path in batches:
+    for path in batches[start_batch : None if end_batch is None else end_batch + 1]:
         epoch_id = os.path.basename(path)
         if table.has_epoch(epoch_id):
             result.epochs_skipped.append(epoch_id)
             continue
         events = spark.read.parquet(path)
+        if window and events.filter(window).isEmpty():
+            result.epochs_skipped.append(epoch_id)
+            continue
         lineage = apply_epoch(
             table, events, epoch_id, quarantine_dir=quarantine_dir,
             dq_fail_on_corrupt=dq_fail_on_corrupt, notify=notify,
@@ -300,26 +324,19 @@ def refresh_views(views) -> None:
     in lockstep) would each re-run the identical ``read_changes_since``
     span — whose two bucket-pruned LWW resolves are the dominant refresh
     cost. Here the group's diff is computed once, persisted, and handed
-    to every member via ``refresh(changes=, to_version=)``; singleton
-    groups, bootstrap spans, no-op spans, and views that don't speak the
-    shared-diff protocol (no ``cdf_bookmark``/``cdf_images``) fall back
-    to their own ``refresh()``, which handles those cases already."""
+    to every member via ``refresh(changes=, to_version=)``. Every view
+    exposes ``source``, ``cdf_bookmark()`` and ``cdf_images``; singleton
+    groups, bootstrap spans and no-op spans fall back to the view's own
+    ``refresh()``, which handles those cases already."""
     solo = []
     groups: dict[tuple, list] = {}
     for v in views:
-        src = getattr(v, "source", None)
-        bm_fn = getattr(v, "cdf_bookmark", None)
-        img = getattr(v, "cdf_images", None)
-        if src is None or bm_fn is None or img is None:
-            solo.append(v)
-            continue
-        groups.setdefault((id(src), bm_fn(), img), []).append(v)
+        groups.setdefault((id(v.source), v.cdf_bookmark(), v.cdf_images), []).append(v)
     for (_, bm, img), vs in groups.items():
         if len(vs) == 1 or bm is None:
             solo.extend(vs)
             continue
-        src = vs[0].source
-        changes, to_v, boot = src.read_changes_since(bm, images=img)
+        changes, to_v, boot = vs[0].source.read_changes_since(bm, images=img)
         if boot or to_v == bm:
             solo.extend(vs)
             continue
@@ -331,57 +348,6 @@ def refresh_views(views) -> None:
             changes.unpersist()
     for v in solo:
         v.refresh()
-
-
-def replay_range(
-    spark: SparkSession,
-    log_dir: str,
-    table: SnapshotTable,
-    start_batch: int = 0,
-    end_batch: int | None = None,
-    start_time: str | None = None,
-    end_time: str | None = None,
-    **kwargs,
-) -> ReplayResult:
-    """Time/offset-windowed replay (operator T1/T2): re-run only the epochs
-    in [start_batch, end_batch] and/or whose EVENT-TIME range intersects
-    [start_time, end_time]. The reference copies S3 objects whose
-    LastModified falls in a trailing window to re-fire ingest
-    (workflows/replay/app.py:36-96, default trailing 24h); the analog here
-    selects whole batch dirs by their min/max event_time (one tiny
-    column-pruned agg per candidate batch — parquet footer stats make it a
-    metadata read) and replays them idempotently. Whole-batch granularity
-    mirrors the reference's object granularity AND keeps epoch IDs stable
-    so the exactly-once skip set still applies."""
-    result = ReplayResult()
-    batches = list_batches(log_dir)
-    end = end_batch + 1 if end_batch is not None else len(batches)
-    for path in batches[start_batch:end]:
-        epoch_id = os.path.basename(path)
-        if table.has_epoch(epoch_id):
-            result.epochs_skipped.append(epoch_id)
-            continue
-        events = spark.read.parquet(path)
-        if start_time is not None or end_time is not None:
-            # intersection probe runs inside Spark so both sides parse in
-            # the session timezone; parquet min/max stats make it cheap
-            cond = F.lit(True)
-            if start_time is not None:
-                cond = cond & (
-                    F.col("event_time") >= F.to_timestamp(F.lit(start_time))
-                )
-            if end_time is not None:
-                cond = cond & (
-                    F.col("event_time") <= F.to_timestamp(F.lit(end_time))
-                )
-            if events.filter(cond).limit(1).count() == 0:
-                result.epochs_skipped.append(epoch_id)
-                continue
-        lineage = apply_epoch(table, events, epoch_id, **kwargs)
-        if lineage is not None:
-            result.epochs_applied.append(epoch_id)
-            result.lineage.append(lineage)
-    return result
 
 
 def redrive_quarantine(
@@ -532,7 +498,7 @@ def unified_log_schema(spark: SparkSession, log_dir: str, cache_dir: str | None 
     ``cache_dir`` (typically the stream's checkpoint dir) holds a
     log-level schema manifest: per-batch schema JSON keyed by batch dir
     name, so repeated calls — stream start AND the per-micro-batch
-    evolution guard of ``run_replay_tailing`` — read footers only for
+    evolution guard of ``run_replay_streaming`` — read footers only for
     batch dirs not seen before. Without the cache this was O(batches)
     serial driver I/O per stream start. Batch dirs are immutable once
     renamed into the log (the writer contract), so the cache never
@@ -599,144 +565,13 @@ def _memoized_log_schema(spark: SparkSession, log_dir: str, cache_dir: str):
     return current
 
 
-def _make_schema_guard(current_log_schema, schema, evolved: dict):
-    """Per-micro-batch evolution guard shared by the availableNow replay
-    and the continuous tail: if the log outgrew the stream's read schema,
-    set the driver-side flag (classification must not depend on exception
-    message text) and fail the micro-batch BEFORE any merge — Spark then
-    does not commit its offsets, and the caller restarts with the wider
-    schema, re-reading the failed files. Race-free because it runs
-    strictly after the source fixed the micro-batch's file list."""
-
-    def schema_guard() -> None:
-        latest = current_log_schema()
-        if latest is not None and unify_schemas(schema, latest) != schema:
-            evolved["v"] = True
-            raise SchemaEvolvedRestart(
-                f"log schema evolved beyond the stream's read schema: "
-                f"{schema.simpleString()} -> {latest.simpleString()}"
-            )
-
-    return schema_guard
-
-
-def run_replay_streaming(
-    spark: SparkSession,
-    log_dir: str,
-    table: SnapshotTable,
-    checkpoint_dir: str,
-    watermark_ttl: str = "30 days",
-    quarantine_dir: str | None = None,
-    dq_fail_on_corrupt: bool = False,
-    notify=None,
-    maintain=None,
-    maintain_every: int = 1,
-) -> None:
-    """Structured Streaming replay: file source over the whole log dir,
-    availableNow trigger (process-everything-then-stop), watermarked
-    streaming dedup, merge per micro-batch in foreachBatch. Spark's
-    checkpoint tracks source offsets; the table's epoch set de-dups the
-    foreachBatch crash-replay window. Schema evolution: the source reads
-    with the unified (widest) schema across all batch dirs, so a mid-log
-    additive column / int widening flows through (mirrors the batch
-    path's unify_schemas; reference crawler policy UPDATE_IN_DATABASE,
-    glue_catalog/main.tf:77-79). A batch dir renamed into the log AFTER
-    the schema was computed but BEFORE the source's initial listing
-    would otherwise be silently narrow-read (new column nulled, epoch
-    committed — unrecoverable); the same per-micro-batch guard the
-    continuous tail uses catches that window and restarts this
-    availableNow pass with the widened schema."""
-    current_log_schema = _memoized_log_schema(spark, log_dir, checkpoint_dir)
-    while True:
-        schema = current_log_schema()
-        if schema is None:
-            return  # nothing to replay yet
-        instance = _stream_instance(checkpoint_dir)
-        evolved = {"v": False}
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "64")
-            .parquet(os.path.join(log_dir, "batch_*"))
-        )
-        deduped = dedup_events_stream(stream, ttl=watermark_ttl)
-        merge = _make_merge(
-            table, instance, quarantine_dir, dq_fail_on_corrupt, notify,
-            pre_merge_check=_make_schema_guard(current_log_schema, schema, evolved),
-            maintain=maintain,
-            maintain_every=maintain_every,
-        )
-        q = (
-            deduped.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        except Exception:
-            if not evolved["v"]:
-                raise
-        if not evolved["v"]:
-            # catch-up for a view attached after the table had history,
-            # or a resume where no micro-batch fired (no new files) —
-            # refreshes are exactly-once on the view's own ledger
-            if maintain and table.current_version() is not None:
-                refresh_views(maintain)
-            return  # processed everything available under a stable schema
-
-
-def _make_merge(
-    table: SnapshotTable,
-    instance: str,
-    quarantine_dir: str | None,
-    dq_fail_on_corrupt: bool,
-    notify,
-    pre_merge_check,
-    maintain=None,
-    maintain_every: int = 1,
-):
-    """foreachBatch body shared by the availableNow replay and the
-    continuous tail: derive the namespaced epoch id, then run the ONE
-    epoch pipeline (apply_epoch — quarantine split, transactional DQ
-    gate, repair, idempotent merge, stale-verdict cleanup). Round 2
-    shipped a fork of that pipeline here and the DQ gate existed only on
-    the batch path; delegation makes that divergence structurally
-    impossible. ``pre_merge_check`` runs FIRST and may raise
-    to fail the micro-batch before anything commits — the
-    schema-evolution guard. ``maintain_every`` thins view refreshes to
-    every K-th micro-batch (span-based bookmarks make the skipped
-    batches fold into the next refresh; the availableNow path's
-    end-of-pass catch-up closes the tail, the continuous tail lags at
-    most K-1 batches)."""
-    applied = {"n": 0}
-
-    def _merge(batch_df: DataFrame, epoch_id: int) -> None:
-        pre_merge_check()
-        apply_epoch(
-            table,
-            batch_df,
-            f"stream-{instance}-{epoch_id}",
-            quarantine_dir=quarantine_dir,
-            dq_fail_on_corrupt=dq_fail_on_corrupt,
-            notify=notify,
-        )
-        # maintained views ride the micro-batch in lockstep; each
-        # refresh is exactly-once on the view's own span ledger, so a
-        # foreachBatch crash-replay cannot double-apply a delta
-        applied["n"] += 1
-        if maintain and applied["n"] % max(1, maintain_every) == 0:
-            refresh_views(maintain)
-
-    return _merge
-
-
 class SchemaEvolvedRestart(Exception):
     """Internal control-flow signal: the log's unified schema outgrew the
     running stream's read schema; fail the micro-batch (uncommitted) and
     restart the stream with the wider schema."""
 
 
-def run_replay_tailing(
+def run_replay_streaming(
     spark: SparkSession,
     log_dir: str,
     table: SnapshotTable,
@@ -750,75 +585,112 @@ def run_replay_tailing(
     maintain=None,
     maintain_every: int = 1,
 ) -> None:
-    """Genuinely CONTINUOUS tail (processingTime trigger) with mid-stream
-    additive schema evolution — the gap ``run_replay_streaming`` leaves:
-    an availableNow pass computes the unified read schema once at start,
-    which is correct for replay but a long-running tail would never see a
-    column added after start (the reference's crawler re-crawls on a
-    schedule for the same reason, glue_catalog/main.tf:137-154).
+    """Structured Streaming replay: file source over the whole log dir,
+    watermarked streaming dedup, merge per micro-batch in foreachBatch
+    through the ONE epoch pipeline (``apply_epoch``: quarantine split,
+    transactional DQ gate, repair, idempotent merge, stale-verdict
+    cleanup). Spark's checkpoint tracks source offsets; the table's
+    epoch set de-dups the foreachBatch crash-replay window. Epoch ids
+    are ``stream-<instance>-<batch>`` (see ``_stream_instance``).
 
-    Mechanism: every micro-batch's foreachBatch FIRST re-checks the log's
-    unified schema (cheap: the checkpoint-dir schema cache means only
-    NEW batch dirs cost a footer read). If the log outgrew the stream's
-    read schema, the micro-batch fails BEFORE any merge — Spark does not
-    commit its offsets — and the driver loop restarts the stream with the
-    wider schema, re-reading the failed files. The guard is race-free
-    because it runs strictly AFTER the source fixed the micro-batch's
-    file list: any file that could carry the wider schema either is in
-    this (aborted) batch or will be caught by a later guard. Without the
-    guard, a wide file read under the narrow schema would silently drop
-    the new column AND commit — unrecoverable data loss.
+    Trigger: with ``stop_when=None`` an availableNow pass processes
+    everything available, then returns. With a callable, the stream is
+    a CONTINUOUS processingTime tail (every ``poll_interval_sec``);
+    ``stop_when()`` is polled as often and returning True drains the
+    in-flight micro-batch and stops (tests / bounded runs). A tail polls
+    an empty log the same way until it gets its first batch dir; an
+    availableNow pass over an empty log returns at once.
 
-    ``stop_when()`` is polled every ``poll_interval_sec``; return True to
-    drain and stop (tests / bounded runs). Errors other than the
-    evolution signal propagate."""
+    Schema evolution: the source reads with the unified (widest) schema
+    across all batch dirs, so a mid-log additive column / int widening
+    flows through (mirrors the batch path's unify_schemas; reference
+    crawler policy UPDATE_IN_DATABASE, glue_catalog/main.tf:77-79). A
+    batch dir renamed into the log after that schema was computed — any
+    time in a tail, or between the schema read and the source's initial
+    listing in an availableNow pass — would otherwise be silently
+    narrow-read (new column nulled, epoch committed: unrecoverable). So
+    every micro-batch FIRST re-checks the log's unified schema (cheap:
+    memoized on the batch-dir names, footers cached in the checkpoint
+    dir). If the log outgrew the read schema, the micro-batch fails
+    BEFORE any merge — Spark does not commit its offsets — and the
+    driver restarts the stream with the wider schema, re-reading the
+    failed files. The guard is race-free because it runs strictly AFTER
+    the source fixed the micro-batch's file list. Errors other than the
+    evolution signal propagate.
+
+    ``maintain``/``maintain_every``: views refreshed after every K-th
+    micro-batch (span-based bookmarks fold the skipped batches into the
+    next refresh; each refresh is exactly-once on the view's own span
+    ledger, so a foreachBatch crash-replay cannot double-apply a delta),
+    and once more on return, so the views are current when the driver
+    returns — including a view attached after the table had history or
+    a resume where no micro-batch fired."""
     import time as _time
 
     current_log_schema = _memoized_log_schema(spark, log_dir, checkpoint_dir)
+    if stop_when is None:
+        trigger = {"availableNow": True}
+    else:
+        trigger = {"processingTime": f"{poll_interval_sec} seconds"}
     while True:
         schema = current_log_schema()
         if schema is None:
-            if stop_when is not None and stop_when():
-                return
+            if stop_when is None or stop_when():
+                break
             _time.sleep(poll_interval_sec)
             continue
         instance = _stream_instance(checkpoint_dir)
+        # per-stream-start state, read by the foreachBatch body below
         evolved = {"v": False}
+        applied = {"n": 0}
+
+        def merge(batch_df: DataFrame, batch_id: int) -> None:
+            latest = current_log_schema()
+            if latest is not None and unify_schemas(schema, latest) != schema:
+                # the driver-side flag, not the exception text, decides
+                # restart vs surface
+                evolved["v"] = True
+                raise SchemaEvolvedRestart(
+                    f"log schema evolved beyond the stream's read schema: "
+                    f"{schema.simpleString()} -> {latest.simpleString()}"
+                )
+            apply_epoch(
+                table,
+                batch_df,
+                f"stream-{instance}-{batch_id}",
+                quarantine_dir=quarantine_dir,
+                dq_fail_on_corrupt=dq_fail_on_corrupt,
+                notify=notify,
+            )
+            applied["n"] += 1
+            if maintain and applied["n"] % max(1, maintain_every) == 0:
+                refresh_views(maintain)
+
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "64")
             .parquet(os.path.join(log_dir, "batch_*"))
         )
-        deduped = dedup_events_stream(stream, ttl=watermark_ttl)
-        merge = _make_merge(
-            table, instance, quarantine_dir, dq_fail_on_corrupt, notify,
-            pre_merge_check=_make_schema_guard(current_log_schema, schema, evolved),
-            maintain=maintain,
-            maintain_every=maintain_every,
-        )
         q = (
-            deduped.writeStream.foreachBatch(merge)
+            dedup_events_stream(stream, ttl=watermark_ttl)
+            .writeStream.foreachBatch(merge)
             .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime=f"{poll_interval_sec} seconds")
+            .trigger(**trigger)
             .start()
         )
         try:
-            while q.isActive:
-                if stop_when is not None and stop_when():
-                    # graceful drain: stop() waits for the in-flight
-                    # micro-batch, the table's epoch set guards replays
-                    q.stop()
-                    q.awaitTermination()
-                    return
+            while q.isActive and not (stop_when is not None and stop_when()):
                 q.awaitTermination(timeout=poll_interval_sec)
+            # graceful drain: stop() waits for the in-flight micro-batch
+            # (the table's epoch set guards replays); on a query that
+            # already ended, awaitTermination surfaces whatever ended it
+            # — also when it died between polls
+            q.stop()
+            q.awaitTermination()
         except Exception:
             if not evolved["v"]:
                 raise
-        # the query may also die between polls WITHOUT awaitTermination
-        # raising inside the try (while q.isActive sees it already dead);
-        # the flag — not the exception path — decides restart vs surface
         if not evolved["v"]:
-            # stream died without an evolution signal and without stop —
-            # surface whatever terminated it
-            q.awaitTermination()
-            return
+            break
+    if maintain and table.current_version() is not None:
+        refresh_views(maintain)

@@ -9,7 +9,7 @@ Env:
   SPARK_GRAFT_SF_DIR  testdata dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS    local[N] parallelism (default 32)
   SPARK_GRAFT_EVENTS  CDC event count override
-  SPARK_GRAFT_SKIP_QUERIES=1  replay-only (used by the scaling harness)
+  SPARK_GRAFT_SKIP_QUERIES=1  replay-only
 """
 
 from __future__ import annotations

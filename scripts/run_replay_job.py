@@ -56,12 +56,14 @@ def main() -> None:
     args = ap.parse_args()
     if args.redrive and not args.quarantine:
         ap.error("--redrive requires --quarantine")
+    if args.streaming and (args.start_time or args.end_time or args.compact_every):
+        ap.error("--start-time/--end-time/--compact-every apply to the epoch "
+                 "loop, not --streaming")
 
     from pyspark.sql import SparkSession
 
     from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import (
         redrive_quarantine,
-        replay_range,
         run_replay,
         run_replay_streaming,
     )
@@ -90,20 +92,6 @@ def main() -> None:
     if args.redrive:
         lineage = redrive_quarantine(spark, args.quarantine, table)
         summary = {"driver": "redrive", "lineage": lineage}
-    elif args.start_time or args.end_time:
-        result = replay_range(
-            spark,
-            args.log_dir,
-            table,
-            start_time=args.start_time,
-            end_time=args.end_time,
-            quarantine_dir=args.quarantine,
-        )
-        summary = {
-            "driver": "replay_range",
-            "epochs_applied": len(result.epochs_applied),
-            "epochs_skipped": len(result.epochs_skipped),
-        }
     elif args.streaming:
         # quarantine_dir MUST flow through: without it the streaming
         # merge silently drops malformed envelopes (no DLQ, nothing for
@@ -121,6 +109,8 @@ def main() -> None:
             spark,
             args.log_dir,
             table,
+            start_time=args.start_time,
+            end_time=args.end_time,
             quarantine_dir=args.quarantine,
             compact_every=args.compact_every,
         )

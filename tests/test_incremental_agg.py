@@ -380,6 +380,103 @@ def test_run_replay_maintain_every_cadence(spark, tmp_path):
     assert m3.agg.current_version() < m1.agg.current_version()
 
 
+def _source_counts(t: SnapshotTable) -> dict:
+    """Ground truth for a ``["source"]`` aggregate summing ``n_tok``."""
+    return {
+        r["source"]: (r["cnt"], r["tok"])
+        for r in t.state()
+        .groupBy("source")
+        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("n_tok").alias("tok"))
+        .collect()
+    }
+
+
+def test_windowed_run_replay_maintains_views_and_compacts(spark, tmp_path):
+    """An event-time window rides the same loop as a plain replay: views
+    stay in lockstep and ``compact_every`` applies to the window too."""
+    from aws_serverless_elt_pipeline_enterprise_spark.sources.changelog import (
+        ChangelogSpec,
+        generate_changelog,
+    )
+    from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import (
+        run_replay,
+    )
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # no late shifting: batch b holds event_time 1_700_000_000 + seq for
+    # seq in [1000b, 1000b+999]
+    spec = ChangelogSpec(
+        n_events=4_000, n_keys=300, n_batches=4, seed=7, late_rate=0.0,
+        dup_rate=0.0,
+    )
+    log = str(tmp_path / "log")
+    generate_changelog(spark, log, spec)
+    t = SnapshotTable(
+        spark, str(tmp_path / "tbl"), key_col="doc_id", n_buckets=8, mode="mor"
+    )
+    ma = MaterializedAggregate(
+        spark, t, str(tmp_path / "mv"), ["source"], sums={"tok_total": "n_tok"}
+    )
+    r = run_replay(
+        spark, log, t,
+        start_time="2023-11-14 22:30:00",  # seq 1000
+        end_time="2023-11-14 22:47:00",  # seq 2020
+        maintain=[ma], compact_every=2,
+    )
+    assert r.epochs_applied == ["batch_00001", "batch_00002"]
+    # the two window deltas were folded into one by the minor compaction
+    assert len(t.manifest()["global_deltas"]) == 1
+    got = {r["source"]: (r["cnt"], r["tok_total"]) for r in ma.result().collect()}
+    assert got == _source_counts(t) and len(got) > 1
+
+
+def test_continuous_stream_leaves_views_current(spark, tmp_path):
+    """A processingTime tail with maintain_every=K returns with its views
+    current, however many micro-batches it ran (not up to K-1 behind)."""
+    import time
+
+    from aws_serverless_elt_pipeline_enterprise_spark.sources.changelog import (
+        ChangelogSpec,
+        generate_changelog,
+    )
+    from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import (
+        run_replay,
+        run_replay_streaming,
+    )
+
+    log = str(tmp_path / "log")
+    generate_changelog(
+        spark, log, ChangelogSpec(n_events=3000, n_keys=200, n_batches=3)
+    )
+    oracle = SnapshotTable(spark, str(tmp_path / "oracle"), n_buckets=4, mode="mor")
+    run_replay(spark, log, oracle)
+    live = "NOT coalesce(_deleted, false)"
+    want = {tuple(r) for r in oracle.read().filter(live).select("doc_id", "_seq").collect()}
+    t = SnapshotTable(
+        spark, str(tmp_path / "tbl"), key_col="doc_id", n_buckets=8, mode="mor"
+    )
+    ma = MaterializedAggregate(
+        spark, t, str(tmp_path / "mv"), ["source"], sums={"tok_total": "n_tok"}
+    )
+    deadline = time.monotonic() + 240
+
+    def caught_up() -> bool:
+        assert time.monotonic() < deadline, "tail did not converge in time"
+        if t.current_version() is None:
+            return False
+        got = t.read().filter(live).select("doc_id", "_seq").collect()
+        return {tuple(r) for r in got} == want
+
+    run_replay_streaming(
+        spark, log, t, str(tmp_path / "ck"),
+        poll_interval_sec=0.5, stop_when=caught_up,
+        maintain=[ma], maintain_every=3,
+    )
+    assert ma.cdf_bookmark() == t.current_version()
+    got = {r["source"]: (r["cnt"], r["tok_total"]) for r in ma.result().collect()}
+    assert got == _source_counts(t) and len(got) > 1
+
+
 # ------------------------------------------- one-aggregate refresh: old winner
 
 

@@ -24,7 +24,6 @@ from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import (
     apply_epoch,
     redrive_quarantine,
     refresh_views,
-    replay_range,
     run_replay,
 )
 from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import SnapshotTable
@@ -120,10 +119,10 @@ def test_replay_range_fills_gaps(spark, tmp_path):
     generate_changelog(spark, log, spec)
     table = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8, mode="mor")
     # apply only a middle window first
-    r1 = replay_range(spark, log, table, start_batch=2, end_batch=3)
+    r1 = run_replay(spark, log, table, start_batch=2, end_batch=3)
     assert len(r1.epochs_applied) == 2
     # full-range replay fills the gaps, skips the applied window
-    r2 = replay_range(spark, log, table)
+    r2 = run_replay(spark, log, table)
     assert len(r2.epochs_applied) == 3 and len(r2.epochs_skipped) == 2
     # equivalent to a straight full replay
     table2 = SnapshotTable(spark, str(tmp_path / "t2"), n_buckets=8, mode="mor")

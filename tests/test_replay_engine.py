@@ -111,7 +111,7 @@ def test_equal_seq_conflicts_resolve_to_one_winner(spark, tmp_path):
 def test_resume_from_partial_run(spark, log_dir, tmp_path):
     """Kill mid-run at an epoch boundary and resume -> same final state."""
     table = SnapshotTable(spark, str(tmp_path / "tbl"), n_buckets=16)
-    run_replay(spark, log_dir, table, max_epochs=3)
+    run_replay(spark, log_dir, table, end_batch=2)
     assert len(table.committed_epochs()) == 3
     run_replay(spark, log_dir, table)
     assert table_rows(table) == oracle_rows(f"{log_dir}/batch_*/*.parquet")
@@ -250,7 +250,7 @@ def test_schema_evolution_additive_and_widening(spark, tmp_path):
 @pytest.mark.parametrize("mode", ["mor"])
 def test_time_travel_and_compaction(spark, log_dir, tmp_path, mode):
     table = SnapshotTable(spark, str(tmp_path / "tbl"), n_buckets=8, mode=mode)
-    run_replay(spark, log_dir, table, max_epochs=2)
+    run_replay(spark, log_dir, table, end_batch=1)
     v2 = table.current_version()
     rows_v2 = table.state().count()
     run_replay(spark, log_dir, table)

@@ -19,7 +19,6 @@ from aws_serverless_elt_pipeline_enterprise_spark.sources.changelog import (
 from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import (
     apply_epoch,
     redrive_quarantine,
-    replay_range,
     run_replay,
     run_replay_streaming,
 )
@@ -196,7 +195,7 @@ def test_replay_range_event_time_window(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_changelog(spark, log, spec)
     table = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4, mode="mor")
-    r = replay_range(
+    r = run_replay(
         spark,
         log,
         table,

@@ -232,7 +232,7 @@ def test_tailing_stream_mid_stream_schema_evolution(spark, tmp_path):
     )
     from aws_serverless_elt_pipeline_enterprise_spark.streaming.replay import (
         run_replay,
-        run_replay_tailing,
+        run_replay_streaming,
     )
 
     spec = ChangelogSpec(
@@ -274,7 +274,7 @@ def test_tailing_stream_mid_stream_schema_evolution(spark, tmp_path):
             return got_rows.count() == len(want)
         return False
 
-    run_replay_tailing(
+    run_replay_streaming(
         spark, str(log), table, str(tmp_path / "ck"),
         poll_interval_sec=0.5, stop_when=driver,
     )

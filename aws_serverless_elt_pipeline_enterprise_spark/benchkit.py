@@ -1,6 +1,7 @@
-"""Shared benchmark-harness guards (used by bench.py and
-scripts/bench_sustained.py — one copy, so a fix to either guard cannot
-silently miss the other script)."""
+"""Scratch-root guards shared by bench.py and the driver queries in
+__spark_entry__.py that write tables (the replay round trip and the IVF
+and LSH index probes): one copy, so both put their tables on the same
+root and sweep the same leaked dirs."""
 
 from __future__ import annotations
 

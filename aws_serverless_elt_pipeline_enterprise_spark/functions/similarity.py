@@ -14,11 +14,13 @@ One path per operator:
 
 At 10^10 vectors the brute force is a full scan per query; the index
 probes touch only the query's partitions. Dot products run through
-``F.zip_with`` + ``F.aggregate`` (JVM-side, no Python UDF) in double
-precision.
+``zip_with`` + ``aggregate`` (JVM-side, no Python UDF) in double
+precision, and a query vector enters the plan as one array literal.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -29,26 +31,24 @@ from pyspark.sql import types as T
 from aws_serverless_elt_pipeline_enterprise_spark.tableio.snapshot import _q
 
 
-def dot(a: F.Column, b: F.Column) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _array_sql(values) -> str:
+    """A driver-side vector as ONE SQL array literal: Python ints as
+    BIGINT (``<n>L``), everything else as DOUBLE (``repr(x)D``, which
+    parses back to the same double; a non-finite value goes through a
+    string cast). One expression costs a handful of Py4J round trips,
+    where a ``F.lit`` Column per component costs about ten each."""
 
+    def lit(v) -> str:
+        if isinstance(v, int):
+            return f"{v}L"
+        x = float(v)
+        return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
-def l2_norm(a: F.Column) -> F.Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    return f"array({', '.join(map(lit, values))})"
 
 
 def _dot_sql(a: str, b: str) -> str:
-    """``dot`` as SQL text over two array expressions."""
+    """Double-precision dot product of two array expressions, as SQL text."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         f"0.0D, (acc, v) -> acc + v)"
@@ -56,20 +56,21 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 def _l2_norm_sql(a: str) -> str:
-    """``l2_norm`` as SQL text over an array expression."""
+    """L2 norm of an array expression, as SQL text."""
     return (
         f"sqrt(aggregate(transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
         f"0.0D, (acc, v) -> acc + v))"
     )
 
 
-def cosine(a: F.Column, b: F.Column) -> F.Column:
-    """NULL (not NaN) for zero-norm inputs: 0/0 is IEEE NaN, and Spark
-    orders NaN ABOVE every double — an all-zeros padding vector would
-    rank FIRST in every desc top-k and pass every `>= threshold` filter.
-    NULL sorts last under desc and fails threshold filters."""
-    den = l2_norm(a) * l2_norm(b)
-    return F.when(den != 0, dot(a, b) / den)
+def _cosine_sql(a: str, b: str) -> str:
+    """Cosine of two array expressions, as SQL text. NULL (not NaN) for
+    zero-norm inputs: 0/0 is IEEE NaN, and Spark orders NaN ABOVE every
+    double — an all-zeros padding vector would rank FIRST in every desc
+    top-k and pass every `>= threshold` filter. NULL sorts last under
+    desc and fails threshold filters."""
+    den = f"({_l2_norm_sql(a)} * {_l2_norm_sql(b)})"
+    return f"CASE WHEN {den} != 0 THEN {_dot_sql(a, b)} / {den} END"
 
 
 def brute_force_topk(
@@ -79,14 +80,12 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k by cosine against one query vector. Physical plan:
-    project (codegen'd fold) -> TakeOrderedAndProject — no full sort, no
-    shuffle of losers."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = df.select(
-        F.col(id_col),
-        cosine(F.col(vec_col), q).alias("cos_sim"),
-    )
+    """Exact top-k by cosine against one query vector (column
+    ``cos_sim``); also the scorer of a default ``lsh_index_topk`` probe.
+    Physical plan: project (codegen'd fold) -> TakeOrderedAndProject —
+    no full sort, no shuffle of losers."""
+    q = _array_sql([float(x) for x in query_vec])
+    scored = df.selectExpr(_q(id_col), f"{_cosine_sql(_q(vec_col), q)} AS cos_sim")
     return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
 
 
@@ -170,11 +169,8 @@ def quantized_cosine_cols(qa: F.Column, qb: F.Column) -> F.Column:
 def _quantize_query(query_vec, scale):
     """Query vector quantized driver-side: the literal bigint array plus
     its exact squared norm (caller raises if 0 — cosine undefined)."""
-    import math
-
     qints = [int(math.floor(float(x) * scale)) for x in query_vec]
-    q = F.array(*[F.lit(v).cast("long") for v in qints])
-    return q, sum(v * v for v in qints)
+    return F.expr(_array_sql(qints)), sum(v * v for v in qints)
 
 
 def _ivf_assign(
@@ -753,15 +749,7 @@ def lsh_index_topk(
             _q(id_col), f"{_quantize(_q(vec_col), meta.get('scale', 16384))} AS qv"
         ).withColumn("nv", _qnorm(F.col("qv")))
         return _score_topk(qd.filter(F.col("nv") > 0), qlit, qn, k, id_col)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        cand.select(
-            F.col(id_col),
-            cosine(F.col(vec_col), q).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
-    )
+    return brute_force_topk(cand, query_vec, k, id_col, vec_col)
 
 
 def _sig_verify_pairs(
@@ -801,7 +789,7 @@ def _sig_verify_pairs(
             sigs, threshold, id_col, vec_col, scale
         )
     iq, vq = _q(id_col), _q(vec_col)
-    # zero-norm rows drop on BOTH paths: cosine() would NULL them out
+    # zero-norm rows drop on BOTH paths: a cosine would be NULL for them
     # post-join anyway (never NaN-first), so pre-filtering is equivalent
     # and skips their pair fan-out entirely
     sigs = sigs.selectExpr("*", f"{_l2_norm_sql(vq)} AS __n").filter("__n > 0")

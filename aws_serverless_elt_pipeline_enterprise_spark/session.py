@@ -14,7 +14,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# The box's defaults, derived once: every core this process may run on,
+# and half the physical RAM as the driver heap (local mode runs every task
+# in the driver JVM, so that heap is all the memory Spark has).
+# SPARK_GRAFT_CPUS and SPARK_DRIVER_MEMORY override them for a deployment.
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+DRIVER_MEMORY = os.environ.get("SPARK_DRIVER_MEMORY") or (
+    f"{max(1, os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2**31)}g"
+)
 
 
 def get_spark(
@@ -23,9 +30,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    master = master or f"local[{CPUS}]"
+    shuffle_partitions = shuffle_partitions or CPUS
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -41,9 +47,7 @@ def get_spark(
         # even for few-file inputs
         .config("spark.sql.files.maxPartitionBytes", "32m")
         .config("spark.ui.enabled", "false")
-        # local mode = driver-only: the driver heap is ALL the memory; size
-        # it to the box or >8 concurrent tasks starve and GC-thrash
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        .config("spark.driver.memory", DRIVER_MEMORY)
         # G1 + 32 task threads hitting JNI-critical sections (parquet codec)
         # degrades into GCLocker-initiated-GC storms (measured: 3-20x epoch
         # slowdowns); the throughput collector is stable for this workload

@@ -414,6 +414,12 @@ def _du_parquet(path: str) -> int:
     return total
 
 
+def _since(t0: float) -> float:
+    """Seconds since the ``time.perf_counter()`` reading ``t0``, rounded
+    for the lineage record."""
+    return round(time.perf_counter() - t0, 6)
+
+
 def _partition_rows(commit_abs: str, cap: int = 4096) -> dict:
     """Per-output-partition row counts read from parquet FOOTERS only (no
     data scan, no extra Spark job) — the north-rule's per-partition
@@ -1343,8 +1349,10 @@ class SnapshotTable:
         # (partitionBy from an unshuffled input would create
         # tasks x buckets tiny files). _bucket rides as a data column; the
         # delta applies table-wide, like Iceberg's equality-delete files.
+        t0 = time.perf_counter()
         observed.write.mode("overwrite").parquet(commit_abs)
         metrics_row = observation.get
+        write_s = _since(t0)
         if pre_commit is not None:
             pre_commit()
         empty = bool(metrics_row) and metrics_row["keys_considered"] == 0
@@ -1360,12 +1368,15 @@ class SnapshotTable:
             "mode": "mor",
             "rows_in_batch": metrics_row["keys_considered"] if metrics_row else None,
             "delete_rows": metrics_row["keys_deleted"] if metrics_row else None,
+            "write_s": write_s,
         }
         if not empty:
             lineage["delta_dir"] = commit_rel
             # JSON string: lineage() rows stay flat enough for
             # spark.createDataFrame (nested variant maps break inference)
+            t0 = time.perf_counter()
             lineage["partition_rows"] = json.dumps(_partition_rows(commit_abs))
+            lineage["footers_s"] = _since(t0)
 
         # rebase-on-conflict: a MOR delta is position-independent (the
         # LWW resolve is order-free), so losing the version race to ANY
@@ -1415,7 +1426,16 @@ class SnapshotTable:
         snapshot.version + 1, so any intervening commit forces another
         attempt instead of being silently dropped. ``epoch_id=None``
         marks a maintenance commit, which carries the ledger over
-        unchanged. The committed lineage records ``commit_attempts``."""
+        unchanged.
+
+        The committed lineage times the commit itself, so the returned
+        record is the stored one: ``commit_attempts``, ``bytes_written``
+        (the new dir's parquet bytes, as in ``dir_bytes``), ``commit_s``
+        (this loop up to the winning claim: the size walk, ledger
+        re-checks, ``build`` and lost claims) and, from the caller's
+        lineage or 0.0, ``write_s`` (its one write job) and ``footers_s``
+        (``_partition_rows``)."""
+        t0 = time.perf_counter()
         new_bytes = _du_parquet(os.path.join(self.root, new_dir)) if new_dir else 0
         for attempt in range(1, _COMMIT_ATTEMPTS + 1):
             snap = self.manifest()
@@ -1430,9 +1450,13 @@ class SnapshotTable:
                 ledger.add(epoch_id)
             schema, buckets_map, global_deltas, lineage = build(snap)
             lineage = {
+                "write_s": 0.0,
+                "footers_s": 0.0,
                 **lineage,
                 "version": snap["version"] + 1 if snap else 0,
                 "commit_attempts": attempt,
+                "bytes_written": new_bytes,
+                "commit_s": _since(t0),
             }
             try:
                 self._commit_manifest(
@@ -1529,21 +1553,23 @@ class SnapshotTable:
 
     def _write_bucketed(
         self, df: DataFrame, name: str, sort_within_buckets: bool
-    ) -> tuple[str, dict]:
+    ) -> tuple[str, dict, float]:
         """Write a full snapshot rewrite into a fresh ``_bucket``-
         partitioned commit dir under the handle's bucket count; returns
-        the dir and the bucket map naming it."""
+        the dir, the bucket map naming it and the write's seconds."""
         commit_rel = os.path.join("commits", f"{name}_{uuid.uuid4().hex[:6]}")
         commit_abs = os.path.join(self.root, commit_rel)
         out = df.repartition(self.n_buckets, F.col(self.BUCKET_COL))
         if sort_within_buckets:
             out = out.sortWithinPartitions(self.BUCKET_COL, self.key_col)
+        t0 = time.perf_counter()
         out.write.mode("overwrite").partitionBy(self.BUCKET_COL).parquet(commit_abs)
+        write_s = _since(t0)
         return commit_rel, {
             d.split("=", 1)[1]: [commit_rel]
             for d in os.listdir(commit_abs)
             if d.startswith(f"{self.BUCKET_COL}=")
-        }
+        }, write_s
 
     def _commit_rewrite(
         self,
@@ -1636,12 +1662,12 @@ class SnapshotTable:
                     & (F.col(self.SEQ_COL) < purge_tombstones_below_seq)
                 )
             )
-        commit_rel, buckets_map = self._write_bucketed(
+        commit_rel, buckets_map, write_s = self._write_bucketed(
             df, f"c_{m['version'] + 1:06d}_compact", sort_within_buckets
         )
         return self._commit_rewrite(
             m, _schema_of(m), buckets_map, set(_deltas(m)),
-            {"epoch_id": "__compaction", "compaction": True},
+            {"epoch_id": "__compaction", "compaction": True, "write_s": write_s},
             commit_rel,
         )
 
@@ -1679,12 +1705,13 @@ class SnapshotTable:
             df = df.drop(self.BUCKET_COL).withColumn(
                 self.BUCKET_COL, F.expr(self.bucket_sql())
             )
-            commit_rel, buckets_map = self._write_bucketed(
+            commit_rel, buckets_map, write_s = self._write_bucketed(
                 df, f"c_{m['version'] + 1:06d}_rebucket", sort_within_buckets
             )
             lineage = {
                 "epoch_id": "__rebucket",
                 "rebucket": {"from": old_n, "to": self.n_buckets},
+                "write_s": write_s,
             }
 
             def build_rebucket(snap):
@@ -1735,13 +1762,14 @@ class SnapshotTable:
             f"c_{m['version'] + 1:06d}_minor_{uuid.uuid4().hex[:6]}",
         )
         commit_abs = os.path.join(self.root, commit_rel)
+        t0 = time.perf_counter()
         merged.write.mode("overwrite").parquet(commit_abs)
         # rebase-safe like compact(): deltas appended by concurrent MOR
         # writers survive AFTER the merged delta (resolve is order-free)
         return self._commit_rewrite(
             m, schema, _buckets(m), set(gdeltas),
             {"epoch_id": "__minor_compaction", "minor_compaction": True,
-             "deltas_merged": len(gdeltas)},
+             "deltas_merged": len(gdeltas), "write_s": _since(t0)},
             commit_rel,
             # one row per key of the folded deltas, and a key's bucket
             # never changes: the union of their bucket sets (every

@@ -1,19 +1,27 @@
 """Benchmark: CDC replay throughput + headline query timings.
 
-Prints ONE JSON line:
+Usage::
+
+    python bench.py [query ...]
+
+With no names it times every ``BENCH_QUERIES`` entry; given names (any
+``queries()`` key, an unknown one is a usage error) limit the timed
+queries to those. Prints ONE JSON line:
   {"metric": "cdc_replay_events_per_sec", "value": <events/sec>,
    "unit": "sec", "queries": {<name>: <sec>, ...}, "sf": <sf>,
    "replay": {...}, "cpus": N}
 
 Env:
   SPARK_GRAFT_SF_DIR  testdata dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[N] parallelism (default 32)
+  SPARK_GRAFT_CPUS    local[N] parallelism (default: the box's cores)
   SPARK_GRAFT_EVENTS  CDC event count override
+  SPARK_GRAFT_QUERY_REPEATS  timed runs per query, median kept (default 3)
   SPARK_GRAFT_SKIP_QUERIES=1  replay-only
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -30,7 +38,10 @@ from aws_serverless_elt_pipeline_enterprise_spark.benchkit import (  # noqa: E40
     sweep_stale_tables,
     work_root,
 )
-from aws_serverless_elt_pipeline_enterprise_spark.session import get_spark  # noqa: E402
+from aws_serverless_elt_pipeline_enterprise_spark.session import (  # noqa: E402
+    CPUS,
+    get_spark,
+)
 from aws_serverless_elt_pipeline_enterprise_spark.sources.changelog import (  # noqa: E402
     ChangelogSpec,
     generate_changelog,
@@ -111,7 +122,7 @@ def sf_of(sf_dir: str) -> float:
         return 0.1
 
 
-def bench_replay(spark, sf: float, cpus: int) -> dict:
+def bench_replay(spark, sf: float) -> dict:
     # 200M x sf events: large enough that per-epoch fixed cost (job
     # scheduling + manifest IO, ~1s/epoch) doesn't dominate the measured
     # throughput the way a toy batch would (250k-row epochs measure the
@@ -159,8 +170,15 @@ def bench_replay(spark, sf: float, cpus: int) -> dict:
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description="CDC replay + query benchmark")
+    ap.add_argument("names", nargs="*", metavar="query",
+                    help="time only these queries (default: BENCH_QUERIES)")
+    names = ap.parse_args().names
+    qs = entry_mod.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        ap.error(f"unknown query: {', '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_of(sf_dir)
     extra = {}
     if work_root().startswith("/dev/shm"):
@@ -168,10 +186,10 @@ def main() -> None:
         extra["spark.local.dir"] = "/dev/shm/spark_graft_bench/local"
     spark = get_spark(
         app_name="cdc-bench",
-        master=f"local[{cpus}]",
+        master=f"local[{CPUS}]",
         # shuffle partitions scale with the cluster size, as they would in
         # any real deployment (4x cores keeps reduce-side hash maps small)
-        shuffle_partitions=cpus * 4,
+        shuffle_partitions=CPUS * 4,
         extra_conf=extra,
     )
 
@@ -180,7 +198,6 @@ def main() -> None:
     # timings when it runs before them
     qtimes: dict[str, float] = {}
     if os.environ.get("SPARK_GRAFT_SKIP_QUERIES") != "1":
-        qs = entry_mod.queries()
         # clamped: 0/negative would IndexError on the median pick (use
         # SPARK_GRAFT_SKIP_QUERIES=1 to skip query timing entirely)
         repeats = max(1, int(os.environ.get("SPARK_GRAFT_QUERY_REPEATS", "3")))
@@ -202,9 +219,7 @@ def main() -> None:
         # shuffle-machinery JIT — in round 2 that attribution made the
         # flagship cdc_final_state look 2.8x slower than round 1.
         run_once(qs["cdc_final_state"])
-        for name in BENCH_QUERIES:
-            if name not in qs:
-                continue
+        for name in names or [n for n in BENCH_QUERIES if n in qs]:
             # median of N runs: single-shot timings at sub-second scale
             # swing +/-30% with ambient load and GC phase
             times = sorted(run_once(qs[name]) for _ in range(repeats))
@@ -218,7 +233,7 @@ def main() -> None:
     # replay stages are fixed-shape (one agg, one write): AQE's per-stage
     # re-planning is pure driver overhead here.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    replay = bench_replay(spark, sf, cpus)
+    replay = bench_replay(spark, sf)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
     out = {
@@ -228,7 +243,7 @@ def main() -> None:
         "queries": qtimes,
         "sf": sf,
         "replay": replay,
-        "cpus": cpus,
+        "cpus": CPUS,
     }
     print(json.dumps(out))
     spark.stop()

@@ -56,7 +56,11 @@ def main() -> None:
     args = ap.parse_args()
     if args.redrive and not args.quarantine:
         ap.error("--redrive requires --quarantine")
-    if args.streaming and (args.start_time or args.end_time or args.compact_every):
+    loop_flags = args.start_time or args.end_time or args.compact_every
+    if args.redrive and (args.streaming or loop_flags):
+        ap.error("--redrive re-ingests the quarantine dir only; it takes no "
+                 "--streaming, --start-time/--end-time or --compact-every")
+    if args.streaming and loop_flags:
         ap.error("--start-time/--end-time/--compact-every apply to the epoch "
                  "loop, not --streaming")
 
@@ -78,7 +82,7 @@ def main() -> None:
     # exported to the python driver, and SparkConf().contains() reads
     # java system properties only after a JVM gateway is attached, which
     # is precisely not yet the case here. Both silently fell into the
-    # local factory, whose .master('local[32]') overrode the cluster
+    # local factory, whose local[N] master overrode the cluster
     # manager's --master.)
     if "PYSPARK_GATEWAY_PORT" in os.environ:
         spark = SparkSession.builder.appName("cdc-replay").getOrCreate()

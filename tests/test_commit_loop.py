@@ -1,15 +1,17 @@
 """The single optimistic-commit loop behind every SnapshotTable commit.
 
 Every committed lineage record carries ``commit_attempts`` (1 when the
-first claim wins, one more per lost race), and a commit that loses the
-version race ``_COMMIT_ATTEMPTS`` times in a row gives up with
-``CommitConflictError``, leaving the epoch uncommitted and its data dir
-a vacuumable orphan.
+first claim wins, one more per lost race) and times itself: ``write_s``,
+``footers_s`` and ``commit_s`` in seconds plus ``bytes_written``. A
+commit that loses the version race ``_COMMIT_ATTEMPTS`` times in a row
+gives up with ``CommitConflictError``, leaving the epoch uncommitted and
+its data dir a vacuumable orphan.
 """
 
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -52,6 +54,48 @@ def test_commit_attempts_recorded_in_lineage(spark, tmp_path):
     # the record is what the manifest stores, not just the return value
     assert t.lineage()[-1] == lin
     assert [r["commit_attempts"] for r in t.lineage()] == [1, 1, 2]
+
+
+PHASES = ("write_s", "footers_s", "commit_s")
+
+
+@pytest.mark.parametrize("op", ["merge", "compact", "compact_minor", "rebucket"])
+def test_lineage_times_each_commit(spark, tmp_path, op):
+    t = _mk(spark, tmp_path)
+    t.merge_reduced(_batch(spark, [("insert", "a", 1, 1.0), ("insert", "b", 2, 2.0)]), "e0")
+    t.merge_reduced(_batch(spark, [("update", "a", 3, 3.0), ("delete", "b", 4, None)]), "e1")
+    commit = {
+        "merge": lambda: t.merge_reduced(_batch(spark, [("insert", "c", 5, 5.0)]), "e2"),
+        "compact": t.compact,
+        "compact_minor": t.compact_minor,
+        "rebucket": lambda: t.rebucket(8),
+    }[op]
+    before = t.manifest()
+    t0 = time.perf_counter()
+    rec = commit()
+    wall = time.perf_counter() - t0
+    assert t.lineage()[-1] == rec
+    for name in PHASES:
+        assert type(rec[name]) is float and rec[name] >= 0, (name, rec[name])
+    assert rec["write_s"] > 0
+    if op != "merge":
+        assert rec["footers_s"] == 0.0  # only a merge reads its delta's footers
+    assert sum(rec[name] for name in PHASES) <= wall
+    after = t.manifest()
+    (new_dir,) = set(after["dir_bytes"]) - set(before["dir_bytes"])
+    assert type(rec["bytes_written"]) is int
+    assert rec["bytes_written"] == after["dir_bytes"][new_dir] > 0
+
+
+def test_merge_lineage_loads_as_a_dataframe(spark, tmp_path):
+    t = _mk(spark, tmp_path)
+    for i in range(3):
+        t.merge_reduced(_batch(spark, [("insert", f"k{i}", i, float(i))]), f"e{i}")
+    df = spark.createDataFrame(t.lineage())
+    types = dict(df.dtypes)
+    assert {types[name] for name in PHASES} == {"double"}
+    assert types["bytes_written"] == "bigint"
+    assert [r.epoch_id for r in df.orderBy("version").collect()] == ["e0", "e1", "e2"]
 
 
 def _mor_append(spark, t):

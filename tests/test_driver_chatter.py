@@ -2,8 +2,8 @@
 (bit-equal to Spark's ``xxhash64``), a Py4J round-trip budget for one tail
 ``refresh_views`` and one ``lookup``, a Spark-job budget for one tail
 refresh, and the SQL-text plans on column names that need quoting. The
-near-dup curation steps: a Py4J round-trip budget for building each
-step's plan."""
+near-dup curation steps and the exact embedding top-k: a Py4J
+round-trip budget for building each plan."""
 
 from __future__ import annotations
 
@@ -142,6 +142,19 @@ def test_near_dup_build_round_trip_budget(spark, sf_dir, py4j_calls):
             assert calls[0] <= budget, (name, calls[0], budget)
     finally:
         spark.catalog.clearCache()
+
+
+def test_brute_force_topk_build_round_trip_budget(spark, sf_dir, py4j_calls):
+    """Building (not running) a 64-dim ``brute_force_topk`` takes a few
+    dozen Py4J round trips: the query vector enters the plan as one SQL
+    array literal. With a ``F.lit`` per component it took about 654."""
+    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    rng = random.Random(11)
+    query = [rng.uniform(-1.0, 1.0) for _ in range(64)]
+    sim.brute_force_topk(vecs, query)  # loads the JVM classes the plan needs
+    with py4j_calls() as calls:
+        sim.brute_force_topk(vecs, query)
+    assert calls[0] <= 50, calls[0]
 
 
 def _rows(spark, rows):
